@@ -318,6 +318,9 @@ object Bench {
     var warmBootSec: Option[Double] = None
     var warmBootGateSec: Option[Double] = None
     var coldHeadlineSec: Option[Double] = None
+    // artifact builds the cold-headline leg paid into its empty scratch
+    // store — reported apart so store_builds_all stays comparable
+    var coldStoreBuilds: Option[Long] = None
 
     // Streaming drain + stateful-state legs: their own metric lines, never
     // summed into the batch total. Failures here must not kill the main
@@ -436,6 +439,7 @@ object Bench {
     if (!legacy) {
       val coldRoot = java.nio.file.Files
         .createTempDirectory("graft-bench-coldstore").toString
+      val buildsBeforeCold = graft.operators.ArtifactStore.totalBuilds
       try {
         graft.operators.ResultMemo.clear()
         graft.operators.CacheRegistry.releaseAll()
@@ -464,6 +468,7 @@ object Bench {
       } catch { case t: Throwable =>
         System.err.println(s"[bench] cold-headline leg failed: ${t.toString.linesIterator.next().take(200)}")
       } finally {
+        coldStoreBuilds = Some(graft.operators.ArtifactStore.totalBuilds - buildsBeforeCold)
         spark.conf.set(graft.operators.ArtifactStore.ConfKey, artifacts)
         spark.conf.set("spark.graft.cacheBaseTables", "true")
         // drop the session state the cold pass populated (it points at the
@@ -545,7 +550,9 @@ object Bench {
     // store_builds counts publishes under the SESSION's configured root
     // only (0 = fully warm store); the q253 lifecycle gate's builds land
     // on its own scratch root and report separately in store_builds_all,
-    // so the warm-store baseline really is 0 (r12 advisor finding).
+    // so the warm-store baseline really is 0 (r12 advisor finding). The
+    // cold-headline leg's builds are left out of store_builds_all and
+    // printed as cold_store_builds (null when the leg did not run).
     // With the store DISABLED (SPARK_GRAFT_ARTIFACTS="") the counter
     // reads null, not 0 — a disabled-store run must never masquerade as
     // a fully-warm one (r13 advisor finding).
@@ -557,7 +564,7 @@ object Bench {
     // itself (sum of per-query minimums) is unchanged and always ≤ best.
     val bestPass = if (passTotals.isEmpty) None else Some(passTotals.min)
     val worstPass = if (passTotals.isEmpty) None else Some(passTotals.max)
-    println(s"""{"metric":"regimes","unit":"sec","protocol":"${if (legacy) "legacy" else "current"}","headline_sec":${round3(total)},"headline_best_sec":${opt(bestPass)},"headline_worst_sec":${opt(worstPass)},"gate_sec":${round3(gateSec)},"derivation_sec":${round3(total - gateSec)},"report_truth_sec":${opt(reportTruthSec)},"warm_boot_sec":${opt(warmBootSec)},"warm_boot_gate_sec":${opt(warmBootGateSec)},"warm_boot_derivation_sec":${opt(for (t <- warmBootSec; g <- warmBootGateSec) yield t - g)},"cold_headline_sec":${opt(coldHeadlineSec)},"store_enabled":${artifacts.nonEmpty},"store_builds":$storeBuilds,"store_builds_all":${graft.operators.ArtifactStore.totalBuilds},"headline_retry":$retryTriggered,"headline_retry_sec":${opt(retrySec)},"load_thresh":$loadThresh,"load_avg_start":$loadStart,"load_avg_end":${loadAvg()},"total_sec":$totalR}""")
+    println(s"""{"metric":"regimes","unit":"sec","protocol":"${if (legacy) "legacy" else "current"}","headline_sec":${round3(total)},"headline_best_sec":${opt(bestPass)},"headline_worst_sec":${opt(worstPass)},"gate_sec":${round3(gateSec)},"derivation_sec":${round3(total - gateSec)},"report_truth_sec":${opt(reportTruthSec)},"warm_boot_sec":${opt(warmBootSec)},"warm_boot_gate_sec":${opt(warmBootGateSec)},"warm_boot_derivation_sec":${opt(for (t <- warmBootSec; g <- warmBootGateSec) yield t - g)},"cold_headline_sec":${opt(coldHeadlineSec)},"store_enabled":${artifacts.nonEmpty},"store_builds":$storeBuilds,"store_builds_all":${graft.operators.ArtifactStore.totalBuilds - coldStoreBuilds.getOrElse(0L)},"cold_store_builds":${coldStoreBuilds.map(_.toString).getOrElse("null")},"headline_retry":$retryTriggered,"headline_retry_sec":${opt(retrySec)},"load_thresh":$loadThresh,"load_avg_start":$loadStart,"load_avg_end":${loadAvg()},"total_sec":$totalR}""")
     spark.stop()
   }
 

@@ -1,6 +1,7 @@
 package graft.broker
 
 import java.sql.Timestamp
+import java.util.concurrent.atomic.AtomicLong
 import scala.collection.concurrent.TrieMap
 import scala.collection.mutable
 
@@ -100,6 +101,16 @@ final class CallbackSubscription(
   }
 }
 
+/** Lifetime publish/delivery counters shared by one broker's topics, in
+  * events (a rejected or failed batch counts all of its events).
+  */
+final class BrokerCounters {
+  val published = new AtomicLong(0L)
+  val schemaRejected = new AtomicLong(0L)
+  val persistFailed = new AtomicLong(0L)
+  val deliveryErrors = new AtomicLong(0L)
+}
+
 /** A named channel over the shared event log (reference: src/topic.ts).
   * Where the reference owns an events array per topic, here a topic is a
   * VIEW: the `topic` partition of the log. Publish = validate → append to
@@ -111,7 +122,8 @@ final class Topic(
     val name: String,
     log: EventLog,
     dlq: DeadLetterQueue,
-    val options: TopicOptions) {
+    val options: TopicOptions,
+    counters: BrokerCounters = new BrokerCounters) {
 
   private val subs = new java.util.concurrent.ConcurrentHashMap[String, Subscription]()
   // Retry-only handlers: streaming subscriptions live OUTSIDE the sync
@@ -148,21 +160,32 @@ final class Topic(
     subs.values().asScala.toSeq
   }
 
-  /** Publish a batch. Batching is the Spark-native unit (one log append per
-    * batch, not per event — at 100 TB, per-event appends are the anti-
-    * pattern); a single event is a batch of one. Returns receiverCount of
-    * the LAST event for parity with the reference's per-event result
-    * (reference: src/topic.ts:101-144).
+  /** Publish a batch: validate, persist, then fan out in the caller's
+    * thread. The batch is one entry of the log's group commit
+    * ([[EventLog.appendRows]]): concurrent publishers on the same log share
+    * one write job, and this call returns only after the batch's own rows
+    * have committed, so a single event is just a batch of one. Returns
+    * receiverCount of the LAST event for parity with the reference's
+    * per-event result (reference: src/topic.ts:101-144).
     */
   def publishBatch(events: Seq[EventRow]): Int = {
     // Validate first — reference throws before persisting (topic.ts:103-110).
     options.schemaRegistry.foreach { reg =>
       events.foreach { e =>
-        if (!reg.validate(e))
+        if (!reg.validate(e)) {
+          counters.schemaRejected.addAndGet(events.size.toLong)
           throw new IllegalArgumentException(s"Event validation failed for type ${e.`type`}")
+        }
       }
     }
-    if (options.persistent && events.nonEmpty) log.appendRows(events)
+    if (options.persistent && events.nonEmpty) {
+      try log.appendRows(events)
+      catch { case t: Throwable =>
+        counters.persistFailed.addAndGet(events.size.toLong)
+        throw t
+      }
+    }
+    counters.published.addAndGet(events.size.toLong)
     var receivers = 0
     events.foreach { e =>
       receivers = 0
@@ -174,6 +197,7 @@ final class Topic(
           // CallbackSubscription already swallows into the DLQ; this guard
           // covers non-callback implementations.
           try sub.deliver(e) catch { case ex: Exception =>
+            counters.deliveryErrors.incrementAndGet()
             System.err.println(s"Error delivering event ${e.id} to subscription ${sub.id}: $ex")
           }
         }
@@ -204,9 +228,26 @@ final class EventBroker(
 
   val log = new EventLog(spark, logPath)
   private val topics = TrieMap.empty[String, Topic]
+  private val counters = new BrokerCounters
 
   def createTopic(name: String, options: TopicOptions = TopicOptions()): Topic =
-    topics.getOrElseUpdate(name, new Topic(name, log, dlq, options))
+    topics.getOrElseUpdate(name, new Topic(name, log, dlq, options, counters))
+
+  /** Publish this broker's delivery counters and its log's group-commit
+    * counters as gauges on a [[graft.operators.BatchMetrics]] ledger (the
+    * [[RetentionScheduler.registerGauges]] pattern). Delivery errors are
+    * failures a subscription's `deliver` let escape; handler failures it
+    * retried or dead-lettered are the DLQ's to report.
+    */
+  def registerGauges(metrics: graft.operators.BatchMetrics): this.type = {
+    metrics.gauge("broker.published")(() => counters.published.get())
+    metrics.gauge("broker.schema_rejected")(() => counters.schemaRejected.get())
+    metrics.gauge("broker.persist_failed")(() => counters.persistFailed.get())
+    metrics.gauge("broker.delivery_errors")(() => counters.deliveryErrors.get())
+    metrics.gauge("log.flushes")(() => log.totalFlushes)
+    metrics.gauge("log.flushed_rows")(() => log.totalFlushedRows)
+    this
+  }
 
   def getTopic(name: String): Option[Topic] = topics.get(name)
   def deleteTopic(name: String): Boolean = topics.remove(name).isDefined

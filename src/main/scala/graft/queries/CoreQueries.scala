@@ -97,14 +97,16 @@ object CoreQueries {
       // satisfied by the hub's clustering and the final orderBy(user_id)
       // by its range prefix, so the fold plans with ZERO exchanges (the
       // raw-scan spelling paid the agg shuffle plus the sort's range
-      // exchange and its sampling re-run of the agg). max_by stays
-      // deterministic: the fixture has no per-user ts ties, and the law
-      // itself is source-order-independent wherever ts is unique.
+      // exchange and its sampling re-run of the agg). max_by is keyed on
+      // (ts, event_id) — q08's version order — so per-user ts ties pick
+      // the same row on any data and any partitioning; rows with a null
+      // ts still never win (the key is null for them, as before).
       EventStats.byUser(s, dir)
         .groupBy($"user_id")
         .agg(
           count(lit(1)).as("version"),
-          max_by($"value", $"ts").as("last_value"),
+          max_by($"value", when($"ts".isNotNull, struct($"ts", $"event_id")))
+            .as("last_value"),
           round(sum($"value".cast("decimal(18,2)")).cast("double"), 2).as("total_value"))
         .orderBy($"user_id")
     }),

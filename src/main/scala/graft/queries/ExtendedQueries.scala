@@ -281,11 +281,20 @@ object ExtendedQueries {
       // hub — the frame walk is the same merge the SMJ's per-user pair
       // scan did, minus the pair materialization and the re-shuffles.
       // Same one-shuffle (hub build) shape at 100 TB.
+      // Null keys: the join never matches a null user_id or ts, but a
+      // window groups nulls together (null users share a partition, a
+      // null-ts row's range frame holds every null-ts row of its user).
+      // So clicks are filtered to non-null keys BEFORE the window; a
+      // purchase with a null key then finds no click in its frame and
+      // counts 0, its left-join count. Rows of other types never count
+      // and are not output, so they are dropped by the same filter.
+      val keyed = $"user_id".isNotNull && $"tsm".isNotNull
       val w = Window.partitionBy($"user_id").orderBy($"tsm")
         .rangeBetween(-3600L * 1000000L, -1L)
       EventStats.byUser(s, dir)
         .select($"event_id", $"user_id", $"event_type",
           unix_micros($"ts").as("tsm"))
+        .where($"event_type" === "purchase" || ($"event_type" === "click" && keyed))
         .withColumn("n_clicks_1h",
           count(when($"event_type" === "click", lit(1))).over(w))
         .where($"event_type" === "purchase")

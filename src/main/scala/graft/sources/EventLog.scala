@@ -2,6 +2,7 @@ package graft.sources
 
 import java.net.URI
 import java.security.MessageDigest
+import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
@@ -90,8 +91,8 @@ final class EventLog(
     * path share the committer's `_temporary` directory, so two overlapping
     * appends from one driver can clobber each other's staging files. The
     * reference has the same serialization implicitly (single JS event
-    * loop); here the lock only covers job submission+commit of the small
-    * driver-built batches, not query execution.
+    * loop). The same monitor covers every [[appendRows]] group flush, so an
+    * `append(Dataset)` caller (bulk imports) never overlaps one.
     */
   def append(events: Dataset[EventRow]): Unit = this.synchronized {
     topicBuckets match {
@@ -123,11 +124,79 @@ final class EventLog(
   def appendDF(events: DataFrame): Unit =
     append(events.as[EventRow])
 
-  /** Driver-side batch append (the pub/sub hot path publishes small batches
-    * built on the driver; one log append per batch).
+  /** Callers waiting in [[appendRows]], in arrival order. Guarded by its own
+    * monitor (never the log's), so callers can enqueue while a flush runs.
     */
-  def appendRows(events: Seq[EventRow]): Unit =
-    append(spark.createDataset(events))
+  private val pending = new java.util.ArrayDeque[EventLog.PendingAppend]()
+  private var flushRunning = false // guarded by `pending`
+  private val flushes = new AtomicLong(0L)
+  private val flushedRows = new AtomicLong(0L)
+
+  /** Driver-side batch append — the pub/sub hot path, as a group commit.
+    *
+    * Each call enqueues its rows and waits. A waiting caller that finds no
+    * flush running becomes the leader: it takes the log's monitor, drains
+    * every pending batch (its own included) and writes them, in queue
+    * order, as ONE [[append]] job, then completes every drained caller with
+    * that job's outcome. Concurrent publishers thus pay one Spark write job
+    * per group instead of one per batch (Drizzle's group scheduling applied
+    * to commits); there is no background thread, and a lone caller's write
+    * is exactly a plain `append` of its rows.
+    *
+    * Contract:
+    *   - returns only after the caller's own rows have committed;
+    *   - all-or-nothing per group: if the write job fails, every caller
+    *     in the group gets its exception and none of the group's rows
+    *     commit;
+    *   - flushes hold the log's monitor, so they never overlap an
+    *     `append(Dataset)` call or another flush.
+    */
+  def appendRows(events: Seq[EventRow]): Unit = {
+    val mine = new EventLog.PendingAppend(events)
+    var interrupted = false
+    val lead = pending.synchronized {
+      pending.addLast(mine)
+      while (!mine.done && flushRunning) {
+        // a caller whose rows are queued must learn their outcome: the
+        // interrupt is kept for the caller, not acted on mid-wait
+        try pending.wait() catch { case _: InterruptedException => interrupted = true }
+      }
+      if (!mine.done) flushRunning = true
+      !mine.done
+    }
+    if (interrupted) Thread.currentThread().interrupt()
+    if (lead) flushPending()
+    mine.failure.foreach(throw _)
+  }
+
+  /** The leader's half of [[appendRows]]: drain under the log's monitor,
+    * write once, then release every drained caller with the outcome.
+    */
+  private def flushPending(): Unit = {
+    var group = Vector.empty[EventLog.PendingAppend]
+    var failure: Option[Throwable] = None
+    try this.synchronized {
+      group = pending.synchronized {
+        Vector.fill(pending.size)(pending.pollFirst())
+      }
+      val rows = group.flatMap(_.rows)
+      append(spark.createDataset(rows))
+      flushes.incrementAndGet()
+      flushedRows.addAndGet(rows.size.toLong)
+    } catch { case t: Throwable => failure = Some(t) }
+    finally pending.synchronized {
+      group.foreach { p => p.failure = failure; p.done = true }
+      flushRunning = false
+      pending.notifyAll()
+    }
+  }
+
+  /** Lifetime committed [[appendRows]] flushes and the rows they wrote. */
+  def totalFlushes: Long = flushes.get()
+  def totalFlushedRows: Long = flushedRows.get()
+
+  /** Batches waiting for a flush right now. */
+  private[graft] def queuedAppends: Int = pending.synchronized(pending.size)
 
   private def readSchema = topicBuckets match {
     case None => Event.schema
@@ -414,6 +483,12 @@ object EventLog {
   def apply(spark: SparkSession, path: String): EventLog = new EventLog(spark, path)
   def bucketed(spark: SparkSession, path: String, buckets: Int): EventLog =
     new EventLog(spark, path, Some(buckets))
+
+  /** One [[EventLog.appendRows]] call waiting for its group's flush. */
+  private final class PendingAppend(val rows: Seq[EventRow]) {
+    var done = false                     // guarded by the log's queue
+    var failure: Option[Throwable] = None // guarded by the log's queue
+  }
 
   /** Stable topic→bucket hash: first 8 hex chars of md5, mod n. The single
     * definition shared by the writer (via the instance method / the

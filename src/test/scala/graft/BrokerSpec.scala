@@ -187,16 +187,94 @@ class BrokerSpec extends SparkSpec {
     assert(b.log.getEventsTyped("bat").collect().map(_.id).last == "b9")
   }
 
+  /** Run `n` publishers on their own threads while the test holds the
+    * log's monitor, so no flush can start; release it once all `n` are
+    * queued. Returns each thread's result, in thread order.
+    */
+  private def publishAsOneGroup(b: EventBroker, n: Int)(
+      publish: Int => PublishResult): Seq[PublishResult] = {
+    val results = new Array[PublishResult](n)
+    val threads = (0 until n).map(i => new Thread(() => results(i) = publish(i)))
+    b.log.synchronized {
+      threads.foreach(_.start())
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (b.log.queuedAppends < n && System.nanoTime() < deadline) Thread.sleep(5)
+      assert(b.log.queuedAppends == n, "every publisher queued behind the held monitor")
+    }
+    threads.foreach(_.join())
+    results.toSeq
+  }
+
   test("concurrent publishes from multiple threads all persist (append is serialized)") {
     val b = newBroker()
+    // store-then-forward under group commit: each sync handler already
+    // finds its own event in the log
+    val found = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+    b.subscribe("conc", e => found.put(e.id,
+      b.log.getEventsTyped("conc").collect().exists(_.id == e.id)))
+    val acked = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val threads = (0 until 4).map { t =>
       new Thread(() => (0 until 5).foreach { i =>
-        assert(b.publish("conc", "x", s"""{"t":$t,"i":$i}""").success)
+        val r = b.publish("conc", "x", s"""{"t":$t,"i":$i}""")
+        if (r.success) acked.add(r.eventId)
       })
     }
     threads.foreach(_.start())
     threads.foreach(_.join())
+    assert(acked.size == 20)
     assert(b.log.getEventsTyped("conc").collect().length == 20)
+    assert(b.log.totalFlushedRows == 20)
+    import scala.jdk.CollectionConverters._
+    assert(found.asScala.toMap == acked.asScala.map(_ -> java.lang.Boolean.TRUE).toMap)
+  }
+
+  test("group commit: publishers queued behind one flush commit as ONE write job") {
+    val b = newBroker()
+    val results = publishAsOneGroup(b, 8)(i => b.publish("grp", "x", s"""{"i":$i}"""))
+    assert(results.forall(_.success))
+    assert(b.log.totalFlushes == 1 && b.log.totalFlushedRows == 8)
+    val ids = b.log.getEventsTyped("grp").collect().map(_.id).toSeq
+    assert(ids.sorted == results.map(_.eventId).sorted) // each event exactly once
+  }
+
+  test("group commit: a failed flush fails every publish of the group, persists nothing") {
+    // a DLQ that cannot take entries: a dead-lettering subscription then
+    // lets the failure escape `deliver`, which the broker counts
+    val brokenDlq = new graft.dlq.DeadLetterQueue {
+      def addEvent(e: EventRow, error: String, subscriptionId: String): Unit =
+        throw new IllegalStateException("dlq down")
+      def getEvents(topic: Option[String], eventType: Option[String],
+          limit: Option[Int]): Seq[graft.model.DeadLetterRow] = Nil
+      def retryEvent(id: String, cb: (EventRow, String) => Boolean): Boolean = false
+      def removeEvent(id: String): Boolean = false
+    }
+    val b = new EventBroker(spark, tmpDir("log"), brokenDlq)
+    val metrics = new graft.operators.BatchMetrics
+    b.registerGauges(metrics)
+    val reg = new SchemaRegistry
+    reg.registerSchema("user.created",
+      """{"type":"object","required":["userId"],"properties":{"userId":{"type":"string"}}}""",
+      "1.0")
+    b.createTopic("users", TopicOptions(schemaRegistry = Some(reg)))
+    assert(!b.publish("users", "user.created", "{}").success) // rejected before enqueue
+    // a regular file where the log directory should be: the write job fails
+    val logFile = new java.io.File(b.log.path)
+    assert(logFile.delete() && logFile.createNewFile())
+    val failed = publishAsOneGroup(b, 4)(i => b.publish("fail", "x", s"""{"i":$i}"""))
+    assert(failed.forall(r => !r.success && r.error.isDefined))
+    assert(logFile.isFile && logFile.length == 0)
+    assert(logFile.delete())
+    b.subscribe("fail", _ => throw new RuntimeException("handler down"),
+      SubscriptionOptions(maxRetries = 1, retryDelayMillis = 0))
+    val ok = b.publish("fail", "x", "{}")
+    assert(ok.success && ok.receiverCount == 1)
+    // none of the failed group's events reached the log
+    assert(b.log.getEventsTyped("fail").collect().map(_.id).toSeq == Seq(ok.eventId))
+    import spark.implicits._
+    assert(metrics.gauges(spark).as[(String, Long)].collect().toMap == Map(
+      "broker.published" -> 1L, "broker.schema_rejected" -> 1L,
+      "broker.persist_failed" -> 4L, "broker.delivery_errors" -> 1L,
+      "log.flushes" -> 1L, "log.flushed_rows" -> 1L))
   }
 
   test("DLQ retry re-dispatches through the original subscription (broker.ts:166-183)") {
