@@ -81,23 +81,29 @@ final class CallbackSubscription(
   override def deliver(event: EventRow): Unit = {
     if (!active) return
     if (options.eventTypes.nonEmpty && !options.eventTypes.contains(event.`type`)) return
-    var attempt = 1
-    var done = false
-    while (!done) {
-      try {
-        handler(event)
-        done = true
-      } catch {
-        case e: Exception =>
-          if (attempt < options.maxRetries) {
-            if (options.retryDelayMillis > 0) Thread.sleep(options.retryDelayMillis)
-            attempt += 1
-          } else {
-            dlq.addEvent(event, Option(e.getMessage).getOrElse(e.toString), id)
-            done = true
-          }
-      }
+    BoundedRetry.deliver(handler, options.maxRetries, options.retryDelayMillis)(event)
+      .foreach(err => dlq.addEvent(event, err, id))
+  }
+}
+
+/** The bounded-retry law both delivery paths share (reference:
+  * src/subscription.ts:91-105): invoke `handler` up to `maxRetries` times
+  * in total (at least once), sleeping `sleepMs` between attempts. `None`
+  * on success; when every attempt threw, `Some` of the last error message,
+  * which the caller dead-letters. Partially applied, it is the serializable
+  * per-event function streaming delivery ships to executors.
+  */
+object BoundedRetry {
+  def deliver(handler: EventRow => Unit, maxRetries: Int, sleepMs: Long)(
+      event: EventRow): Option[String] = {
+    @annotation.tailrec def attempt(n: Int): Option[String] = {
+      val error =
+        try { handler(event); None }
+        catch { case e: Exception => Some(Option(e.getMessage).getOrElse(e.toString)) }
+      if (error.isEmpty || n >= maxRetries) error
+      else { if (sleepMs > 0) Thread.sleep(sleepMs); attempt(n + 1) }
     }
+    attempt(1)
   }
 }
 

@@ -35,14 +35,6 @@ object ResultMemo {
     */
   val MaxReportRows = 10000
 
-  /** The REPORT treatment in one call: compute `frame` once per batch,
-    * collect its (bounded — caller's contract, enforced by
-    * [[MaxReportRows]]) rows to the driver, and memoize them as a
-    * driver-local relation. Repeat readers get a plan with no lineage to
-    * re-optimize and no cluster work to redo — the published-artifact
-    * semantics every KB-sized ledger here shares. Schema (names, types,
-    * nullability) is preserved exactly.
-    */
   /** Monotonic count of report() entries — lets a harness detect which
     * query constructions were report-served (Bench's truth sweep marks
     * exactly those queries for a separate passthrough timing).
@@ -51,6 +43,14 @@ object ResultMemo {
 
   def reportTouches: Long = touches.get
 
+  /** The REPORT treatment in one call: compute `frame` once per batch,
+    * collect its (bounded — caller's contract, enforced by
+    * [[MaxReportRows]]) rows to the driver, and memoize them as a
+    * driver-local relation. Repeat readers get a plan with no lineage to
+    * re-optimize and no cluster work to redo — the published-artifact
+    * semantics every KB-sized ledger here shares. Schema (names, types,
+    * nullability) is preserved exactly.
+    */
   def report(key: String)(compute: => DataFrame): DataFrame = {
     touches.incrementAndGet()
     // Audit passthrough: with spark.graft.report.passthrough=true the

@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.broker.SubscriptionOptions
+import graft.broker.{BoundedRetry, SubscriptionOptions}
 import graft.dlq.DeadLetterQueue
 import graft.model.{Event, EventRow}
 
@@ -180,25 +180,7 @@ final class StreamingSubscription(
 
     // One event through handler-with-retries; Some(error) when exhausted.
     // Shared by both delivery modes (serialized to executors in unordered).
-    val deliverOne: EventRow => Option[String] = { event =>
-      var attempt = 1
-      var failure: Option[String] = None
-      var done = false
-      while (!done) {
-        try { h(event); done = true }
-        catch {
-          case e: Exception =>
-            if (attempt < maxRetries) {
-              if (sleepMs > 0) Thread.sleep(sleepMs)
-              attempt += 1
-            } else {
-              failure = Some(Option(e.getMessage).getOrElse(e.toString))
-              done = true
-            }
-        }
-      }
-      failure
-    }
+    val deliverOne: EventRow => Option[String] = BoundedRetry.deliver(h, maxRetries, sleepMs)
 
     val writer = source.writeStream
       .option("checkpointLocation", checkpointDir)
@@ -207,9 +189,11 @@ final class StreamingSubscription(
         import batch.sparkSession.implicits._
         if (orderedMode) {
           // Per-batch ordered delivery on the driver mirrors the reference's
-          // sequential handler loop; bounded by maxFilesPerTrigger.
+          // sequential handler loop; bounded by maxFilesPerTrigger. Sorted
+          // on the FULL timestamp (sub-millisecond part included), then id:
+          // the (timestamp, id) order EventLog.getEvents/replayEvents use.
           batch.as[EventRow].collect()
-            .sortBy(e => (e.timestamp.getTime, e.id))
+            .sortBy(e => (e.timestamp.getTime, e.timestamp.getNanos, e.id))
             .foreach(event => deliverOne(event).foreach(err => d.addEvent(event, err, subId)))
         } else {
           // Distributed delivery: handlers run on executors; only failures

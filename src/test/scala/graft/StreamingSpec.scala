@@ -6,7 +6,7 @@ import scala.collection.mutable
 import graft.broker.SubscriptionOptions
 import graft.dlq.InMemoryDeadLetterQueue
 import graft.model.EventRow
-import graft.sources.EventLog
+import graft.sources.{EventLog, ScanOptions}
 import graft.streaming.StreamingSubscription
 
 /** Structured-Streaming delivery semantics (SURVEY.md §2.9 T1-T10). */
@@ -18,10 +18,19 @@ class StreamingSpec extends SparkSpec {
   test("stream delivers persisted events in order; filter pushed to source (T1/T6)") {
     val logDir = tmpDir("slog")
     val log = new EventLog(spark, logDir)
+    // e9 and e8 share one millisecond, 100 µs and 900 µs into it, with ids
+    // in the opposite order: delivery follows the full timestamp
+    def inMilli(r: EventRow, micros: Int) = {
+      val t = new Timestamp(r.timestamp.getTime)
+      t.setNanos(t.getNanos + micros * 1000)
+      r.copy(timestamp = t)
+    }
     log.appendRows(Seq(
       row("e1", "click", "web", 1000),
       row("e2", "view", "web", 2000),
-      row("e3", "click", "web", 3000)))
+      row("e3", "click", "web", 3000),
+      inMilli(row("e9", "click", "web", 4000), 100),
+      inMilli(row("e8", "click", "web", 4000), 900)))
     val seen = mutable.Buffer.empty[String]
     val sub = new StreamingSubscription(spark, logDir, tmpDir("ckpt"),
       e => seen += e.id, new InMemoryDeadLetterQueue,
@@ -29,7 +38,10 @@ class StreamingSpec extends SparkSpec {
       options = SubscriptionOptions(eventTypes = Seq("click"),
         receiveHistoricalEvents = true))
     sub.runAvailable()
-    assert(seen.toSeq == Seq("e1", "e3"))
+    assert(seen.toSeq == Seq("e1", "e3", "e9", "e8"))
+    val scanned = log.getEvents("web", ScanOptions(eventTypes = Seq("click")))
+      .select("id").collect().map(_.getString(0)).toSeq
+    assert(seen.toSeq == scanned, "delivery order must equal getEvents order")
   }
 
   test("checkpoint resumes where delivery stopped — pause is lossless (T10 upgrade)") {
