@@ -4,7 +4,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{ArtifactStore, CacheRegistry, ResultMemo}
+import graft.operators.{ArtifactStore, ResultMemo}
 
 /** Benchmark main (driver contract): runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints per-query seconds as JSON.
@@ -431,36 +431,31 @@ object Bench {
     val reportTruth: Option[Pass] =
       if (memoServed.isEmpty) None
       else {
-        spark.conf.set("spark.graft.report.passthrough", "true")
-        val p = try timedPass(memoServed.toSeq, construct)
-          finally spark.conf.unset("spark.graft.report.passthrough")
+        val p = EngineSession.withConf(spark,
+          "spark.graft.report.passthrough" -> "true")(timedPass(memoServed.toSeq, construct))
         val te = jsonMap(p.errors.toSeq.sortBy(_._1).map { case (k, v) => k -> str(v) })
         println(s"""{"metric":"report_truth","unit":"ms","note":"per-batch derivation cost of memo-served ledgers (passthrough, warm hubs); headline times measure the memo read","n":${p.secs.size},"errors":$te,"queries_ms":${msMap(p.secs.toSeq.sortBy(_._1))},"total_sec":${r3(p.total)}}""")
         Some(p)
       }
 
-    // The one cold-session reset: unpersist every tracked cache (which
-    // also clears ResultMemo and the base-table handles) and drop every
-    // CACHE TABLE.
-    def coldSession(): Unit = { CacheRegistry.releaseAll(); spark.catalog.clearCache() }
-    // One cold regime: a cold session with base-table caching off, one
+    // One cold regime: a cold session (ResultMemo.release: every memo,
+    // base-table handle and cache dropped) with base-table caching off, one
     // pass with construction + execution inside the timed region (the
     // per-pass-cold discipline), its line printed. A leg that throws
     // outside the per-query guard prints nothing and reports null.
     def coldLeg(metric: String, note: String): Option[Pass] =
-      try {
-        coldSession()
-        spark.conf.set("spark.graft.cacheBaseTables", "false")
+      try EngineSession.withConf(spark, "spark.graft.cacheBaseTables" -> "false") {
+        ResultMemo.release(spark)
         val p = timedPass(names, construct)
         println(regimeLine(metric, note, p))
         Some(p)
       } catch { case t: Throwable =>
         System.err.println(s"[bench] $metric leg failed: ${firstLine(t)}")
         None
-      } finally spark.conf.set("spark.graft.cacheBaseTables", "true")
+      }
 
     // WARM-BOOT leg — the regime the artifact store exists for: a COLD
-    // session (memos, registry caches and the base-table CACHE TABLEs all
+    // session (memos, caches and the base-table CACHE TABLEs all
     // dropped) against the POPULATED store, i.e. a deployment restart.
     val warmBoot =
       if (artifacts.isEmpty) None
@@ -484,12 +479,12 @@ object Bench {
         spark.conf.set(ArtifactStore.ConfKey, artifacts)
         // drop the session state the cold pass populated (it points at the
         // scratch store) and the scratch store itself
-        coldSession()
+        ResultMemo.release(spark)
         try removeDir(coldRoot) catch { case _: Throwable => () }
       }
     val coldStoreBuilds = ArtifactStore.totalBuilds - buildsBeforeCold
 
-    CacheRegistry.releaseAll()
+    ResultMemo.release(spark)
     // per-query SURVIVING sample counts — a query that flaked in some
     // passes must not silently report a 1-sample minimum
     val sampleJson = jsonMap(names.map(k => k -> samples.get(k).fold(0)(_.size).toString))
@@ -547,16 +542,8 @@ object Bench {
     */
   private def stageEnvelopeLog(spark: SparkSession, sfDir: String,
       base: String): (String, Long) = {
-    import spark.implicits._
     val logDir = s"$base/log"
-    val events = graft.sources.Tables.events(spark, sfDir).select(
-      format_string("%012d", $"event_id").as("id"),
-      $"event_type".as("type"),
-      lit("bench-events").as("topic"),
-      $"ts".as("timestamp"),
-      lit("1.0").as("schemaVersion"),
-      $"props".as("payload"),
-      map(lit("user_id"), $"user_id".cast("string")).as("metadata"))
+    val events = graft.sources.Tables.envelopes(spark, sfDir, "bench-events")
     events.repartition(8).write.mode("overwrite").parquet(logDir)
     (logDir, spark.read.parquet(logDir).count())
   }

@@ -51,4 +51,19 @@ object EngineSession {
         .config("spark.sql.shuffle.partitions", shufflePartitions)
         .config("spark.ui.enabled", "false")
     ) { case (b, (k, v)) => b.config(k, v) }
+
+  /** Run `body` with the session confs `kvs` set, then put each key back:
+    * its prior value, or unset when it had none. The session conf is
+    * shared, so a section that races another thread's must run under a
+    * lock the two share (the gate sections use `GateFixtures.confLocked`).
+    */
+  def withConf[T](s: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val prior = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
+    kvs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally prior.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None)    => s.conf.unset(k)
+    }
+  }
 }

@@ -35,9 +35,9 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // batch boundary: free the dedup/similarity pipeline caches (shared
-    // across the sweep for plan-dedup warmth, released here by contract)
-    graft.operators.CacheRegistry.releaseAll()
+    // batch boundary: free the memos and pipeline caches (shared across
+    // the sweep for plan-dedup warmth, released here by contract)
+    graft.operators.ResultMemo.release(spark)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -52,7 +52,8 @@ final class InMemoryDeadLetterQueue extends DeadLetterQueue {
     var es = entries.values.toSeq
     topic.foreach(t => es = es.filter(_.event.topic == t))
     eventType.foreach(t => es = es.filter(_.event.`type` == t))
-    es = es.sortBy(e => (-e.timestamp.getTime, e.event.id))
+    // newest first, ties by id descending — the Parquet and JDBC order
+    es = es.sortBy(e => (e.timestamp.getTime, e.timestamp.getNanos, e.event.id)).reverse
     limit.filter(_ > 0).fold(es)(es.take)
   }
 

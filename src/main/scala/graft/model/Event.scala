@@ -61,6 +61,14 @@ object Event {
 
   val DefaultSchemaVersion = "1.0" // reference: src/broker.ts:105
 
+  /** The log's event order: the FULL timestamp (sub-millisecond part
+    * included), then id — the `(timestamp, id)` order of
+    * `EventLog.getEvents`/`replayEvents`, for code that orders rows on
+    * the JVM (aggregate folds, ordered streaming delivery).
+    */
+  val order: Ordering[EventRow] =
+    Ordering.by((e: EventRow) => (e.timestamp.getTime, e.timestamp.getNanos, e.id))
+
   private val idCounter = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Event id: `<epochms base36, 9 chars>-<counter 6>-<random 8 hex>`.

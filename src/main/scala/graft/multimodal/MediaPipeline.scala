@@ -301,7 +301,7 @@ object MediaPipeline {
     // cached BEFORE the sizing count and the self-join: `features` usually
     // hangs off the decode mapPartitions, and without the cache the decode
     // would run once for the count and once per join side (3 full passes)
-    val cached = graft.operators.CacheRegistry.track(features.toDF().cache())
+    val cached = features.toDF().cache()
     val planes = blockPlanes.getOrElse(
       graft.functions.VectorFunctions.blockPlanesFor(cached.count()))
     val f = cached

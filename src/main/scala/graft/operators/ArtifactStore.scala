@@ -10,10 +10,10 @@ import org.apache.spark.sql.types.StructType
   * term-frequency index, the gram explode, the IVF/Lloyd tower, the PPJoin
   * prefix index, the daily event rollup).
   *
-  * Why: [[ResultMemo]] and [[CacheRegistry]] make a hub build once per
-  * SESSION — but a real deployment restarts, and a 100 TB engine cannot
-  * re-pay an index build (a full-corpus tokenize + shuffle) on every
-  * restart. The artifact store gives those hubs published-artifact
+  * Why: [[ResultMemo]] (with Spark's cache manager) makes a hub build
+  * once per SESSION — but a real deployment restarts, and a 100 TB
+  * engine cannot re-pay an index build (a full-corpus tokenize +
+  * shuffle) on every restart. The artifact store gives those hubs published-artifact
   * semantics across sessions: build once, write parquet + a fingerprint
   * sidecar, and every later session (or bench pass) whose INPUTS are
   * byte-identical loads the stored table instead of re-deriving it.

@@ -98,15 +98,12 @@ object Backfill {
           .select(col(partitionCol).cast("string"))
           .distinct().collect().map(_.getString(0)).toSet
       }.getOrElse(Set.empty) -- produced
-      val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try out.write
-        .mode("overwrite")
-        .partitionBy(partitionCol)
-        .parquet(tablePath)
-      finally prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+      graft.EngineSession.withConf(spark,
+          "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+        out.write
+          .mode("overwrite")
+          .partitionBy(partitionCol)
+          .parquet(tablePath)
       }
       if (stale.nonEmpty) {
         val root = new Path(tablePath)

@@ -95,10 +95,9 @@ object ConnectedComponents {
     }
     // localCheckpoint blocks of old rounds are storage-reclaimed; reliable
     // rounds were deleted as they were superseded (above). A kept edge
-    // cache is handed to the registry so a batch-boundary releaseAll
-    // still frees it (warm for re-runs, never a leak)
+    // cache stays in the session's cache manager, so a batch-boundary
+    // ResultMemo.release still frees it (warm for re-runs, never a leak)
     if (unpersistEdges) edges.unpersist(blocking = false)
-    else CacheRegistry.track(edges)
     labels
   }
 

@@ -65,10 +65,10 @@ object DistributedNtile {
     // best-effort optimization — a re-instantiated RangePartitioner
     // re-samples boundaries (its seed derives from the RDD id) and the
     // two subtrees would disagree on __part. Caching pins one layout.
-    val parts = CacheRegistry.track(melted
+    val parts = melted
       .repartitionByRange(col("__metric"), col("__sv"), col(key))
       .withColumn("__part", spark_partition_id())
-      .cache())
+      .cache()
     parts.count()
     // null guard (see scaladoc): one cached-scan probe at build time —
     // a null sortVal would break ntile-law equivalence for descending

@@ -40,8 +40,8 @@ object IvfIncremental {
     val s = vectors.sparkSession
     import s.implicits._
     graft.functions.expressions.GraftFunctions.register(s)
-    val e = CacheRegistry.track(vectors
-      .select($"vec_id", $"v", sqrt(dot($"v", $"v")).as("nrm")).cache())
+    val e = vectors
+      .select($"vec_id", $"v", sqrt(dot($"v", $"v")).as("nrm")).cache()
     def centroidsOf(assigned: DataFrame): DataFrame =
       assigned.select($"cl", posexplode($"v"))
         .groupBy($"cl", $"pos").agg(round(avg($"col"), 6).as("c"))

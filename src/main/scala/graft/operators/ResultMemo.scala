@@ -1,31 +1,55 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Session-scoped memo for EAGERLY-materialized results. [[CacheRegistry]]
-  * handles lazy cached plans (Spark's cache manager dedupes identical
-  * plans, so re-building the same lazy frame is free); it cannot help an
-  * operator like [[ConnectedComponents]] that RUNS its iterations inside
-  * the builder call — every invocation would re-execute the loop even
-  * though the result is the same table. Queries that share such a result
-  * (q36/q84 both need the document component table; bench passes re-run
-  * every query 3×) memoize it here, keyed by input path + session.
+/** The engine's one batch-lifetime cache: a session-scoped store for
+  * results that must outlive the function that built them, released in
+  * one call at the batch boundary.
   *
-  * Lifecycle contract: cleared by [[CacheRegistry.releaseAll]] at the same
-  * batch boundaries that release the caches — a session that rewrites an
-  * input under the same path across batches gets a fresh computation in
-  * the next batch, never a stale memo.
+  * Four kinds of entry share one map, each keyed by (session, kind, name,
+  * input dir), so no two kinds can collide and no caller builds a key:
+  *
+  *   - frames ([[getOrCompute]]): EAGERLY-materialized results. Spark's
+  *     cache manager dedupes identical lazy plans, but it cannot help an
+  *     operator like [[ConnectedComponents]] that RUNS its iterations
+  *     inside the builder call — every invocation would re-execute the
+  *     loop even though the result is the same table. Queries that share
+  *     such a result (q36/q84 both need the document component table;
+  *     bench passes re-run every query 3×) memoize it here;
+  *   - reports ([[report]]): bounded ledgers collected to the driver;
+  *   - artifacts ([[artifact]]): non-DataFrame builds (a Bloom filter);
+  *   - base tables ([[baseTable]]): `Tables`' session-cached scans.
+  *
+  * The session is part of every key (the session object itself, compared
+  * by identity): a frame bound to one session is never handed to
+  * another. Entries hold their session, so a live key can never be
+  * reissued to a different session.
+  *
+  * Lifecycle contract: the session owner calls [[release]] at a batch
+  * boundary — a session that rewrites an input under the same path
+  * across batches gets a fresh computation in the next batch, never a
+  * stale memo. There is no ledger of `.cache()` handles: Spark's cache
+  * manager already records every one, and [[release]] clears it.
   */
 object ResultMemo {
 
-  private val memo = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private final case class Key(session: SparkSession, kind: String,
+      name: String, dir: String)
 
-  /** Return the memoized frame for `key`, computing (and running) it once
-    * per batch. Keys should include every input the result depends on
-    * (path, parameters) plus the session identity.
+  private val store = scala.collection.concurrent.TrieMap.empty[Key, AnyRef]
+
+  private def memo[T](s: SparkSession, kind: String, name: String, dir: String)(
+      compute: => AnyRef): T =
+    store.getOrElseUpdate(Key(s, kind, name, dir.stripSuffix("/")), compute)
+      .asInstanceOf[T]
+
+  /** Return the memoized frame for `name` over the inputs under `dir`,
+    * computing (and running) it once per batch. `name` must cover every
+    * parameter the result depends on besides `dir`.
     */
-  def getOrCompute(key: String)(compute: => DataFrame): DataFrame =
-    memo.getOrElseUpdate(key, compute)
+  def getOrCompute(s: SparkSession, name: String, dir: String)(
+      compute: => DataFrame): DataFrame =
+    memo[DataFrame](s, "frame", name, dir)(compute)
 
   /** Hard ceiling on a report's row count. The "bounded ledger" contract
     * is otherwise caller-declared only — a future caller memoizing a
@@ -51,7 +75,8 @@ object ResultMemo {
     * semantics every KB-sized ledger here shares. Schema (names, types,
     * nullability) is preserved exactly.
     */
-  def report(key: String)(compute: => DataFrame): DataFrame = {
+  def report(s: SparkSession, name: String, dir: String)(
+      compute: => DataFrame): DataFrame = {
     touches.incrementAndGet()
     // Audit passthrough: with spark.graft.report.passthrough=true the
     // UNCOLLECTED frame is returned (and not memoized), so plan linters
@@ -62,10 +87,10 @@ object ResultMemo {
     // eagerly) — "passthrough" means un-memoized, not free. Checked
     // BEFORE the memo: a warm memo from an earlier consumer must not
     // hand the auditor a driver-local relation.
-    val passthrough = org.apache.spark.sql.SparkSession.getActiveSession
+    val passthrough = SparkSession.getActiveSession
       .exists(_.conf.getOption("spark.graft.report.passthrough").contains("true"))
     if (passthrough) compute
-    else memo.getOrElseUpdate(key, {
+    else memo[DataFrame](s, "report", name, dir) {
       val df = compute
       val spark = df.sparkSession
       // limit(cap+1) detects overflow without ever collecting an
@@ -74,27 +99,41 @@ object ResultMemo {
       val rows = df.limit(MaxReportRows + 1).collect().toSeq
       if (rows.size > MaxReportRows)
         throw new IllegalStateException(
-          s"ResultMemo.report('$key'): result exceeds $MaxReportRows rows — " +
+          s"ResultMemo.report('$name' over $dir): result exceeds $MaxReportRows rows — " +
             "report ledgers must be bounded (day/type/k grain), not " +
             "data-proportional; memoize a DERIVED rollup or drop the memo")
       spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), df.schema)
-    })
+    }
   }
 
-  private val artifacts =
-    scala.collection.concurrent.TrieMap.empty[String, Option[AnyRef]]
-
-  /** Session-scoped memo for non-DataFrame build ARTIFACTS (a serialized
-    * Bloom filter, a trained codebook): the stored-index semantics — the
-    * build runs once per batch, probes reuse the artifact. Same lifecycle
-    * as the frame memo (cleared at batch boundaries). Null-safe: a build
-    * that returns null (e.g. a Bloom aggregate over an EMPTY corpus) is
+  /** Memo for non-DataFrame build ARTIFACTS (a serialized Bloom filter, a
+    * trained codebook): the stored-index semantics — the build runs once
+    * per batch, probes reuse the artifact. Null-safe: a build that
+    * returns null (e.g. a Bloom aggregate over an EMPTY corpus) is
     * memoized as the null artifact, not a TrieMap NPE.
     */
-  def artifact[T <: AnyRef](key: String)(compute: => T): T =
-    artifacts.getOrElseUpdate(key, Option(compute)).orNull.asInstanceOf[T]
+  def artifact[T <: AnyRef](s: SparkSession, name: String, dir: String)(
+      compute: => T): T =
+    memo[Option[AnyRef]](s, "artifact", name, dir)(Option(compute)).orNull.asInstanceOf[T]
 
-  def clear(): Unit = { memo.clear(); artifacts.clear() }
+  /** Memo for `Tables`' session-cached base-table scans (the
+    * `spark.graft.cacheBaseTables` mode).
+    */
+  private[graft] def baseTable(s: SparkSession, name: String, dir: String)(
+      compute: => DataFrame): DataFrame =
+    memo[DataFrame](s, "table", name, dir)(compute)
 
-  def size: Int = memo.size
+  /** The batch boundary: forget every memoized entry and drop every cache
+    * in `spark`'s cache manager. That manager is shared by every session
+    * of the SparkContext, so this drops ALL cached data — the engine's
+    * hubs and base tables, and any cache a caller made itself — not only
+    * the engine's. Call it only from the code that owns the sessions
+    * (Bench and Verify do, after their sweeps). Non-blocking: the
+    * entries leave the cache manager immediately; block eviction
+    * completes asynchronously.
+    */
+  def release(spark: SparkSession): Unit = {
+    store.clear()
+    spark.catalog.clearCache()
+  }
 }

@@ -269,7 +269,7 @@ object AnalyticQueries {
     // stored profile artifact — three exact distinct legs run once per
     // (session, dir), not once per read.
     "q20_distinct_counts" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"distincts:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "distincts", dir) {
       import s.implicits._
       Tables.lineitem(s, dir).agg(
         countDistinct($"l_orderkey").as("n_orders"),

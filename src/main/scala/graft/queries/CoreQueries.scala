@@ -243,8 +243,9 @@ object CoreQueries {
       val schema = StructType(Seq(
         StructField("doc_id", LongType), StructField("lang", StringType),
         StructField("n_chars", LongType)))
+      // one cached parse serves both sides; the batch-boundary release
+      // frees it
       val imp = graft.sources.JsonlImporter.read(s, src, schema)
-      graft.operators.CacheRegistry.track(imp.parsed) // one parse, both sides
       val perLang = imp.valid.groupBy($"lang")
         .agg(count(lit(1)).as("n_docs"), sum($"n_chars").as("sum_chars"))
       val quarantined = imp.corrupt

@@ -113,13 +113,12 @@ object DedupQueries {
     */
   private def spanGrams(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.operators.CacheRegistry.track(
-      graft.operators.ArtifactStore.table(s, "span_grams_pos",
-        Seq(s"${dir.stripSuffix("/")}/documents.parquet"), s"k=$SpanK,bv1") {
-        DocProfiles.profiled(s, dir)
-          .select($"doc_id", posexplode(wordShingles($"toks", SpanK)))
-          .select($"doc_id", $"pos", md5($"col".cast("binary")).as("gh"))
-      }.cache())
+    graft.operators.ArtifactStore.table(s, "span_grams_pos",
+      Seq(s"${dir.stripSuffix("/")}/documents.parquet"), s"k=$SpanK,bv1") {
+      DocProfiles.profiled(s, dir)
+        .select($"doc_id", posexplode(wordShingles($"toks", SpanK)))
+        .select($"doc_id", $"pos", md5($"col".cast("binary")).as("gh"))
+    }.cache()
   }
 
   /** MinHash signature rows (doc_id, i, mh): mh = lexicographic min of the
@@ -153,7 +152,7 @@ object DedupQueries {
     val bandCount = Window.partitionBy($"i", $"mh")
     // STORED artifact (r10): the skew-capped (doc_id, band, minhash)
     // table IS the LSH index a deployment stores at ingest.
-    val sig = graft.operators.CacheRegistry.track(
+    val sig =
       graft.operators.ArtifactStore.table(s, "minhash_bands",
         Seq(s"${dir.stripSuffix("/")}/documents.parquet"),
         s"K=$K,cap=$MaxBand,bv1") {
@@ -161,7 +160,7 @@ object DedupQueries {
           .withColumn("bc", count(lit(1)).over(bandCount))
           .where($"bc" <= MaxBand)
           .drop("bc")
-      }.cache())
+      }.cache()
     // shuffle_hash PINNED (r10): the band table is data-proportional, and
     // the stored-artifact scan's small file stats would otherwise flip
     // this self-join to a broadcast of the whole index — fine at sf0.1,
@@ -197,12 +196,12 @@ object DedupQueries {
     */
   private def scoredCandidates(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sets = graft.operators.CacheRegistry.track(shingleSets(s, dir).cache())
+    val sets = shingleSets(s, dir).cache()
     val cand = lshCandidates(s, dir, sets, 2)
     // shuffle_hash PINNED (r10): sets is the data-proportional side; the
     // artifact scan's file stats would auto-broadcast it (scale-wrong).
     // Building the candidate-pair side keeps the fetch candidate-driven.
-    graft.operators.CacheRegistry.track(cand
+    cand
       .hint("shuffle_hash")
       .join(sets.as("da"), $"a_id" === $"da.doc_id")
       .hint("shuffle_hash")
@@ -213,7 +212,7 @@ object DedupQueries {
       // keep the raw set cardinalities alongside jac: q81's containment
       // law re-derives from (i, ca, cb) without touching the sets again
       .withColumn("jac", ($"i" * lit(1.0)) / ($"ca" + $"cb" - $"i"))
-      .cache())
+      .cache()
   }
 
   /** The document near-dup component table — a STORED artifact (r12
@@ -227,19 +226,17 @@ object DedupQueries {
     * inside the call, so plan-level cache dedup can't share it — q36
     * (reports components) and q84 (rolls them up), plus bench's repeat
     * passes, would each pay the full loop. One run per batch instead;
-    * the memo clears with the cache registry at batch boundaries.
+    * `ResultMemo.release` clears the memo and the cache at batch boundaries.
     */
   private def docComponents(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.operators.ResultMemo.getOrCompute(
-      s"cc:docs:$dir:${graft.operators.SessionKey(s)}") {
-      graft.operators.CacheRegistry.track(
-        graft.operators.ArtifactStore.table(s, "doc_components",
-          Seq(s"${dir.stripSuffix("/")}/documents.parquet"), s"$JacTok,bv1") {
-          graft.operators.ConnectedComponents
-            .components(verifiedPairs(s, dir).select($"a_id", $"b_id"),
-              unpersistEdges = false)
-        }.cache())
+    graft.operators.ResultMemo.getOrCompute(s, "cc:docs", dir) {
+      graft.operators.ArtifactStore.table(s, "doc_components",
+        Seq(s"${dir.stripSuffix("/")}/documents.parquet"), s"$JacTok,bv1") {
+        graft.operators.ConnectedComponents
+          .components(verifiedPairs(s, dir).select($"a_id", $"b_id"),
+            unpersistEdges = false)
+      }.cache()
     }
   }
 
@@ -273,7 +270,7 @@ object DedupQueries {
     // sets ride the shared [[shingleSets]] artifact; the prefix rows are
     // their OWN stored artifact (r10): built once at ingest in a
     // deployment — threshold and shingle width ride `params`.
-    val sets = graft.operators.CacheRegistry.track(shingleSets(s, dir).cache())
+    val sets = shingleSets(s, dir).cache()
     val pre = graft.operators.ArtifactStore.table(s, "ppjoin_prefix",
       Seq(s"${dir.stripSuffix("/")}/documents.parquet"), s"$PpTok,bv1") {
       val tok = sets.select($"doc_id", explode($"sh").as("g"))
@@ -286,7 +283,7 @@ object DedupQueries {
         .select($"doc_id", $"c", explode(slice($"og", lit(1),
           $"c" - ceil($"c" * lit(PpThresh)).cast("int") + lit(1))).as("g"))
     }
-    (sets, graft.operators.CacheRegistry.track(pre.cache()))
+    (sets, pre.cache())
   }
 
   /** Candidates (a_id, b_id) verified to exact Jaccard >= 0.8 against the
@@ -322,20 +319,19 @@ object DedupQueries {
     // width change that bumps the prefix artifact invalidates the pairs
     // derived from it too). Only the published columns (a_id, b_id, jac)
     // are stored — the verify-internal i/ca/cb have no consumer here.
-    graft.operators.CacheRegistry.track(
-      graft.operators.ArtifactStore.table(s, "ppjoin_pairs",
-        Seq(s"${dir.stripSuffix("/")}/documents.parquet"),
-        s"$PpTok,$JacTok,bv1") {
-        val (sets, pre) = ppjoinIndex(s, dir)
-        // shuffle_hash PINNED (r10): prefix self-join buckets on g — the
-        // stored index's small file stats must not flip it to a broadcast
-        val cand = pre.as("a").hint("shuffle_hash").join(pre.as("b"),
-            $"a.g" === $"b.g" && $"a.doc_id" < $"b.doc_id" &&
-              $"b.c" * lit(1.0) >= $"a.c" * lit(PpThresh) &&
-              $"a.c" * lit(1.0) >= $"b.c" * lit(PpThresh))
-          .select($"a.doc_id".as("a_id"), $"b.doc_id".as("b_id")).distinct()
-        ppjoinVerify(s, sets, cand).select($"a_id", $"b_id", $"jac")
-      }.cache())
+    graft.operators.ArtifactStore.table(s, "ppjoin_pairs",
+      Seq(s"${dir.stripSuffix("/")}/documents.parquet"),
+      s"$PpTok,$JacTok,bv1") {
+      val (sets, pre) = ppjoinIndex(s, dir)
+      // shuffle_hash PINNED (r10): prefix self-join buckets on g — the
+      // stored index's small file stats must not flip it to a broadcast
+      val cand = pre.as("a").hint("shuffle_hash").join(pre.as("b"),
+          $"a.g" === $"b.g" && $"a.doc_id" < $"b.doc_id" &&
+            $"b.c" * lit(1.0) >= $"a.c" * lit(PpThresh) &&
+            $"a.c" * lit(1.0) >= $"b.c" * lit(PpThresh))
+        .select($"a.doc_id".as("a_id"), $"b.doc_id".as("b_id")).distinct()
+      ppjoinVerify(s, sets, cand).select($"a_id", $"b_id", $"jac")
+    }.cache()
   }
 
   /** (doc_id, simhash): `bits`-bit SimHash per document (bits <= 32 — one
@@ -420,7 +416,7 @@ object DedupQueries {
     // every probe — q69 stores its wider variant the same way), so it is
     // session-cached here too.
     "q32_simhash" -> ((s, dir) =>
-      graft.operators.CacheRegistry.track(simhashes(s, dir).cache())
+      simhashes(s, dir).cache()
         .orderBy(col("doc_id"))),
 
     // SimHash near-dup pairing — the q31→q33 completion for the SimHash
@@ -440,8 +436,8 @@ object DedupQueries {
     "q69_simhash_neardup" -> ((s, dir) => {
       import s.implicits._
       val width = simhashWidthFor(Tables.documents(s, dir).count())
-      val f = graft.operators.CacheRegistry.track(
-        simhashes(s, dir, bits = SimhashBands * width).cache())
+      val f =
+        simhashes(s, dir, bits = SimhashBands * width).cache()
       val mask = (1L << width) - 1
       val bands = array((0 until SimhashBands).map(j =>
         struct(lit(j).as("band"),
@@ -449,13 +445,13 @@ object DedupQueries {
       val wBand = Window.partitionBy($"band", $"key")
       // cached: both sides of the self-join read this (4n tiny rows) —
       // without it the explode+skew-window chain executes twice
-      val banded = graft.operators.CacheRegistry.track(
+      val banded =
         f.select($"doc_id", $"simhash", explode(bands).as("b"))
           .select($"doc_id", $"simhash", $"b.band".as("band"), $"b.key".as("key"))
           .withColumn("bc", count(lit(1)).over(wBand))
           .where($"bc" <= MaxBand)
           .drop("bc")
-          .cache())
+          .cache()
       // shuffle_hash PINNED (r10): data-proportional band self-join — the
       // stored simhash artifact's file stats must not flip it to a
       // broadcast of the whole fingerprint table
@@ -585,25 +581,24 @@ object DedupQueries {
       // store machinery; params fold in the index generation's
       // width/threshold token (the exactPairs rationale). Row order is
       // imposed OUTSIDE the store (a parquet scan guarantees none).
-      graft.operators.CacheRegistry.track(
-        graft.operators.ArtifactStore.table(s, "ppjoin_incremental_pairs",
-          Seq(s"${dir.stripSuffix("/")}/documents.parquet"),
-          s"$PpTok,$JacTok,arr0.9,bv1") {
-          val (sets, pre) = ppjoinIndex(s, dir)
-          def isNew(c: Column): Column =
-            (conv(substring(md5(concat(lit(""), c.cast("string")).cast("binary")),
-              1, 4), 16, 10).cast("double") / 65536.0) >= 0.9
-          val arr = pre.where(isNew($"doc_id"))
-          val corp = pre.where(!isNew($"doc_id"))
-          val cand = arr.as("a").join(corp.as("b"),
-              $"a.g" === $"b.g" &&
-                $"b.c" * lit(1.0) >= $"a.c" * lit(PpThresh) &&
-                $"a.c" * lit(1.0) >= $"b.c" * lit(PpThresh))
-            .select($"a.doc_id".as("a_id"), $"b.doc_id".as("b_id")).distinct()
-          ppjoinVerify(s, sets, cand)
-            .select($"a_id".as("arrival_id"), $"b_id".as("corpus_id"),
-              round($"jac", 6).as("jac"))
-        }.cache())
+      graft.operators.ArtifactStore.table(s, "ppjoin_incremental_pairs",
+        Seq(s"${dir.stripSuffix("/")}/documents.parquet"),
+        s"$PpTok,$JacTok,arr0.9,bv1") {
+        val (sets, pre) = ppjoinIndex(s, dir)
+        def isNew(c: Column): Column =
+          (conv(substring(md5(concat(lit(""), c.cast("string")).cast("binary")),
+            1, 4), 16, 10).cast("double") / 65536.0) >= 0.9
+        val arr = pre.where(isNew($"doc_id"))
+        val corp = pre.where(!isNew($"doc_id"))
+        val cand = arr.as("a").join(corp.as("b"),
+            $"a.g" === $"b.g" &&
+              $"b.c" * lit(1.0) >= $"a.c" * lit(PpThresh) &&
+              $"a.c" * lit(1.0) >= $"b.c" * lit(PpThresh))
+          .select($"a.doc_id".as("a_id"), $"b.doc_id".as("b_id")).distinct()
+        ppjoinVerify(s, sets, cand)
+          .select($"a_id".as("arrival_id"), $"b_id".as("corpus_id"),
+            round($"jac", 6).as("jac"))
+      }.cache()
         .orderBy($"arrival_id", $"corpus_id")
     }),
 
@@ -806,7 +801,7 @@ object DedupQueries {
     // decision ledger is the stored artifact of one ingest batch — the
     // probe joins run once per (session, dir), not once per read.
     "q102_incremental_dedup" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"incdedup:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "incdedup", dir) {
       import s.implicits._
       val docs = DocProfiles.profiled(s, dir)
         .select($"doc_id", $"lang", $"pct", $"ch", $"fp")
@@ -842,8 +837,7 @@ object DedupQueries {
     // pairs; same skew law as [[MaxBand]]) → ONE self-join on the gram
     // hash bounded by cap²·n_grams, → count per pair. All-integer output:
     // no float law needed.
-    "q127_span_pairs" -> ((s, dir) => graft.operators.ResultMemo.report(
-        s"spanpairs:$dir:${graft.operators.SessionKey(s)}") {
+    "q127_span_pairs" -> ((s, dir) => graft.operators.ResultMemo.report(s, "spanpairs", dir) {
       import s.implicits._
       // the pair ledger is the stored span-index artifact — 20 all-integer
       // rows published by the scheduled dedup job (r11: ArtifactStore, was
@@ -857,9 +851,9 @@ object DedupQueries {
         s"k=$SpanK,cap=$SpanDfCap,bv1") {
         // doc-distinct projection of the STORED positional span-gram
         // index (shared with q133) — built only on a ledger miss
-        val g = graft.operators.CacheRegistry.track(spanGrams(s, dir)
+        val g = spanGrams(s, dir)
           .select($"doc_id", $"gh")
-          .distinct().cache())
+          .distinct().cache()
         val rare = g.groupBy($"gh").agg(count(lit(1)).as("m"))
           .where($"m" >= 2 && $"m" <= SpanDfCap)
         val gg = g.join(rare.select($"gh"), Seq("gh"), "left_semi")
@@ -887,7 +881,7 @@ object DedupQueries {
     // with the candidate set, not re-swept per restart — exact counts +
     // literal thresholds, stored == derived.
     "q115_dedup_threshold_sweep" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"rep115:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "rep115", dir) {
       graft.operators.ArtifactStore.table(s, "threshold_sweep_ledger",
         Seq(s"${dir.stripSuffix("/")}/documents.parquet"), "thr3,bv1") {
       import s.implicits._
@@ -927,10 +921,10 @@ object DedupQueries {
     "q167_lsh_eval" -> ((s, dir) => {
       import s.implicits._
       val sc = scoredCandidates(s, dir)
-      val sets = graft.operators.CacheRegistry.track(shingleSets(s, dir).cache())
+      val sets = shingleSets(s, dir).cache()
       val sample = sets.where($"doc_id" < 10)
       val inter = size(array_intersect($"sa.sh", $"sb.sh"))
-      val truth = graft.operators.CacheRegistry.track(
+      val truth =
         sets.as("sb").crossJoin(broadcast(sample.as("sa")))
           .where($"sa.doc_id" =!= $"sb.doc_id")
           .select(least($"sa.doc_id", $"sb.doc_id").as("a_id"),
@@ -939,7 +933,7 @@ object DedupQueries {
               (size($"sa.sh") + size($"sb.sh") - inter)).as("tjac"))
           .distinct() // both-in-sample pairs arrive twice, identically
           .where($"tjac" >= 0.8)
-          .cache())
+          .cache()
       val nTruth = truth.agg(count(lit(1)).as("n_true_sample"))
       val agg = sc
         .select($"a_id", $"b_id", $"n_match", $"jac",
@@ -1084,8 +1078,7 @@ object DedupQueries {
       // EMPTY corpus builds a null filter and Some(null) must still mean
       // "prebuilt, and it is null" (the join handles null =
       // no-key-matches) - Option(null) = None would silently rebuild
-      val bf = graft.operators.ResultMemo.artifact(
-        s"bloom130:$dir:${graft.operators.SessionKey(s)}") {
+      val bf = graft.operators.ResultMemo.artifact(s, "bloom130", dir) {
         graft.operators.BloomPrefilter.storedFilter(s, "bloom_users_q130",
           Seq(s"${dir.stripSuffix("/")}/events.parquet"),
           "cut=2024-01-15,m=131072,bv1")(existing, "user_id", 1L << 17)
@@ -1126,8 +1119,7 @@ object DedupQueries {
     // join then runs ONLY over the candidate docs (semi-joined first), so
     // the diagonal windows see ~pair-count × doc-length rows, never the
     // corpus. All integers — no float law.
-    "q133_span_runs" -> ((s, dir) => graft.operators.ResultMemo.report(
-        s"spanruns:$dir:${graft.operators.SessionKey(s)}") {
+    "q133_span_runs" -> ((s, dir) => graft.operators.ResultMemo.report(s, "spanruns", dir) {
       import s.implicits._
       // the run-length ledger is the stored span-index artifact (r11:
       // ArtifactStore, was session-memoized only) — all-integer rows,
@@ -1186,8 +1178,7 @@ object DedupQueries {
       val existing = ev.where($"ts" < cut).select($"user_id")
       val arrivals = ev.where($"ts" >= cut)
       // stored-tier filter, same rationale as q130 (r13 verdict #2)
-      val bf = graft.operators.ResultMemo.artifact(
-        s"bloom138:$dir:${graft.operators.SessionKey(s)}") {
+      val bf = graft.operators.ResultMemo.artifact(s, "bloom138", dir) {
         graft.operators.BloomPrefilter.storedFilter(s, "bloom_users_q138",
           Seq(s"${dir.stripSuffix("/")}/events.parquet"),
           "cut=2024-01-02,m=131072,bv1")(existing, "user_id", 1L << 17)
@@ -1265,14 +1256,14 @@ object DedupQueries {
     // q109/q121 index-build-report treatment): winnowing overlap is
     // measured when the fingerprint index is built, then READ.
     "q228_winnowing_overlap" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"winnow:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "winnow", dir) {
       import s.implicits._
       val ghs = transform(wordShingles($"toks", 5), x => md5(x.cast("binary")))
       // the exploded (doc_id, fp) index is the artifact every leg reads
       // (df-cap, both self-join sides) — a STORED artifact since r10
       // (winnowing fingerprints are computed at ingest, then READ) and
       // session-cached so the per-batch join legs share one scan
-      val fp = graft.operators.CacheRegistry.track(
+      val fp =
         graft.operators.ArtifactStore.table(s, "winnow_fp",
           Seq(s"${dir.stripSuffix("/")}/documents.parquet"), "w5-win4,bv1") {
           DocProfiles.profiled(s, dir)
@@ -1284,7 +1275,7 @@ object DedupQueries {
             .where(size($"fps") > 0)
             .select($"doc_id", size($"fps").cast("long").as("n_fp"),
               explode($"fps").as("fp"))
-        }.cache())
+        }.cache()
       val nf = fp.groupBy($"doc_id").agg(first($"n_fp").as("n_fp"))
       val keep = fp.groupBy($"fp").agg(count(lit(1)).as("nd"))
         .where($"nd" >= 2 && $"nd" <= 32)

@@ -29,7 +29,7 @@ object DocProfiles {
     // + quality inputs); a restarted session reads it instead of
     // re-tokenizing the corpus. Every derived value is md5/arithmetic-
     // deterministic, so stored == derived bit-for-bit.
-    graft.operators.CacheRegistry.track(graft.operators.ArtifactStore
+    graft.operators.ArtifactStore
       .table(s, "docprofiles_profiled",
         Seq(s"${dir.stripSuffix("/")}/documents.parquet"), "bv1") {
         Tables.documents(s, dir)
@@ -44,7 +44,7 @@ object DocProfiles {
             size(filter($"toks", t => t.isin("the", "a", "of", "and", "to", "is"))))
           .withColumn("fp", array_min(transform(wordShingles($"toks", 5),
             x => md5(x.cast("binary")))))
-      }.cache())
+      }.cache()
   }
 
   /** ONE cached explode of every document's word-5-grams — (doc_id, pct,
@@ -62,13 +62,13 @@ object DocProfiles {
     */
   def grams(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.operators.CacheRegistry.track(graft.operators.ArtifactStore
+    graft.operators.ArtifactStore
       .table(s, "docprofiles_grams",
         Seq(s"${dir.stripSuffix("/")}/documents.parquet"), "w5,bv1") {
         profiled(s, dir)
           .select($"doc_id", $"pct", explode(wordShingles($"toks", 5)).as("g"))
           .withColumn("gh", md5($"g".cast("binary")))
-      }.cache())
+      }.cache()
   }
 
   /** The distinct test-split gram hashes (pct >= 0.9) both decontamination
@@ -78,8 +78,7 @@ object DocProfiles {
     */
   def testGrams(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.operators.CacheRegistry.track(
-      grams(s, dir).where($"pct" >= 0.9).select($"gh").distinct().cache())
+    grams(s, dir).where($"pct" >= 0.9).select($"gh").distinct().cache()
   }
 
   /** The distinct TRAIN-split gram hashes (pct < 0.8) — the train-side
@@ -90,8 +89,7 @@ object DocProfiles {
     */
   def trainGrams(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.operators.CacheRegistry.track(
-      grams(s, dir).where($"pct" < 0.8).select($"gh").distinct().cache())
+    grams(s, dir).where($"pct" < 0.8).select($"gh").distinct().cache()
   }
 
   /** ONE cached (source, w, c) count of lowercase whitespace tokens —
@@ -104,11 +102,11 @@ object DocProfiles {
     */
   def sourceWordCounts(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.operators.CacheRegistry.track(Tables.documents(s, dir)
+    Tables.documents(s, dir)
       .select($"source", explode(split(lower(trim($"text")), "\\s+")).as("w"))
       .where(length($"w") > 0)
       .groupBy($"source", $"w").agg(count(lit(1)).as("c"))
-      .cache())
+      .cache()
   }
 
   /** The corpus term-frequency table (doc_id, term, tf) — the shared
@@ -120,12 +118,12 @@ object DocProfiles {
     */
   def termFreqs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.operators.CacheRegistry.track(graft.operators.ArtifactStore
+    graft.operators.ArtifactStore
       .table(s, "docprofiles_termfreqs",
         Seq(s"${dir.stripSuffix("/")}/documents.parquet"), "bv1") {
         profiled(s, dir)
           .select($"doc_id", explode($"toks").as("term"))
           .groupBy($"doc_id", $"term").agg(count(lit(1)).as("tf"))
-      }.cache())
+      }.cache()
   }
 }

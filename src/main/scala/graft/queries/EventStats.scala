@@ -45,8 +45,7 @@ object EventStats {
     */
   def byUser(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.operators.ResultMemo.getOrCompute(
-        s"evstats-byuser:$dir:${graft.operators.SessionKey(s)}") {
+    graft.operators.ResultMemo.getOrCompute(s, "evstats-byuser", dir) {
       withPinnedCacheLayout(s) {
         // RANGE-partitioned by user, not hash (r15, guide §2.4): range
         // clustering satisfies every per-user window/groupBy exactly like
@@ -63,9 +62,9 @@ object EventStats {
         // BINARY consumers must NOT read this hub on both join sides:
         // range specs never co-partition for EnsureRequirements — see
         // [[byUserHash]] (r16).
-        val df = graft.operators.CacheRegistry.track(
+        val df =
           Tables.events(s, dir).repartitionByRange(hubWidth(s, dir), $"user_id")
-            .sortWithinPartitions($"user_id", $"ts", $"event_id").cache())
+            .sortWithinPartitions($"user_id", $"ts", $"event_id").cache()
         df.count()
         df
       }
@@ -93,12 +92,11 @@ object EventStats {
     */
   def byUserHash(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.operators.ResultMemo.getOrCompute(
-        s"evstats-byuserhash:$dir:${graft.operators.SessionKey(s)}") {
+    graft.operators.ResultMemo.getOrCompute(s, "evstats-byuserhash", dir) {
       withPinnedCacheLayout(s) {
-        val df = graft.operators.CacheRegistry.track(
+        val df =
           Tables.events(s, dir).repartition(hubWidth(s, dir), $"user_id")
-            .sortWithinPartitions($"user_id", $"ts", $"event_id").cache())
+            .sortWithinPartitions($"user_id", $"ts", $"event_id").cache()
         df.count()
         df
       }
@@ -111,10 +109,8 @@ object EventStats {
     * to; at 100 TB the size term dominates and the floor is irrelevant.
     */
   private def hubWidth(s: SparkSession, dir: String): Int = {
-    val spreadCap = s.conf.getOption("spark.graft.cacheSpread")
-      .map(_.toInt).getOrElse(8)
     val floor = math.max(1,
-      math.min(s.sparkContext.defaultParallelism, spreadCap))
+      math.min(s.sparkContext.defaultParallelism, Tables.CacheSpread))
     val target = 64L << 20
     // ×4 ≈ parquet→unsafe-row expansion; exactness is irrelevant, the
     // term only needs to GROW the width once input outruns the floor.
@@ -136,16 +132,9 @@ object EventStats {
     * is compiled, so scoping it to the build pins THIS cache's layout
     * without forcing every other cache in the session to full fan-out.
     */
-  private def withPinnedCacheLayout[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "false")
-    try body
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
-    }
-  }
+  private def withPinnedCacheLayout[T](s: SparkSession)(body: => T): T =
+    graft.EngineSession.withConf(s,
+      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "false")(body)
 
   /** (day DATE, event_type STRING, n BIGINT, total_dec DECIMAL(18,2)).
     * Eagerly materialized like [[byUser]] so consumers reuse the rollup's
@@ -164,17 +153,16 @@ object EventStats {
     */
   def dailyTypeAgg(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.operators.ResultMemo.getOrCompute(
-        s"evstats-daily:$dir:${graft.operators.SessionKey(s)}") {
+    graft.operators.ResultMemo.getOrCompute(s, "evstats-daily", dir) {
       withPinnedCacheLayout(s) {
-        val df = graft.operators.CacheRegistry.track(graft.operators
+        val df = graft.operators
           .ArtifactStore.table(s, "eventstats_daily",
             Seq(s"${dir.stripSuffix("/")}/events.parquet"), "bv1") {
             Tables.events(s, dir)
               .groupBy(to_date($"ts").as("day"), $"event_type")
               .agg(count(lit(1)).as("n"),
                 sum($"value".cast("decimal(18,2)")).as("total_dec"))
-          }.cache())
+          }.cache()
         df.count()
         df
       }

@@ -30,33 +30,28 @@ object ExtendedQueries {
     * dedup shuffle per batch instead of one per query.
     */
   private def userDays(s: SparkSession, dir: String): DataFrame =
-    graft.operators.ResultMemo.getOrCompute(
-      s"userdays:$dir:${graft.operators.SessionKey(s)}") {
+    graft.operators.ResultMemo.getOrCompute(s, "userdays", dir) {
       import s.implicits._
-      graft.operators.CacheRegistry.track(
-        Tables.events(s, dir)
-          .select($"user_id", to_date($"ts").as("day")).distinct().cache())
+      Tables.events(s, dir)
+        .select($"user_id", to_date($"ts").as("day")).distinct().cache()
     }
 
   /** Trailing-7-day exact distinct users per day (the WAU grid), cached
     * and shared by q101 and q120 (where it is the rel_err reference).
     */
   private def wau7(s: SparkSession, dir: String): DataFrame =
-    graft.operators.ResultMemo.getOrCompute(
-      s"wau7:$dir:${graft.operators.SessionKey(s)}") {
+    graft.operators.ResultMemo.getOrCompute(s, "wau7", dir) {
       import s.implicits._
       val ud = userDays(s, dir)
       val days = ud.select($"day").distinct()
-      graft.operators.CacheRegistry.track(
-        days.as("d").join(ud.as("u"),
-            datediff($"d.day", $"u.day").between(0, 6))
-          .groupBy($"d.day").agg(countDistinct($"u.user_id").as("wau"))
-          .cache())
+      days.as("d").join(ud.as("u"),
+          datediff($"d.day", $"u.day").between(0, 6))
+        .groupBy($"d.day").agg(countDistinct($"u.user_id").as("wau"))
+        .cache()
     }
 
   private def exactPricePercentiles(s: SparkSession, dir: String): DataFrame =
-    graft.operators.ResultMemo.getOrCompute(
-      s"pricepct:$dir:${graft.operators.SessionKey(s)}") {
+    graft.operators.ResultMemo.getOrCompute(s, "pricepct", dir) {
       import s.implicits._
       val eq = Tables.lineitem(s, dir)
         .agg(expr("percentile(l_extendedprice, array(0.5, 0.95, 0.99))").as("eq"))
@@ -73,11 +68,11 @@ object ExtendedQueries {
     // physical range partitioning (spark_partition_id per row) — exchange
     // reuse is best-effort, a re-sampled RangePartitioner would let the
     // two subtrees disagree on `part` (the DistributedNtile.scores law)
-    val parts = graft.operators.CacheRegistry.track(Tables.events(s, dir)
+    val parts = Tables.events(s, dir)
       .groupBy($"user_id").agg(count(lit(1)).as("cnt"))
       .repartitionByRange($"cnt", $"user_id")
       .withColumn("part", spark_partition_id())
-      .cache())
+      .cache()
     parts.count()
     val wLocal = Window.partitionBy($"part").orderBy($"cnt".asc, $"user_id".asc)
     val ranked = parts
@@ -459,7 +454,7 @@ object ExtendedQueries {
     // emitted columns are exact counts, 2 dp roundings and bound
     // booleans, so stored == derived.
     "q28_approx_sketches" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"sketchrep:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "sketchrep", dir) {
       graft.operators.ArtifactStore.table(s, "approx_sketch_ledger",
         Seq(s"${dir.stripSuffix("/")}/lineitem.parquet"), "bv1") {
         sketchFrame(s, dir)
@@ -488,7 +483,7 @@ object ExtendedQueries {
     // exists to amortize. Interpolated percentiles + 2/4 dp rounding are
     // deterministic, so stored == derived.
     "q119_portable_quantile" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"rep119:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "rep119", dir) {
       graft.operators.ArtifactStore.table(s, "quantile_eval_ledger",
         Seq(s"${dir.stripSuffix("/")}/lineitem.parquet"), "oct6x32,bv1") {
       import s.implicits._
@@ -593,12 +588,12 @@ object ExtendedQueries {
       // uniform 32-bit hash the registers consume
       val hv = conv(substring($"gh", 1, 8), 16, 10).cast("long")
       val wBits = $"hv" % 16777216L
-      val regs = graft.operators.CacheRegistry.track(sides
+      val regs = sides
         .select($"split", hv.as("hv"))
         .select($"split", shiftright($"hv", 24).as("bucket"),
           when(wBits === 0L, lit(25)).otherwise(lit(25) - length(bin(wBits))).as("rho"))
         .groupBy($"split", $"bucket").agg(max($"rho").as("rho"))
-        .cache())
+        .cache()
       val unionRegs = regs.groupBy($"bucket").agg(max($"rho").as("rho"))
         .select(lit("union").as("split"), $"bucket", $"rho")
       val alpha = 0.7213 / (1.0 + 1.079 / 256.0)
@@ -680,7 +675,7 @@ object ExtendedQueries {
     // roundings, stored == derived. With q101's grid and this ledger both
     // stored, the wau7/userDays session hubs never build on a restart.
     "q120_sketch_rollup" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"rep120:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "rep120", dir) {
       graft.operators.ArtifactStore.table(s, "sketch_rollup_ledger",
         Seq(s"${dir.stripSuffix("/")}/events.parquet"), "w7,bv1") {
       import s.implicits._
@@ -691,12 +686,12 @@ object ExtendedQueries {
       // the stored daily register table is THE artifact this query models
       // (a sketch store holds days × ≤256 rows; only probes recompute) —
       // cached, same treatment as q136's CMS cells
-      val daily = graft.operators.CacheRegistry.track(
+      val daily =
         ev.select(to_date($"ts").as("day"), hv.as("hv"))
           .select($"day", shiftright($"hv", 24).as("bucket"),
             when(wBits === 0L, lit(25)).otherwise(lit(25) - length(bin(wBits))).as("rho"))
           .groupBy($"day", $"bucket").agg(max($"rho").as("rho"))
-          .cache())
+          .cache()
       val days = daily.select($"day").distinct()
       val un = days.as("d").join(daily.as("s"),
           datediff($"d.day", $"s.day").between(0, 6))
@@ -728,7 +723,7 @@ object ExtendedQueries {
     // Memoized (r9 report treatment): bounded per-batch ledger,
     // computed once per (session, dir) and served driver-local.
     "q140_cusum_changepoint" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"rep140:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "rep140", dir) {
       import s.implicits._
       val daily = EventStats.dailyTypeAgg(s, dir)
         .groupBy($"day").agg(sum($"n").as("n")) // exact count re-sum
@@ -784,7 +779,7 @@ object ExtendedQueries {
     // Memoized (r9 report treatment): the 10-row probe ledger is the
     // stored sketch-store comparison artifact — computed once per batch.
     "q136_cms_rollup" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"cmsroll:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "cmsroll", dir) {
       import s.implicits._
       def buckets = explode(array((0 until 4).map(r =>
         struct(lit(r).as("r"),
@@ -797,13 +792,13 @@ object ExtendedQueries {
       // STORED artifact (r11): exact integer cells, mergeable by sum —
       // precisely what a sketch store persists at ingest; a restarted
       // session reads the cells instead of re-scanning events for them
-      val daily = graft.operators.CacheRegistry.track(
+      val daily =
         graft.operators.ArtifactStore.table(s, "cms_daily_cells",
           Seq(s"${dir.stripSuffix("/")}/events.parquet"), "d4,b256,bv1") {
           ev.select(to_date($"ts").as("day"), $"user_id")
             .select($"day", buckets.as("x"))
             .groupBy($"day", $"x.r".as("r"), $"x.b".as("b")).agg(count(lit(1)).as("c"))
-        }.cache())
+        }.cache()
       val days = daily.select($"day").distinct()
       val rolled = days.as("d").join(daily.as("s"),
           datediff($"d.day", $"s.day").between(0, 6))
@@ -812,13 +807,13 @@ object ExtendedQueries {
       // the exact reference roster is the comparison's stored fixture
       // (the q120/wau7 treatment) — cached, so the probe against the
       // rolled cells is the per-pass work
-      val exact = graft.operators.CacheRegistry.track(
+      val exact =
         ev.select(to_date($"ts").as("eday"), $"user_id")
           .crossJoin(broadcast(lastDay))
           .where(datediff($"day", $"eday").between(0, 6))
           .groupBy($"user_id").agg(count(lit(1)).as("exact_n7"))
           .orderBy($"exact_n7".desc, $"user_id".asc).limit(10)
-          .cache())
+          .cache()
       exact.crossJoin(broadcast(lastDay))
         .select($"user_id", $"exact_n7", $"day", buckets.as("x"))
         .select($"user_id", $"exact_n7", $"day", $"x.r".as("r"), $"x.b".as("b"))
@@ -841,8 +836,7 @@ object ExtendedQueries {
     // the collected result is bounded (days × types rows) and returned
     // as a literal frame; all scratch dirs are deleted after collect.
     "q121_incremental_rollup" -> ((s, dir) => {
-      graft.operators.ResultMemo.getOrCompute(
-        s"incroll:$dir:${graft.operators.SessionKey(s)}") {
+      graft.operators.ResultMemo.getOrCompute(s, "incroll", dir) {
         import s.implicits._
         // the two increment shipments are pure functions of the sf dir —
         // staged once per JVM (GateFixtures); each cold construction
@@ -964,7 +958,7 @@ object ExtendedQueries {
     // Memoized (r9 report treatment): bounded per-batch ledger,
     // computed once per (session, dir) and served driver-local.
     "q86_transition_matrix" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"rep86:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "rep86", dir) {
       import s.implicits._
       val w = Window.partitionBy($"user_id").orderBy($"ts".asc, $"event_id".asc)
       val wType = Window.partitionBy($"event_type")
@@ -992,7 +986,7 @@ object ExtendedQueries {
     // Memoized (r9 report treatment): bounded per-batch ledger,
     // computed once per (session, dir) and served driver-local.
     "q87_retention_cohorts" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"rep87:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "rep87", dir) {
       import s.implicits._
       val w = Window.partitionBy($"user_id")
       EventStats.byUser(s, dir) // user-clustered cache
@@ -1020,7 +1014,7 @@ object ExtendedQueries {
     // ANALYSIS per action). At 100 TB: one pass over the user-clustered
     // log, no joins at all.
     "q88_funnel" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"funnel:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "funnel", dir) {
       funnelFrame(s, dir)
     }),
 
@@ -1057,7 +1051,7 @@ object ExtendedQueries {
     // Memoized (r9 report treatment): bounded per-batch ledger,
     // computed once per (session, dir) and served driver-local.
     "q90_anomaly_zscore" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"rep90:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "rep90", dir) {
       import s.implicits._
       val daily = EventStats.dailyTypeAgg(s, dir)
         .select($"event_type", $"day", $"n".as("cnt"))
@@ -1094,7 +1088,7 @@ object ExtendedQueries {
     // subtree TWICE (ranked + offsets) and the result is one row — the
     // report treatment runs it once per (session, dir).
     "q107_activity_gini" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"gini:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "gini", dir) {
       giniFrame(s, dir)
     }),
 
@@ -1203,7 +1197,7 @@ object ExtendedQueries {
     // Memoized (r9 report treatment): the 5-row inter-event-gap percentile ledger is a per-batch
     // published artifact - computed once per (session, dir).
     "q150_gap_percentiles" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"gappct:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "gappct", dir) {
       import s.implicits._
       val w = Window.partitionBy($"user_id").orderBy($"ts".asc, $"event_id".asc)
       val gaps = EventStats.byUser(s, dir) // user-clustered cache
@@ -1331,13 +1325,13 @@ object ExtendedQueries {
       // the ~|types|×10×2-row bin-count table is read three times below
       // (cells, totals, and the n_ref/n_cur pivot) — cached so the
       // events-sized binning pass runs once (q148's DAG-depth lesson)
-      val binned = graft.operators.CacheRegistry.track(
+      val binned =
         ev.join(broadcast(edges), $"event_type" === $"et")
           .select($"event_type", $"side",
             (0 until 9).map(i => when($"es" (i) < $"value", 1).otherwise(0))
               .reduce(_ + _).as("bin"))
           .groupBy($"event_type", $"side", $"bin").agg(count(lit(1)).as("c"))
-          .cache())
+          .cache()
       // type roster off the 100-row cached bin table, not a fourth
       // events pass (every type has a reference decile row by construction)
       val types = binned.select($"event_type").distinct()
@@ -1383,7 +1377,7 @@ object ExtendedQueries {
     // Memoized (r9 report treatment): the top-20 session-pattern ledger is a per-batch
     // published artifact - computed once per (session, dir).
     "q163_trajectory_patterns" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"trajpat:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "trajpat", dir) {
       import s.implicits._
       val byUser = Window.partitionBy($"user_id").orderBy($"ts".asc, $"event_id".asc)
       val sess = EventStats.byUser(s, dir) // user-clustered cache
@@ -1415,7 +1409,7 @@ object ExtendedQueries {
     // Memoized (r9 report treatment): the per-type robust-stats ledger is a per-batch
     // published artifact - computed once per (session, dir).
     "q145_winsorized_stats" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"winsor:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "winsor", dir) {
       import s.implicits._
       val e = Tables.events(s, dir).select($"event_type", $"value")
       val edges = e.groupBy($"event_type")
@@ -1493,7 +1487,7 @@ object ExtendedQueries {
     // Memoized (r9 report treatment): bounded per-batch ledger,
     // computed once per (session, dir) and served driver-local.
     "q106_seasonality" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"rep106:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "rep106", dir) {
       import s.implicits._
       val wType = Window.partitionBy($"event_type")
       Tables.events(s, dir)
@@ -1513,8 +1507,8 @@ object ExtendedQueries {
     // at 100 TB the (user, day) table is the small derived one and the
     // range join is day×30 rows, not event×30. (The approximate scale
     // path is q28's HLL sketches merged over windows.)
-    "q101_dau_wau_mau" -> ((s, dir) => graft.operators.ResultMemo.getOrCompute(
-        s"dauwaumau:$dir:${graft.operators.SessionKey(s)}") {
+    "q101_dau_wau_mau" -> ((s, dir) => graft.operators.ResultMemo
+        .getOrCompute(s, "dauwaumau", dir) {
       import s.implicits._
       // STORED artifact (r12): the engagement grid is the published daily
       // rollup every analytics stack refreshes on a schedule — a
@@ -1539,7 +1533,7 @@ object ExtendedQueries {
       // memoized per batch (the q36/q84/q99 report treatment): the
       // engagement triple is a day-count-sized rollup table — repeat
       // readers get the table, not a re-run of the trailing-window joins
-      val out = graft.operators.CacheRegistry.track(grid.cache())
+      val out = grid.cache()
       out.count()
       out
     }),
@@ -1583,7 +1577,7 @@ object ExtendedQueries {
     // Memoized (r9 report treatment): bounded per-batch ledger,
     // computed once per (session, dir) and served driver-local.
     "q214_neyman_allocation" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"rep214:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "rep214", dir) {
       import s.implicits._
       val m = Tables.events(s, dir)
         .select($"event_type", $"value".cast("decimal(18,2)").as("x"))
@@ -1620,7 +1614,7 @@ object ExtendedQueries {
     // Memoized (r9 report treatment): bounded per-batch ledger,
     // computed once per (session, dir) and served driver-local.
     "q210_mad_anomaly" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"rep210:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "rep210", dir) {
       import s.implicits._
       val d = EventStats.dailyTypeAgg(s, dir).select($"event_type", $"day", $"n")
       val med = d.groupBy($"event_type")
@@ -1649,7 +1643,7 @@ object ExtendedQueries {
     // Memoized (r9 report treatment): bounded per-batch ledger,
     // computed once per (session, dir) and served driver-local.
     "q220_table_profile" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"rep220:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "rep220", dir) {
       import s.implicits._
       graft.operators.TableProfiler.profile(Tables.lineitem(s, dir))
         .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
@@ -1694,7 +1688,7 @@ object ExtendedQueries {
     // Memoized (r9 report treatment): the 7-row constraint-suite verdict is a per-batch
     // published artifact - computed once per (session, dir).
     "q221_constraint_checks" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"constr:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "constr", dir) {
       import s.implicits._
       val li = Tables.lineitem(s, dir)
       val o = Tables.orders(s, dir)
@@ -1752,7 +1746,7 @@ object ExtendedQueries {
     // price of sessions exploding to the hours they span (linear). The
     // daily ledger is a stored concurrency report (memoized).
     "q237_interval_overlap" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"ivover:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "ivover", dir) {
       import s.implicits._
       val byUser = Window.partitionBy($"user_id").orderBy($"ts".asc, $"event_id".asc)
       val sess = EventStats.byUser(s, dir)
@@ -1831,7 +1825,7 @@ object ExtendedQueries {
     // feature store PUBLISHES (training and serving read the stored
     // encoder, never recompute it) — memoized accordingly.
     "q238_target_encoding" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"tgtenc:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "tgtenc", dir) {
       import s.implicits._
       val m1 = lit(50.0)
       val m2 = lit(200.0)
@@ -1865,7 +1859,7 @@ object ExtendedQueries {
     // grain, so every window runs on a horizon-days-sized table no matter
     // the log size; the decomposition is a published report (memoized).
     "q247_stl_decompose" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"stl:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "stl", dir) {
       import s.implicits._
       val daily = EventStats.dailyTypeAgg(s, dir)
         .groupBy($"day").agg(sum($"n").as("x"))
@@ -1912,7 +1906,7 @@ object ExtendedQueries {
     // two-pass rank (1.7 s in the r12 warm_boot profile). Exact counts +
     // 6 dp rounded averages, stored == derived.
     "q246_rfm_segments" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"rfm:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "rfm", dir) {
       graft.operators.ArtifactStore.table(s, "rfm_grid",
         Seq(s"${dir.stripSuffix("/")}/events.parquet"), "ntile5,bv1") {
       import s.implicits._
@@ -1948,7 +1942,7 @@ object ExtendedQueries {
     // |types|²-bounded model table joined back as a broadcast, and a
     // types-grain ledger — a model-eval REPORT, memoized like its peers.
     "q243_next_event_baseline" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"nextev:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "nextev", dir) {
       import s.implicits._
       val w = Window.partitionBy($"user_id").orderBy($"ts".asc, $"event_id".asc)
       val split = lit("2024-01-25").cast("timestamp")
@@ -1989,7 +1983,7 @@ object ExtendedQueries {
     // activity, and the rank window partitions by conversion. The 5-row
     // channel ledger is a stored report (memoized).
     "q240_attribution" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"attrib:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "attrib", dir) {
       import s.implicits._
       val ev = EventStats.byUser(s, dir)
       val conv = ev.where($"event_type" === "purchase")
@@ -2037,7 +2031,7 @@ object ExtendedQueries {
     // |states|²-bounded metadata (collected like q121's literals), so the
     // 80×5 iteration costs nothing at any corpus size.
     "q244_markov_attribution" -> ((s, dir) => graft.operators.ResultMemo
-        .getOrCompute(s"markov:$dir:${graft.operators.SessionKey(s)}") {
+        .getOrCompute(s, "markov", dir) {
       import s.implicits._
       val w = Window.partitionBy($"user_id").orderBy($"ts".asc, $"event_id".asc)
       val ev = EventStats.byUser(s, dir)
@@ -2121,7 +2115,7 @@ object ExtendedQueries {
     // duration-grain table (≤ horizon-days rows). The survival curve is
     // a published report (memoized local relation).
     "q241_kaplan_meier" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"km:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "km", dir) {
       import s.implicits._
       val horizon = Tables.events(s, dir).agg(max($"ts").as("hmax"))
       val life = EventStats.byUser(s, dir)

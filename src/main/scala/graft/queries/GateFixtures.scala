@@ -141,18 +141,10 @@ object GateFixtures {
     // ~10% off the gate floor) — interpreted mode is semantically
     // identical, and the headline derivation path keeps codegen
     val cgKey = "spark.sql.codegen.wholeStage"
-    val prior = s.conf.get(key)
-    val priorCost = s.conf.get(costKey)
-    val priorCg = s.conf.get(cgKey)
-    s.conf.set(key,
-      math.min(prior.toIntOption.getOrElse(width), width).toString)
-    s.conf.set(costKey, (256L * 1024).toString)
-    s.conf.set(cgKey, "false")
-    try f finally {
-      s.conf.set(key, prior)
-      s.conf.set(costKey, priorCost)
-      s.conf.set(cgKey, priorCg)
-    }
+    graft.EngineSession.withConf(s,
+      key -> math.min(s.conf.get(key).toIntOption.getOrElse(width), width).toString,
+      costKey -> (256L * 1024).toString,
+      cgKey -> "false")(f)
   }
 
   /** Run `f` once per key for the JVM's lifetime — session-amortized side

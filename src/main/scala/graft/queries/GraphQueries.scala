@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.operators.CacheRegistry
 import graft.sources.Tables
 
 /** Iterative graph analytics over the trade graph implied by the star
@@ -38,7 +37,7 @@ object GraphQueries {
 
   /** Weighted nation→nation edge list: supplier nation ships to customer
     * nation, weight = lineitem count. One shuffle join (lineitem⨝orders)
-    * plus two broadcast dims. Registry-tracked cache: q89 and q94 share
+    * plus two broadcast dims. Session cache: q89 and q94 share
     * this plan verbatim, so the heavy fact⨝fact pass runs once per
     * session, not once per query.
     */
@@ -60,13 +59,12 @@ object GraphQueries {
     val o = Tables.orders(s, dir)
     val c = Tables.customer(s, dir)
     val sup = Tables.supplier(s, dir)
-    CacheRegistry.track(
-      li.join(o, li("l_orderkey") === o("o_orderkey"))
-        .join(broadcast(c), o("o_custkey") === c("c_custkey"))
-        .join(broadcast(sup), li("l_suppkey") === sup("s_suppkey"))
-        .groupBy(sup("s_nationkey").as("src"), c("c_nationkey").as("dst"))
-        .agg(count(lit(1)).as("w"))
-        .cache())
+    li.join(o, li("l_orderkey") === o("o_orderkey"))
+      .join(broadcast(c), o("o_custkey") === c("c_custkey"))
+      .join(broadcast(sup), li("l_suppkey") === sup("s_suppkey"))
+      .groupBy(sup("s_nationkey").as("src"), c("c_nationkey").as("dst"))
+      .agg(count(lit(1)).as("w"))
+      .cache()
   }
 
   private val tradeEdgesSql =
@@ -97,18 +95,17 @@ object GraphQueries {
     // scheduled refresh job PUBLISHES — a restarted session reads the
     // stored scores instead of re-iterating (per-round 10 dp rounding
     // makes stored == derived bit-identical).
-    "q89_pagerank" -> ((s, dir) => graft.operators.ResultMemo.getOrCompute(
-        s"pagerank:$dir:${graft.operators.SessionKey(s)}") {
+    "q89_pagerank" -> ((s, dir) => graft.operators.ResultMemo.getOrCompute(s, "pagerank", dir) {
       graft.operators.ArtifactStore.table(s, "pagerank_scores",
         graphInputs(dir), s"iters=$Iterations,d=$Damping,bv1") {
       import s.implicits._
       val n = Tables.nation(s, dir)
       val nN = n.count().toDouble // 25-row dimension: metadata-sized count
-      val prob = CacheRegistry.track(
+      val prob =
         tradeEdges(s, dir)
           .withColumn("outw", sum($"w").over(Window.partitionBy($"src")))
           .select($"src", $"dst", ($"w".cast("double") / $"outw").as("p"))
-          .cache())
+          .cache()
       val dangling = n.select($"n_nationkey".as("dnode"))
         .join(prob.select($"src").distinct(), $"dnode" === $"src", "left_anti")
       var ranks = n.select($"n_nationkey".as("node"), (lit(1.0) / nN).as("pr"))
@@ -117,7 +114,7 @@ object GraphQueries {
         // cache every round's node-sized table or the lazy lineage doubles
         // per iteration (2^k replays of the base plan). The 100TB-node
         // analogue is ConnectedComponents' per-round reliable checkpoint.
-        val r = CacheRegistry.track(ranks.cache())
+        val r = ranks.cache()
         val dMass = r.join(broadcast(dangling), $"node" === $"dnode")
           .agg(coalesce(sum($"pr"), lit(0.0)).as("dm"))
         val contrib = prob.join(r, $"src" === $"node")
@@ -165,7 +162,7 @@ object GraphQueries {
     // STORED artifact (r10), same rationale as q89: spectral scores are
     // refreshed by a scheduled job and READ by everyone else.
     "q245_hits" -> ((s, dir) => graft.operators.ResultMemo
-        .getOrCompute(s"hits:$dir:${graft.operators.SessionKey(s)}") {
+        .getOrCompute(s, "hits", dir) {
       graft.operators.ArtifactStore.table(s, "hits_scores",
         graphInputs(dir), "iters=3,bv1") {
       import s.implicits._
@@ -178,23 +175,23 @@ object GraphQueries {
         val a0 = e.join(hub, $"src" === $"node")
           .groupBy($"dst").agg(sum($"wd" * $"h").as("raw"))
         val aN = a0.agg(sqrt(sum($"raw" * $"raw")).as("nrm"))
-        auth = CacheRegistry.track(
+        auth =
           n.select($"node".as("anode"))
             .join(a0, $"anode" === $"dst", "left")
             .crossJoin(broadcast(aN))
             .select($"anode",
               round(coalesce($"raw", lit(0.0)) / $"nrm", 10).as("a"))
-            .cache())
+            .cache()
         val h0 = e.join(auth, $"dst" === $"anode")
           .groupBy($"src").agg(sum($"wd" * $"a").as("raw"))
         val hN = h0.agg(sqrt(sum($"raw" * $"raw")).as("nrm"))
-        hub = CacheRegistry.track(
+        hub =
           n.select($"node")
             .join(h0, $"node" === $"src", "left")
             .crossJoin(broadcast(hN))
             .select($"node",
               round(coalesce($"raw", lit(0.0)) / $"nrm", 10).as("h"))
-            .cache())
+            .cache()
       }
       n.join(hub, Seq("node"))
         .join(auth, $"node" === $"anode")
@@ -232,7 +229,7 @@ object GraphQueries {
     // tower (the q227 analysis-cost lesson); passthrough still hands
     // plan auditors the true derivation.
     "q236_triangle_count" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"triangles:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "triangles", dir) {
       graft.operators.ArtifactStore.table(s, "triangle_ledger",
         graphInputs(dir), "p75,bv1") {
       import s.implicits._
@@ -242,12 +239,12 @@ object GraphQueries {
           greatest($"src", $"dst").as("b"), $"w")
         .groupBy($"a", $"b").agg(sum($"w").as("wuv"))
       val thr = und.agg(expr("percentile(wuv, 0.75D)").as("thr"))
-      val e = CacheRegistry.track(
+      val e =
         und.crossJoin(broadcast(thr)).where($"wuv" >= $"thr")
-          .select($"a", $"b").cache())
-      val deg = CacheRegistry.track(
+          .select($"a", $"b").cache()
+      val deg =
         e.select($"a".as("v")).unionAll(e.select($"b".as("v")))
-          .groupBy($"v").agg(count(lit(1)).as("deg")).cache())
+          .groupBy($"v").agg(count(lit(1)).as("deg")).cache()
       // orient low (deg, id) → high (deg, id)
       val o = e
         .join(broadcast(deg).select($"v".as("a"), $"deg".as("da")), Seq("a"))

@@ -99,7 +99,7 @@ object MultimodalQueries {
       // the q32/q69 fingerprint-store treatment), and the self-join below
       // reads it twice — cached, or the explode+md5+distinct chain
       // executes once per join side per pass
-      val f = graft.operators.CacheRegistry.track(Tables.documents(s, dir)
+      val f = Tables.documents(s, dir)
         .select($"doc_id", $"text",
           explode(sequence(lit(0),
             floor((octet_length($"text") - 1) / lit(FrameStride.toDouble)).cast("int")))
@@ -108,11 +108,11 @@ object MultimodalQueries {
           md5($"text".substr($"frame_no" * FrameStride + 1, lit(FrameBytes))
             .cast("binary")).as("fh"))
         .distinct()
-        .cache())
+        .cache()
       val rare = f.groupBy($"fh").agg(count(lit(1)).as("m"))
         .where($"m" >= 2 && $"m" <= 32)
-      val ff = graft.operators.CacheRegistry.track(
-        f.join(rare.select($"fh"), Seq("fh"), "left_semi").cache())
+      val ff =
+        f.join(rare.select($"fh"), Seq("fh"), "left_semi").cache()
       ff.as("a").join(ff.as("b"), $"a.fh" === $"b.fh" && $"a.doc_id" < $"b.doc_id")
         .groupBy($"a.doc_id".as("a_id"), $"b.doc_id".as("b_id"))
         .agg(count(lit(1)).as("n_shared_frames"))

@@ -90,7 +90,7 @@ object SimilarityQueries {
     *
     * [[ivfCells]] is the quantizer build shared by q44/q79/q85: cached
     * corpus → k-means → (cells, centroids). Both returned frames are
-    * registry-tracked caches whose plans are identical across the sibling
+    * session caches whose plans are identical across the sibling
     * queries, so the Lloyd chain executes once per session.
     */
   /** The pristine generation-0 scratch IVF index shared by the q170/q252
@@ -130,8 +130,8 @@ object SimilarityQueries {
       s, Seq("ivf_cells", "ivf_centroids"),
       Seq(s"${dir.stripSuffix("/")}/embeddings.parquet"),
       s"iters=$KMeansIters,bv1") { buildIvfCells(s, dir) }
-    (graft.operators.CacheRegistry.track(cells.cache()),
-      graft.operators.CacheRegistry.track(cent.cache()))
+    (cells.cache(),
+      cent.cache())
   }
 
   /** The Lloyd-chain build behind [[ivfCells]]: Seq(cells, centroids). */
@@ -140,8 +140,8 @@ object SimilarityQueries {
     GraftFunctions.register(s)
     // cached: the corpus is re-read by every Lloyd assign step and the
     // final cell build — one scan + one in-memory projection instead of
-    // 2·iters + 2 parquet scans (registry-released at batch boundaries)
-    val e = graft.operators.CacheRegistry.track(normalized(s, dir).cache())
+    // 2·iters + 2 parquet scans (released at batch boundaries)
+    val e = normalized(s, dir).cache()
     // component-wise means of `v` per `cl`, rounded — one k-means update
     def centroidsOf(assigned: DataFrame): DataFrame =
       assigned.select($"cl", posexplode($"v"))
@@ -166,7 +166,7 @@ object SimilarityQueries {
     // verbatim, so the cache manager dedupes the Lloyd chain to one
     // execution per session instead of two per query
     def tracked(df: DataFrame): DataFrame =
-      graft.operators.CacheRegistry.track(df.cache())
+      df.cache()
     var cent = tracked(centroidsOf(e.select($"label".as("cl"), $"v")))
     for (_ <- 1 to KMeansIters)
       cent = tracked(centroidsOf(assign(cent).select($"cl", $"v")))
@@ -215,23 +215,21 @@ object SimilarityQueries {
   private def normalized(s: SparkSession, dir: String) = {
     import s.implicits._
     GraftFunctions.register(s)
-    graft.operators.CacheRegistry.track(
-      Tables.embeddings(s, dir).select($"vec_id", $"label",
-        $"embedding".cast("array<double>").as("v"),
-        sqrt(dot($"embedding", $"embedding")).as("nrm"))
-      .cache())
+    Tables.embeddings(s, dir).select($"vec_id", $"label",
+      $"embedding".cast("array<double>").as("v"),
+      sqrt(dot($"embedding", $"embedding")).as("nrm"))
+    .cache()
   }
 
   private def cached(df: DataFrame): DataFrame =
-    graft.operators.CacheRegistry.track(df.cache())
+    df.cache()
 
   /** The serving family's shared eval baseline: brute exact-cosine top-3
     * over the sampled query set, built ONCE per (session, dir) and cached
     * — q226/q229/q230 grade different tiers against the SAME truth table
     * (r8 built it three times, one brute scan each). */
   private def truth3(s: SparkSession, dir: String): DataFrame =
-    graft.operators.ResultMemo.getOrCompute(
-        s"anntruth3:$dir:${graft.operators.SessionKey(s)}") {
+    graft.operators.ResultMemo.getOrCompute(s, "anntruth3", dir) {
       import s.implicits._
       val e = normalized(s, dir).select($"vec_id", $"v", $"nrm")
       val q = e.where($"vec_id" < NQueries)
@@ -359,11 +357,11 @@ object SimilarityQueries {
       // the int8-quantized corpus is the stored index (quantization runs
       // at build time; search reads codes) — cached, the q95/q98 persisted-
       // index treatment at this path's smaller scale
-      val e = graft.operators.CacheRegistry.track(e0
+      val e = e0
         .select($"vec_id",
           transform($"v", x => floor(x * lit(127.0) / $"mx" + lit(0.5))).as("qv"))
         .select($"vec_id", $"qv", sqrt(dot($"qv", $"qv")).as("qn"))
-        .cache())
+        .cache()
       val q = e.where($"vec_id" < NQueries)
         .select($"vec_id".as("q_id"), $"qv".as("quv"), $"qn".as("qunrm"))
       val w = Window.partitionBy($"q_id").orderBy($"qcos".desc, $"vec_id".asc)
@@ -398,12 +396,12 @@ object SimilarityQueries {
       val w16 = Window.partitionBy($"q_id").orderBy($"cos16".desc, $"vec_id".asc)
       // the two-width score table is the audit's pass-invariant fixture
       // (and both rank windows read it) — cached
-      val scored = graft.operators.CacheRegistry.track(
+      val scored =
         e.join(broadcast(q), $"vec_id" =!= $"q_id")
           .select($"q_id", $"vec_id",
             (dot($"qv", $"v") / ($"qnrm" * $"nrm")).as("cos"),
             (dot($"qv16", $"v16") / ($"qnrm16" * $"nrm16")).as("cos16"))
-          .cache())
+          .cache()
       val full = scored.withColumn("rk", row_number().over(w))
         .where($"rk" <= TopK).select($"q_id", $"vec_id", $"rk")
       val trunc = scored.withColumn("rk16", row_number().over(w16))
@@ -506,7 +504,7 @@ object SimilarityQueries {
     // Memoized (r9 report treatment): the per-label drift ledger is the
     // per-batch index-health artifact - computed once per (session, dir).
     "q149_centroid_drift" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"cdrift:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "cdrift", dir) {
       import s.implicits._
       GraftFunctions.register(s)
       val half = when(
@@ -556,8 +554,7 @@ object SimilarityQueries {
     // Runs once per batch (ResultMemo); scratch index deleted after
     // collect; the returned frame is k rows.
     "q170_ivf_maintenance" -> ((s, dir) =>
-      graft.operators.ResultMemo.getOrCompute(
-        s"ivfinc:$dir:${graft.operators.SessionKey(s)}") {
+      graft.operators.ResultMemo.getOrCompute(s, "ivfinc", dir) {
         // (shares the staged pristine index with q252 via baseIvfIndex)
         import s.implicits._
         val isNew = (conv(substring(md5(concat(lit("new:"), $"vec_id".cast("string"))
@@ -599,8 +596,7 @@ object SimilarityQueries {
     // each micro-batch is one arrivals scan × a k×dim broadcast; no
     // state store, no history touch.
     "q252_streaming_ivf_append_gate" -> ((s, dir) =>
-      graft.operators.ResultMemo.getOrCompute(
-        s"ivfstream:$dir:${graft.operators.SessionKey(s)}") {
+      graft.operators.ResultMemo.getOrCompute(s, "ivfstream", dir) {
         import s.implicits._
         val isNew = (conv(substring(md5(concat(lit("new:"), $"vec_id".cast("string"))
           .cast("binary")), 1, 4), 16, 10).cast("double") / 65536.0) < 0.3
@@ -644,7 +640,7 @@ object SimilarityQueries {
     // Memoized (r9 report treatment): bounded per-batch ledger,
     // computed once per (session, dir) and served driver-local.
     "q152_ivf_staleness" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"rep152:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "rep152", dir) {
       import s.implicits._
       GraftFunctions.register(s)
       val isNew = conv(substring(md5(concat(lit("new:"), $"vec_id".cast("string")).cast("binary")), 1, 4), 16, 10)
@@ -655,7 +651,7 @@ object SimilarityQueries {
       // is the STORED artifact (built when the index was; the staleness
       // probe reads it, never re-trains it): cached, so only the new-
       // vector assignment is per-pass work
-      val cents = graft.operators.CacheRegistry.track(
+      val cents =
         old.select($"label".as("cl"), $"v")
           .select($"cl", posexplode($"v"))
           .groupBy($"cl", $"pos").agg(round(avg($"col"), 6).as("c"))
@@ -663,9 +659,9 @@ object SimilarityQueries {
           .agg(transform(sort_array(collect_list(struct($"pos", $"c"))),
             x => x.getField("c")).as("cv"))
           .select($"cl", $"cv", sqrt(dot($"cv", $"cv")).as("cnrm"))
-          .cache())
-      val nOld = graft.operators.CacheRegistry.track(
-        old.groupBy($"label".as("cl")).agg(count(lit(1)).as("n_old")).cache())
+          .cache()
+      val nOld =
+        old.groupBy($"label".as("cl")).agg(count(lit(1)).as("n_old")).cache()
       val wAsn = Window.partitionBy($"vec_id").orderBy($"ccos".desc, $"cl".asc)
       val assigned = e.where($"is_new").crossJoin(broadcast(cents))
         .select($"vec_id", $"cl",
@@ -730,7 +726,7 @@ object SimilarityQueries {
     // Memoized (r9 report treatment): bounded per-batch ledger,
     // computed once per (session, dir) and served driver-local.
     "q191_triplet_mining" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"rep191:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "rep191", dir) {
       import s.implicits._
       val (cells, _) = ivfCells(s, dir)
       val lab = Tables.embeddings(s, dir).select($"vec_id", $"label")
@@ -743,12 +739,12 @@ object SimilarityQueries {
       // and negatives rank in the same pass instead of two joins
       val wSame = Window.partitionBy($"q_id", $"same")
         .orderBy($"cos".desc, $"vec_id".asc)
-      val ranked = graft.operators.CacheRegistry.track(
+      val ranked =
         c2.join(broadcast(q), $"cell" === $"qc" && $"vec_id" =!= $"q_id")
           .select($"q_id", ($"label" === $"ql").as("same"), $"vec_id",
             (dot($"qv", $"v") / ($"qnrm" * $"nrm")).as("cos"))
           .withColumn("rk", row_number().over(wSame)).where($"rk" === 1)
-          .cache())
+          .cache()
       val pos = ranked.where($"same")
         .select($"q_id", $"vec_id".as("pos_id"), $"cos".as("pc"))
       val neg = ranked.where(!$"same")
@@ -777,7 +773,7 @@ object SimilarityQueries {
     // construction); PlanShapeSpec pins its scale shape through the
     // report-passthrough mode.
     "q192_semantic_decontamination" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"semdecon:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "semdecon", dir) {
       import s.implicits._
       val (cells, _) = ivfCells(s, dir)
       val pct = conv(substring(md5(concat(lit(""), $"vec_id".cast("string"))
@@ -813,7 +809,7 @@ object SimilarityQueries {
     // their INPUTS, not the composed result), and repeat readers get
     // the test-split-sized table.
     "q205_contamination_ensemble" -> ((s, dir) => graft.operators.ResultMemo
-        .getOrCompute(s"contamens:$dir:${graft.operators.SessionKey(s)}") {
+        .getOrCompute(s, "contamens", dir) {
       import s.implicits._
       val docsTest = DocProfiles.profiled(s, dir).where($"pct" >= 0.9)
         .select($"doc_id")
@@ -857,7 +853,7 @@ object SimilarityQueries {
     // Memoized (r9 report treatment): bounded per-batch ledger,
     // computed once per (session, dir) and served driver-local.
     "q208_cluster_label_mix" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"rep208:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "rep208", dir) {
       import s.implicits._
       val (cells, _) = ivfCells(s, dir)
       val lab = Tables.embeddings(s, dir).select($"vec_id", $"label")
@@ -895,7 +891,7 @@ object SimilarityQueries {
     // Memoized (r9 report treatment): bounded per-batch ledger,
     // computed once per (session, dir) and served driver-local.
     "q209_length_bias" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"rep209:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "rep209", dir) {
       import s.implicits._
       val (cells, cent) = ivfCells(s, dir)
       val prof = DocProfiles.profiled(s, dir).select($"doc_id", $"n_chars")
@@ -958,7 +954,7 @@ object SimilarityQueries {
     // Memoized (r9 report treatment): bounded per-batch ledger,
     // computed once per (session, dir) and served driver-local.
     "q159_hard_negatives" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"rep159:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "rep159", dir) {
       import s.implicits._
       val (cells, _) = ivfCells(s, dir)
       val lab = Tables.embeddings(s, dir).select($"vec_id", $"label")
@@ -1081,8 +1077,8 @@ object SimilarityQueries {
     // decision), so like q89/q121 the 10-row report is memoized per
     // batch and re-reads hit its cache instead of re-running both
     // search paths plus the truth scan.
-    "q109_ann_recall" -> ((s, dir) => graft.operators.ResultMemo.getOrCompute(
-        s"annrecall:lsh:$dir:${graft.operators.SessionKey(s)}") {
+    "q109_ann_recall" -> ((s, dir) => graft.operators.ResultMemo
+        .getOrCompute(s, "annrecall:lsh", dir) {
       import s.implicits._
       GraftFunctions.register(s)
       val e = normalized(s, dir)
@@ -1119,8 +1115,8 @@ object SimilarityQueries {
     // like q109 — see the note there.
     // STORED eval ledger (r12 wave 3): graded at index build, read
     // forever after — exact hit counts + 6 dp rounding.
-    "q116_ivf_recall" -> ((s, dir) => graft.operators.ResultMemo.getOrCompute(
-        s"annrecall:ivf:$dir:${graft.operators.SessionKey(s)}") {
+    "q116_ivf_recall" -> ((s, dir) => graft.operators.ResultMemo
+        .getOrCompute(s, "annrecall:ivf", dir) {
       val stored = graft.operators.ArtifactStore.table(s, "ivf_recall_ledger",
         Seq(s"${dir.stripSuffix("/")}/embeddings.parquet"),
         s"k3,q$NQueries,np$NProbe,bv1") {
@@ -1158,8 +1154,8 @@ object SimilarityQueries {
     // brute-force truth at nprobe=2 (q116's law under the predicate).
     // Rides the session tower; new work is one label equi-join and the
     // cell-bounded candidate scan.
-    "q212_filtered_ann" -> ((s, dir) => graft.operators.ResultMemo.getOrCompute(
-        s"annrecall:filtered:$dir:${graft.operators.SessionKey(s)}") {
+    "q212_filtered_ann" -> ((s, dir) => graft.operators.ResultMemo
+        .getOrCompute(s, "annrecall:filtered", dir) {
       import s.implicits._
       GraftFunctions.register(s)
       val (cells, cent) = ivfCells(s, dir)
@@ -1234,7 +1230,7 @@ object SimilarityQueries {
     // Memoized (r9 report treatment): bounded per-batch ledger,
     // computed once per (session, dir) and served driver-local.
     "q218_quantizer_margin" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"rep218:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "rep218", dir) {
       import s.implicits._
       val (cells, cent) = ivfCells(s, dir)
       val w = Window.partitionBy($"vec_id").orderBy($"ccos".desc, $"cl".asc)
@@ -1331,13 +1327,11 @@ object SimilarityQueries {
       import s.implicits._
       // memoized per batch: CC runs eagerly, so without the memo every
       // bench pass would re-execute the iteration loop
-      graft.operators.ResultMemo.getOrCompute(
-        s"cc:emb:$dir:${graft.operators.SessionKey(s)}") {
-        graft.operators.CacheRegistry.track(
-          graft.operators.ConnectedComponents
-            .components(cosineDupPairs(s, dir).select($"a_id", $"b_id"),
-              unpersistEdges = false)
-            .cache())
+      graft.operators.ResultMemo.getOrCompute(s, "cc:emb", dir) {
+        graft.operators.ConnectedComponents
+          .components(cosineDupPairs(s, dir).select($"a_id", $"b_id"),
+            unpersistEdges = false)
+          .cache()
       }
         .select($"id".as("vec_id"), $"comp")
         .orderBy($"vec_id")
@@ -1362,8 +1356,8 @@ object SimilarityQueries {
     // so stored == derived bit-identical; a restarted session reads it
     // instead of re-running the within-cell pair join + CC closure
     // (4.1 cold-session seconds in the r11 warm_boot profile).
-    "q122_semantic_dedup" -> ((s, dir) => graft.operators.ResultMemo.getOrCompute(
-        s"semdedup:$dir:${graft.operators.SessionKey(s)}") {
+    "q122_semantic_dedup" -> ((s, dir) => graft.operators.ResultMemo
+        .getOrCompute(s, "semdedup", dir) {
       val (ledUnsorted, served) = graft.operators.ArtifactStore.tableServed(
         s, "semdedup_ledger",
         Seq(s"${dir.stripSuffix("/")}/embeddings.parquet"),
@@ -1459,8 +1453,7 @@ object SimilarityQueries {
     // re-sorted outside the store. Inputs span BOTH corpora (the lexical
     // leg reads documents, the dense leg embeddings) — either rewritten
     // invalidates.
-    "q128_hybrid_rrf" -> ((s, dir) => graft.operators.ResultMemo.getOrCompute(
-        s"rrf:$dir:${graft.operators.SessionKey(s)}") {
+    "q128_hybrid_rrf" -> ((s, dir) => graft.operators.ResultMemo.getOrCompute(s, "rrf", dir) {
       val stored = graft.operators.ArtifactStore.table(s, "rrf_fused",
         Seq(s"${dir.stripSuffix("/")}/documents.parquet",
           s"${dir.stripSuffix("/")}/embeddings.parquet"),
@@ -1619,7 +1612,7 @@ object SimilarityQueries {
     // chain (2.2 s in the r12 warm_boot profile). Exact hit counts + 6 dp
     // rounding, stored == derived; re-sorted outside the store.
     "q226_pq_rerank_recall" -> ((s, dir) => graft.operators.ResultMemo
-        .getOrCompute(s"annrecall:pqrr:$dir:${graft.operators.SessionKey(s)}") {
+        .getOrCompute(s, "annrecall:pqrr", dir) {
       val stored = graft.operators.ArtifactStore.table(s, "pq_rerank_ledger",
         Seq(s"${dir.stripSuffix("/")}/embeddings.parquet"),
         s"k3,q$NQueries,bv1") {
@@ -1703,7 +1696,7 @@ object SimilarityQueries {
     // pinned truth set + 6 dp HALF_UP rounding make stored == derived;
     // re-sorted outside the store (q89's discipline).
     "q229_matryoshka_recall" -> ((s, dir) => graft.operators.ResultMemo
-        .getOrCompute(s"annrecall:mrl:$dir:${graft.operators.SessionKey(s)}") {
+        .getOrCompute(s, "annrecall:mrl", dir) {
       graft.operators.ArtifactStore.table(s, "matryoshka_ladder",
         Seq(s"${dir.stripSuffix("/")}/embeddings.parquet"),
         s"k3,q$NQueries,d64-8,bv1") {
@@ -1751,7 +1744,7 @@ object SimilarityQueries {
     // and the exact re-rank touches k·R full vectors per query —
     // random reads, never a corpus scan. 10-row report, memoized.
     "q230_binary_quantization" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"annrecall:bq:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "annrecall:bq", dir) {
       import s.implicits._
       GraftFunctions.register(s)
       def half(off: Int) = expr(
@@ -1799,7 +1792,7 @@ object SimilarityQueries {
     // and joins the candidate stream on vec_id; cells stay immutable —
     // no index rewrite, the same reason real engines tombstone.
     "q233_ivf_tombstones" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"annrecall:tomb:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "annrecall:tomb", dir) {
       import s.implicits._
       GraftFunctions.register(s)
       val (cells, cent) = ivfCells(s, dir)

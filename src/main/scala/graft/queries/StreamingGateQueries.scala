@@ -5,7 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.operators.{BloomPrefilter, ResultMemo, SessionKey}
+import graft.EngineSession.withConf
+import graft.operators.{BloomPrefilter, ResultMemo}
 import graft.sources.Tables
 import graft.streaming.{StreamCorrelator, StreamingAnomaly, StreamingCuration, StreamingDecontamination, StreamingDedup, StreamingDrift, StreamingHeartbeat, StreamingNearDup, StreamingQuantile, StreamingTopK}
 
@@ -56,19 +57,10 @@ object StreamingGateQueries {
     * (subscriptions drain it; the DLQ-retry path re-delivers through
     * registered handlers, never appends).
     */
-  private def envelopeLog(s: SparkSession, dir: String): String = {
-    import s.implicits._
+  private def envelopeLog(s: SparkSession, dir: String): String =
     GateFixtures.parquet(dir, "envelope", partitions = 8) {
-      Tables.events(s, dir).select(
-        format_string("%012d", $"event_id").as("id"),
-        $"event_type".as("type"),
-        lit("gate-events").as("topic"),
-        $"ts".as("timestamp"),
-        lit("1.0").as("schemaVersion"),
-        $"props".as("payload"),
-        map(lit("user_id"), $"user_id".cast("string")).as("metadata"))
+      Tables.envelopes(s, dir, "gate-events")
     }
-  }
 
   /** The decontamination gates' (q179/q193) test-gram Bloom filter as a
     * STORED artifact: a pure function of the documents table, so the
@@ -117,17 +109,15 @@ object StreamingGateQueries {
     // awaitTermination stays OUTSIDE the lock — the stream cloned its conf
     // at start(), so the session value is already restored.
     val q = GateFixtures.confLocked {
-      val prior = conf.get(key)
-      val width = math.min(prior.toIntOption.getOrElse(GateShuffleWidth),
+      val width = math.min(conf.get(key).toIntOption.getOrElse(GateShuffleWidth),
         GateShuffleWidth).toString
-      conf.set(key, width)
-      try {
+      withConf(frame.sparkSession, key -> width) {
         frame.writeStream.outputMode(mode)
           .option("checkpointLocation", ckpt)
           .trigger(Trigger.AvailableNow())
           .foreachBatch { (b: Dataset[R], id: Long) => sink(b, id); () }
           .start()
-      } finally conf.set(key, prior)
+      }
     }
     q.awaitTermination()
   }
@@ -148,7 +138,7 @@ object StreamingGateQueries {
     // twin of q31's corpus sweep: state is one row per distinct bucket,
     // arrivals never join the corpus.
     "q178_streaming_neardup_gate" -> ((s, dir) =>
-      ResultMemo.getOrCompute(s"sndgate:$dir:${SessionKey(s)}") {
+      ResultMemo.getOrCompute(s, "sndgate", dir) {
         import s.implicits._
         withGateScratch("graft-q178", s) { base =>
           // fixture staged once per (JVM, dir); the checkpointed drain
@@ -189,7 +179,7 @@ object StreamingGateQueries {
     // move docs between the two paths but never change the kept set,
     // which is why the gate is SQL-oracle-able even though xxhash64 isn't.
     "q179_streaming_decontamination_gate" -> ((s, dir) =>
-      ResultMemo.getOrCompute(s"sdcgate:$dir:${SessionKey(s)}") {
+      ResultMemo.getOrCompute(s, "sdcgate", dir) {
         import s.implicits._
         withGateScratch("graft-q179", s) { base =>
           val src = GateFixtures.parquet(dir, "q179") {
@@ -234,7 +224,7 @@ object StreamingGateQueries {
     // pins it). State is ≤64 sub-buckets per octave per group regardless
     // of stream length — the 100 TB shape for percentiles-at-ingest.
     "q180_streaming_quantile_gate" -> ((s, dir) =>
-      ResultMemo.getOrCompute(s"sqgate:$dir:${SessionKey(s)}") {
+      ResultMemo.getOrCompute(s, "sqgate", dir) {
         import s.implicits._
         withGateScratch("graft-q180", s) { base =>
           val src = GateFixtures.parquet(dir, "q180") {
@@ -271,7 +261,7 @@ object StreamingGateQueries {
     // fixture. Duplicate rows are bit-identical, so keep-first is
     // deterministic regardless of which physical copy survives.
     "q182_streaming_dedup_gate" -> ((s, dir) =>
-      ResultMemo.getOrCompute(s"sddgate:$dir:${SessionKey(s)}") {
+      ResultMemo.getOrCompute(s, "sddgate", dir) {
         import s.implicits._
         withGateScratch("graft-q182", s) { base =>
           val src = GateFixtures.parquet(dir, "q182") {
@@ -305,7 +295,7 @@ object StreamingGateQueries {
     // oracle respells the law: distinct md5(text) over quality-passing
     // arrivals, counts included.
     "q183_streaming_curation_gate" -> ((s, dir) =>
-      ResultMemo.getOrCompute(s"scurgate:$dir:${SessionKey(s)}") {
+      ResultMemo.getOrCompute(s, "scurgate", dir) {
         import s.implicits._
         withGateScratch("graft-q183", s) { base =>
           val src = GateFixtures.parquet(dir, "q183") {
@@ -344,7 +334,7 @@ object StreamingGateQueries {
     // rank per key by value, first 100 = reference, bucket both parts,
     // one integer fold, one division.
     "q184_streaming_drift_gate" -> ((s, dir) =>
-      ResultMemo.getOrCompute(s"sdrgate:$dir:${SessionKey(s)}") {
+      ResultMemo.getOrCompute(s, "sdrgate", dir) {
         import s.implicits._
         withGateScratch("graft-q184", s) { base =>
           val src = GateFixtures.parquet(dir, "q184") {
@@ -373,7 +363,7 @@ object StreamingGateQueries {
     // (The eviction half is property-tested against brute force in
     // LawProps.) State is ≤ capacity triples per group either way.
     "q185_streaming_topk_gate" -> ((s, dir) =>
-      ResultMemo.getOrCompute(s"stkgate:$dir:${SessionKey(s)}") {
+      ResultMemo.getOrCompute(s, "stkgate", dir) {
         import s.implicits._
         withGateScratch("graft-q185", s) { base =>
           val src = GateFixtures.parquet(dir, "q185") {
@@ -402,7 +392,7 @@ object StreamingGateQueries {
     // PRECEDING .. 1 PRECEDING. Welford and the two-pass window stddev
     // are algebraically identical; z rounds to 6dp on both sides.
     "q186_streaming_anomaly_gate" -> ((s, dir) =>
-      ResultMemo.getOrCompute(s"sangate:$dir:${SessionKey(s)}") {
+      ResultMemo.getOrCompute(s, "sangate", dir) {
         import s.implicits._
         withGateScratch("graft-q186", s) { base =>
           val src = GateFixtures.parquet(dir, "q186") {
@@ -432,7 +422,7 @@ object StreamingGateQueries {
     // the oracle is the plain SQL interval join, rolled up per cohort
     // with an exact integer gap sum.
     "q187_stream_correlate_gate" -> ((s, dir) =>
-      ResultMemo.getOrCompute(s"scorgate:$dir:${SessionKey(s)}") {
+      ResultMemo.getOrCompute(s, "scorgate", dir) {
         import s.implicits._
         withGateScratch("graft-q187", s) { base =>
           val ev = Tables.events(s, dir)
@@ -472,7 +462,7 @@ object StreamingGateQueries {
     // silence law in exact millisecond arithmetic (the operator's
     // Timestamp.getTime space): fire iff lastSeen_ms + 6h < wm_ms.
     "q188_streaming_heartbeat_gate" -> ((s, dir) =>
-      ResultMemo.getOrCompute(s"shbgate:$dir:${SessionKey(s)}") {
+      ResultMemo.getOrCompute(s, "shbgate", dir) {
         import s.implicits._
         withGateScratch("graft-q188", s) { base =>
           // main + sentinel staged as a TWO-BATCH fixture (sentinel file
@@ -517,7 +507,7 @@ object StreamingGateQueries {
     // word-5-gram with the test split. One stream, three operators,
     // one hash-checked law — the composition IS the capability.
     "q193_streaming_ingest_funnel" -> ((s, dir) =>
-      ResultMemo.getOrCompute(s"sfungate:$dir:${SessionKey(s)}") {
+      ResultMemo.getOrCompute(s, "sfungate", dir) {
         import s.implicits._
         withGateScratch("graft-q193", s) { base =>
           val prof = DocProfiles.profiled(s, dir)
@@ -573,7 +563,7 @@ object StreamingGateQueries {
     // the plain SQL anti-join: views with no purchase in
     // [ts, ts + 1 day] for their cohort.
     "q195_stream_unanswered_gate" -> ((s, dir) =>
-      ResultMemo.getOrCompute(s"sunagate:$dir:${SessionKey(s)}") {
+      ResultMemo.getOrCompute(s, "sunagate", dir) {
         import s.implicits._
         withGateScratch("graft-q195", s) { base =>
           val ev = Tables.events(s, dir)
@@ -628,7 +618,7 @@ object StreamingGateQueries {
     // reference's tests assert in-process (broker_test.ts,
     // deadletter_test.ts), at the driver gate.
     "q201_delivery_gate" -> ((s, dir) =>
-      ResultMemo.getOrCompute(s"delgate:$dir:${SessionKey(s)}") {
+      ResultMemo.getOrCompute(s, "delgate", dir) {
         import s.implicits._
         withGateScratch("graft-q201", s) { base =>
           val types = Seq("error", "purchase", "view")
@@ -689,7 +679,7 @@ object StreamingGateQueries {
     // at 100 TB is the DLQ-as-table path (q64) feeding a fresh batch
     // publish, which this gate deliberately does not replace.
     "q202_dlq_retry_gate" -> ((s, dir) =>
-      ResultMemo.getOrCompute(s"dlqretry:$dir:${SessionKey(s)}") {
+      ResultMemo.getOrCompute(s, "dlqretry", dir) {
         import s.implicits._
         withGateScratch("graft-q202", s) { base =>
           val types = Seq("error", "purchase", "view")
@@ -754,7 +744,7 @@ object StreamingGateQueries {
     // mis-matched row cannot leave intact. Oracle = the same as-of law
     // as plain SQL (greatest (ts, id) pair strictly below the view's).
     "q203_streaming_asof_gate" -> ((s, dir) =>
-      ResultMemo.getOrCompute(s"sasofgate:$dir:${SessionKey(s)}") {
+      ResultMemo.getOrCompute(s, "sasofgate", dir) {
         import s.implicits._
         withGateScratch("graft-q203", s) { base =>
           val ev = Tables.events(s, dir)
@@ -815,7 +805,7 @@ object StreamingGateQueries {
     // start within each user, so the table is q22-shaped and the oracle
     // is q22's SQL unchanged.
     "q204_streaming_sessionize_gate" -> ((s, dir) =>
-      ResultMemo.getOrCompute(s"ssessgate:$dir:${SessionKey(s)}") {
+      ResultMemo.getOrCompute(s, "ssessgate", dir) {
         import s.implicits._
         withGateScratch("graft-q204", s) { base =>
           val ev = Tables.events(s, dir)
@@ -844,7 +834,7 @@ object StreamingGateQueries {
           // (one per session, not per event) and the memoized DF is LAZY —
           // without this, every bench pass re-runs the ordinal window over
           // the driver-local rows
-          val res = graft.operators.CacheRegistry.track(
+          val res =
             out.toSeq.filter(_.key != "zz")
               .map(x => (x.key.toLong, x.session_start, x.session_end, x.n_events))
               .toDF("user_id", "session_start", "session_end", "n_events")
@@ -852,7 +842,7 @@ object StreamingGateQueries {
               .select($"user_id", $"session_id", $"n_events",
                 $"session_start", $"session_end")
               .orderBy($"user_id", $"session_id")
-              .cache())
+              .cache()
           res.count()
           res
         }
@@ -873,7 +863,7 @@ object StreamingGateQueries {
     // At 100 TB the shape is unchanged: one existence check + one rename
     // per micro-batch, data jobs are ordinary distributed parquet writes.
     "q206_idempotent_sink_gate" -> ((s, dir) =>
-      ResultMemo.getOrCompute(s"idsink:$dir:${SessionKey(s)}") {
+      ResultMemo.getOrCompute(s, "idsink", dir) {
         import s.implicits._
         withGateScratch("graft-q206", s) { base =>
           val (src, out) = (s"$base/src", s"$base/out")
@@ -920,7 +910,7 @@ object StreamingGateQueries {
     // touches only in-range partition dirs, the sweep is a metadata
     // listing.
     "q207_backfill_gate" -> ((s, dir) =>
-      ResultMemo.getOrCompute(s"backfill:$dir:${SessionKey(s)}") {
+      ResultMemo.getOrCompute(s, "backfill", dir) {
         import s.implicits._
         withGateScratch("graft-q207", s) { base =>
           val tbl = s"$base/daily"
@@ -974,7 +964,7 @@ object StreamingGateQueries {
     // unchanged: staging inserts scale with executors, the commit point
     // is one metadata-rate transaction per micro-batch.
     "q249_jdbc_exactly_once_gate" -> ((s, dir) =>
-      ResultMemo.getOrCompute(s"jdbcxo:$dir:${SessionKey(s)}") {
+      ResultMemo.getOrCompute(s, "jdbcxo", dir) {
         import s.implicits._
         withGateScratch("graft-q249", s) { base =>
           val src = s"$base/src"
@@ -1045,7 +1035,7 @@ object StreamingGateQueries {
     // Scale shape: one pushed-filter scan + a per-row UDF (the documented
     // §2.10 trade) + a ≤8-row Aggregate — report-memoized.
     "q250_schema_validation_gate" -> ((s, dir) =>
-      ResultMemo.report(s"schemagate:$dir:${SessionKey(s)}") {
+      ResultMemo.report(s, "schemagate", dir) {
         import s.implicits._
         val reg = new graft.schema.SchemaRegistry()
         reg.registerSchema("order",
@@ -1106,7 +1096,7 @@ object StreamingGateQueries {
     // scratch); the importer itself is the production-shaped distributed
     // read (textFile glob + per-partition Jackson).
     "q251_filestore_import_gate" -> ((s, dir) =>
-      ResultMemo.getOrCompute(s"fsimp:$dir:${SessionKey(s)}") {
+      ResultMemo.getOrCompute(s, "fsimp", dir) {
         import s.implicits._
         withGateScratch("graft-q251", s) { base =>
           // modulus 211 (r14, was 53): ~500 files per sf0.1 topic still prove
@@ -1201,7 +1191,7 @@ object StreamingGateQueries {
     // own law. Procedural by design (store side effects on scratch);
     // memoized once per (session, dir).
     "q253_artifact_lifecycle_gate" -> ((s, dir) =>
-      ResultMemo.getOrCompute(s"artgate:$dir:${SessionKey(s)}") {
+      ResultMemo.getOrCompute(s, "artgate", dir) {
         import s.implicits._
         import graft.operators.ArtifactStore
         withGateScratch("graft-q253", s) { base =>
@@ -1212,7 +1202,10 @@ object StreamingGateQueries {
           slice.withColumn("part",
               when($"event_id" % 2 === 1, "p1").otherwise("p0"))
             .write.partitionBy("part").mode("overwrite").parquet(in)
-          val name = s"lifecycle_agg_${SessionKey(s)}"
+          // artifact names unique to this run (its scratch dir's name):
+          // build counts are per name across the JVM
+          val run = new java.io.File(base).getName.replaceAll("\\W", "_")
+          val name = s"lifecycle_agg_$run"
           def art(): DataFrame = ArtifactStore.table(s, name, Seq(in), "bv1") {
             s.read.parquet(in).groupBy($"event_type")
               .agg(count(lit(1)).as("n"), sum($"event_id").as("sum_ids"))
@@ -1222,9 +1215,7 @@ object StreamingGateQueries {
               .collect()(0)
             (r.getLong(0), r.getLong(1))
           }
-          val prior = ArtifactStore.root(s)
-          s.conf.set(ArtifactStore.ConfKey, store)
-          try {
+          withConf(s, ArtifactStore.ConfKey -> store) {
             def delta[T](f: => T): (Long, T) = {
               val b0 = ArtifactStore.buildCount(name)
               val out = f
@@ -1251,7 +1242,7 @@ object StreamingGateQueries {
             // is then deleted out from under the store
             val in2 = s"$base/in2"
             slice.limit(5).write.mode("overwrite").parquet(in2)
-            ArtifactStore.table(s, s"lifecycle_orphan_${SessionKey(s)}",
+            ArtifactStore.table(s, s"lifecycle_orphan_$run",
               Seq(in2), "bv1") { s.read.parquet(in2) }.count()
             org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(in2))
             val ledger = ArtifactStore.vacuum(s, store, maxAgeMs = 0L)
@@ -1265,11 +1256,6 @@ object StreamingGateQueries {
               (4, "vacuum", b4, nLive, c4, nSwept))
               .toDF("step", "label", "n_builds", "n_rows", "checksum", "n_swept")
               .orderBy($"step")
-          } finally {
-            prior match {
-              case Some(p) => s.conf.set(ArtifactStore.ConfKey, p)
-              case None => s.conf.unset(ArtifactStore.ConfKey)
-            }
           }
         }
       }),
@@ -1300,7 +1286,7 @@ object StreamingGateQueries {
     // type filter wrong all break the hash. Procedural by design
     // (scratch log + two partition rewrites); memoized per (session, dir).
     "q254_broker_lifecycle_gate" -> ((s, dir) =>
-      ResultMemo.getOrCompute(s"brokergate:$dir:${SessionKey(s)}") {
+      ResultMemo.getOrCompute(s, "brokergate", dir) {
         import s.implicits._
         import graft.broker.{EventBroker, RetentionScheduler, SubscriptionOptions, TopicOptions}
         import graft.model.EventRow
@@ -1415,7 +1401,7 @@ object StreamingGateQueries {
     // SQL. Procedural by design (scratch broker log + per-event appends);
     // memoized per (session, dir).
     "q255_broker_surface_gate" -> ((s, dir) =>
-      ResultMemo.getOrCompute(s"brokersurf:$dir:${SessionKey(s)}") {
+      ResultMemo.getOrCompute(s, "brokersurf", dir) {
         import s.implicits._
         import graft.broker.{EventBroker, SubscriptionOptions}
         import graft.model.EventRow
@@ -1548,7 +1534,7 @@ object StreamingGateQueries {
     // stays dimension-sized (broadcast) while the stream never
     // repartitions.
     "q211_stream_enrich_gate" -> ((s, dir) =>
-      ResultMemo.getOrCompute(s"senrich:$dir:${SessionKey(s)}") {
+      ResultMemo.getOrCompute(s, "senrich", dir) {
         import s.implicits._
         withGateScratch("graft-q211", s) { base =>
           val src = GateFixtures.parquet(dir, "q211", partitions = 2) {

@@ -62,8 +62,8 @@ object TextQueries {
     val Seq(c12, c1, v) = graft.operators.ArtifactStore.tables(
       s, Seq("lm_c12", "lm_c1", "lm_vocab"),
       Seq(s"${dir.stripSuffix("/")}/documents.parquet"), "split=lt0.8,bv1") {
-      val c12b = graft.operators.CacheRegistry.track(
-        train().groupBy($"w1", $"w2").agg(count(lit(1)).as("n12")).cache())
+      val c12b =
+        train().groupBy($"w1", $"w2").agg(count(lit(1)).as("n12")).cache()
       Seq(c12b,
         c12b.groupBy($"w1").agg(sum($"n12").as("n1")),
         c12b.select($"w2").distinct().agg(count(lit(1)).as("v")))
@@ -200,7 +200,7 @@ object TextQueries {
     */
   private def nbVocab(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.operators.CacheRegistry.track(graft.operators.ArtifactStore
+    graft.operators.ArtifactStore
       .table(s, "nb_vocab",
         Seq(s"${dir.stripSuffix("/")}/documents.parquet"), "mc5,bv1") {
         DocProfiles.termFreqs(s, dir)
@@ -209,7 +209,7 @@ object TextQueries {
             sum(when($"pos", $"tf").otherwise(0L)).as("cp"),
             sum(when(!$"pos", $"tf").otherwise(0L)).as("cn"))
           .where($"cp" + $"cn" >= 5)
-      }.cache())
+      }.cache()
   }
 
   /** STORED artifact (r12, with [[nbVocab]]): the held-out score table
@@ -221,7 +221,7 @@ object TextQueries {
     */
   private def nbTestScores(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.operators.CacheRegistry.track(graft.operators.ArtifactStore
+    graft.operators.ArtifactStore
       .table(s, "nb_test_scores",
         Seq(s"${dir.stripSuffix("/")}/documents.parquet"), "mc5,bv1") {
         val voc = nbVocab(s, dir)
@@ -236,7 +236,7 @@ object TextQueries {
           .groupBy($"doc_id", $"pos")
           .agg((sum($"tf" * coalesce($"lo", lit(0.0))) / sum($"tf"))
             .as("score"))
-      }.cache())
+      }.cache()
   }
 
   /** q227/q232's shared 401-bin score table: held-out docs bucketed by
@@ -280,9 +280,9 @@ object TextQueries {
       // DISTINCT tokens only. At 100 TB where an exact top-K is off the
       // table, the same sketch builds from the raw stream with map-side
       // partials — cell values are identical either way, which is the law.
-      val counts = graft.operators.CacheRegistry.track(
+      val counts =
         DocProfiles.profiled(s, dir).select(explode($"toks").as("tok"))
-          .groupBy($"tok").agg(count(lit(1)).as("n")).cache())
+          .groupBy($"tok").agg(count(lit(1)).as("n")).cache()
       val sketch = counts.select($"n", buckets($"tok").as("x"))
         .groupBy($"x.r".as("r"), $"x.b".as("b")).agg(sum($"n").as("c"))
       val top = counts.withColumnRenamed("n", "n_exact")
@@ -362,7 +362,7 @@ object TextQueries {
     // Memoized (r9 report treatment): bounded per-batch ledger,
     // computed once per (session, dir) and served driver-local.
     "q144_curriculum_interleave" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"rep144:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "rep144", dir) {
       import s.implicits._
       val w = Window.partitionBy($"source").orderBy($"n_chars".desc, $"doc_id".asc)
       val head = Tables.documents(s, dir)
@@ -417,11 +417,11 @@ object TextQueries {
       // the smoothed distribution table is read TWICE by the pair
       // self-join; cached (|sources|×|vocab| rows) so the deep tiny-table
       // chain above it — six broadcast builds — runs once, not per side
-      val p = graft.operators.CacheRegistry.track(
+      val p =
         grid.join(broadcast(tot), Seq("source"))
           .select($"source", $"w",
             (($"c" + 1).cast("double") / ($"tot" + 200)).as("p"))
-          .cache())
+          .cache()
       p.as("a").join(p.as("b"),
           $"a.w" === $"b.w" && $"a.source" < $"b.source")
         .select($"a.source".as("source_a"), $"b.source".as("source_b"),
@@ -526,7 +526,7 @@ object TextQueries {
     // the quiet r13 warm_boot profile). Ordering imposed outside the
     // store.
     "q162_gram_novelty" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"gramnov:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "gramnov", dir) {
       import s.implicits._
       graft.operators.ArtifactStore.table(s, "gram_novelty",
         Seq(s"${dir.stripSuffix("/")}/documents.parquet"), "g5,bv1") {
@@ -629,14 +629,14 @@ object TextQueries {
     // Memoized (r9 report treatment): bounded per-batch ledger,
     // computed once per (session, dir) and served driver-local.
     "q54_tfidf" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"rep54:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "rep54", dir) {
       import s.implicits._
       val tf = DocProfiles.termFreqs(s, dir)
       // the document-frequency table is the stored half of the inverted
       // index (Lucene keeps df per term in the terms dict) — cached, or
       // the full-tf groupBy re-runs every pass
-      val df_ = graft.operators.CacheRegistry.track(
-        tf.groupBy($"term").agg(count(lit(1)).as("df")).cache())
+      val df_ =
+        tf.groupBy($"term").agg(count(lit(1)).as("df")).cache()
       val n = Tables.documents(s, dir).agg(count(lit(1)).as("n_docs"))
       val w = Window.partitionBy($"doc_id").orderBy($"score".desc, $"term".asc)
       tf.where($"doc_id" < 20).join(df_, "term")
@@ -714,19 +714,19 @@ object TextQueries {
     // Memoized (r9 report treatment): bounded per-batch ledger,
     // computed once per (session, dir) and served driver-local.
     "q57_bigram_lm" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"rep57:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "rep57", dir) {
       import s.implicits._
       graft.functions.expressions.GraftFunctions.register(s)
       // the bigram count table IS the trained LM — a stored, vocab²-
       // bounded artifact (the q96/q124 stored-model treatment): cached,
       // so only the head ranking and conditional division are per-pass
       // work. Rides the shared profile cache's token arrays.
-      val counts = graft.operators.CacheRegistry.track(
+      val counts =
         DocProfiles.profiled(s, dir)
           .select(explode(wordShingles($"toks", 2)).as("bg"))
           .select(split($"bg", " ")(0).as("w1"), split($"bg", " ")(1).as("w2"))
           .groupBy($"w1", $"w2").agg(count(lit(1)).as("n12"))
-          .cache())
+          .cache()
       val heads = counts.groupBy($"w1").agg(sum($"n12").as("n1"))
       val topHeads = heads.orderBy($"n1".desc, $"w1".asc).limit(5)
       val w = Window.partitionBy($"w1").orderBy($"n12".desc, $"w2".asc)
@@ -842,8 +842,7 @@ object TextQueries {
     // raise shardHexChars; the shape (one partitioned window, one
     // repartition-on-shard write) is unchanged.
     "q248_shard_export_gate" -> ((s, dir) =>
-      graft.operators.ResultMemo.getOrCompute(
-          s"shardexport:$dir:${graft.operators.SessionKey(s)}") {
+      graft.operators.ResultMemo.getOrCompute(s, "shardexport", dir) {
         import s.implicits._
         val docs = Tables.documents(s, dir)
           .select($"doc_id", size(tokens($"text")).as("toks"), $"lang", $"source")
@@ -1009,8 +1008,7 @@ object TextQueries {
     // STORED artifact (r12 wave 3): the merge log IS the trained
     // tokenizer a deployment ships — deterministic Sennrich loop with
     // pinned tie-breaks; q181 re-reads it to encode.
-    "q171_bpe_train" -> ((s, dir) => graft.operators.ResultMemo.getOrCompute(
-        s"bpetrain:$dir:${graft.operators.SessionKey(s)}") {
+    "q171_bpe_train" -> ((s, dir) => graft.operators.ResultMemo.getOrCompute(s, "bpetrain", dir) {
       graft.operators.ArtifactStore.table(s, "bpe_merge_log",
         Seq(s"${dir.stripSuffix("/")}/documents.parquet"), "m3,bv1") {
       import s.implicits._
@@ -1045,13 +1043,13 @@ object TextQueries {
       // the encoded dictionary is the STORED artifact a tokenizer ships —
       // session-cached so the per-pass work is the broadcast build, not a
       // corpus re-aggregate + vocab re-encode
-      val dictSyms = graft.operators.CacheRegistry.track(
+      val dictSyms =
         graft.operators.BpeTrainer
           .wordDict(Tables.documents(s, dir), "text")
           .as[(String, Long)]
           .map { case (w, _) => (w, bc.value.encode(w).length) }
           .toDF("w", "n_syms")
-          .cache())
+          .cache()
       val prof = DocProfiles.profiled(s, dir)
       // rides the shared inverted-index cache (one explode per session,
       // shared with the BM25/TF-IDF family) — per-pass work is a cached
@@ -1128,7 +1126,7 @@ object TextQueries {
     // Memoized (r9 report treatment): bounded per-batch ledger,
     // computed once per (session, dir) and served driver-local.
     "q71_decontamination" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"rep71:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "rep71", dir) {
       import s.implicits._
       graft.functions.expressions.GraftFunctions.register(s)
       // split derives from the SAME cached pct the profile table carries
@@ -1233,7 +1231,7 @@ object TextQueries {
     // Memoized (r9 report treatment): bounded per-batch ledger,
     // computed once per (session, dir) and served driver-local.
     "q83_gopher_filter" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"rep83:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "rep83", dir) {
       import s.implicits._
       graft.functions.expressions.GraftFunctions.register(s)
       val d = Tables.documents(s, dir)
@@ -1274,7 +1272,7 @@ object TextQueries {
     // Memoized (r9 report treatment): bounded per-batch ledger,
     // computed once per (session, dir) and served driver-local.
     "q82_source_drift" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"rep82:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "rep82", dir) {
       import s.implicits._
       val per = Tables.documents(s, dir)
         .select($"source", $"n_chars", size(tokens($"text")).as("ws_toks"), $"lang")
@@ -1458,7 +1456,7 @@ object TextQueries {
     // pipeline's published report — exact integer survivor counts,
     // stored == derived; re-sorted outside the store.
     "q100_curation_funnel" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"rep100:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "rep100", dir) {
       graft.operators.ArtifactStore.table(s, "curation_funnel_ledger",
         Seq(s"${dir.stripSuffix("/")}/documents.parquet"), "funnel6,bv1") {
       import s.implicits._
@@ -1514,7 +1512,7 @@ object TextQueries {
     // a per-batch curation ledger — the gram shuffle runs once per
     // (session, dir).
     "q108_chunk_dedup" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"chunkdup:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "chunkdup", dir) {
       chunkDedupFrame(s, dir)
     }),
 
@@ -1594,22 +1592,22 @@ object TextQueries {
         s"b$DsirBuckets,k15,bv1") {
       import s.implicits._
       graft.functions.expressions.GraftFunctions.register(s)
-      def hist = graft.operators.CacheRegistry.track(DocProfiles.profiled(s, dir)
+      def hist = DocProfiles.profiled(s, dir)
         .select($"doc_id", $"lang", explode(wordShingles($"toks", 2)).as("bg"))
         .select($"doc_id", $"lang",
           (conv(substring(md5(concat(lit("dsir:"), $"bg").cast("binary")), 1, 4), 16, 10)
             .cast("long") % DsirBuckets).cast("int").as("b"))
         .groupBy($"doc_id", $"lang", $"b").agg(count(lit(1)).as("nf"))
-        .cache())
+        .cache()
       val lp = dsirModelIndex(s, dir, () => hist)
       // the per-doc importance weights are themselves the DSIR artifact
       // (scored once offline; resampling READS them) — cached, so the
       // per-pass work is the top-15 rank, not a rescoring pass
-      val scored = graft.operators.CacheRegistry.track(
+      val scored =
         hist.join(broadcast(lp), Seq("b"))
           .groupBy($"doc_id", $"lang")
           .agg(sum($"nf").as("n_feats"), round(sum($"nf" * $"lp"), 6).as("w"))
-          .cache())
+          .cache()
       val win = Window.orderBy($"w".desc, $"doc_id".asc)
       scored.orderBy($"w".desc, $"doc_id".asc).limit(15)
         .withColumn("rnk", row_number().over(win))
@@ -1685,7 +1683,7 @@ object TextQueries {
       val models = (0 to 3).map(k =>
         graft.operators.BpeTrainer.BpeModel(merges.take(k)))
       val bc = s.sparkContext.broadcast(models)
-      val dictSyms = graft.operators.CacheRegistry.track(
+      val dictSyms =
         graft.operators.BpeTrainer
           .wordDict(Tables.documents(s, dir), "text")
           .as[(String, Long)]
@@ -1694,7 +1692,7 @@ object TextQueries {
             (w, e(0), e(1), e(2), e(3))
           }
           .toDF("w", "s0", "s1", "s2", "s3")
-          .cache())
+          .cache()
       val base = DocProfiles.profiled(s, dir)
         .agg(sum($"n_tok").as("tws"), sum($"n_chars").as("nc"))
         .collect()(0)
@@ -1762,8 +1760,7 @@ object TextQueries {
     // 10-row table instead of re-running the BM25 grading chain (2.2 s in
     // the r11 warm_boot profile). Exact ranks + 6 dp rounding make stored
     // == derived; re-sorted outside the store (q89's discipline).
-    "q194_retrieval_eval" -> ((s, dir) => graft.operators.ResultMemo.report(
-        s"retreval:$dir:${graft.operators.SessionKey(s)}") {
+    "q194_retrieval_eval" -> ((s, dir) => graft.operators.ResultMemo.report(s, "retreval", dir) {
       graft.operators.ArtifactStore.table(s, "retrieval_eval_ledger",
         Seq(s"${dir.stripSuffix("/")}/documents.parquet"), "bm25,k10,bv1") {
       import s.implicits._
@@ -1775,8 +1772,8 @@ object TextQueries {
         .select($"doc_id".as("q_id"), $"source".as("q_src"))
       val trainTf = tf.join(train.select($"doc_id", $"n_tok"), Seq("doc_id"))
       val stats = train.agg(count(lit(1)).as("n_docs"), avg($"n_tok").as("avgdl"))
-      val df_ = graft.operators.CacheRegistry.track(
-        trainTf.groupBy($"term").agg(count(lit(1)).as("df")).cache())
+      val df_ =
+        trainTf.groupBy($"term").agg(count(lit(1)).as("df")).cache()
       // df-CAPPED query terms: each query keeps its 20 RAREST terms (df
       // asc, term asc) — the high-idf terms that carry the BM25 signal.
       // Without the cap the scoring join walks every stopword's posting
@@ -1788,13 +1785,13 @@ object TextQueries {
       // the standing QUERY SET is a stored artifact (200 rows): built
       // once per session, so the per-pass plan never re-scans the
       // inverted index to re-derive it
-      val qterms = graft.operators.CacheRegistry.track(
+      val qterms =
         tf.join(broadcast(qdocs.select($"q_id")), $"doc_id" === $"q_id")
           .select($"q_id", $"term").distinct()
           .join(df_, Seq("term"))
           .withColumn("tn", row_number().over(wQt)).where($"tn" <= 20)
           .select($"q_id", $"term")
-          .cache())
+          .cache()
       // join ORDER is the plan: the ~200-row term list prunes the
       // posting table FIRST (term-keyed, selective), then the doc-keyed
       // train join supplies membership + norms — never a full
@@ -1858,8 +1855,8 @@ object TextQueries {
       // sized, fetched from the inverted index once per batch. Without
       // this the isin probe re-scans the whole tf table and re-joins
       // doc lengths every pass.
-      val qtf = graft.operators.CacheRegistry.track(
-        tf.where($"term".isin(Bm25Terms: _*)).join(dl, Seq("doc_id")).cache())
+      val qtf =
+        tf.where($"term".isin(Bm25Terms: _*)).join(dl, Seq("doc_id")).cache()
       val df_ = qtf.groupBy($"term").agg(count(lit(1)).as("df"))
       val contrib = qtf.join(broadcast(df_), Seq("term"))
         .crossJoin(broadcast(stats))
@@ -1882,8 +1879,8 @@ object TextQueries {
     // risk list a training run reviews). One gram shuffle with map-side
     // partials, then a global top-20 that plans as TakeOrderedAndProject
     // (limit BEFORE any global window — the q93 discipline).
-    "q110_boilerplate_grams" -> ((s, dir) => graft.operators.ResultMemo.getOrCompute(
-        s"boilergrams:$dir:${graft.operators.SessionKey(s)}") {
+    "q110_boilerplate_grams" -> ((s, dir) => graft.operators.ResultMemo
+        .getOrCompute(s, "boilergrams", dir) {
       import s.implicits._
       graft.functions.expressions.GraftFunctions.register(s)
       // memoized per batch (the q36/q84/q99 report treatment): the top-20
@@ -1892,7 +1889,7 @@ object TextQueries {
       // STORED artifact (r12 wave 3): the top-20 blocklist is published,
       // not re-aggregated per restart — exact integers, total-order
       // ranked; re-sorted outside the store.
-      val out = graft.operators.CacheRegistry.track(
+      val out =
         graft.operators.ArtifactStore.table(s, "boilerplate_ledger",
           Seq(s"${dir.stripSuffix("/")}/documents.parquet"), "w5,k20,bv1") {
           DocProfiles.grams(s, dir)
@@ -1903,7 +1900,7 @@ object TextQueries {
             .orderBy($"n_docs".desc, $"n_occ".desc, $"g".asc)
             .limit(20)
         }.orderBy($"n_docs".desc, $"n_occ".desc, $"g".asc)
-        .cache())
+        .cache()
       out.count()
       out
     }),
@@ -1921,7 +1918,7 @@ object TextQueries {
     // Memoized (r9 report treatment): bounded per-batch ledger,
     // computed once per (session, dir) and served driver-local.
     "q215_prefix_templates" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"rep215:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "rep215", dir) {
       import s.implicits._
       val p = DocProfiles.profiled(s, dir).where($"n_tok" >= 5)
         .select($"source", concat_ws(" ", slice($"toks", 1, 5)).as("prefix"))
@@ -1959,7 +1956,7 @@ object TextQueries {
     // cheap, but the five assembly legs still cost several small jobs,
     // and repeat readers want the stored report, not a re-assembly.
     "q227_nb_distill" -> ((s, dir) => graft.operators.ResultMemo
-        .getOrCompute(s"nbdistill:$dir:${graft.operators.SessionKey(s)}") {
+        .getOrCompute(s, "nbdistill", dir) {
       import s.implicits._
       val p = nbLabels(s, dir)
       val voc = nbVocab(s, dir)
@@ -2015,7 +2012,7 @@ object TextQueries {
     // join + doc agg, already paid by q227); the selection window is
     // partitioned by source; the report is source-count-sized.
     "q231_uncertainty_sampling" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"nbuncert:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "nbuncert", dir) {
       import s.implicits._
       val sc = nbTestScores(s, dir)
         .join(DocProfiles.profiled(s, dir).select($"doc_id", $"source"),
@@ -2052,7 +2049,7 @@ object TextQueries {
     // trained artifact. Same bounded-bin discipline as the q227 ROC:
     // every fold runs over <=401 Aggregate-backed rows.
     "q232_score_gains" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"nbgains:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "nbgains", dir) {
       import s.implicits._
       val b = nbScoreBins(s, dir)
       val tt = b.agg(sum($"np").as("pp"))
@@ -2088,7 +2085,7 @@ object TextQueries {
     // the posexplode + per-doc windows (2.8 s in the r12 warm_boot
     // profile). Re-sorted outside the store (q89's discipline).
     "q242_rake_keyphrases" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"rake:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "rake", dir) {
       graft.operators.ArtifactStore.table(s, "rake_ledger",
         Seq(s"${dir.stripSuffix("/")}/documents.parquet"), "cap4,k15,bv1") {
       import s.implicits._
@@ -2142,7 +2139,7 @@ object TextQueries {
     // — the KenLM query path as relational joins. Ledger memoized (the
     // stored-eval-report treatment).
     "q235_kneser_ney" -> ((s, dir) => graft.operators.ResultMemo
-        .report(s"kneserney:$dir:${graft.operators.SessionKey(s)}") {
+        .report(s, "kneserney", dir) {
       import s.implicits._
       graft.functions.expressions.GraftFunctions.register(s)
       val pct = md5Pct("", $"doc_id")

@@ -39,8 +39,7 @@ object JsonlImporter {
 
   /** Both sides of one parse pass. `parsed` is the shared cached scan
     * both sides filter — callers either `release()` it when both sides
-    * are consumed or hand it to `CacheRegistry.track` for batch-boundary
-    * release.
+    * are consumed or leave it to the batch-boundary `ResultMemo.release`.
     */
   final case class Imported(valid: DataFrame, corrupt: DataFrame, parsed: DataFrame) {
     def release(): Unit = { parsed.unpersist(blocking = false); () }

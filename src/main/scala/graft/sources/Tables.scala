@@ -25,57 +25,44 @@ object Tables {
     * cache the dimensions — the flag models the session-cache decision an
     * operator makes, it does not change any query's semantics.
     *
-    * Keyed by (sessionUUID, sfDir, name) — identityHashCode is reusable
-    * after GC (ADVICE r4), sessionUUID is not. [[graft.operators.CacheRegistry
-    * .releaseAll]] unpersists and clears at batch boundaries.
+    * The cached scans live in the batch-lifetime store
+    * ([[graft.operators.ResultMemo]], per session and sf dir);
+    * `ResultMemo.release` forgets and unpersists them at batch boundaries.
     */
-  private val cachedTables =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String), DataFrame]()
-
   private def raw(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"${sfDir.stripSuffix("/")}/$name.parquet")
 
+  /** Width a cached fact table (and the event hubs built from it) is
+    * spread to: 8-way, not full-width — wide enough that no scan is a
+    * straggler, narrow enough that expand-heavy plans (q20's
+    * countDistinct) and full-table sorts don't pay 32-task scheduling per
+    * stage.
+    */
+  private[graft] val CacheSpread = 8
+
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
     if (spark.conf.getOption("spark.graft.cacheBaseTables").contains("true")) {
-      cachedTables.computeIfAbsent(
-        (graft.operators.SessionKey(spark), sfDir.stripSuffix("/"), name),
-        _ => {
-          // The generator writes each table as ONE parquet file; under the
-          // 128 MB split default that is ONE scan partition, so every scan
-          // of a cached fact table would run single-threaded (measured:
-          // q01's 600k-row decimal agg at 0.76 s on one core). Spread
-          // non-tiny tables AT CACHE BUILD — one untimed shuffle buys
-          // parallel reads for the whole session. On a real cluster the
-          // fact tables arrive as many splits and this is a no-op by the
-          // partition-count guard.
-          val df = raw(spark, sfDir, name)
-          val bytes = new java.io.File(
-            s"${sfDir.stripSuffix("/")}/$name.parquet").length
-          // 8-way, not full-width: wide enough that no scan is a straggler,
-          // narrow enough that expand-heavy plans (q20's countDistinct)
-          // and full-table sorts don't pay 32-task scheduling per stage.
-          // Conf-able (spark.graft.cacheSpread) so the knee can be
-          // re-measured per host without a rebuild.
-          val spreadCap = spark.conf
-            .getOption("spark.graft.cacheSpread").map(_.toInt).getOrElse(8)
-          val cores = math.min(spark.sparkContext.defaultParallelism, spreadCap)
-          val spread =
-            if (bytes > (100L << 10) && cores > 1 &&
-                df.rdd.getNumPartitions < cores) df.repartition(cores)
-            else df
-          spread.persist(
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        })
+      graft.operators.ResultMemo.baseTable(spark, name, sfDir) {
+        // The generator writes each table as ONE parquet file; under the
+        // 128 MB split default that is ONE scan partition, so every scan
+        // of a cached fact table would run single-threaded (measured:
+        // q01's 600k-row decimal agg at 0.76 s on one core). Spread
+        // non-tiny tables AT CACHE BUILD — one untimed shuffle buys
+        // parallel reads for the whole session. On a real cluster the
+        // fact tables arrive as many splits and this is a no-op by the
+        // partition-count guard.
+        val df = raw(spark, sfDir, name)
+        val bytes = new java.io.File(
+          s"${sfDir.stripSuffix("/")}/$name.parquet").length
+        val cores = math.min(spark.sparkContext.defaultParallelism, CacheSpread)
+        val spread =
+          if (bytes > (100L << 10) && cores > 1 &&
+              df.rdd.getNumPartitions < cores) df.repartition(cores)
+          else df
+        spread.persist(
+          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      }
     } else raw(spark, sfDir, name)
-
-  /** Unpersist and forget every session-cached base table (batch-boundary
-    * hook, called from [[graft.operators.CacheRegistry.releaseAll]]).
-    */
-  def clearCache(): Unit = {
-    val it = cachedTables.values.iterator()
-    while (it.hasNext) it.next().unpersist(blocking = false)
-    cachedTables.clear()
-  }
 
   /** `events.ts` has shipped in two parquet physical encodings across
     * testdata generations, and the loader adapts per file so every query
@@ -109,6 +96,21 @@ object Tables {
         df.withColumn("ts", col("ts").cast("timestamp"))
       case _ => df
     }
+  }
+  /** The events table in the broker's envelope shape (the event log's
+    * wire schema), every row on `topic` — the fixture the streaming
+    * delivery gates and Bench's streaming legs drain.
+    */
+  def envelopes(spark: SparkSession, sfDir: String, topic: String): DataFrame = {
+    import spark.implicits._
+    events(spark, sfDir).select(
+      format_string("%012d", $"event_id").as("id"),
+      $"event_type".as("type"),
+      lit(topic).as("topic"),
+      $"ts".as("timestamp"),
+      lit(graft.model.Event.DefaultSchemaVersion).as("schemaVersion"),
+      $"props".as("payload"),
+      map(lit("user_id"), $"user_id".cast("string")).as("metadata"))
   }
   def lineitem(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "lineitem")
   def orders(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "orders")

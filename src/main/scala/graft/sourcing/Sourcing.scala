@@ -152,7 +152,7 @@ final class EventSourcedRepository[A <: AggregateRoot[_] : scala.reflect.ClassTa
       .mapGroupsWithState[A, R](GroupStateTimeout.NoTimeout()) {
         (id, events, state: org.apache.spark.sql.streaming.GroupState[A]) =>
           val agg = state.getOption.getOrElse(fac(id))
-          events.toSeq.sortBy(e => (e.timestamp.getTime, e.id)).foreach(agg.apply)
+          events.toSeq.sorted(graft.model.Event.order).foreach(agg.apply)
           state.update(agg)
           f(agg)
       }
@@ -174,7 +174,7 @@ final class EventSourcedRepository[A <: AggregateRoot[_] : scala.reflect.ClassTa
       .groupByKey(_.topic.stripPrefix(prefix))
       .mapGroups { (id, events) =>
         val agg = fac(id)
-        agg.rehydrate(events.toSeq.sortBy(e => (e.timestamp.getTime, e.id)))
+        agg.rehydrate(events.toSeq.sorted(graft.model.Event.order))
         f(agg)
       }
   }

@@ -190,10 +190,9 @@ final class StreamingSubscription(
         if (orderedMode) {
           // Per-batch ordered delivery on the driver mirrors the reference's
           // sequential handler loop; bounded by maxFilesPerTrigger. Sorted
-          // on the FULL timestamp (sub-millisecond part included), then id:
-          // the (timestamp, id) order EventLog.getEvents/replayEvents use.
+          // in the log's event order (Event.order).
           batch.as[EventRow].collect()
-            .sortBy(e => (e.timestamp.getTime, e.timestamp.getNanos, e.id))
+            .sorted(graft.model.Event.order)
             .foreach(event => deliverOne(event).foreach(err => d.addEvent(event, err, subId)))
         } else {
           // Distributed delivery: handlers run on executors; only failures

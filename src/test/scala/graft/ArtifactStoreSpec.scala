@@ -482,16 +482,16 @@ class ArtifactStoreSpec extends SparkSpec {
       "grams" -> graft.queries.DocProfiles.grams(spark, dir),
       "daily" -> graft.queries.EventStats.dailyTypeAgg(spark, dir))
     val derived = hubs().map { case (n, df) => n -> rows(df) }
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
     withStore { _ =>
       val cold = hubs().map { case (n, df) => n -> rows(df) }
-      graft.operators.CacheRegistry.releaseAll()
+      graft.operators.ResultMemo.release(spark)
       val warm = hubs().map { case (n, df) => n -> rows(df) }
       derived.zip(cold).zip(warm).foreach { case (((n, d), (_, c)), (_, w)) =>
         assert(d == c, s"$n: stored(cold) != derived")
         assert(d == w, s"$n: stored(warm) != derived")
       }
     }
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
   }
 }

@@ -67,6 +67,6 @@ class BpeTrainerSpec extends SparkSpec {
     val nF = seg.as[(String, Seq[String], Long)].collect()
       .map { case (_, s, n) => s.size * n }.sum
     assert(nF <= n0, "total symbol mass never grows")
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
   }
 }

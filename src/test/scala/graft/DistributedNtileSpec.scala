@@ -45,7 +45,7 @@ class DistributedNtileSpec extends SparkSpec {
       DistributedNtile.scores(df, "id", 2, Seq(Metric("m", -$"m"))).collect()
     }
     assert(e.getMessage.contains("non-null"))
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
   }
 
   test("carry columns survive with one value per key") {
@@ -99,7 +99,7 @@ class DistributedNtileSpec extends SparkSpec {
     assert(phys.collect {
       case w: WindowExec if w.partitionSpec.isEmpty => w
     }.isEmpty, s"q246's rank frame plans a global window:\n$phys")
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
   }
 
   test("plans no unpartitioned window and no single-partition exchange") {

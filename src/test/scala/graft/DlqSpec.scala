@@ -33,6 +33,17 @@ class DlqSpec extends SparkSpec {
     }
   }
 
+  test("equal timestamps: newest first, ties by id descending in every queue") {
+    // adds in a tight loop share a millisecond, so the tie-break decides
+    impls().foreach { case (name, q) =>
+      Seq("e2", "e1", "e3").foreach(id => q.addEvent(ev(id), "err", "sub"))
+      val got = q.getEvents()
+      val expected = got.sortBy(e =>
+        (e.timestamp.getTime, e.timestamp.getNanos, e.event.id)).reverse
+      assert(got.map(_.event.id) == expected.map(_.event.id), s"[$name] (timestamp desc, id desc)")
+    }
+  }
+
   test("successful retry removes; failing retry increments attempts + updates error") {
     impls().foreach { case (name, q) =>
       q.addEvent(ev("e1"), "orig", "sub1")

@@ -45,6 +45,6 @@ class EventStatsSpec extends SparkSpec {
     assert(cached == maintained,
       "the shared cache equals the operator-maintained table, cell for cell")
     assert(cached.nonEmpty)
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
   }
 }

@@ -48,7 +48,7 @@ class GlobalPlanAuditSpec extends SparkSpec {
       else None
     } finally {
       spark.conf.unset("spark.graft.report.passthrough")
-      graft.operators.CacheRegistry.releaseAll()
+      graft.operators.ResultMemo.release(spark)
     }
   }
 
@@ -92,7 +92,7 @@ class GlobalPlanAuditSpec extends SparkSpec {
         Window.orderBy($"n".desc, $"event_type".asc)))
     assert(!graft.operators.PlanAudit.audit(byType).globalWindow,
       "a domain-grain aggregate must keep the exemption")
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
   }
 
   test("negative controls: content-identity group keys are entity-grain too") {
@@ -122,6 +122,6 @@ class GlobalPlanAuditSpec extends SparkSpec {
         Window.orderBy($"n".desc, $"content_hash".asc)))
     assert(!graft.operators.PlanAudit.audit(limited).globalWindow,
       "a Limit above the content-identity aggregate must keep the exemption")
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
   }
 }

@@ -71,7 +71,7 @@ class IvfIncrementalSpec extends SparkSpec {
     assert(after.where($"gen" > 0).count() == 0)
     assert(after.count() == all.count())
     assert(!IvfIncremental.needsRetrain(spark, idx, 0.1))
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
   }
 
   test("streaming drain == batch append, assignment-for-assignment") {
@@ -125,7 +125,7 @@ class IvfIncrementalSpec extends SparkSpec {
     val gens = IvfIncremental.assignments(spark, idx)
       .select($"gen").distinct().as[Int].collect().toSet
     assert(gens == Set(0), s"first append onto empty cells is gen 0, got $gens")
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
   }
 
   test("build is deterministic: same corpus, identical centroid tables") {
@@ -139,6 +139,6 @@ class IvfIncrementalSpec extends SparkSpec {
     val t2 = IvfIncremental.centroids(spark, i2)
       .collect().map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1)
     assert(t1.sameElements(t2), "6dp-rounded Lloyd chain is deterministic")
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
   }
 }

@@ -64,7 +64,7 @@ object LawProps extends Properties("graft-laws") {
     forAll(Gen.listOf(genEvent)) { events =>
       def foldSorted(evs: Seq[EventRow]): Seq[String] = {
         val agg = new Summer("x")
-        agg.rehydrate(evs.sortBy(e => (e.timestamp.getTime, e.id)))
+        agg.rehydrate(evs.sorted(Event.order))
         agg.getEvents.map(_.id)
       }
       foldSorted(events) == foldSorted(scala.util.Random.shuffle(events))

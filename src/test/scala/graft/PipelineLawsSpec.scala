@@ -249,7 +249,7 @@ class PipelineLawsSpec extends SparkSpec {
       assert(pct(trainDoc) < 0.8, s"doc $trainDoc is not in the train split")
       assert(testDoc != trainDoc)
     }
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
   }
 
   test("q158: PSI is non-negative, windows partition, flag is honest") {
@@ -264,7 +264,7 @@ class PipelineLawsSpec extends SparkSpec {
       assert(psi >= 0.0, s"PSI must be non-negative: $psi")
       assert(shifted == psi > 0.1 || math.abs(psi - 0.1) < 1e-6)
     }
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
   }
 
   test("q159: hard negatives are genuinely negative and cell-local") {
@@ -283,7 +283,7 @@ class PipelineLawsSpec extends SparkSpec {
     rows.groupBy(_.getLong(0)).foreach { case (_, rs) =>
       assert(rs.map(_.getInt(1)).sorted.sameElements(1 to rs.length))
     }
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
   }
 
   test("q160: weights sum to 1, epochs respect the cap, budget is spent") {
@@ -301,7 +301,7 @@ class PipelineLawsSpec extends SparkSpec {
       if (capped) assert(math.abs(epochs - 4.0) < 1e-6,
         "a capped source trains exactly 4 epochs")
     }
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
   }
 
   test("q161: alignment/uniformity land in their analytic ranges") {
@@ -325,7 +325,7 @@ class PipelineLawsSpec extends SparkSpec {
       assert(n > 0)
       assert(mn >= 0.0 && mx <= 1.0 && mn <= avg && avg <= mx)
     }
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
   }
 
   test("q163: patterns are valid sequences and counts are positive") {
@@ -362,7 +362,7 @@ class PipelineLawsSpec extends SparkSpec {
     rows.foreach { r =>
       assert(r.getBoolean(3) == (r.getInt(0) != r.getInt(1)))
     }
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
   }
 
   test("q165: consistency flags restate the cosine threshold on real pairs") {
@@ -376,7 +376,7 @@ class PipelineLawsSpec extends SparkSpec {
       assert(cos >= -1.0 - 1e-9 && cos <= 1.0 + 1e-9)
       assert(ok == cos >= 0.9 || math.abs(cos - 0.9) < 1e-6)
     }
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
   }
 
   test("q166: fragmentation accounting is exact per shard") {
@@ -399,7 +399,7 @@ class PipelineLawsSpec extends SparkSpec {
       assert(fracSplit >= 0.0 && fracSplit <= 1.0)
       assert(math.abs(fracSplit - nSplit.toDouble / nDocs) < 1e-6 + 5e-7)
     }
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
   }
 
   test("q167: precision/recall are probabilities, candidates shrink with min_match") {
@@ -422,7 +422,7 @@ class PipelineLawsSpec extends SparkSpec {
     // at min_match=2 the candidate generator must find every sampled true
     // pair that shares >= 2 bands — recall on this fixture is high, not 0
     assert(rows.head.getLong(5) > 0, "fixture yields sampled true pairs found")
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
   }
 
   test("q168: deciles partition the corpus, pass rates are probabilities") {
@@ -435,7 +435,7 @@ class PipelineLawsSpec extends SparkSpec {
       assert(r.getLong(2) <= r.getLong(1), "passes bounded by docs")
       assert(r.getDouble(3) >= 0.0 && r.getDouble(3) <= 1.0)
     }
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
   }
 
   test("q169: keeper is min id, sacrifice nonnegative, flags restate equality") {
@@ -451,7 +451,7 @@ class PipelineLawsSpec extends SparkSpec {
       assert(math.abs(r.getDouble(5) - r.getDouble(3) - r.getDouble(7)) < 1e-6,
         "sacrifice = best - keeper")
     }
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
   }
 
   test("q146: token mass conserved and oov_rate is a probability") {

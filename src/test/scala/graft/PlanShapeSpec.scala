@@ -128,7 +128,7 @@ class PlanShapeSpec extends SparkSpec {
         }
       }
     }
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
   }
 
   test("retrieval pack (q125-q128) keeps its intended physical shapes") {
@@ -146,7 +146,7 @@ class PlanShapeSpec extends SparkSpec {
     // whole groups post-shuffle
     assert(plan("q126_prototypicality").contains("WindowGroupLimit"))
     assert(plan("q128_hybrid_rrf").contains("WindowGroupLimit"))
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
   }
 
   test("round-6 queries keep their intended physical shapes") {
@@ -194,7 +194,7 @@ class PlanShapeSpec extends SparkSpec {
     val p137 = plan("q137_media_neardup")
     assert(!p137.contains("CartesianProduct") && !p137.contains("BroadcastNestedLoopJoin"))
     assert(p137.contains("TakeOrderedAndProject"))
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
   }
 
   test("q107's global rank is distributed: no data-sized unpartitioned window") {
@@ -249,7 +249,7 @@ class PlanShapeSpec extends SparkSpec {
       .foreach { q =>
         assert(!plan(q).contains("CartesianProduct"), s"$q plans a cartesian product")
       }
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
   }
 
   test("dynamic partition pruning reaches the topic-partitioned log scan") {
@@ -386,7 +386,7 @@ class PlanShapeSpec extends SparkSpec {
     assert(lshPairs <= 8 * nDocs * 100, s"$lshPairs LSH pairs exceeds the band-cap bound")
     val shPairs = SparkEntry.queries("q69_simhash_neardup")(spark, dir).count()
     assert(shPairs <= 4 * nDocs * 100, s"$shPairs simhash pairs exceeds the band-cap bound")
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
   }
 
   test("round-8: the byUser cache layout serves the window family sort-free") {
@@ -417,7 +417,7 @@ class PlanShapeSpec extends SparkSpec {
     } finally {
       saved.fold(spark.conf.unset("spark.sql.adaptive.enabled"))(
         v => spark.conf.set("spark.sql.adaptive.enabled", v))
-      graft.operators.CacheRegistry.releaseAll()
+      graft.operators.ResultMemo.release(spark)
     }
   }
 
@@ -464,7 +464,7 @@ class PlanShapeSpec extends SparkSpec {
         case (k, Some(v)) => spark.conf.set(k, v)
         case (k, None) => spark.conf.unset(k)
       }
-      graft.operators.CacheRegistry.releaseAll()
+      graft.operators.ResultMemo.release(spark)
     }
   }
 }

@@ -40,8 +40,7 @@ class ProceduralGateSpec extends SparkSpec {
     // ResultMemo.getOrCompute, so a warm memo (another suite constructed
     // them first) would hide their markers and flake the tag⇒marker
     // direction.
-    graft.operators.ResultMemo.clear()
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
     val marked = try {
       SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
         val before = graft.operators.ProceduralWork.touches
@@ -49,7 +48,7 @@ class ProceduralGateSpec extends SparkSpec {
         if (graft.operators.ProceduralWork.touches > before) Some(name)
         else None
       }.toSet
-    } finally graft.operators.CacheRegistry.releaseAll()
+    } finally graft.operators.ResultMemo.release(spark)
     val tagged = SparkEntry.proceduralGates
     val stale = tagged -- marked
     assert(stale.isEmpty,

@@ -45,7 +45,7 @@ class Round6LawsSpec extends SparkSpec {
     val total = graft.sources.Tables.documents(spark, dir).count()
     assert(bins.map(_._2).sum == total, "bins must cover every document once")
     assert(bins.map(_._1).forall(b => b >= 0 && b <= 9))
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
   }
 
   test("bloom semi-join equality holds on randomized draws") {

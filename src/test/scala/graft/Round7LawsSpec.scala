@@ -52,7 +52,7 @@ class Round7LawsSpec extends SparkSpec {
     val trainIds = graft.queries.DocProfiles.profiled(spark, dir)
       .where($"pct" < 0.8).select($"doc_id").as[Long].collect().toSet
     assert(kept.subsetOf(trainIds))
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
   }
 
   test("q181: every token yields >= 1 symbol; ledger covers the corpus") {
@@ -65,7 +65,7 @@ class Round7LawsSpec extends SparkSpec {
       assert(bpe >= ws, "each whitespace token yields at least one BPE symbol")
       assert(perTok >= 1.0 && math.abs(perTok - bpe * 1.0 / ws) < 1e-6)
     }
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
   }
 
   test("q182: dedup restores the original per-type counts exactly") {
@@ -179,7 +179,7 @@ class Round7LawsSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), math.pow(r.getDouble(2), 1.0 / r.getInt(1))))
     val want = keys.sortBy { case (id, k) => (-k, id) }.take(20).map(_._1).toSeq
     assert(got.map(_._2).toSeq == want, "A-ES top-20 matches brute force")
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
   }
 
   test("q190: sketch estimates land near the exact split cardinalities") {
@@ -194,7 +194,7 @@ class Round7LawsSpec extends SparkSpec {
       val (est, exact) = rows(m)
       assert(math.abs(est - exact) / exact < 0.3, s"$m estimate within 30%")
     }
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
   }
 
   test("q191: triplets are labeled correctly and margins restate the cosines") {
@@ -211,7 +211,7 @@ class Round7LawsSpec extends SparkSpec {
       assert(p != a && n != a)
       assert(math.abs(m - (pc - nc)) < 2e-6, "margin restates the cosines")
     }
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
   }
 
   test("q192: flags restate the threshold; probes are the test split") {
@@ -229,7 +229,7 @@ class Round7LawsSpec extends SparkSpec {
       java.lang.Integer.parseInt(hex, 16) / 65536.0
     }
     rows.foreach { case (id, _, _) => assert(pctOf(id) >= 0.9, "probe is test-split") }
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
   }
 
   test("q193: the funnel's survivor set composes the three stage laws") {
@@ -249,7 +249,7 @@ class Round7LawsSpec extends SparkSpec {
       .select(md5($"text".cast("binary"))).as[String].collect().toSet
     assert(kept.intersect(lowQualityCh).isEmpty,
       "sub-threshold docs fall at the quality stage")
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
   }
 
   test("q194: IR metrics are well-formed and mutually consistent") {
@@ -264,7 +264,7 @@ class Round7LawsSpec extends SparkSpec {
       assert((rr > 0) == (nRel > 0), "reciprocal rank fires iff a relevant doc is in top-10")
       if (nRel > 0) assert(ndcg > 0.0)
     }
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
   }
 
   test("q195: unanswered counts restate the batch anti-join law") {
@@ -284,7 +284,7 @@ class Round7LawsSpec extends SparkSpec {
       .groupBy($"k").count()
       .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
     assert(got == want, "streamed timeout verdicts equal the batch law")
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
   }
 
   test("q196: kept mass fits the budget; the marginal bin would exceed it") {
@@ -306,7 +306,7 @@ class Round7LawsSpec extends SparkSpec {
       .agg(coalesce(sum($"n_tok"), lit(0L))).collect()(0).getLong(0)
     assert(kept + marginalMass > budget,
       "the threshold bin is exactly where cumulative mass crosses the budget")
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
   }
 
   test("q197: cluster-weighted draw is the A-ES argmax over keepers") {
@@ -331,7 +331,7 @@ class Round7LawsSpec extends SparkSpec {
       .sortBy { case (id, _, k) => (-k, id) }.take(10)
       .map { case (id, sz, _) => (id, sz) }
     assert(rows.map(r => (r._2, r._3)).toSeq == want, "A-ES top-10 matches brute force")
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
   }
 
   test("q198: each merge can only shrink the corpus token count") {
@@ -349,7 +349,7 @@ class Round7LawsSpec extends SparkSpec {
     val q181Total = SparkEntry.queries("q181_bpe_fertility")(spark, dir)
       .agg(sum($"total_bpe_tokens")).collect()(0).getLong(0)
     assert(rows.last._2 == q181Total, "ladder K=3 equals the q181 ledger total")
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
   }
 
   test("q199: the audit catches exactly the planted pathologies") {
@@ -361,7 +361,7 @@ class Round7LawsSpec extends SparkSpec {
     rows.filter(_._1 >= 0).foreach { case (l, _, nf, nz) =>
       assert(nf == 0L && nz == 0L, s"label $l: real corpus is clean")
     }
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
   }
 
   test("q200: the data card's columns are mutually consistent") {
@@ -376,7 +376,7 @@ class Round7LawsSpec extends SparkSpec {
       assert(qp <= n && dup <= n)
       assert(toks > 0)
     }
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
   }
 
   test("q201: delivery respects the type filter; failures dead-letter exactly once") {
@@ -391,7 +391,7 @@ class Round7LawsSpec extends SparkSpec {
       assert(dead == failing, s"$t: every permanently-failing event dead-letters once")
       assert(delivered + dead == total, s"$t: nothing lost, nothing duplicated")
     }
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
   }
 
   test("q180: monotone quantiles, exact group counts") {

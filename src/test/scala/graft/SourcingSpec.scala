@@ -142,12 +142,25 @@ class SourcingSpec extends SparkSpec {
       if (i % 2 == 0) agg.updateEmail(s"u$i@y.com")
       r.save(agg)
     }
+    // Sub-millisecond order: u6 is created 100 µs and updated 900 µs into
+    // ONE millisecond, with ids running against time — the fold must
+    // apply the full timestamp first, as getById's log order does.
+    def at(micros: Int) = {
+      val ts = new java.sql.Timestamp(1700000000000L); ts.setNanos(micros * 1000); ts
+    }
+    log.appendRows(Seq(
+      EventRow("b", "user.created", "aggregate.user.u6", at(100), "1.0",
+        """{"username":"user6","email":"u6@x.com"}""", Map("aggregateId" -> "u6")),
+      EventRow("a", "user.email.updated", "aggregate.user.u6", at(900), "1.0",
+        """{"email":"u6@y.com"}""", Map("aggregateId" -> "u6"))))
     import spark.implicits._
     val states = r.foldAll(spark)(a => (a.id, a.getVersion, a.getState.email))
       .collect().sortBy(_._1)
-    assert(states.length == 5)
-    assert(states.map(_._2).toSeq == Seq(1, 2, 1, 2, 1))
+    assert(states.length == 6)
+    assert(states.map(_._2).toSeq == Seq(1, 2, 1, 2, 1, 2))
     assert(states(1)._3 == "u2@y.com")
+    assert(states(5)._3 == "u6@y.com", "foldAll must fold u6 in full-timestamp order")
+    assert(r.getById("u6").get.getState.email == "u6@y.com")
   }
 
   test("RepositoryFactory mints repositories over one shared log (sourcing.ts:281-302)") {

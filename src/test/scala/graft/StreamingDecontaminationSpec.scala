@@ -116,6 +116,6 @@ class StreamingDecontaminationSpec extends SparkSpec {
     val nSuspect = got1.count(_._2)
     assert(nSuspect < all.size / 2,
       s"suspect residue should be the minority, got $nSuspect/${all.size}")
-    graft.operators.CacheRegistry.releaseAll()
+    graft.operators.ResultMemo.release(spark)
   }
 }
