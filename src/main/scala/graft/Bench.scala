@@ -394,7 +394,7 @@ object Bench {
     // is an error only when every run failed, a transient single-run
     // failure just shrinks the sample.
     val results = names.map(name => name -> samples.get(name).fold(-1.0)(_.min))
-    val failedEvery = errors.keySet -- samples.keySet
+    val failedEvery = errors.keySet.diff(samples.keySet)
 
     // Streaming drain + stateful-state legs: their own metric lines, never
     // summed into the batch total. Failures here must not kill the main

@@ -1,10 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
-import graft.functions.expressions.{DotProductD, ShinglesExpr}
+import graft.functions.expressions.GraftFunctions
 
 /** SparkSessionExtensions injection point for graft's native expressions —
   * enable with:
@@ -13,11 +11,12 @@ import graft.functions.expressions.{DotProductD, ShinglesExpr}
   * spark.sql.extensions=graft.GraftExtensions
   * }}}
   *
-  * or `SparkSession.builder.withExtensions(new GraftExtensions)`. Equivalent
-  * to the imperative `GraftFunctions.register(spark)` (which the query pack
-  * calls for harness sessions that were built without extensions); this is
-  * the deployment-grade path — functions exist in every session derived
-  * from the config, including Thrift/Connect servers.
+  * or `SparkSession.builder.withExtensions(new GraftExtensions)`. Injects
+  * every function of [[GraftFunctions.all]] — the same table the
+  * imperative `GraftFunctions.register(spark)` installs from, so the two
+  * paths cannot drift apart (register is then a no-op). This is the
+  * deployment-grade path: functions exist in every session derived from
+  * the config, including Thrift/Connect servers.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -29,38 +28,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // topic's hash bucket (imperative twin: TopicBucketPruning.install,
     // called by bucketed EventLog constructors).
     ext.injectOptimizerRule(_ => graft.plans.TopicBucketPruning)
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProductD].getName, "graft_dot"),
-      (children: Seq[Expression]) => DotProductD(children.head, children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bloom_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        "graft_bloom_agg"),
-      (children: Seq[Expression]) => children match {
-        case Seq(c) =>
-          new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(c)
-        case Seq(c, n) =>
-          new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(c, n)
-        case _ => throw new IllegalArgumentException(
-          "graft_bloom_agg(hash64[, est_items]) takes 1 or 2 arguments")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bloom_contains"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "graft_bloom_contains"),
-      (children: Seq[Expression]) =>
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-          children.head, children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(classOf[ShinglesExpr].getName, "graft_shingles"),
-      (children: Seq[Expression]) => children match {
-        case Seq(toks, Literal(n: Int, _)) => ShinglesExpr(toks, n)
-        case _ => throw new IllegalArgumentException(
-          "graft_shingles(tokens, n) requires a literal integer n")
-      }))
+    GraftFunctions.all.foreach(ext.injectFunction)
   }
 }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.expressions.GraftFunctions
 import graft.queries._
 import graft.sources.Tables
 
@@ -36,11 +37,17 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2 + the north-star
     * LLM-pipeline surface (dedup, similarity, text analysis, multimodal).
+    * Every entry first installs graft's native functions in the session it
+    * is handed (idempotent — a no-op after the first query), so no query
+    * or helper in the pack registers them itself.
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    CoreQueries.defs ++ AnalyticQueries.defs ++ ExtendedQueries.defs ++
+    (CoreQueries.defs ++ AnalyticQueries.defs ++ ExtendedQueries.defs ++
       DedupQueries.defs ++ SimilarityQueries.defs ++ TextQueries.defs ++
-      MultimodalQueries.defs ++ GraphQueries.defs ++ StreamingGateQueries.defs
+      MultimodalQueries.defs ++ GraphQueries.defs ++ StreamingGateQueries.defs)
+      .map { case (name, q) =>
+        name -> { (s: SparkSession, dir: String) => GraftFunctions.register(s); q(s, dir) }
+      }
 
   /** Queries whose bench cost is dominated by PROTOCOL — staging scratch
     * fixtures, draining checkpointed streams, Derby/JDBC sinks,

@@ -3,7 +3,6 @@ package graft.broker
 import java.sql.Timestamp
 import java.util.concurrent.atomic.AtomicLong
 import scala.collection.concurrent.TrieMap
-import scala.collection.mutable
 
 import org.apache.spark.sql.SparkSession
 

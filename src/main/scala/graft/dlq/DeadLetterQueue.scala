@@ -4,7 +4,6 @@ import java.sql.Timestamp
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.model.{DeadLetterRow, Event, EventRow}
 

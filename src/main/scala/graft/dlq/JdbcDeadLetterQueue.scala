@@ -5,7 +5,6 @@ import java.util.Properties
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.model.{DeadLetterRow, EventRow}
 

@@ -30,8 +30,8 @@ object TextFunctions {
 
   /** Word n-gram shingles: `["a b c", "b c d", ...]`. Empty array when the
     * document has fewer than `n` tokens. Routed through the codegen'd
-    * native expression [[graft.functions.expressions.ShinglesExpr]];
-    * callers must have run `GraftFunctions.register(spark)` (idempotent).
+    * native expression [[graft.functions.expressions.ShinglesExpr]],
+    * installed per session like [[VectorFunctions.dot]]'s.
     */
   def wordShingles(toks: Column, n: Int): Column =
     call_function("graft_shingles", toks, lit(n))

@@ -20,8 +20,11 @@ import org.apache.spark.sql.functions._
 object VectorFunctions {
 
   /** Dot product in double precision, index order — the codegen'd native
-    * expression [[graft.functions.expressions.DotProductD]]. Callers must
-    * have run `GraftFunctions.register(spark)` (idempotent) first.
+    * expression [[graft.functions.expressions.DotProductD]], resolved by
+    * name in the session that analyzes the plan: every `SparkEntry.queries`
+    * entry and the engine's public operators install it on entry; any
+    * other caller runs `GraftFunctions.register(spark)` once per session
+    * (a no-op when already installed).
     */
   def dot(a: Column, b: Column): Column =
     call_function("graft_dot", a.cast("array<double>"), b.cast("array<double>"))

@@ -1,8 +1,11 @@
 package graft.functions.expressions
 
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain,
+  Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.SparkSession
@@ -78,59 +81,49 @@ case class DotProductD(left: Expression, right: Expression)
   override def prettyName: String = "graft_dot"
 }
 
-/** Session registration for graft's native expressions. Idempotent —
-  * `registerFunction` overwrites. Spark-first extension point (c) from the
-  * design brief: a Catalyst Expression, not a UDF.
+/** graft's native expressions: ONE (identifier, info, builder) table that
+  * both installation paths read — the imperative [[GraftFunctions.register]]
+  * and the declarative [[graft.GraftExtensions]]. Spark-first extension
+  * point (c) from the design brief: Catalyst Expressions, not UDFs.
   */
 object GraftFunctions {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProductD].getName, "graft_dot"),
-      (children: Seq[Expression]) => DotProductD(children.head, children(1)))
+  private def fn[E: scala.reflect.ClassTag](name: String)(
+      build: Seq[Expression] => Expression): (FunctionIdentifier, ExpressionInfo, FunctionBuilder) =
+    (FunctionIdentifier(name),
+      new ExpressionInfo(scala.reflect.classTag[E].runtimeClass.getName, name), build)
+
+  val all: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
+    fn[DotProductD]("graft_dot")(c => DotProductD(c.head, c(1))),
     // Bloom-filter pair for semi-join pre-pruning (the runtime-filter
     // primitive Spark itself uses for shuffle pruning, exposed as a
     // first-class surface): graft_bloom_agg(xxhash64(k)[, est_items])
     // builds a mergeable filter, graft_bloom_contains(bf, xxhash64(k))
     // probes it. Catalyst-native (no UDF) — the aggregate is
     // TypedImperative with partial merge, the probe codegens.
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_bloom_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        "graft_bloom_agg"),
-      (children: Seq[Expression]) => children match {
-        case Seq(c) =>
-          new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(c)
-        case Seq(c, n) =>
-          new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(c, n)
-        case _ => throw new IllegalArgumentException(
-          "graft_bloom_agg(hash64[, est_items]) takes 1 or 2 arguments")
-      })
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_bloom_contains"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "graft_bloom_contains"),
-      (children: Seq[Expression]) =>
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-          children.head, children(1)))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_token_entropy"),
-      new ExpressionInfo(classOf[TokenEntropyExpr].getName, "graft_token_entropy"),
-      (children: Seq[Expression]) => TokenEntropyExpr(children.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_top_token_share"),
-      new ExpressionInfo(classOf[TopTokenShareExpr].getName, "graft_top_token_share"),
-      (children: Seq[Expression]) => TopTokenShareExpr(children.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(classOf[ShinglesExpr].getName, "graft_shingles"),
-      (children: Seq[Expression]) => children match {
-        case Seq(toks, org.apache.spark.sql.catalyst.expressions.Literal(n: Int, _)) =>
-          ShinglesExpr(toks, n)
-        case _ => throw new IllegalArgumentException(
-          "graft_shingles(tokens, n) requires a literal integer n")
-      })
+    fn[BloomFilterAggregate]("graft_bloom_agg") {
+      case Seq(c) => new BloomFilterAggregate(c)
+      case Seq(c, n) => new BloomFilterAggregate(c, n)
+      case _ => throw new IllegalArgumentException(
+        "graft_bloom_agg(hash64[, est_items]) takes 1 or 2 arguments")
+    },
+    fn[BloomFilterMightContain]("graft_bloom_contains")(c =>
+      BloomFilterMightContain(c.head, c(1))),
+    fn[TokenEntropyExpr]("graft_token_entropy")(c => TokenEntropyExpr(c.head)),
+    fn[TopTokenShareExpr]("graft_top_token_share")(c => TopTokenShareExpr(c.head)),
+    fn[ShinglesExpr]("graft_shingles") {
+      case Seq(toks, Literal(n: Int, _)) => ShinglesExpr(toks, n)
+      case _ => throw new IllegalArgumentException(
+        "graft_shingles(tokens, n) requires a literal integer n")
+    })
+
+  /** Install every function of [[all]] that `spark`'s registry lacks —
+    * idempotent, and a no-op on a session that already has them (built
+    * with [[graft.GraftExtensions]], or registered before).
+    */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    all.foreach { case (id, info, build) =>
+      if (!registry.functionExists(id)) registry.registerFunction(id, info, build)
+    }
   }
 }

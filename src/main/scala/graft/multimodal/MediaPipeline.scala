@@ -2,7 +2,7 @@ package graft.multimodal
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** One media asset: opaque bytes + typed metadata. The schema an asset

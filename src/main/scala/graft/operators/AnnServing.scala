@@ -26,8 +26,9 @@ import graft.functions.VectorFunctions.dot
   * corpus-wide pass is the tier's own shortlist scan — truth is always
   * measured on the sampled queries, and the ledger is query-count-sized.
   *
-  * Callers must have run `GraftFunctions.register(spark)` (the dot
-  * product is the codegen'd native expression).
+  * The dot product is the codegen'd native expression: callers outside
+  * the query pack (which installs it per query) run
+  * `GraftFunctions.register(spark)` once per session.
   */
 object AnnServing {
 

@@ -10,11 +10,10 @@ import org.apache.spark.sql.types.StructType
   * term-frequency index, the gram explode, the IVF/Lloyd tower, the PPJoin
   * prefix index, the daily event rollup).
   *
-  * Why: [[ResultMemo]] (with Spark's cache manager) makes a hub build
-  * once per SESSION — but a real deployment restarts, and a 100 TB
-  * engine cannot re-pay an index build (a full-corpus tokenize +
-  * shuffle) on every restart. The artifact store gives those hubs published-artifact
-  * semantics across sessions: build once, write parquet + a fingerprint
+  * Why: [[ResultMemo]] makes a hub build once per BATCH — but a real
+  * deployment restarts, and a 100 TB engine cannot re-pay an index build
+  * (a full-corpus tokenize + shuffle) on every restart. The artifact
+  * store gives those hubs published-artifact semantics across sessions: build once, write parquet + a fingerprint
   * sidecar, and every later session (or bench pass) whose INPUTS are
   * byte-identical loads the stored table instead of re-deriving it.
   *
@@ -160,9 +159,10 @@ object ArtifactStore {
     * Returns the published parquet scan when a committed artifact matches
     * the current fingerprint, else runs `build`, publishes it, and
     * returns a scan of the fresh artifact (so hit and miss hand every
-    * caller the SAME plan shape — one parquet scan — and the cache
-    * manager dedupes repeat callers within the session exactly as it did
-    * for the derived plans).
+    * caller the SAME plan shape — one parquet scan). Every call walks the
+    * input tree to fingerprint it; hubs that many queries read wrap this
+    * call in [[ResultMemo.getOrCompute]], so the lookup and the `.cache()`
+    * on the returned scan happen once per batch.
     */
   def table(s: SparkSession, name: String, inputs: Seq[String],
       params: String = "")(build: => DataFrame): DataFrame =
@@ -214,14 +214,14 @@ object ArtifactStore {
           val dirs = names.map(n => new Path(artifactDir(r, inputs, n)))
           val lock = locks.computeIfAbsent(dirs.head.toString, _ => new Object)
           lock.synchronized {
-            if (dirs.forall(d => committedMatches(s, fs, d, fp)))
+            if (dirs.forall(d => committedMatches(fs, d, fp)))
               dirs.map(d => load(s, fs, d))
             else {
               val built = builders
               require(built.size == names.size,
                 s"ArtifactStore.tables: ${names.size} names, ${built.size} builds")
               names.zip(built).zip(dirs).map { case ((n, df), d) =>
-                publish(s, fs, d, n, fp, inFp, inputs, params, df)
+                publish(fs, d, n, fp, inFp, inputs, params, df)
                 builds.merge(n, 1L, (a, b) => a + b)
                 rootBuilds.merge(r.trim, 1L, (a, b) => a + b)
                 load(s, fs, d)
@@ -406,7 +406,7 @@ object ArtifactStore {
   private def artifactDir(root: String, inputs: Seq[String], name: String): String =
     s"${root.stripSuffix("/")}/${md5Hex(inputs.sorted.mkString("\n")).take(12)}/$name"
 
-  private def committedMatches(s: SparkSession, fs: FileSystem, dir: Path,
+  private def committedMatches(fs: FileSystem, dir: Path,
       fp: String): Boolean =
     try {
       readMeta(fs, dir).exists(_.fingerprint == fp)
@@ -422,7 +422,7 @@ object ArtifactStore {
     s.read.schema(StructType.fromDDL(meta.schemaDdl)).parquet(dir.toString)
   }
 
-  private def publish(s: SparkSession, fs: FileSystem, dir: Path,
+  private def publish(fs: FileSystem, dir: Path,
       name: String, fp: String, inFp: String, inputs: Seq[String],
       params: String, df: DataFrame): Unit = {
     val tag = s"${System.nanoTime()}-${nonce.incrementAndGet()}"
@@ -520,7 +520,6 @@ object ArtifactStore {
           Seq.empty[FileStatus]
         }
       for (entry <- entries) {
-        val name = entry.getPath.getName
         val p = entry.getPath.toString
         def drop(kind: String, gated: Boolean): Unit = {
           val del = !gated || expired(entry)

@@ -19,15 +19,11 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * moved. Listener overhead is one plan walk per action, zero per row.
   */
 final class BatchMetrics extends QueryExecutionListener {
+  import BatchMetrics.{ActionStats, MaxActions}
 
-  final case class ActionStats(
-      action: String,
-      wallMs: Long,
-      scanRows: Long,
-      shuffleBytes: Long,
-      failed: Boolean)
-
-  private val log = mutable.Buffer.empty[ActionStats]
+  /** The newest [[MaxActions]] actions, oldest first: a listener lives as
+    * long as its session, so the ledger is bounded. */
+  private val log = mutable.ArrayDeque.empty[ActionStats]
 
   private def fold(funcName: String, qe: QueryExecution, durationNs: Long,
       failed: Boolean): Unit = {
@@ -54,6 +50,7 @@ final class BatchMetrics extends QueryExecutionListener {
     walk(qe.executedPlan)
     this.synchronized {
       log += ActionStats(funcName, durationNs / 1000000L, scanRows, shuffleBytes, failed)
+      if (log.size > MaxActions) log.removeHead()
     }
   }
 
@@ -63,7 +60,7 @@ final class BatchMetrics extends QueryExecutionListener {
   override def onFailure(funcName: String, qe: QueryExecution, ex: Exception): Unit =
     fold(funcName, qe, 0L, failed = true)
 
-  /** The ledger as a queryable frame (one row per completed action). */
+  /** The ledger as a queryable frame (one row per retained action). */
   def snapshot(spark: SparkSession): DataFrame = {
     import spark.implicits._
     this.synchronized { log.toSeq }
@@ -100,6 +97,17 @@ final class BatchMetrics extends QueryExecutionListener {
 }
 
 object BatchMetrics {
+
+  final case class ActionStats(
+      action: String,
+      wallMs: Long,
+      scanRows: Long,
+      shuffleBytes: Long,
+      failed: Boolean)
+
+  /** How many of the newest actions the ledger keeps. */
+  val MaxActions = 10000
+
   def install(spark: SparkSession): BatchMetrics = {
     val m = new BatchMetrics
     spark.listenerManager.register(m)

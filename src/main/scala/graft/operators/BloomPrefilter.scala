@@ -122,6 +122,6 @@ object BloomPrefilter {
     val definitelyNew = probe.where(!hit)
     val settled = probe.where(hit)
       .join(corpus.select(col(key)).distinct(), Seq(key), "left_anti")
-    definitelyNew.unionByName(settled.select(probe.columns.map(col): _*))
+    definitelyNew.unionByName(settled.select(probe.columns.toIndexedSeq.map(col): _*))
   }
 }

@@ -71,7 +71,7 @@ object BpeTrainer {
     val spark = dict.sparkSession
     import spark.implicits._
     val merges = scala.collection.mutable.Buffer.empty[Merge]
-    var d: Dataset[(Seq[String], Long)] = dict
+    val d: Dataset[(Seq[String], Long)] = dict
       .select(col("w"), col("n"))
       .as[(String, Long)]
       .map { case (w, n) => (w.map(_.toString): Seq[String], n) }

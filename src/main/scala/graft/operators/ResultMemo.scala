@@ -9,15 +9,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Four kinds of entry share one map, each keyed by (session, kind, name,
   * input dir), so no two kinds can collide and no caller builds a key:
   *
-  *   - frames ([[getOrCompute]]): EAGERLY-materialized results. Spark's
-  *     cache manager dedupes identical lazy plans, but it cannot help an
-  *     operator like [[ConnectedComponents]] that RUNS its iterations
-  *     inside the builder call — every invocation would re-execute the
-  *     loop even though the result is the same table. Queries that share
-  *     such a result (q36/q84 both need the document component table;
-  *     bench passes re-run every query 3×) memoize it here;
+  *   - frames ([[getOrCompute]]): results shared BY NAME. Two sorts:
+  *     EAGERLY-materialized results — an operator like
+  *     [[ConnectedComponents]] RUNS its iterations inside the builder
+  *     call, so every invocation would re-execute the loop even though
+  *     the result is the same table (q36/q84 both need the document
+  *     component table; bench passes re-run every query 3×) — and the
+  *     query pack's LAZILY cached hubs (`DocProfiles.profiled`, the
+  *     shingle sets, the normalized embedding corpus, ...): the hub is
+  *     built, looked up in the artifact store and `.cache()`d once per
+  *     batch, and every caller gets that one frame;
   *   - reports ([[report]]): bounded ledgers collected to the driver;
-  *   - artifacts ([[artifact]]): non-DataFrame builds (a Bloom filter);
+  *   - artifacts ([[artifact]]): non-DataFrame builds (a Bloom filter, a
+  *     hub's sibling frame pair);
   *   - base tables ([[baseTable]]): `Tables`' session-cached scans.
   *
   * The session is part of every key (the session object itself, compared
@@ -44,8 +48,9 @@ object ResultMemo {
       .asInstanceOf[T]
 
   /** Return the memoized frame for `name` over the inputs under `dir`,
-    * computing (and running) it once per batch. `name` must cover every
-    * parameter the result depends on besides `dir`.
+    * computing it once per batch. `name` must cover every parameter the
+    * result depends on besides `dir` (a hub built per bit width carries
+    * the width in its name).
     */
   def getOrCompute(s: SparkSession, name: String, dir: String)(
       compute: => DataFrame): DataFrame =

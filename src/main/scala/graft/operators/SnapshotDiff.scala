@@ -43,7 +43,7 @@ object SnapshotDiff {
       dims: DataFrame): DataFrame =
     diff(v1, v2, key, contentCol)
       .join(dims, key)
-      .groupBy(dims.columns.filterNot(_ == key).map(col) :+ col("status"): _*)
+      .groupBy(dims.columns.toIndexedSeq.filterNot(_ == key).map(col) :+ col("status"): _*)
       .agg(count(lit(1)).as("n"))
 
   /** The SHIPPABLE delta from v1 to v2: upserted rows (added/changed)
@@ -73,6 +73,6 @@ object SnapshotDiff {
   def applyDelta(v1: DataFrame, deltaDf: DataFrame, key: String): DataFrame = {
     val untouched = v1.join(deltaDf.select(col(key)).distinct(), Seq(key), "left_anti")
     val upserts = deltaDf.where(col("status") =!= "removed").drop("status")
-    untouched.unionByName(upserts.select(v1.columns.map(col): _*))
+    untouched.unionByName(upserts.select(v1.columns.toIndexedSeq.map(col): _*))
   }
 }

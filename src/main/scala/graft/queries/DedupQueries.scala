@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
+import graft.operators.ResultMemo
 import graft.sources.Tables
 
 /** Deduplication operators — the north-star training-data-pipeline surface
@@ -83,23 +84,21 @@ object DedupQueries {
     * into the shingle lambda would re-run the regex split once per
     * element_at — ~5× tokens per doc (verified via explain).
     */
-  private def shingleSets(s: SparkSession, dir: String): DataFrame = {
-    // registration stays OUTSIDE the artifact closure: an artifact HIT
-    // skips the build, but downstream spellings still need the functions
-    graft.functions.expressions.GraftFunctions.register(s)
-    // STORED artifact (r10): the per-doc distinct shingle-set table is
-    // the base layer of every dedup index here (minhash signatures,
-    // PPJoin prefixes, exact verification) — a deployment materializes
-    // it at ingest, so sessions with an artifact store read it instead
-    // of re-tokenizing the corpus.
-    graft.operators.ArtifactStore.table(s, "shingle_sets",
-      Seq(s"${dir.stripSuffix("/")}/documents.parquet"), s"$WTok,bv1") {
-      import s.implicits._
-      Tables.documents(s, dir)
-        .select($"doc_id", tokens($"text").as("toks"))
-        .select($"doc_id", array_distinct(wordShingles($"toks", ShingleW)).as("sh"))
+  private def shingleSets(s: SparkSession, dir: String): DataFrame =
+    ResultMemo.getOrCompute(s, "shingle_sets", dir) {
+      // STORED artifact (r10): the per-doc distinct shingle-set table is
+      // the base layer of every dedup index here (minhash signatures,
+      // PPJoin prefixes, exact verification) — a deployment materializes
+      // it at ingest, so sessions with an artifact store read it instead
+      // of re-tokenizing the corpus.
+      graft.operators.ArtifactStore.table(s, "shingle_sets",
+        Seq(s"${dir.stripSuffix("/")}/documents.parquet"), s"$WTok,bv1") {
+        import s.implicits._
+        Tables.documents(s, dir)
+          .select($"doc_id", tokens($"text").as("toks"))
+          .select($"doc_id", array_distinct(wordShingles($"toks", ShingleW)).as("sh"))
+      }.cache()
     }
-  }
 
   /** Positional SpanK-gram index (doc_id, pos, gh) — the exact-substring
     * postings table q127 (shared-gram pair counts) and q133 (verbatim run
@@ -111,15 +110,16 @@ object DedupQueries {
     * q133 reads it three times (doc-distinct projection + both position
     * sides of the diagonal join).
     */
-  private def spanGrams(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    graft.operators.ArtifactStore.table(s, "span_grams_pos",
-      Seq(s"${dir.stripSuffix("/")}/documents.parquet"), s"k=$SpanK,bv1") {
-      DocProfiles.profiled(s, dir)
-        .select($"doc_id", posexplode(wordShingles($"toks", SpanK)))
-        .select($"doc_id", $"pos", md5($"col".cast("binary")).as("gh"))
-    }.cache()
-  }
+  private def spanGrams(s: SparkSession, dir: String): DataFrame =
+    ResultMemo.getOrCompute(s, "span_grams_pos", dir) {
+      import s.implicits._
+      graft.operators.ArtifactStore.table(s, "span_grams_pos",
+        Seq(s"${dir.stripSuffix("/")}/documents.parquet"), s"k=$SpanK,bv1") {
+        DocProfiles.profiled(s, dir)
+          .select($"doc_id", posexplode(wordShingles($"toks", SpanK)))
+          .select($"doc_id", $"pos", md5($"col".cast("binary")).as("gh"))
+      }.cache()
+    }
 
   /** MinHash signature rows (doc_id, i, mh): mh = lexicographic min of the
     * i-th keyed md5 over the doc's shingle set — computed as K per-ROW
@@ -192,28 +192,29 @@ object DedupQueries {
     * jac is a ratio of exact integer set sizes, so its double value (and
     * every threshold verdict) is bit-identical across engines. CACHED:
     * the sweep alone reads it six times (3 thresholds × 2 aggregates),
-    * and the sibling queries share the identical plan.
+    * and the sibling queries share the one memoized frame.
     */
-  private def scoredCandidates(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val sets = shingleSets(s, dir).cache()
-    val cand = lshCandidates(s, dir, sets, 2)
-    // shuffle_hash PINNED (r10): sets is the data-proportional side; the
-    // artifact scan's file stats would auto-broadcast it (scale-wrong).
-    // Building the candidate-pair side keeps the fetch candidate-driven.
-    cand
-      .hint("shuffle_hash")
-      .join(sets.as("da"), $"a_id" === $"da.doc_id")
-      .hint("shuffle_hash")
-      .join(sets.as("db"), $"b_id" === $"db.doc_id")
-      .select($"a_id", $"b_id", $"n_match",
-        size(array_intersect($"da.sh", $"db.sh")).as("i"),
-        size($"da.sh").as("ca"), size($"db.sh").as("cb"))
-      // keep the raw set cardinalities alongside jac: q81's containment
-      // law re-derives from (i, ca, cb) without touching the sets again
-      .withColumn("jac", ($"i" * lit(1.0)) / ($"ca" + $"cb" - $"i"))
-      .cache()
-  }
+  private def scoredCandidates(s: SparkSession, dir: String): DataFrame =
+    ResultMemo.getOrCompute(s, "scored_candidates", dir) {
+      import s.implicits._
+      val sets = shingleSets(s, dir)
+      val cand = lshCandidates(s, dir, sets, 2)
+      // shuffle_hash PINNED (r10): sets is the data-proportional side; the
+      // artifact scan's file stats would auto-broadcast it (scale-wrong).
+      // Building the candidate-pair side keeps the fetch candidate-driven.
+      cand
+        .hint("shuffle_hash")
+        .join(sets.as("da"), $"a_id" === $"da.doc_id")
+        .hint("shuffle_hash")
+        .join(sets.as("db"), $"b_id" === $"db.doc_id")
+        .select($"a_id", $"b_id", $"n_match",
+          size(array_intersect($"da.sh", $"db.sh")).as("i"),
+          size($"da.sh").as("ca"), size($"db.sh").as("cb"))
+        // keep the raw set cardinalities alongside jac: q81's containment
+        // law re-derives from (i, ca, cb) without touching the sets again
+        .withColumn("jac", ($"i" * lit(1.0)) / ($"ca" + $"cb" - $"i"))
+        .cache()
+    }
 
   /** The document near-dup component table — a STORED artifact (r12
     * wave 3) memoized per (session, dir). Stored because the verified
@@ -230,7 +231,7 @@ object DedupQueries {
     */
   private def docComponents(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.operators.ResultMemo.getOrCompute(s, "cc:docs", dir) {
+    ResultMemo.getOrCompute(s, "cc:docs", dir) {
       graft.operators.ArtifactStore.table(s, "doc_components",
         Seq(s"${dir.stripSuffix("/")}/documents.parquet"), s"$JacTok,bv1") {
         graft.operators.ConnectedComponents
@@ -266,24 +267,26 @@ object DedupQueries {
     * the incremental arrival-vs-corpus join (q223).
     */
   private def ppjoinIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    import s.implicits._
     // sets ride the shared [[shingleSets]] artifact; the prefix rows are
     // their OWN stored artifact (r10): built once at ingest in a
     // deployment — threshold and shingle width ride `params`.
-    val sets = shingleSets(s, dir).cache()
-    val pre = graft.operators.ArtifactStore.table(s, "ppjoin_prefix",
-      Seq(s"${dir.stripSuffix("/")}/documents.parquet"), s"$PpTok,bv1") {
-      val tok = sets.select($"doc_id", explode($"sh").as("g"))
-      val dfreq = tok.groupBy($"g").agg(count(lit(1)).as("df"))
-      // rarest-first order per doc, then keep only the prefix slice
-      tok.join(dfreq, "g")
-        .groupBy($"doc_id")
-        .agg(sort_array(collect_list(struct($"df", $"g"))).as("os"))
-        .select($"doc_id", transform($"os", x => x("g")).as("og"), size($"os").as("c"))
-        .select($"doc_id", $"c", explode(slice($"og", lit(1),
-          $"c" - ceil($"c" * lit(PpThresh)).cast("int") + lit(1))).as("g"))
+    val sets = shingleSets(s, dir)
+    val pre = ResultMemo.getOrCompute(s, "ppjoin_prefix", dir) {
+      import s.implicits._
+      graft.operators.ArtifactStore.table(s, "ppjoin_prefix",
+        Seq(s"${dir.stripSuffix("/")}/documents.parquet"), s"$PpTok,bv1") {
+        val tok = sets.select($"doc_id", explode($"sh").as("g"))
+        val dfreq = tok.groupBy($"g").agg(count(lit(1)).as("df"))
+        // rarest-first order per doc, then keep only the prefix slice
+        tok.join(dfreq, "g")
+          .groupBy($"doc_id")
+          .agg(sort_array(collect_list(struct($"df", $"g"))).as("os"))
+          .select($"doc_id", transform($"os", x => x("g")).as("og"), size($"os").as("c"))
+          .select($"doc_id", $"c", explode(slice($"og", lit(1),
+            $"c" - ceil($"c" * lit(PpThresh)).cast("int") + lit(1))).as("g"))
+      }.cache()
     }
-    (sets, pre.cache())
+    (sets, pre)
   }
 
   /** Candidates (a_id, b_id) verified to exact Jaccard >= 0.8 against the
@@ -312,27 +315,28 @@ object DedupQueries {
     * instead of a restart re-paying the prefix self-join + verify
     * (1.6 s in the quiet r13 warm_boot profile).
     */
-  private def exactPairs(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    // params fold in the index generation's width/threshold token
-    // (PpTok/JacTok — the SAME constants the computation uses, so a
-    // width change that bumps the prefix artifact invalidates the pairs
-    // derived from it too). Only the published columns (a_id, b_id, jac)
-    // are stored — the verify-internal i/ca/cb have no consumer here.
-    graft.operators.ArtifactStore.table(s, "ppjoin_pairs",
-      Seq(s"${dir.stripSuffix("/")}/documents.parquet"),
-      s"$PpTok,$JacTok,bv1") {
-      val (sets, pre) = ppjoinIndex(s, dir)
-      // shuffle_hash PINNED (r10): prefix self-join buckets on g — the
-      // stored index's small file stats must not flip it to a broadcast
-      val cand = pre.as("a").hint("shuffle_hash").join(pre.as("b"),
-          $"a.g" === $"b.g" && $"a.doc_id" < $"b.doc_id" &&
-            $"b.c" * lit(1.0) >= $"a.c" * lit(PpThresh) &&
-            $"a.c" * lit(1.0) >= $"b.c" * lit(PpThresh))
-        .select($"a.doc_id".as("a_id"), $"b.doc_id".as("b_id")).distinct()
-      ppjoinVerify(s, sets, cand).select($"a_id", $"b_id", $"jac")
-    }.cache()
-  }
+  private def exactPairs(s: SparkSession, dir: String): DataFrame =
+    ResultMemo.getOrCompute(s, "ppjoin_pairs", dir) {
+      import s.implicits._
+      // params fold in the index generation's width/threshold token
+      // (PpTok/JacTok — the SAME constants the computation uses, so a
+      // width change that bumps the prefix artifact invalidates the pairs
+      // derived from it too). Only the published columns (a_id, b_id, jac)
+      // are stored — the verify-internal i/ca/cb have no consumer here.
+      graft.operators.ArtifactStore.table(s, "ppjoin_pairs",
+        Seq(s"${dir.stripSuffix("/")}/documents.parquet"),
+        s"$PpTok,$JacTok,bv1") {
+        val (sets, pre) = ppjoinIndex(s, dir)
+        // shuffle_hash PINNED (r10): prefix self-join buckets on g — the
+        // stored index's small file stats must not flip it to a broadcast
+        val cand = pre.as("a").hint("shuffle_hash").join(pre.as("b"),
+            $"a.g" === $"b.g" && $"a.doc_id" < $"b.doc_id" &&
+              $"b.c" * lit(1.0) >= $"a.c" * lit(PpThresh) &&
+              $"a.c" * lit(1.0) >= $"b.c" * lit(PpThresh))
+          .select($"a.doc_id".as("a_id"), $"b.doc_id".as("b_id")).distinct()
+        ppjoinVerify(s, sets, cand).select($"a_id", $"b_id", $"jac")
+      }.cache()
+    }
 
   /** (doc_id, simhash): `bits`-bit SimHash per document (bits <= 32 — one
     * hex digit of the digest per bit). ONE md5 per token (hashed inside
@@ -345,11 +349,13 @@ object DedupQueries {
     * pairs are genuine near-dups).
     */
   private def simhashes(s: SparkSession, dir: String, bits: Int = 16): DataFrame =
-    // STORED artifact (r10, per bit-width): the fingerprint table a
-    // deployment computes at ingest and probes forever after.
-    graft.operators.ArtifactStore.table(s, s"simhash_$bits",
-      Seq(s"${dir.stripSuffix("/")}/documents.parquet"), "bv1") {
-      buildSimhashes(s, dir, bits)
+    ResultMemo.getOrCompute(s, s"simhash_$bits", dir) {
+      // STORED artifact (r10, per bit-width): the fingerprint table a
+      // deployment computes at ingest and probes forever after.
+      graft.operators.ArtifactStore.table(s, s"simhash_$bits",
+        Seq(s"${dir.stripSuffix("/")}/documents.parquet"), "bv1") {
+        buildSimhashes(s, dir, bits)
+      }.cache()
     }
 
   private def buildSimhashes(s: SparkSession, dir: String, bits: Int): DataFrame = {
@@ -416,7 +422,7 @@ object DedupQueries {
     // every probe — q69 stores its wider variant the same way), so it is
     // session-cached here too.
     "q32_simhash" -> ((s, dir) =>
-      simhashes(s, dir).cache()
+      simhashes(s, dir)
         .orderBy(col("doc_id"))),
 
     // SimHash near-dup pairing — the q31→q33 completion for the SimHash
@@ -437,7 +443,7 @@ object DedupQueries {
       import s.implicits._
       val width = simhashWidthFor(Tables.documents(s, dir).count())
       val f =
-        simhashes(s, dir, bits = SimhashBands * width).cache()
+        simhashes(s, dir, bits = SimhashBands * width)
       val mask = (1L << width) - 1
       val bands = array((0 until SimhashBands).map(j =>
         struct(lit(j).as("band"),
@@ -921,7 +927,7 @@ object DedupQueries {
     "q167_lsh_eval" -> ((s, dir) => {
       import s.implicits._
       val sc = scoredCandidates(s, dir)
-      val sets = shingleSets(s, dir).cache()
+      val sets = shingleSets(s, dir)
       val sample = sets.where($"doc_id" < 10)
       val inter = size(array_intersect($"sa.sh", $"sb.sh"))
       val truth =

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.ResultMemo
 import graft.sources.Tables
 
 /** Iterative graph analytics over the trade graph implied by the star
@@ -54,18 +55,19 @@ object GraphQueries {
       s"$d/customer.parquet", s"$d/supplier.parquet", s"$d/nation.parquet")
   }
 
-  private def tradeEdges(s: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(s, dir)
-    val o = Tables.orders(s, dir)
-    val c = Tables.customer(s, dir)
-    val sup = Tables.supplier(s, dir)
-    li.join(o, li("l_orderkey") === o("o_orderkey"))
-      .join(broadcast(c), o("o_custkey") === c("c_custkey"))
-      .join(broadcast(sup), li("l_suppkey") === sup("s_suppkey"))
-      .groupBy(sup("s_nationkey").as("src"), c("c_nationkey").as("dst"))
-      .agg(count(lit(1)).as("w"))
-      .cache()
-  }
+  private def tradeEdges(s: SparkSession, dir: String): DataFrame =
+    ResultMemo.getOrCompute(s, "trade_edges", dir) {
+      val li = Tables.lineitem(s, dir)
+      val o = Tables.orders(s, dir)
+      val c = Tables.customer(s, dir)
+      val sup = Tables.supplier(s, dir)
+      li.join(o, li("l_orderkey") === o("o_orderkey"))
+        .join(broadcast(c), o("o_custkey") === c("c_custkey"))
+        .join(broadcast(sup), li("l_suppkey") === sup("s_suppkey"))
+        .groupBy(sup("s_nationkey").as("src"), c("c_nationkey").as("dst"))
+        .agg(count(lit(1)).as("w"))
+        .cache()
+    }
 
   private val tradeEdgesSql =
     """SELECT s_nationkey AS src, c_nationkey AS dst, count(*) AS w

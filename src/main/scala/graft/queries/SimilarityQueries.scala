@@ -5,8 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
-import graft.functions.expressions.GraftFunctions
-import graft.operators.AnnServing
+import graft.operators.{AnnServing, ResultMemo}
 import graft.sources.Tables
 
 /** Similarity search over the `embeddings` table (north-star surface):
@@ -89,9 +88,8 @@ object SimilarityQueries {
     * serves both q44 and q79.
     *
     * [[ivfCells]] is the quantizer build shared by q44/q79/q85: cached
-    * corpus → k-means → (cells, centroids). Both returned frames are
-    * session caches whose plans are identical across the sibling
-    * queries, so the Lloyd chain executes once per session.
+    * corpus → k-means → (cells, centroids). The pair of cached frames is
+    * memoized per batch, so the Lloyd chain executes once per batch.
     */
   /** The pristine generation-0 scratch IVF index shared by the q170/q252
     * maintenance gates: trained on the NOT-is_new 70% cohort (the gates'
@@ -115,41 +113,28 @@ object SimilarityQueries {
     }
   }
 
-  private def ivfCells(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    // registered HERE, not only in the build closure: on an artifact HIT
-    // the Lloyd chain never runs, but every consumer of the returned
-    // frames still spells graft_dot (r10 explain-path regression)
-    GraftFunctions.register(s)
-    // STORED artifact (r10): the trained tower (cells + centroids) is the
-    // serving index a deployment keeps on disk; sessions with an artifact
-    // store load it instead of re-running the Lloyd chain. Both tables
-    // publish under ONE fingerprint so cells and centroids can never come
-    // from different builds; the iteration count rides `params` so a
-    // retrained configuration invalidates.
-    val Seq(cells, cent) = graft.operators.ArtifactStore.tables(
-      s, Seq("ivf_cells", "ivf_centroids"),
-      Seq(s"${dir.stripSuffix("/")}/embeddings.parquet"),
-      s"iters=$KMeansIters,bv1") { buildIvfCells(s, dir) }
-    (cells.cache(),
-      cent.cache())
-  }
+  private def ivfCells(s: SparkSession, dir: String): (DataFrame, DataFrame) =
+    ResultMemo.artifact(s, "ivf_cells", dir) {
+      // STORED artifact (r10): the trained tower (cells + centroids) is the
+      // serving index a deployment keeps on disk; sessions with an artifact
+      // store load it instead of re-running the Lloyd chain. Both tables
+      // publish under ONE fingerprint so cells and centroids can never come
+      // from different builds; the iteration count rides `params` so a
+      // retrained configuration invalidates.
+      val Seq(cells, cent) = graft.operators.ArtifactStore.tables(
+        s, Seq("ivf_cells", "ivf_centroids"),
+        Seq(s"${dir.stripSuffix("/")}/embeddings.parquet"),
+        s"iters=$KMeansIters,bv1") { buildIvfCells(s, dir) }
+      (cells.cache(), cent.cache())
+    }
 
   /** The Lloyd-chain build behind [[ivfCells]]: Seq(cells, centroids). */
   private def buildIvfCells(s: SparkSession, dir: String): Seq[DataFrame] = {
     import s.implicits._
-    GraftFunctions.register(s)
-    // cached: the corpus is re-read by every Lloyd assign step and the
+    // the cached corpus hub: re-read by every Lloyd assign step and the
     // final cell build — one scan + one in-memory projection instead of
     // 2·iters + 2 parquet scans (released at batch boundaries)
-    val e = normalized(s, dir).cache()
-    // component-wise means of `v` per `cl`, rounded — one k-means update
-    def centroidsOf(assigned: DataFrame): DataFrame =
-      assigned.select($"cl", posexplode($"v"))
-        .groupBy($"cl", $"pos").agg(round(avg($"col"), 6).as("c"))
-        .groupBy($"cl").agg(
-          transform(sort_array(collect_list(struct($"pos", $"c"))), x => x.getField("c"))
-            .as("cv"))
-        .select($"cl", $"cv", sqrt(dot($"cv", $"cv")).as("cnrm"))
+    val e = normalized(s, dir)
     // nearest-centroid (max cosine) assignment of the whole corpus
     def assign(cent: DataFrame): DataFrame = {
       val wAsn = Window.partitionBy($"vec_id").orderBy($"ccos".desc, $"cl".asc)
@@ -162,17 +147,37 @@ object SimilarityQueries {
     }
     // each centroid stage and the final cell table is cached (k×dim rows /
     // corpus-sized respectively): the final join references cells TWICE
-    // (probe build + candidate side) and q44/q79 share every stage plan
-    // verbatim, so the cache manager dedupes the Lloyd chain to one
-    // execution per session instead of two per query
-    def tracked(df: DataFrame): DataFrame =
-      df.cache()
-    var cent = tracked(centroidsOf(e.select($"label".as("cl"), $"v")))
+    // (probe build + candidate side), and every assign step re-reads the
+    // previous stage's centroids
+    var cent = labelCentroids(s, dir)
     for (_ <- 1 to KMeansIters)
-      cent = tracked(centroidsOf(assign(cent).select($"cl", $"v")))
-    val cells = tracked(assign(cent).withColumnRenamed("cl", "cell"))
+      cent = centroidsOf(assign(cent).select($"cl", $"v")).cache()
+    val cells = assign(cent).withColumnRenamed("cl", "cell").cache()
     Seq(cells, cent)
   }
+
+  /** Component-wise means of `v` per `cl`, rounded — one k-means update:
+    * (cl, v) rows → (cl, cv, cnrm).
+    */
+  private def centroidsOf(assigned: DataFrame): DataFrame = {
+    val s = assigned.sparkSession
+    import s.implicits._
+    assigned.select($"cl", posexplode($"v"))
+      .groupBy($"cl", $"pos").agg(round(avg($"col"), 6).as("c"))
+      .groupBy($"cl").agg(
+        transform(sort_array(collect_list(struct($"pos", $"c"))), x => x.getField("c"))
+          .as("cv"))
+      .select($"cl", $"cv", sqrt(dot($"cv", $"cv")).as("cnrm"))
+  }
+
+  /** The per-label centroids of the normalized corpus, cached: the
+    * k-means init of [[buildIvfCells]] and q97's silhouette centroids.
+    */
+  private def labelCentroids(s: SparkSession, dir: String): DataFrame =
+    ResultMemo.getOrCompute(s, "label_centroids", dir) {
+      import s.implicits._
+      centroidsOf(normalized(s, dir).select($"label".as("cl"), $"v")).cache()
+    }
 
   private def ivf(s: SparkSession, dir: String, nprobe: Int): DataFrame = {
     import s.implicits._
@@ -208,21 +213,17 @@ object SimilarityQueries {
     * cast and the L2 norm are per-VECTOR work and must not be recomputed
     * per candidate pair. CACHED here (r10): before the stored IVF tower,
     * every consumer happened to ride the cache `buildIvfCells` created —
-    * an artifact HIT skips that build, so the shared projection must own
-    * its cache (the cache manager dedupes the identical plan across all
-    * consumers to one entry).
+    * an artifact HIT skips that build, so the shared projection owns its
+    * cache, memoized once per batch for every consumer.
     */
-  private def normalized(s: SparkSession, dir: String) = {
-    import s.implicits._
-    GraftFunctions.register(s)
-    Tables.embeddings(s, dir).select($"vec_id", $"label",
-      $"embedding".cast("array<double>").as("v"),
-      sqrt(dot($"embedding", $"embedding")).as("nrm"))
-    .cache()
-  }
-
-  private def cached(df: DataFrame): DataFrame =
-    df.cache()
+  private def normalized(s: SparkSession, dir: String): DataFrame =
+    ResultMemo.getOrCompute(s, "normalized", dir) {
+      import s.implicits._
+      Tables.embeddings(s, dir).select($"vec_id", $"label",
+        $"embedding".cast("array<double>").as("v"),
+        sqrt(dot($"embedding", $"embedding")).as("nrm"))
+        .cache()
+    }
 
   /** The serving family's shared eval baseline: brute exact-cosine top-3
     * over the sampled query set, built ONCE per (session, dir) and cached
@@ -234,7 +235,7 @@ object SimilarityQueries {
       val e = normalized(s, dir).select($"vec_id", $"v", $"nrm")
       val q = e.where($"vec_id" < NQueries)
         .select($"vec_id".as("q_id"), $"v".as("qv"), $"nrm".as("qnrm"))
-      val t = cached(graft.operators.AnnServing.bruteTruth(e, q, 3))
+      val t = graft.operators.AnnServing.bruteTruth(e, q, 3).cache()
       t.count()
       t
     }
@@ -243,19 +244,19 @@ object SimilarityQueries {
     * blocked pairs at or above the dup threshold, with raw cosine.
     * Cached — the pair report and the component closure read it verbatim.
     */
-  private def cosineDupPairs(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    GraftFunctions.register(s)
-    val planes = blockPlanesFor(Tables.embeddings(s, dir).count())
-    val e = normalized(s, dir)
-      .withColumn("bucket", lshBucket($"v", planes, Dim))
-    cached(e.as("a").join(e.as("b"),
-        $"a.label" === $"b.label" && $"a.bucket" === $"b.bucket" &&
-          $"a.vec_id" < $"b.vec_id")
-      .select($"a.vec_id".as("a_id"), $"b.vec_id".as("b_id"),
-        (dot($"a.v", $"b.v") / ($"a.nrm" * $"b.nrm")).as("cos"))
-      .where($"cos" >= 0.35))
-  }
+  private def cosineDupPairs(s: SparkSession, dir: String): DataFrame =
+    ResultMemo.getOrCompute(s, "cosine_dup_pairs", dir) {
+      import s.implicits._
+      val planes = blockPlanesFor(Tables.embeddings(s, dir).count())
+      val e = normalized(s, dir)
+        .withColumn("bucket", lshBucket($"v", planes, Dim))
+      e.as("a").join(e.as("b"),
+          $"a.label" === $"b.label" && $"a.bucket" === $"b.bucket" &&
+            $"a.vec_id" < $"b.vec_id")
+        .select($"a.vec_id".as("a_id"), $"b.vec_id".as("b_id"),
+          (dot($"a.v", $"b.v") / ($"a.nrm" * $"b.nrm")).as("cos"))
+        .where($"cos" >= 0.35).cache()
+    }
 
   /** Squared L2 spelled as dot(a,a) − 2·dot(a,b) + dot(b,b): three
     * index-order dots, the exact expression the oracle spells.
@@ -269,10 +270,10 @@ object SimilarityQueries {
   private def subVectors(df: DataFrame, vcol: String): DataFrame = {
     val s = df.sparkSession
     import s.implicits._
-    cached(df.select($"vec_id", explode(array((0 until PqM).map(m =>
+    df.select($"vec_id", explode(array((0 until PqM).map(m =>
         struct(lit(m).as("m"), slice(col(vcol), m * PqSubDim + 1, PqSubDim).as("sv"))): _*))
         .as("x"))
-      .select($"vec_id", $"x.m".as("m"), $"x.sv".as("sv")))
+      .select($"vec_id", $"x.m".as("m"), $"x.sv".as("sv")).cache()
   }
 
   /** The packed-codes projection (cl0..cl{M-1} from narrow (m, cl) rows)
@@ -326,11 +327,11 @@ object SimilarityQueries {
         .withColumn("rn", row_number().over(w)).where($"rn" === 1)
         .select($"vec_id", $"m", $"sv", $"cl")
     }
-    var cent = cached(centroidsOf(
-      sub.select($"m", ($"vec_id" % PqK).cast("int").as("cl"), $"sv")))
+    var cent = centroidsOf(
+      sub.select($"m", ($"vec_id" % PqK).cast("int").as("cl"), $"sv")).cache()
     for (_ <- 1 to PqIters)
-      cent = cached(centroidsOf(assign(cent).select($"m", $"cl", $"sv")))
-    val codes = cached(assign(cent).select($"vec_id", $"m", $"cl"))
+      cent = centroidsOf(assign(cent).select($"m", $"cl", $"sv")).cache()
+    val codes = assign(cent).select($"vec_id", $"m", $"cl").cache()
     (cent, codes)
   }
 
@@ -349,7 +350,6 @@ object SimilarityQueries {
     // the oracle reproduces the ranking bit-identically.
     "q68_quantized_knn" -> ((s, dir) => {
       import s.implicits._
-      GraftFunctions.register(s)
       val e0 = Tables.embeddings(s, dir)
         .select($"vec_id", $"embedding".cast("array<double>").as("v"))
         .select($"vec_id", $"v",
@@ -385,7 +385,6 @@ object SimilarityQueries {
     // raw cosine with the vec_id tie-break (q41's pinned law).
     "q173_matryoshka_audit" -> ((s, dir) => {
       import s.implicits._
-      GraftFunctions.register(s)
       val e = normalized(s, dir)
         .select($"vec_id", $"v", $"nrm", slice($"v", 1, 16).as("v16"))
         .withColumn("nrm16", sqrt(dot($"v16", $"v16")))
@@ -419,7 +418,6 @@ object SimilarityQueries {
 
     "q41_knn_brute" -> ((s, dir) => {
       import s.implicits._
-      GraftFunctions.register(s)
       val e = normalized(s, dir)
       val q = e.where($"vec_id" < NQueries)
         .select($"vec_id".as("q_id"), $"v".as("qv"), $"nrm".as("qnrm"))
@@ -450,7 +448,6 @@ object SimilarityQueries {
     // fold reuses the window's hash partitioning on src_id.
     "q141_bitext_margin" -> ((s, dir) => {
       import s.implicits._
-      GraftFunctions.register(s)
       val maxExact = s.conf.get("graft.bitext.maxExactProbeRows", "200000").toLong
       val e = normalized(s, dir)
       val probeSmall = e.where($"label" === 0)
@@ -506,7 +503,6 @@ object SimilarityQueries {
     "q149_centroid_drift" -> ((s, dir) => graft.operators.ResultMemo
         .report(s, "cdrift", dir) {
       import s.implicits._
-      GraftFunctions.register(s)
       val half = when(
         conv(substring(md5(concat(lit("half:"), $"vec_id".cast("string")).cast("binary")), 1, 4), 16, 10)
           .cast("double") / 65536.0 < 0.5, "a").otherwise("b")
@@ -642,7 +638,6 @@ object SimilarityQueries {
     "q152_ivf_staleness" -> ((s, dir) => graft.operators.ResultMemo
         .report(s, "rep152", dir) {
       import s.implicits._
-      GraftFunctions.register(s)
       val isNew = conv(substring(md5(concat(lit("new:"), $"vec_id".cast("string")).cast("binary")), 1, 4), 16, 10)
         .cast("double") / 65536.0 < 0.3
       val e = normalized(s, dir).withColumn("is_new", isNew)
@@ -689,7 +684,6 @@ object SimilarityQueries {
     // label for the rollup.
     "q153_random_projection" -> ((s, dir) => {
       import s.implicits._
-      GraftFunctions.register(s)
       val e = normalized(s, dir)
       val est = (0 until 8).map { p =>
         val d = dot($"v", typedLit(hyperplaneSigns(p, Dim)))
@@ -828,14 +822,14 @@ object SimilarityQueries {
         .groupBy($"q_id").agg(max($"cos").as("mc"))
         .where($"mc" >= SemDedupTau.toDouble)
         .select($"q_id".as("doc_id"))
-      val out = cached(docsTest
+      val out = docsTest
         .join(gramHits.withColumn("g", lit(true)), Seq("doc_id"), "left")
         .join(semHits.withColumn("sm", lit(true)), Seq("doc_id"), "left")
         .select($"doc_id".as("test_id"),
           coalesce($"g", lit(false)).as("gram_leaked"),
           coalesce($"sm", lit(false)).as("sem_leaked"))
         .withColumn("leaked", $"gram_leaked" || $"sem_leaked")
-        .orderBy($"test_id"))
+        .orderBy($"test_id").cache()
       out.count()
       out
     }),
@@ -929,7 +923,6 @@ object SimilarityQueries {
     // exercised, not just claimed. One narrow scan at any corpus size.
     "q199_embedding_health" -> ((s, dir) => {
       import s.implicits._
-      GraftFunctions.register(s)
       val real = Tables.embeddings(s, dir)
         .select($"vec_id", $"label", $"embedding".cast("array<double>").as("v"))
       val bad = Seq(
@@ -986,7 +979,6 @@ object SimilarityQueries {
     // metric rides the same codegen dot product as the ANN family.
     "q161_alignment_uniformity" -> ((s, dir) => {
       import s.implicits._
-      GraftFunctions.register(s)
       val e = normalized(s, dir)
       val wl = Window.partitionBy($"label").orderBy($"vec_id".asc)
       val ap = e.select($"label", $"vec_id", $"v", $"nrm")
@@ -1031,7 +1023,6 @@ object SimilarityQueries {
     // distribution is what you'd monitor before trusting the ANN path.
     "q42_lsh_buckets" -> ((s, dir) => {
       import s.implicits._
-      GraftFunctions.register(s)
       Tables.embeddings(s, dir)
         .select(lshBucket($"embedding", Planes, Dim).as("bucket"))
         .groupBy($"bucket")
@@ -1045,7 +1036,6 @@ object SimilarityQueries {
     // bucket-equality join instead of cross product.
     "q43_ann_lsh" -> ((s, dir) => {
       import s.implicits._
-      GraftFunctions.register(s)
       val e = normalized(s, dir)
         .select($"vec_id", $"v", $"nrm", lshBucket($"v", Planes, Dim).as("bucket"))
       val q = e.where($"vec_id" < NQueries)
@@ -1080,7 +1070,6 @@ object SimilarityQueries {
     "q109_ann_recall" -> ((s, dir) => graft.operators.ResultMemo
         .getOrCompute(s, "annrecall:lsh", dir) {
       import s.implicits._
-      GraftFunctions.register(s)
       val e = normalized(s, dir)
         .select($"vec_id", $"v", $"nrm", lshBucket($"v", Planes, Dim).as("bucket"))
       val q = e.where($"vec_id" < NQueries)
@@ -1097,12 +1086,12 @@ object SimilarityQueries {
         .select($"q_id", $"vec_id", (dot($"qv", $"v") / ($"qnrm" * $"nrm")).as("cos")))
       val hits = truth.join(ann, Seq("q_id", "nn_id"), "left_semi")
         .groupBy($"q_id").agg(count(lit(1)).as("n_hits"))
-      val out = cached(truth.groupBy($"q_id").agg(count(lit(1)).as("k"))
+      val out = truth.groupBy($"q_id").agg(count(lit(1)).as("k"))
         .join(hits, Seq("q_id"), "left")
         .select($"q_id", $"k", coalesce($"n_hits", lit(0L)).as("n_hits"),
           round(coalesce($"n_hits", lit(0L)) * lit(1.0) / $"k", 6).as("recall"))
         .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"q_id"))
+        .orderBy($"q_id").cache()
       out.count()
       out
     }),
@@ -1121,7 +1110,6 @@ object SimilarityQueries {
         Seq(s"${dir.stripSuffix("/")}/embeddings.parquet"),
         s"k3,q$NQueries,np$NProbe,bv1") {
       import s.implicits._
-      GraftFunctions.register(s)
       val e = normalized(s, dir)
       val q = e.where($"vec_id" < NQueries)
         .select($"vec_id".as("q_id"), $"v".as("qv"), $"nrm".as("qnrm"))
@@ -1138,7 +1126,7 @@ object SimilarityQueries {
         .select($"q_id", $"k", coalesce($"n_hits", lit(0L)).as("n_hits"),
           round(coalesce($"n_hits", lit(0L)) * lit(1.0) / $"k", 6).as("recall"))
       }
-      val out = cached(stored.orderBy(col("q_id")))
+      val out = stored.orderBy(col("q_id")).cache()
       out.count()
       out
     }),
@@ -1157,7 +1145,6 @@ object SimilarityQueries {
     "q212_filtered_ann" -> ((s, dir) => graft.operators.ResultMemo
         .getOrCompute(s, "annrecall:filtered", dir) {
       import s.implicits._
-      GraftFunctions.register(s)
       val (cells, cent) = ivfCells(s, dir)
       val lab = Tables.embeddings(s, dir).select($"vec_id", $"label")
       val fcells = cells.join(lab, Seq("vec_id")).where($"label" >= 5)
@@ -1186,12 +1173,12 @@ object SimilarityQueries {
           (dot($"qv", $"v") / ($"qnrm" * $"nrm")).as("cos")))
       val hits = truth.join(ann, Seq("q_id", "nn_id"), "left_semi")
         .groupBy($"q_id").agg(count(lit(1)).as("n_hits"))
-      val out = cached(truth.groupBy($"q_id").agg(count(lit(1)).as("k"))
+      val out = truth.groupBy($"q_id").agg(count(lit(1)).as("k"))
         .join(hits, Seq("q_id"), "left")
         .select($"q_id", $"k", coalesce($"n_hits", lit(0L)).as("n_hits"),
           round(coalesce($"n_hits", lit(0L)) * lit(1.0) / $"k", 6).as("recall"))
         .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"q_id"))
+        .orderBy($"q_id").cache()
       out.count()
       out
     }),
@@ -1274,7 +1261,6 @@ object SimilarityQueries {
     // one corpus pass scores, one bounded per-cell top-k.
     "q135_embedding_outliers" -> ((s, dir) => {
       import s.implicits._
-      GraftFunctions.register(s)
       val (cells, cent) = ivfCells(s, dir)
       val w = Window.partitionBy($"cell").orderBy($"cos".asc, $"vec_id".asc)
       cells.join(broadcast(cent), $"cell" === $"cl")
@@ -1399,7 +1385,7 @@ object SimilarityQueries {
       // build, and repeat readers of that lazy plan would re-run the
       // pair join + CC closure per action.
       if (served) led
-      else { val c = cached(led); c.count(); c }
+      else { val c = led.cache(); c.count(); c }
     }),
 
     // Prototypicality ranking — the SSL-prototypes / D4 pruning signal
@@ -1459,7 +1445,6 @@ object SimilarityQueries {
           s"${dir.stripSuffix("/")}/embeddings.parquet"),
         s"k$RrfK,pool$RrfPool,top$RrfTopK,bv1") {
       import s.implicits._
-      GraftFunctions.register(s)
       val e = normalized(s, dir)
       val qd = e.where($"vec_id" < NQueries)
         .select($"vec_id".as("q_id"), $"v".as("qv"), $"nrm".as("qnrm"))
@@ -1506,14 +1491,13 @@ object SimilarityQueries {
       // memoized per batch (the q36/q84/q99/q122 report treatment): repeat
       // readers get the cached table, not a re-fusion (store-off) or a
       // repeated store read (store-on)
-      val out = cached(stored.orderBy(col("q_id"), col("rnk")))
+      val out = stored.orderBy(col("q_id"), col("rnk")).cache()
       out.count()
       out
     }),
 
     "q34_embedding_nn" -> ((s, dir) => {
       import s.implicits._
-      GraftFunctions.register(s)
       val planes = blockPlanesFor(Tables.embeddings(s, dir).count())
       val e = normalized(s, dir)
         .withColumn("bucket", lshBucket($"v", planes, Dim))
@@ -1552,7 +1536,6 @@ object SimilarityQueries {
     // unrolled Lloyd chain out of every search's Catalyst plan.
     "q95_pq_knn" -> ((s, dir) => {
       import s.implicits._
-      GraftFunctions.register(s)
       val (codesPath, booksPath, qsubPath) = pqIndex(s, dir)
       val codes = s.read.parquet(codesPath) // packed: (vec_id, cl0..cl7)
       val cent = s.read.parquet(booksPath)
@@ -1617,7 +1600,6 @@ object SimilarityQueries {
         Seq(s"${dir.stripSuffix("/")}/embeddings.parquet"),
         s"k3,q$NQueries,bv1") {
       import s.implicits._
-      GraftFunctions.register(s)
       val sl = pqAdcShortlist(s, dir)
       val e = normalized(s, dir)
       val q = e.where($"vec_id" < NQueries)
@@ -1630,7 +1612,7 @@ object SimilarityQueries {
           round($"n_adc" * lit(1.0) / $"k", 6).as("recall_adc"),
           round($"n_rr" * lit(1.0) / $"k", 6).as("recall_rerank"))
       }
-      val out = cached(stored.orderBy(col("q_id")))
+      val out = stored.orderBy(col("q_id")).cache()
       out.count()
       out
     }),
@@ -1645,20 +1627,12 @@ object SimilarityQueries {
     // broadcast join of k×dim centroids; the corpus never self-joins.
     "q97_centroid_silhouette" -> ((s, dir) => {
       import s.implicits._
-      GraftFunctions.register(s)
       val e = normalized(s, dir)
-      // label centroids CACHED at their own definition (r10): this k×dim
-      // table used to ride the Lloyd chain's identical first-stage cache,
-      // which a stored-tower artifact HIT no longer builds — without its
-      // own cache the 6.4M-row posexplode agg re-runs per pass (q152
-      // already owns its copy for the same reason)
-      val cent = cached(e.select($"label".as("cl"), $"v")
-        .select($"cl", posexplode($"v"))
-        .groupBy($"cl", $"pos").agg(round(avg($"col"), 6).as("c"))
-        .groupBy($"cl")
-        .agg(transform(sort_array(collect_list(struct($"pos", $"c"))), x => x.getField("c"))
-          .as("cv"))
-        .select($"cl", $"cv", sqrt(dot($"cv", $"cv")).as("cnrm")))
+      // the label centroids are the Lloyd chain's first stage, shared by
+      // name (r10: a stored-tower artifact HIT skips that chain, so the
+      // hub owns its cache — without it the 6.4M-row posexplode agg
+      // re-runs per pass)
+      val cent = labelCentroids(s, dir)
       val intra = e.join(broadcast(cent), $"label" === $"cl")
         .select($"label", (lit(1.0) - dot($"v", $"cv") / ($"nrm" * $"cnrm")).as("dist"))
         .groupBy($"label")
@@ -1701,9 +1675,8 @@ object SimilarityQueries {
         Seq(s"${dir.stripSuffix("/")}/embeddings.parquet"),
         s"k3,q$NQueries,d64-8,bv1") {
       import s.implicits._
-      GraftFunctions.register(s)
       val levels = Seq(64, 32, 16, 8)
-      val e = cached(normalized(s, dir).select($"vec_id", $"v", $"nrm"))
+      val e = normalized(s, dir).select($"vec_id", $"v", $"nrm").cache()
       val q = e.where($"vec_id" < NQueries)
         .select($"vec_id".as("q_id"), $"v".as("qv"), $"nrm".as("qnrm"))
       val truth = truth3(s, dir)
@@ -1746,12 +1719,11 @@ object SimilarityQueries {
     "q230_binary_quantization" -> ((s, dir) => graft.operators.ResultMemo
         .report(s, "annrecall:bq", dir) {
       import s.implicits._
-      GraftFunctions.register(s)
       def half(off: Int) = expr(
         s"aggregate(sequence(0, 31), 0L, (acc, i) -> " +
         s"acc + IF(element_at(v, i + $off + 1) > 0D, shiftleft(1L, i), 0L))")
-      val e = cached(normalized(s, dir)
-        .select($"vec_id", $"v", $"nrm", half(0).as("lo"), half(32).as("hi")))
+      val e = normalized(s, dir)
+        .select($"vec_id", $"v", $"nrm", half(0).as("lo"), half(32).as("hi")).cache()
       val q = e.where($"vec_id" < NQueries)
         .select($"vec_id".as("q_id"), $"v".as("qv"), $"nrm".as("qnrm"),
           $"lo".as("qlo"), $"hi".as("qhi"))
@@ -1794,7 +1766,6 @@ object SimilarityQueries {
     "q233_ivf_tombstones" -> ((s, dir) => graft.operators.ResultMemo
         .report(s, "annrecall:tomb", dir) {
       import s.implicits._
-      GraftFunctions.register(s)
       val (cells, cent) = ivfCells(s, dir)
       val delPct = conv(substring(md5(concat(lit("del:"),
         $"vec_id".cast("string")).cast("binary")), 1, 4), 16, 10)
@@ -1946,8 +1917,8 @@ object SimilarityQueries {
       // repeated harness runs don't accrete index copies in /tmp)
       val base = graft.operators.Scratch.sessionDir("graft-ivfpq-")
       val (cells, cent) = ivfCells(s, dir)
-      val resid = cached(cells.join(broadcast(cent), $"cell" === $"cl")
-        .select($"vec_id", $"cell", zip_with($"v", $"cv", (a, b) => a - b).as("rv")))
+      val resid = cells.join(broadcast(cent), $"cell" === $"cl")
+        .select($"vec_id", $"cell", zip_with($"v", $"cv", (a, b) => a - b).as("rv")).cache()
       val rsub = subVectors(resid.select($"vec_id", $"rv"), "rv")
       val (books, codes0) = pqCodebooks(rsub)
       val paths = (s"$base/codes", s"$base/books", s"$base/qresid")
@@ -1971,7 +1942,6 @@ object SimilarityQueries {
     */
   private def pqAdcShortlist(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     val (codesPath, booksPath, qresidPath) = ivfPqIndex(s, dir)
     val codes = s.read.parquet(codesPath)
     val books = s.read.parquet(booksPath)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.EngineSession.withConf
-import graft.operators.{BloomPrefilter, ResultMemo}
+import graft.operators.ResultMemo
 import graft.sources.Tables
 import graft.streaming.{StreamCorrelator, StreamingAnomaly, StreamingCuration, StreamingDecontamination, StreamingDedup, StreamingDrift, StreamingHeartbeat, StreamingNearDup, StreamingQuantile, StreamingTopK}
 
@@ -1070,7 +1070,7 @@ object StreamingGateQueries {
               .as("payload"))
         staged
           .withColumn("ok",
-            reg.validationColumn(s, $"type", $"version", $"payload"))
+            reg.validationColumn($"type", $"version", $"payload"))
           .groupBy($"cls")
           .agg(count(lit(1)).as("n_events"),
             sum(when($"ok", 1L).otherwise(0L)).as("n_accepted"))
@@ -1098,7 +1098,7 @@ object StreamingGateQueries {
     "q251_filestore_import_gate" -> ((s, dir) =>
       ResultMemo.getOrCompute(s, "fsimp", dir) {
         import s.implicits._
-        withGateScratch("graft-q251", s) { base =>
+        withGateScratch("graft-q251", s) { _ =>
           // modulus 211 (r14, was 53): ~500 files per sf0.1 topic still prove
           // the layout/order/round-trip laws file-for-file, and per-file
           // reader overhead (~0.7 ms each) was the gate's dominant cost
@@ -1411,7 +1411,6 @@ object StreamingGateQueries {
             .orderBy($"event_id")
             .as[(Long, String, java.sql.Timestamp, String)].collect().toSeq
           val n = slice.size.toLong
-          val sumIds = slice.map(_._1).sum
           def rows(topic: String): Seq[EventRow] = slice.map {
             case (eid, tpe, ts, p) =>
               EventRow(f"$eid%012d", tpe, topic, ts, "1.0", p, Map.empty)
@@ -1478,7 +1477,6 @@ object StreamingGateQueries {
           val dumpCk = java.lang.Long.parseLong(md.take(7), 16)
           // -- §2.11: the registered expression surface evaluates to
           // pinned values; the typed UDAF folds latest-by-(ts, id).
-          graft.functions.expressions.GraftFunctions.register(s)
           val fnNames = Seq("graft_dot", "graft_bloom_agg",
             "graft_bloom_contains", "graft_token_entropy",
             "graft_top_token_share", "graft_shingles")

@@ -3,7 +3,7 @@ package graft.schema
 import scala.collection.concurrent.TrieMap
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.udf
 
 import graft.model.EventRow
@@ -120,8 +120,7 @@ final class SchemaRegistry extends Serializable {
     * (SURVEY.md §4.3): correctness-exact vs schema.ts, per-row narrow,
     * upgradeable to a Catalyst expression if it ever shows up in a profile.
     */
-  def validationColumn(spark: SparkSession,
-      tpe: Column, version: Column, payload: Column): Column = {
+  def validationColumn(tpe: Column, version: Column, payload: Column): Column = {
     val self = this
     val fn = udf((t: String, v: String, p: String) => self.validatePayload(t, v, p))
     fn(tpe, version, payload)

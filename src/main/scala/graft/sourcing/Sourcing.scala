@@ -6,7 +6,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 import graft.model.{Event, EventRow}
-import graft.sources.{EventLog, ScanOptions}
+import graft.sources.EventLog
 
 /** Event-sourced entity: state rebuilt by folding events in sequence
   * (reference: src/sourcing.ts:8-68). `version` counts applied events;

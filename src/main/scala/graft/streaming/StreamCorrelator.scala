@@ -50,7 +50,7 @@ object StreamCorrelator {
     correlate(left, leftTime, leftKey, right, rightTime, rightKey,
       within, delay, joinType = "leftOuter")
       .where(col(rightKey).isNull)
-      .select(left.columns.map(col): _*)
+      .select(left.columns.toIndexedSeq.map(col): _*)
 
   /** Stream-static enrichment: join a live stream to a small dimension
     * table. The static side is broadcast — re-read per micro-batch, never

@@ -68,7 +68,7 @@ object StreamingDrift {
       .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
         (key: String, rows: Iterator[(String, Double)],
          state: GroupState[DriftState]) =>
-          var st = state.getOption
+          val st = state.getOption
             .getOrElse(DriftState(Array.fill(nBuckets)(0L), 0L, 0L))
           val vs = rows.map(_._2).toVector.sorted
           // 1. top up the reference first (deterministic fold order)

@@ -19,16 +19,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * batch, so the monitor adds no load to the queries it watches.
   */
 final class StreamingMetrics extends StreamingQueryListener {
-
-  final case class QueryStats(
-      name: String,
-      batches: Long,
-      inputRows: Long,
-      maxBatchDurationMs: Long,
-      stateRows: Long,
-      stateBytes: Long,
-      terminated: Boolean,
-      error: Option[String])
+  import StreamingMetrics.QueryStats
 
   private val stats = mutable.Map.empty[java.util.UUID, QueryStats]
 
@@ -73,6 +64,17 @@ final class StreamingMetrics extends StreamingQueryListener {
 }
 
 object StreamingMetrics {
+
+  final case class QueryStats(
+      name: String,
+      batches: Long,
+      inputRows: Long,
+      maxBatchDurationMs: Long,
+      stateRows: Long,
+      stateBytes: Long,
+      terminated: Boolean,
+      error: Option[String])
+
   /** Install a fresh monitor on the session's listener bus. */
   def install(spark: SparkSession): StreamingMetrics = {
     val m = new StreamingMetrics

@@ -29,6 +29,19 @@ class BatchMetricsSpec extends SparkSpec {
     } finally BatchMetrics.uninstall(spark, m)
   }
 
+  test("the ledger keeps only the newest MaxActions actions") {
+    import spark.implicits._
+    val m = new BatchMetrics
+    val qe = spark.range(1).queryExecution
+    val n = BatchMetrics.MaxActions + 5
+    (0 until n).foreach(i => m.onSuccess(s"a$i", qe, 0L))
+    val actions = m.snapshot(spark).as[(String, Long, Long, Long, Boolean)]
+      .collect().map(_._1).toSeq
+    assert(actions.size == BatchMetrics.MaxActions)
+    assert(actions == (5 until n).map(i => s"a$i"),
+      "the five oldest actions must be the ones dropped, order kept")
+  }
+
   test("retention scheduler publishes draining_sweeps and lifetime counters as gauges") {
     import spark.implicits._
     val m = new BatchMetrics

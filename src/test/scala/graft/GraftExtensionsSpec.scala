@@ -32,6 +32,16 @@ class GraftExtensionsSpec extends SparkSpec {
       val sh = s2.sql("SELECT graft_shingles(array('a','b','c'), 2) v")
         .collect().head.getSeq[String](0)
       assert(sh == Seq("a b", "b c"))
+      // every function of the one table resolves in this session
+      val missing = graft.functions.expressions.GraftFunctions.all
+        .map(_._1.funcName).filterNot(s2.catalog.functionExists)
+      assert(missing.isEmpty, s"extension session lacks ${missing.mkString(", ")}")
+      val tok = s2.sql(
+        """SELECT graft_token_entropy(array('a','a','b','b')) ent,
+          |       graft_top_token_share(array('a','b','a','a')) share""".stripMargin)
+        .collect().head
+      assert(math.abs(tok.getDouble(0) - math.log(2.0)) < 1e-12)
+      assert(tok.getDouble(1) == 0.75)
       // bloom pair end-to-end in SQL: build over 0..99, probe a member
       // and a non-member — no false negatives, and the far non-member
       // hash space makes a false positive astronomically unlikely at

@@ -122,6 +122,20 @@ class ResultMemoSpec extends SparkSpec {
     ResultMemo.release(spark)
   }
 
+  test("a hub is one memoized cached frame per batch, fresh after release") {
+    // shared BY NAME, not by re-spelling an identical plan: every caller
+    // gets the same frame, cached once
+    ResultMemo.release(spark)
+    val a = graft.queries.DocProfiles.profiled(spark, dir)
+    assert(graft.queries.DocProfiles.profiled(spark, dir) eq a)
+    assert(a.storageLevel != StorageLevel.NONE)
+    ResultMemo.release(spark)
+    val b = graft.queries.DocProfiles.profiled(spark, dir)
+    assert(!(b eq a), "release must end the batch: the next call builds anew")
+    assert(b.storageLevel != StorageLevel.NONE)
+    ResultMemo.release(spark)
+  }
+
   test("a new session gets its own entry under the same (name, dir)") {
     val other = spark.newSession()
     var builds = 0

@@ -120,7 +120,7 @@ class SchemaRegistrySpec extends SparkSpec {
       ("other.type", "1.0", """{}""")
     ).toDF("type", "schemaVersion", "payload")
     val valid = df.withColumn("ok",
-      r.validationColumn(spark, $"type", $"schemaVersion", $"payload"))
+      r.validationColumn($"type", $"schemaVersion", $"payload"))
       .where($"ok").count()
     assert(valid == 2)
   }
