@@ -1,7 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, GlobalLimit, Window => LWindow}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, GlobalLimit, Repartition, Sort,
+  Window => LWindow}
 
 /** Plan LINTER — the scale rules `GlobalPlanAuditSpec` enforces over the
   * query pack, exposed as an operator so a user can vet their own queries
@@ -20,6 +21,11 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, GlobalLimit, Wind
   *     `*_id`, `*key`) does NOT satisfy the exemption unless a Limit sits
   *     between it and the window. (This is the rule that catches the RFM
   *     shape: three ntile(5) global windows over a per-user rollup.)
+  *   - `untaggedLedgerSort`: a global sort runs directly over a
+  *     one-partition coalesce that did not come from [[Ledger.sorted]] —
+  *     a hand-spelled `coalesce(1).orderBy`, whose row bound nobody
+  *     states or checks. The helper tags its coalesce with the bound;
+  *     GlobalPlanAuditSpec counts every tagged input against it.
   *   - `exchanges`: shuffle count in the physical plan — not a failure,
   *     but the number a reviewer should justify.
   *
@@ -33,8 +39,8 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, GlobalLimit, Wind
 object PlanAudit {
 
   final case class Report(cartesian: Boolean, globalWindow: Boolean,
-      exchanges: Int) {
-    def ok: Boolean = !cartesian && !globalWindow
+      untaggedLedgerSort: Boolean, exchanges: Int) {
+    def ok: Boolean = !cartesian && !globalWindow && !untaggedLedgerSort
   }
 
   /** Content-identity suffixes: a group key named like a hash/fingerprint/
@@ -77,9 +83,15 @@ object PlanAudit {
           case a: Aggregate   => !entityGrain(a)
         }.getOrElse(false)
     }.exists(identity)
+    val untaggedLedgerSort = df.queryExecution.analyzed.exists {
+      case Sort(_, true, r @ Repartition(1, false, _), _) =>
+        r.getTagValue(Ledger.MaxRows).isEmpty
+      case _ => false
+    }
     Report(
       cartesian = phys.contains("CartesianProduct"),
       globalWindow = globalWindow,
+      untaggedLedgerSort = untaggedLedgerSort,
       exchanges = "(?m)^\\s*[+:]?-?\\s*Exchange".r.findAllIn(phys).size)
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Ledger
 import graft.sources.Tables
 
 /** The analytic surface over the TPC-H-ish star schema (SURVEY.md §7 phase
@@ -34,11 +35,7 @@ object AnalyticQueries {
             .cast("double"), 4).as("sum_disc_price"),
           round(sum($"l_quantity".cast(dec)).cast("double") / count(lit(1)), 6).as("avg_qty"),
           count(lit(1)).as("count_order"))
-        // r16 ledger-sort treatment (CoreQueries q03 note): the flag ×
-        // status grid is ≤ a dozen rows at any scale — coalesce(1) drops
-        // the sort's range exchange + sampling job
-        .coalesce(1)
-        .orderBy($"l_returnflag", $"l_linestatus")
+        .transform(Ledger.sorted(3 * 2)($"l_returnflag", $"l_linestatus"))
     }),
 
     // Broadcast dimension join: orders ⨝ customer (150–15k rows ⇒ broadcast;
@@ -52,8 +49,7 @@ object AnalyticQueries {
         .agg(
           count(lit(1)).as("n_orders"),
           round(sum($"o_totalprice".cast(dec)).cast("double"), 2).as("revenue"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"c_mktsegment")
+        .transform(Ledger.sorted(5)($"c_mktsegment"))
     }),
 
     // Star join across 4 tables: fact ⨝ fact (shuffle) then broadcast dims.
@@ -109,8 +105,7 @@ object AnalyticQueries {
         .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
         .groupBy($"n_name")
         .agg(round(sum($"rev").cast("double"), 4).as("revenue"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"n_name")
+        .transform(Ledger.sorted(25)($"n_name"))
     }),
 
     // Left-semi join — EXISTS (customers with at least one 'F' order).
@@ -189,8 +184,8 @@ object AnalyticQueries {
       base.rollup($"l_returnflag", $"l_linestatus")
         .agg(sum($"pn").as("n"),
           round(sum($"ps").cast("double"), 2).as("sum_qty"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"l_returnflag".asc_nulls_first, $"l_linestatus".asc_nulls_first)
+        .transform(Ledger.sorted(3 * 2 + 3 + 1)(
+          $"l_returnflag".asc_nulls_first, $"l_linestatus".asc_nulls_first))
     }),
 
     // Correlated EXISTS → left-semi join (TPC-H Q4 shape): orders with at
@@ -224,8 +219,7 @@ object AnalyticQueries {
           "left_semi")
         .groupBy($"o_orderpriority")
         .agg(count(lit(1)).as("n_late"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"o_orderpriority")
+        .transform(Ledger.sorted(5)($"o_orderpriority"))
     }),
 
     // Explicit GROUPING SETS with grouping indicators — the general form
@@ -249,9 +243,8 @@ object AnalyticQueries {
           round(sum($"ps").cast("double"), 2).as("revenue"),
           grouping($"segment").cast("int").as("g_seg"),
           grouping($"priority").cast("int").as("g_pri"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"g_seg", $"g_pri",
-          $"segment".asc_nulls_first, $"priority".asc_nulls_first)
+        .transform(Ledger.sorted(5 * 5 + 5 + 1)($"g_seg", $"g_pri",
+          $"segment".asc_nulls_first, $"priority".asc_nulls_first))
     }),
 
     // Set operation: customers active in 1995 but not 1996 (EXCEPT ≡ anti).
@@ -286,8 +279,7 @@ object AnalyticQueries {
       EventStats.dailyTypeAgg(s, dir)
         .select($"day", $"event_type", $"n",
           round($"total_dec".cast("double"), 2).as("total"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"day", $"event_type")
+        .transform(Ledger.sorted(31 * 5)($"day", $"event_type"))
     }),
 
     // Session windows (30-min gap) via gaps-and-islands: new session when the

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Ledger
 import graft.sources.Tables
 
 /** Queries expressing the reference's own operator surface (SURVEY.md §2)
@@ -41,19 +42,11 @@ object CoreQueries {
     // F2/F5 — type routing fan-out counts (topic.ts:122-129 analog).
     "q03_type_counts" -> ((s, dir) => {
       import s.implicits._
-      // r16 ledger-sort treatment (guide §2.4, "an orderBy used only to
-      // make output deterministic"): the final rollup is bounded by the
-      // event-type enum (5 rows at any scale), so coalesce(1) before the
-      // sort lets SinglePartition satisfy OrderedDistribution — the range
-      // exchange AND its bounds-sampling job disappear (2 of the query's
-      // 4 stages); rows and order are unchanged. Applied across the
-      // bounded-ledger family this round.
       Tables.events(s, dir)
         .groupBy($"event_type")
         .agg(count(lit(1)).as("n"),
           round(sum($"value".cast("decimal(18,2)")).cast("double"), 2).as("total_value"))
-        .coalesce(1)
-        .orderBy($"event_type")
+        .transform(Ledger.sorted(5)($"event_type"))
     }),
 
     // S5/A4 — retention: deleted = count(ts < cutoff), kept = rest
@@ -84,8 +77,7 @@ object CoreQueries {
       Tables.events(s, dir)
         .groupBy($"event_type")
         .agg((count(when($"value" > 400, 1)) > 0).as("has_large"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"event_type")
+        .transform(Ledger.sorted(5)($"event_type"))
     }),
 
     // A1 — event-sourcing fold per aggregate id (reference: src/sourcing.ts:53-62):
@@ -132,8 +124,7 @@ object CoreQueries {
         .agg(
           sum($"k").as("sum_k"),
           round(sum($"k").cast("double") / count($"k"), 6).as("avg_k"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"event_type")
+        .transform(Ledger.sorted(5)($"event_type"))
     }),
 
     // T7 — replay count: ordered ranged replay returns the delivered count
@@ -172,13 +163,13 @@ object CoreQueries {
           $"ts".as("timestamp"),
           (lit(1) + ($"user_id" % 3)).cast("int").as("attempts"))
         .as[graft.model.DeadLetterRow]
-      val path = sys.props("java.io.tmpdir").stripSuffix("/") +
-        "/graft_dlq_fixture_" + dir.replaceAll("[^A-Za-z0-9]", "_")
-      val dlq = new graft.dlq.ParquetDeadLetterQueue(s, path)
-      dlq.reset()
-      dlq.addEvents(fixture)
-      dlq.getEventsDF(topic = Some("orders-1"), eventType = Some("error"),
-          limit = Some(40))
+      // staged once per (JVM, sf dir) on the session tier, so concurrent
+      // runs never share (or reset) one fixture path
+      val path = GateFixtures.dir(dir, "dlq_fixture") { p =>
+        new graft.dlq.ParquetDeadLetterQueue(s, p).addEvents(fixture)
+      }
+      new graft.dlq.ParquetDeadLetterQueue(s, path)
+        .getEventsDF(topic = Some("orders-1"), eventType = Some("error"), limit = Some(40))
         .select($"event.id".as("event_id"), $"event.topic".as("topic"),
           $"error", $"subscription", $"timestamp".as("dlq_ts"), $"attempts")
     }),
@@ -252,7 +243,7 @@ object CoreQueries {
         .agg(count(lit(1)).as("n_docs"))
         .select(lit("__corrupt__").as("lang"), $"n_docs",
           lit(null).cast("long").as("sum_chars"))
-      perLang.unionAll(quarantined).coalesce(1).orderBy($"lang")
+      perLang.unionAll(quarantined).transform(Ledger.sorted(5 + 1)($"lang"))
     })
   )
 

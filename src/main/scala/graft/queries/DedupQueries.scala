@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
-import graft.operators.ResultMemo
+import graft.operators.{Ledger, ResultMemo}
 import graft.sources.Tables
 
 /** Deduplication operators — the north-star training-data-pipeline surface
@@ -521,8 +521,7 @@ object DedupQueries {
           sum(when($"jac" >= 0.8, 1L).otherwise(0L)).as("n_verified"))
         .withColumn("precision_at_08",
           round($"n_verified" * lit(1.0) / $"n_pairs", 6))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"jac_bucket")
+        .transform(Ledger.sorted(11)($"jac_bucket"))
     }),
 
     // Duplication × QUALITY interaction — the curation cross-signal: per
@@ -549,8 +548,7 @@ object DedupQueries {
         .agg(count(lit(1)).as("n_docs"),
           round(sum($"q6".cast("decimal(18,6)")).cast("double") /
             count(lit(1)), 6).as("avg_quality"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"lang", $"is_dup")
+        .transform(Ledger.sorted(5 * 2)($"lang", $"is_dup"))
     }),
 
     // PPJoin — the complete (zero-false-negative) near-dup pair set at
@@ -627,8 +625,7 @@ object DedupQueries {
         .agg(count(lit(1)).as("n_exact"),
           sum(when($"found", 1L).otherwise(0L)).as("n_found"))
         .withColumn("recall", round($"n_found" * lit(1.0) / $"n_exact", 6))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"jac_bucket")
+        .transform(Ledger.sorted(21)($"jac_bucket"))
     }),
 
     // Transitive near-dup closure: VERIFIED near-dup pairs (q33's exact
@@ -792,8 +789,7 @@ object DedupQueries {
           $"a.fp" === $"b.fp" && $"a.source" < $"b.source")
         .groupBy($"a.source".as("src_a"), $"b.source".as("src_b"))
         .agg(count(lit(1)).as("n_shared"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"src_a", $"src_b")
+        .transform(Ledger.sorted(20 * 19 / 2)($"src_a", $"src_b"))
     }),
 
     // INCREMENTAL dedup — the delta-ingest shape: a "new arrivals" batch
@@ -826,8 +822,7 @@ object DedupQueries {
           sum(coalesce($"exact_dup", lit(0))).as("n_exact_dup"),
           sum(coalesce($"near_dup", lit(0))).as("n_near_dup"),
           sum(when($"exact_dup".isNull && $"near_dup".isNull, 1).otherwise(0)).as("n_kept"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"lang")
+        .transform(Ledger.sorted(5)($"lang"))
     }),
 
     // Exact shared-span detection — the pair-level diagnostic behind
@@ -911,7 +906,7 @@ object DedupQueries {
         .join(agged, Seq("threshold"), "left")
         .select($"threshold", coalesce($"n_pairs", lit(0L)).as("n_pairs"),
           coalesce($"n_docs", lit(0L)).as("n_docs"))
-      }.coalesce(1).orderBy(col("threshold"))
+      }.transform(Ledger.sorted(3)(col("threshold")))
     }),
 
     // LSH candidate-generator EVALUATION — the q109/q116 recall-audit
@@ -963,8 +958,7 @@ object DedupQueries {
           when($"n_true_sample" > 0,
             round(coalesce($"n_found_sample", lit(0L)) * lit(1.0)
               / $"n_true_sample", 6)).as("sample_recall"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"min_match")
+        .transform(Ledger.sorted(3)($"min_match"))
     }),
 
     // Keeper-quality AUDIT of the dedup policy — "keep the lowest doc_id"
@@ -1026,8 +1020,7 @@ object DedupQueries {
           sum(when($"gsz" > 1, $"gsz" - 1).otherwise(0L)).as("n_removable"),
           round(sum(when($"gsz" > 1, $"gsz" - 1).otherwise(0L)) * lit(1.0)
             / sum($"gsz"), 6).as("dup_frac"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"frac")
+        .transform(Ledger.sorted(3)($"frac"))
     }),
 
     "q84_dup_rate" -> ((s, dir) => {
@@ -1110,8 +1103,7 @@ object DedupQueries {
         .groupBy($"event_type")
         .agg(sum($"n").as("n_returning_events"),
           count(lit(1)).as("n_returning_users"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"event_type")
+        .transform(Ledger.sorted(5)($"event_type"))
     }),
 
     // Exact-substring RUN lengths — q127 upgraded from "how many K-token
@@ -1203,8 +1195,7 @@ object DedupQueries {
         .groupBy($"event_type")
         .agg(sum($"n").as("n_new_events"),
           count(lit(1)).as("n_new_users"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"event_type")
+        .transform(Ledger.sorted(5)($"event_type"))
     }),
 
     // Snapshot diff — corpus-version CDC through
@@ -1225,8 +1216,7 @@ object DedupQueries {
           .otherwise($"text").as("text"))
       graft.operators.SnapshotDiff
         .summary(v1, v2, "doc_id", "text", d.select($"doc_id", $"lang"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"lang", $"status")
+        .transform(Ledger.sorted(5 * 4)($"lang", $"status"))
     }),
 
     // Content-hash grouping: distribution of exact-duplicate group sizes.
@@ -1238,8 +1228,7 @@ object DedupQueries {
         .agg(count(lit(1)).as("n"))
         .groupBy($"n".as("group_size"))
         .agg(count(lit(1)).as("n_groups"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"group_size")
+        .orderBy($"group_size") // distinct group sizes grow with the corpus: no Ledger.sorted
     }),
 
     // FULL winnowing (Schleimer/Wilkerson/Aiken, MOSS): per document,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Ledger
 import graft.sources.Tables
 
 /** Second analytic wave: sliding windows (T12), lag/lead navigation,
@@ -152,8 +153,7 @@ object ExtendedQueries {
         .withColumn("sliding3", round(sum($"daily_total_dec").over(w).cast("double"), 2))
         .withColumn("daily_total", round($"daily_total_dec".cast("double"), 2))
         .select($"day", $"event_type", $"daily_total", $"sliding3")
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"day", $"event_type")
+        .transform(Ledger.sorted(31 * 5)($"day", $"event_type"))
     }),
 
     // Lag/lead navigation per user stream: value delta vs previous event,
@@ -180,8 +180,8 @@ object ExtendedQueries {
       base.cube($"l_returnflag", $"l_linestatus")
         .agg(sum($"pn").as("n"),
           round(sum($"ps").cast("double"), 2).as("sum_qty"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"l_returnflag".asc_nulls_first, $"l_linestatus".asc_nulls_first)
+        .transform(Ledger.sorted(4 * 3)(
+          $"l_returnflag".asc_nulls_first, $"l_linestatus".asc_nulls_first))
     }),
 
     // As-of join: each purchase matched to the user's most recent PRIOR
@@ -218,8 +218,7 @@ object ExtendedQueries {
       EventStats.dailyTypeAgg(s, dir)
         .groupBy($"day")
         .agg(cols.head, cols.tail: _*)
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"day")
+        .transform(Ledger.sorted(31)($"day"))
     }),
 
     // UNION (distinct) of two event slices.
@@ -253,8 +252,7 @@ object ExtendedQueries {
           round($"q" (0), 6).as("p25"),
           round($"q" (1), 6).as("p50"),
           round($"q" (2), 6).as("p75"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"event_type")
+        .transform(Ledger.sorted(5)($"event_type"))
     }),
 
     // Range join: clicks within the hour before each purchase, same user.
@@ -307,8 +305,7 @@ object ExtendedQueries {
           round(stddev_samp($"l_quantity"), 6).as("sd_qty"),
           round(var_samp($"l_discount"), 6).as("var_disc"),
           round(corr($"l_quantity", $"l_extendedprice"), 6).as("corr_qty_price"))
-        .coalesce(1) // r16 ledger-sort treatment (q03 note): 3-row ledger
-        .orderBy($"l_returnflag")
+        .transform(Ledger.sorted(3)($"l_returnflag"))
     }),
 
     // Window-function family in one pass: dense_rank, quartile bucket,
@@ -403,8 +400,7 @@ object ExtendedQueries {
         .groupBy($"n_name")
         .agg(round(sum($"l_extendedprice".cast(dec) * (lit(1).cast(dec) - $"l_discount".cast(dec)))
           .cast("double"), 4).as("revenue"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"revenue".desc, $"n_name".asc)
+        .transform(Ledger.sorted(25)($"revenue".desc, $"n_name".asc))
     }),
 
     // The SQL front door: the engine's tables registered as temp views and
@@ -655,8 +651,7 @@ object ExtendedQueries {
       agg.select($"event_type", est.as("e"), $"exact_users")
         .select($"event_type", round($"e", 2).as("est_users"), $"exact_users",
           round(abs($"e" - $"exact_users") / $"exact_users", 4).as("rel_err"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"event_type")
+        .transform(Ledger.sorted(5)($"event_type"))
     }),
 
     // Sketch ROLLUP law through the driver gate — q117's portable HLL
@@ -762,8 +757,7 @@ object ExtendedQueries {
           sum(when($"gsz" < $"k", $"gsz").otherwise(0L)).as("n_rows_at_risk"),
           round(sum(when($"gsz" < $"k", $"gsz").otherwise(0L)) * lit(1.0)
             / sum($"gsz"), 6).as("frac_rows_at_risk"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"k")
+        .transform(Ledger.sorted(3)($"k"))
     }),
 
     // CMS ROLLUP law — the frequency twin of q120: q131's count-min cells
@@ -1037,8 +1031,7 @@ object ExtendedQueries {
         .agg(count(lit(1)).as("n_above"),
           round(max($"c_acctbal"), 2).as("max_bal"),
           round(min($"bal_sum").cast("double") / min($"bal_n"), 6).as("nation_avg"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"c_nationkey")
+        .transform(Ledger.sorted(25)($"c_nationkey"))
     }),
 
     // Daily-volume anomaly detection per event type: z-score of each day's
@@ -1068,8 +1061,7 @@ object ExtendedQueries {
           round(first($"sd"), 6).as("sd_cnt"),
           sum(when(abs($"z") > 2, 1).otherwise(0)).as("n_anomalies"),
           round(max(abs($"z")), 6).as("max_abs_z"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"event_type")
+        .transform(Ledger.sorted(5)($"event_type"))
     }),
 
     // Activity-concentration diagnostic: the Gini coefficient of events
@@ -1182,8 +1174,7 @@ object ExtendedQueries {
         .select($"event_type", $"n",
           round(noise, 6).as("noise"),
           round($"n" + noise, 6).as("released"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"event_type")
+        .transform(Ledger.sorted(5)($"event_type"))
     }),
 
     // Inter-event gap distribution: per-user consecutive gaps (lead over
@@ -1217,8 +1208,7 @@ object ExtendedQueries {
           round($"q" (0), 6).as("p50_gap_sec"),
           round($"q" (1), 6).as("p95_gap_sec"),
           round($"n_under_min" * lit(1.0) / $"n_gaps", 6).as("frac_under_min"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"event_type")
+        .transform(Ledger.sorted(5)($"event_type"))
     }),
 
     // GDPR / right-to-be-forgotten deletion-cost planner: given a delete
@@ -1242,8 +1232,7 @@ object ExtendedQueries {
         .select($"day", $"n_rows", $"n_delete",
           when($"n_delete" > 0, $"n_rows").otherwise(0L).as("n_rewrite_rows"),
           round($"n_delete" * lit(1.0) / $"n_rows", 6).as("delete_frac"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"day")
+        .transform(Ledger.sorted(31)($"day"))
     }),
 
     // Salted JOIN — the skew-mitigation twin of q58's salted agg, applied
@@ -1269,8 +1258,7 @@ object ExtendedQueries {
         .groupBy($"event_type")
         .agg(count(lit(1)).as("n_joined"),
           sum($"lifetime_events").as("sum_lifetime"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"event_type")
+        .transform(Ledger.sorted(5)($"event_type"))
     }),
 
     // Burstiness (Fano factor) per event type: variance-to-mean ratio of
@@ -1291,8 +1279,7 @@ object ExtendedQueries {
           round(var_samp($"n"), 6).as("var_daily"),
           round(var_samp($"n") / avg($"n"), 6).as("fano"),
           (var_samp($"n") / avg($"n") > 1.0).as("bursty"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"event_type")
+        .transform(Ledger.sorted(5)($"event_type"))
     }),
 
     // Population Stability Index per event type — THE production drift
@@ -1362,7 +1349,7 @@ object ExtendedQueries {
         lit(0.0), (a, x) => a + x)
       piv.select($"event_type", $"n_ref", $"n_cur",
           round(termSum, 6).as("psi"), (termSum > 0.1).as("shifted"))
-      }.coalesce(1).orderBy(col("event_type"))),
+      }.transform(Ledger.sorted(5)(col("event_type")))),
 
     // Behavior-trajectory corpus builder: q22's sessions turned into the
     // TRAINING SEQUENCES an agent/recommendation model consumes — each
@@ -1426,8 +1413,7 @@ object ExtendedQueries {
           round(avg($"wv"), 6).as("win_mean"),
           round(stddev_samp($"value"), 6).as("raw_sd"),
           round(stddev_samp($"wv"), 6).as("win_sd"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"event_type")
+        .transform(Ledger.sorted(5)($"event_type"))
     }),
 
     // Calendar gap-fill (resampling) — the densification every monitoring
@@ -1495,8 +1481,7 @@ object ExtendedQueries {
         .groupBy($"event_type", $"dow", $"hod")
         .agg(count(lit(1)).as("n"))
         .withColumn("share", round($"n" * lit(1.0) / sum($"n").over(wType), 6))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"event_type", $"dow", $"hod")
+        .transform(Ledger.sorted(5 * 7 * 24)($"event_type", $"dow", $"hod"))
     }),
 
     // DAU / WAU / MAU — the engagement triple every product-analytics
@@ -1529,7 +1514,7 @@ object ExtendedQueries {
         dau.join(wau, "day").join(mau, "day")
           .select($"day", $"dau", $"wau", $"mau",
             round($"dau" * lit(1.0) / $"mau", 6).as("stickiness"))
-      }.coalesce(1).orderBy($"day")
+      }.transform(Ledger.sorted(31)($"day"))
       // memoized per batch (the q36/q84/q99 report treatment): the
       // engagement triple is a day-count-sized rollup table — repeat
       // readers get the table, not a re-run of the trailing-window joins
@@ -1560,8 +1545,7 @@ object ExtendedQueries {
         .agg(count(lit(1)).as("n"),
           (max($"xv") - min($"xv")).as("x_span"),
           (max($"yv") - min($"yv")).as("y_span"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"z_block")
+        .transform(Ledger.sorted(256)($"z_block"))
     }),
 
     // Neyman sampling allocation — the survey-design arithmetic behind
@@ -1596,8 +1580,7 @@ object ExtendedQueries {
         .select($"event_type", $"n_stratum", $"sd",
           round(lit(1000.0) * $"w".cast("double") / $"tw".cast("double"), 6)
             .as("alloc_n"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"event_type")
+        .transform(Ledger.sorted(5)($"event_type"))
     }),
 
     // Robust ingest-anomaly detection — q90's z-score family re-based on
@@ -1630,8 +1613,7 @@ object ExtendedQueries {
           round(max($"mad"), 6).as("mad"),
           sum(when($"adev" > lit(4.4478) * $"mad", 1L).otherwise(0L))
             .as("n_anomalous"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"event_type")
+        .transform(Ledger.sorted(5)($"event_type"))
     }),
 
     // Schema-driven single-pass profiler ([[graft.operators.TableProfiler]])
@@ -1646,8 +1628,7 @@ object ExtendedQueries {
         .report(s, "rep220", dir) {
       import s.implicits._
       graft.operators.TableProfiler.profile(Tables.lineitem(s, dir))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"column_name")
+        .transform(Ledger.sorted(11)($"column_name"))
     }),
 
     // Profile DRIFT audit — [[graft.operators.TableProfiler]] run twice
@@ -1673,8 +1654,7 @@ object ExtendedQueries {
             $"nn_b" * lit(1.0) / $"n_odd", 6).as("null_rate_delta"),
           round($"mn_b" - $"mn_a", 6).as("min_shift"),
           round($"mx_b" - $"mx_a", 6).as("max_shift"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"column_name")
+        .transform(Ledger.sorted(11)($"column_name"))
     }),
 
     // Declarative data-quality CHECK SUITE (the Deequ/Great-Expectations
@@ -1722,8 +1702,7 @@ object ExtendedQueries {
           liChecks.select($"flag".as("n_violations"))))
         .unionAll(row("events_value_not_null", evNull))
         .withColumn("passed", $"n_violations" === 0L)
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"check_name")
+        .transform(Ledger.sorted(7)($"check_name"))
     }),
 
     // INTERVAL-OVERLAP SELF-JOIN via BUCKET DECOMPOSITION — the generic
@@ -1777,8 +1756,7 @@ object ExtendedQueries {
         .agg(count(lit(1)).as("n_pairs"),
           round(sum($"ov_us") / (count(lit(1)) * lit(1000000.0)), 6)
             .as("avg_overlap_sec"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"day")
+        .transform(Ledger.sorted(31)($"day"))
       rows
     }),
 
@@ -1844,8 +1822,7 @@ object ExtendedQueries {
           round($"sv".cast("double") / $"n", 6).as("raw_mean"),
           round(($"sv".cast("double") + m1 * $"mean_t") / ($"n" + m1), 6)
             .as("enc"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"event_type", $"hod")
+        .transform(Ledger.sorted(5 * 24)($"event_type", $"hod"))
     }),
 
     // SEASONAL DECOMPOSITION (STL-lite) — the additive trend/seasonal/
@@ -1879,8 +1856,7 @@ object ExtendedQueries {
           when($"trend".isNotNull, round($"seasonal", 6)).as("seasonal"),
           round($"remainder", 6).as("remainder"),
           round($"remainder" / $"rsd", 6).as("z"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"day")
+        .transform(Ledger.sorted(31)($"day"))
     }),
 
     // RFM SEGMENTATION — the classic customer-value grid: per user,
@@ -1928,7 +1904,7 @@ object ExtendedQueries {
       scored.groupBy($"r_score", $"f_score", $"m_score")
         .agg(count(lit(1)).as("n_users"),
           round(avg($"monetary"), 6).as("avg_monetary"))
-      }.coalesce(1).orderBy(col("r_score"), col("f_score"), col("m_score"))
+      }.transform(Ledger.sorted(5 * 5 * 5)(col("r_score"), col("f_score"), col("m_score")))
     }),
 
     // NEXT-EVENT BASELINE EVAL — the train/test discipline applied to the
@@ -1967,8 +1943,7 @@ object ExtendedQueries {
           sum(when($"next_type" === $"predicted", 1L).otherwise(0L))
             .as("n_correct"))
         .withColumn("accuracy", round($"n_correct" * lit(1.0) / $"n_test", 6))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"event_type")
+        .transform(Ledger.sorted(5)($"event_type"))
     }),
 
     // MULTI-TOUCH ATTRIBUTION — the marketing-analytics operator: every
@@ -2012,8 +1987,7 @@ object ExtendedQueries {
           round(sum(when($"rk" === $"k", $"cval").otherwise(lit(0.0))), 6)
             .as("last_credit"),
           round(sum($"cval" * u), 6).as("u_credit"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"channel")
+        .transform(Ledger.sorted(5)($"channel"))
     }),
 
     // MARKOV REMOVAL-EFFECT ATTRIBUTION — the data-driven model above
@@ -2096,8 +2070,7 @@ object ExtendedQueries {
             .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
       }.toDF("channel", "removal_effect", "attribution_share",
         "attributed_value")
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"channel")
+        .transform(Ledger.sorted(4)($"channel"))
     }),
 
     // KAPLAN-MEIER SURVIVAL — time-to-conversion under RIGHT CENSORING
@@ -2148,8 +2121,7 @@ object ExtendedQueries {
             wAsc.rowsBetween(Window.unboundedPreceding, Window.currentRow)))))
         .select($"dur".as("t_days"), $"n_risk", $"d".as("n_events"),
           round($"survival", 6).as("survival"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"t_days")
+        .transform(Ledger.sorted(31)($"t_days"))
     }),
 
     // EXPONENTIAL-SMOOTHING FORECAST BACKTEST — simple exponential
@@ -2182,8 +2154,7 @@ object ExtendedQueries {
         .agg(count(lit(1)).as("n_days"),
           round(avg(abs($"err")), 6).as("mae"),
           round(max_by($"s_lvl", $"rn"), 6).as("next_forecast"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"event_type")
+        .transform(Ledger.sorted(5)($"event_type"))
     })
   )
 

@@ -18,7 +18,8 @@ import org.apache.spark.sql.DataFrame
   * (Scratch's documented session-amortized tier: "warm restarts within
   * the process never re-pay it") and hands gates the path. Through r13
   * each gate staged its own copy per construction — the dominant share of
-  * the 84 s warm-boot gate tax.
+  * the 84 s warm-boot gate tax. q64's DLQ read fixture stages here too:
+  * a fixed shared path let two concurrent runs reset each other's copy.
   *
   * Thread-safety: `computeIfAbsent` makes each fixture build exactly-once
   * under concurrent suites sharing the test session.

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.operators.ResultMemo
+import graft.operators.{Ledger, ResultMemo}
 import graft.sources.Tables
 
 /** Iterative graph analytics over the trade graph implied by the star
@@ -133,7 +133,7 @@ object GraphQueries {
         .select($"node".as("nation_key"), $"n_name", round($"pr", 6).as("pagerank"))
       // re-sorted OUTSIDE the store: a loaded parquet scan carries no
       // row-order guarantee, and the ledger's order is part of the law
-      }.coalesce(1).orderBy(col("nation_key"))
+      }.transform(Ledger.sorted(25)(col("nation_key")))
     }),
 
     // Degree distribution of the same graph: how many nations have k
@@ -148,8 +148,7 @@ object GraphQueries {
         .groupBy($"out_deg")
         .agg(count(lit(1)).as("n_nodes"),
           min($"out_w").as("min_w"), max($"out_w").as("max_w"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"out_deg")
+        .transform(Ledger.sorted(25)($"out_deg"))
     }),
 
     // HITS HUBS & AUTHORITIES (Kleinberg) — the second classic spectral
@@ -199,7 +198,7 @@ object GraphQueries {
         .join(auth, $"node" === $"anode")
         .select($"node".as("nation_key"), $"n_name",
           round($"h", 6).as("hub"), round($"a", 6).as("authority"))
-      }.coalesce(1).orderBy(col("nation_key"))
+      }.transform(Ledger.sorted(25)(col("nation_key")))
     }),
 
     // TRIANGLE COUNT + local clustering coefficient via DEGREE-ORDERED
@@ -278,7 +277,7 @@ object GraphQueries {
       // scan carries no row-order guarantee). The stored scan also
       // retires the q227 analysis-cost concern — the served plan is a
       // 25-row parquet read, not the lazy wedge-join tower.
-      }.coalesce(1).orderBy(col("nation_key"))
+      }.transform(Ledger.sorted(25)(col("nation_key")))
     }))
 
   def oracles: Map[String, String] = {

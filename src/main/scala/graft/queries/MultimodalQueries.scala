@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Ledger
 import graft.sources.Tables
 
 /** Multimodal-column queries (north-star surface). Real media bytes don't
@@ -72,8 +73,7 @@ object MultimodalQueries {
           sum($"n_bytes").as("total_bytes"),
           round(avg($"width"), 6).as("avg_width"),
           round(avg($"height"), 6).as("avg_height"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"kind")
+        .transform(Ledger.sorted(3)($"kind"))
     }),
 
     // Media NEAR-DUP by shared frame digests — how video/audio dedup
@@ -137,8 +137,7 @@ object MultimodalQueries {
         .agg(count(lit(1)).as("n"),
           round(avg(element_at($"features", 1)), 6).as("avg_f0"),
           round(avg(element_at($"features", 2)), 6).as("avg_f1"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"kind")
+        .transform(Ledger.sorted(3)($"kind"))
     })
   )
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
-import graft.operators.{AnnServing, ResultMemo}
+import graft.operators.{AnnServing, Ledger, ResultMemo}
 import graft.sources.Tables
 
 /** Similarity search over the `embeddings` table (north-star surface):
@@ -28,6 +28,7 @@ object SimilarityQueries {
   private val Dim = 64
   private val NQueries = 10 // vec_id < 10 are the query set
   private val TopK = 10
+  private val Labels = 10 // embedding label domain; IVF cells seed one per label
 
   /** q128 RRF fusion: per-leg candidate pool depth, fused list depth, and
     * the standard RRF damping constant (Cormack et al. 2009). Interpolated
@@ -185,17 +186,17 @@ object SimilarityQueries {
     // top-nprobe centroids per query vector (pcos desc, cl asc — the same
     // tie-break the assignment uses, so nprobe=1 reproduces the own cell)
     val wProbe = Window.partitionBy($"q_id").orderBy($"pcos".desc, $"cl".asc)
-    // r16: the probe-list input is NQueries × nlist rows — bounded by
-    // search/index constants at ANY corpus size — yet its rank window
-    // planned an exchange per execution (and the window output feeds a
-    // broadcast anyway). coalesce(1) lets SinglePartition satisfy the
-    // window's clustering: zero exchanges on the probe build.
+    // The probe-list input is NQueries × nlist rows — bounded by
+    // search/index constants at ANY corpus size — and its rank window
+    // feeds a broadcast. repartition(1) lets SinglePartition satisfy the
+    // window's clustering with one exchange of those few rows; a
+    // coalesce(1) would instead pull the upstream corpus scan into one task.
     val probes = cells.where($"vec_id" < NQueries)
       .select($"vec_id".as("q_id"), $"v".as("qv"), $"nrm".as("qnrm"))
       .crossJoin(broadcast(cent))
       .select($"q_id", $"qv", $"qnrm", $"cl",
         (dot($"qv", $"cv") / ($"qnrm" * $"cnrm")).as("pcos"))
-      .coalesce(1)
+      .repartition(1)
       .withColumn("pr", row_number().over(wProbe))
       .where($"pr" <= nprobe)
       .select($"q_id", $"qv", $"qnrm", $"cl".as("qc"))
@@ -205,8 +206,7 @@ object SimilarityQueries {
       .withColumn("rk", row_number().over(w))
       .where($"rk" <= 3)
       .select($"q_id", $"rk", $"vec_id".as("nn_id"), round($"cos", 6).as("cosine"))
-      .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): ≤ NQueries×3 rows
-      .orderBy($"q_id", $"rk")
+      .transform(Ledger.sorted(NQueries * 3)($"q_id", $"rk"))
   }
 
   /** Corpus projected once to (vec_id, label, v: array<double>, nrm): the
@@ -293,13 +293,13 @@ object SimilarityQueries {
   private def pqQueryLuts(lut: DataFrame): DataFrame = {
     val s = lut.sparkSession
     import s.implicits._
-    // r16: the LUT input is NQueries × M × K rows (1 280 here, bounded by
-    // search-batch constants at any corpus size), yet the two map-pivot
-    // aggregations planned 2 exchanges per execution on q95/q98's hot
-    // path. coalesce(1) makes SinglePartition satisfy both groupings —
-    // zero exchanges. Map contents are order-independent (distinct keys
-    // per group), so the built LUTs are identical.
-    lut.coalesce(1)
+    // The LUT input is NQueries × M × K rows (1 280 here, bounded by
+    // search-batch constants at any corpus size). repartition(1) makes
+    // SinglePartition satisfy both map-pivot groupings with one exchange
+    // of those rows, leaving the upstream scan parallel. Map contents are
+    // order-independent (distinct keys per group), so the built LUTs are
+    // identical.
+    lut.repartition(1)
       .groupBy($"q_id", $"m")
       .agg(map_from_entries(collect_list(struct($"cl", $"pd"))).as("row"))
       .groupBy($"q_id")
@@ -370,8 +370,7 @@ object SimilarityQueries {
         .withColumn("rk", row_number().over(w))
         .where($"rk" <= TopK)
         .select($"q_id", $"rk", $"vec_id".as("nn_id"), round($"qcos", 6).as("qcosine"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"q_id", $"rk")
+        .transform(Ledger.sorted(NQueries * TopK)($"q_id", $"rk"))
     }),
 
     // Matryoshka truncation audit (Kusupati et al. 2022, arXiv:2205.13147
@@ -412,8 +411,7 @@ object SimilarityQueries {
         .select($"q_id", $"n_overlap",
           round($"n_overlap" * lit(1.0) / TopK, 6).as("overlap_frac"),
           $"top1_kept")
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"q_id")
+        .transform(Ledger.sorted(NQueries)($"q_id"))
     }),
 
     "q41_knn_brute" -> ((s, dir) => {
@@ -427,8 +425,7 @@ object SimilarityQueries {
         .withColumn("rk", row_number().over(w))
         .where($"rk" <= TopK)
         .select($"q_id", $"rk", $"vec_id".as("nn_id"), round($"cos", 6).as("cosine"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"q_id", $"rk")
+        .transform(Ledger.sorted(NQueries * TopK)($"q_id", $"rk"))
     }),
 
     // Bitext mining (cross-lingual pair extraction): label 0 plays the
@@ -525,8 +522,7 @@ object SimilarityQueries {
           round(dot($"av", $"bv") /
             (sqrt(dot($"av", $"av")) * sqrt(dot($"bv", $"bv"))), 6)
             .as("drift_cosine"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"label")
+        .transform(Ledger.sorted(Labels)($"label"))
     }),
 
     // IVF index staleness — INCREMENTAL maintenance without re-clustering:
@@ -670,8 +666,7 @@ object SimilarityQueries {
           round($"n_new" * lit(1.0) / ($"n_old" + $"n_new"), 6).as("new_frac"),
           $"avg_assign_cos",
           ($"n_new" * lit(1.0) / ($"n_old" + $"n_new") > 0.3).as("stale"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"cell")
+        .transform(Ledger.sorted(Labels)($"cell"))
     }),
 
     // Random-projection (Johnson–Lindenstrauss) compression audit: project
@@ -696,8 +691,7 @@ object SimilarityQueries {
           round(avg($"ratio"), 6).as("avg_ratio"),
           round(min($"ratio"), 6).as("min_ratio"),
           round(max($"ratio"), 6).as("max_ratio"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"label")
+        .transform(Ledger.sorted(Labels)($"label"))
     }),
 
     // Hard-negative mining for contrastive training: for each probe, the
@@ -863,8 +857,7 @@ object SimilarityQueries {
           round($"maxc" / $"n_vectors".cast("double"), 6).as("purity"),
           round(log($"n_vectors".cast("double")) -
             $"sclgc".cast("double") / $"n_vectors", 6).as("label_entropy"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"cell")
+        .transform(Ledger.sorted(Labels)($"cell"))
     }),
 
     // Length-BIAS audit — per label, the Pearson correlation of document
@@ -910,8 +903,7 @@ object SimilarityQueries {
               ($"n" * $"syy".cast("double") -
                 $"sy".cast("double") * $"sy".cast("double"))), 6)
             .as("len_norm_corr"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"label")
+        .transform(Ledger.sorted(Labels)($"label"))
     }),
 
     // Embedding HEALTH audit — the data-quality check every ANN build
@@ -940,8 +932,7 @@ object SimilarityQueries {
           round(min($"nrm"), 6).as("min_norm"),
           round(max($"nrm"), 6).as("max_norm"),
           round(avg($"nrm"), 6).as("avg_norm"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"label")
+        .transform(Ledger.sorted(Labels + 1)($"label")) // + the planted label -1
     }),
 
     // Memoized (r9 report treatment): bounded per-batch ledger,
@@ -962,8 +953,7 @@ object SimilarityQueries {
         .withColumn("rk", row_number().over(w))
         .where($"rk" <= 3)
         .select($"q_id", $"rk", $"neg_id", round($"neg_cos", 6).as("neg_cosine"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"q_id", $"rk")
+        .transform(Ledger.sorted(NQueries * 3)($"q_id", $"rk"))
     }),
 
     // Alignment & uniformity (Wang & Isola 2020) — the two numbers that
@@ -1015,8 +1005,7 @@ object SimilarityQueries {
         .groupBy($"label", $"cell")
         .agg(count(lit(1)).as("n"))
         .select($"label", $"cell", $"n", ($"label" =!= $"cell").as("off_diag"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"label", $"cell")
+        .transform(Ledger.sorted(Labels * Labels)($"label", $"cell"))
     }),
 
     // LSH bucket histogram: corpus bucketed by the sign sketch. The
@@ -1027,8 +1016,7 @@ object SimilarityQueries {
         .select(lshBucket($"embedding", Planes, Dim).as("bucket"))
         .groupBy($"bucket")
         .agg(count(lit(1)).as("n"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"bucket")
+        .transform(Ledger.sorted(1 << Planes)($"bucket"))
     }),
 
     // ANN via LSH: probe only the query's bucket, exact cosine within it,
@@ -1046,8 +1034,7 @@ object SimilarityQueries {
         .withColumn("rk", row_number().over(w))
         .where($"rk" <= 3)
         .select($"q_id", $"rk", $"vec_id".as("nn_id"), round($"cos", 6).as("cosine"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"q_id", $"rk")
+        .transform(Ledger.sorted(NQueries * 3)($"q_id", $"rk"))
     }),
 
     // ANN RECALL evaluation — "measure, don't guess" for the index
@@ -1090,8 +1077,7 @@ object SimilarityQueries {
         .join(hits, Seq("q_id"), "left")
         .select($"q_id", $"k", coalesce($"n_hits", lit(0L)).as("n_hits"),
           round(coalesce($"n_hits", lit(0L)) * lit(1.0) / $"k", 6).as("recall"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"q_id").cache()
+        .transform(Ledger.sorted(NQueries)($"q_id")).cache()
       out.count()
       out
     }),
@@ -1155,7 +1141,7 @@ object SimilarityQueries {
       val probes = q.crossJoin(broadcast(cent))
         .select($"q_id", $"qv", $"qnrm", $"cl",
           (dot($"qv", $"cv") / ($"qnrm" * $"cnrm")).as("pcos"))
-        .coalesce(1) // r16: NQueries × nlist rows (bounded) — skip the window exchange
+        .repartition(1) // NQueries × nlist rows: the probe build's ivf() note
         .withColumn("pr", row_number().over(wProbe))
         .where($"pr" <= NProbe)
         .select($"q_id", $"qv", $"qnrm", $"cl".as("qc"))
@@ -1177,8 +1163,7 @@ object SimilarityQueries {
         .join(hits, Seq("q_id"), "left")
         .select($"q_id", $"k", coalesce($"n_hits", lit(0L)).as("n_hits"),
           round(coalesce($"n_hits", lit(0L)) * lit(1.0) / $"k", 6).as("recall"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"q_id").cache()
+        .transform(Ledger.sorted(NQueries)($"q_id")).cache()
       out.count()
       out
     }),
@@ -1202,8 +1187,7 @@ object SimilarityQueries {
           sum(when($"pct" >= 0.8 && $"pct" < 0.9, 1L).otherwise(0L)).as("n_val"),
           sum(when($"pct" >= 0.9, 1L).otherwise(0L)).as("n_test"))
         .withColumn("test_frac", round($"n_test" * lit(1.0) / $"n", 6))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"label")
+        .transform(Ledger.sorted(Labels)($"label"))
     }),
 
     // Quantizer MARGIN audit — per cell: each vector's top-1 vs top-2
@@ -1233,8 +1217,7 @@ object SimilarityQueries {
           round(min($"margin"), 6).as("min_margin"),
           round(max($"margin"), 6).as("max_margin"),
           sum(when($"margin" < 0.05, 1L).otherwise(0L)).as("n_boundary"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"cell")
+        .transform(Ledger.sorted(Labels)($"cell"))
     }),
 
     // IVF ANN, nprobe=1 — quantizer + plan shape documented on [[ivf]].
@@ -1268,8 +1251,7 @@ object SimilarityQueries {
         .withColumn("rk", row_number().over(w))
         .where($"rk" <= 3)
         .select($"cell", $"rk", $"vec_id", round($"cos", 6).as("cosine"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"cell", $"rk")
+        .transform(Ledger.sorted(Labels * 3)($"cell", $"rk"))
     }),
 
     "q85_ivf_cell_quality" -> ((s, dir) => {
@@ -1281,8 +1263,7 @@ object SimilarityQueries {
         .agg(count(lit(1)).as("n_vecs"),
           round(min($"cos"), 6).as("min_cos"),
           round(max($"cos"), 6).as("max_cos"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"cell")
+        .transform(Ledger.sorted(Labels)($"cell"))
     }),
 
     // Embedding near-dup report: each vector's nearest neighbor within its
@@ -1412,8 +1393,7 @@ object SimilarityQueries {
         .where($"rk" <= 3)
         .join(sizes, Seq("cell"))
         .select($"cell", $"rk", $"vec_id", $"proto", $"n_cell")
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"cell", $"rk")
+        .transform(Ledger.sorted(Labels * 3)($"cell", $"rk"))
     }),
 
     // Hybrid retrieval via reciprocal-rank fusion (Cormack et al. 2009:
@@ -1553,8 +1533,7 @@ object SimilarityQueries {
         .withColumn("rk", row_number().over(w))
         .where($"rk" <= PqTopK)
         .select($"q_id", $"rk", $"nn_id", $"adc")
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"q_id", $"rk")
+        .transform(Ledger.sorted(NQueries * PqTopK)($"q_id", $"rk"))
     }),
 
     // IVF-PQ — the composed billion-scale index (FAISS's IVFPQ): the IVF
@@ -1577,8 +1556,7 @@ object SimilarityQueries {
       import s.implicits._
       pqAdcShortlist(s, dir)
         .select($"q_id", $"rk", $"nn_id", $"adc")
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"q_id", $"rk")
+        .transform(Ledger.sorted(NQueries * PqTopK)($"q_id", $"rk"))
     }),
 
     // ADC shortlist → EXACT re-rank — the last rung of the IVF-PQ serving
@@ -1644,8 +1622,7 @@ object SimilarityQueries {
       intra.join(broadcast(inter), $"label" === $"label2")
         .select($"label", $"n", $"a", $"b",
           round(($"b" - $"a") / greatest($"a", $"b"), 6).as("sil"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"label")
+        .transform(Ledger.sorted(Labels)($"label"))
     }),
 
     // MATRYOSHKA audit (Kusupati et al., arXiv:2205.13147): is this
@@ -1699,7 +1676,7 @@ object SimilarityQueries {
           BigDecimal(en.getDouble(i)).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
       }
       rows.toDF("dim_keep", "recall", "mean_energy")
-      }.coalesce(1).orderBy(col("dim_keep").desc)
+      }.transform(Ledger.sorted(4)(col("dim_keep").desc))
     }),
 
     // BINARY quantization — the cheapest rung of the serving ladder
@@ -1778,7 +1755,7 @@ object SimilarityQueries {
         .crossJoin(broadcast(cent))
         .select($"q_id", $"qv", $"qnrm", $"cl",
           (dot($"qv", $"cv") / ($"qnrm" * $"cnrm")).as("pcos"))
-        .coalesce(1) // r16: NQueries × nlist rows (bounded) — skip the window exchange
+        .repartition(1) // NQueries × nlist rows: the probe build's ivf() note
         .withColumn("pr", row_number().over(wProbe))
         .where($"pr" <= NProbe)
         .select($"q_id", $"qv", $"qnrm", $"cl".as("qc"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
-import graft.operators.ResultMemo
+import graft.operators.{Ledger, ResultMemo}
 import graft.sources.Tables
 
 /** Text-analysis operators over `documents` (north-star surface): token
@@ -296,8 +296,7 @@ object TextQueries {
         .groupBy($"tok", $"n_exact").agg(min($"c").as("cms_est"))
         .select($"tok", $"n_exact", $"cms_est",
           ($"cms_est" - $"n_exact").as("overcount"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"n_exact".desc, $"tok".asc)
+        .transform(Ledger.sorted(CmsTop)($"n_exact".desc, $"tok".asc))
     }),
 
     // Equal-frequency length curriculum — 10 quantile bins over document
@@ -324,8 +323,7 @@ object TextQueries {
         .groupBy($"bin")
         .agg(count(lit(1)).as("n_docs"), min($"n_tok").as("min_tok"),
           max($"n_tok").as("max_tok"), sum($"n_tok").as("sum_tok"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"bin")
+        .transform(Ledger.sorted(10)($"bin"))
     }),
 
     // One BPE merge-candidate scan (Sennrich et al. 2016 shape): adjacent
@@ -433,7 +431,7 @@ object TextQueries {
         .groupBy($"source_a", $"source_b")
         .agg(round(sum($"pa" * log($"pa" / $"m") * 0.5 +
           $"pb" * log($"pb" / $"m") * 0.5), 6).as("js_div"))
-      }.coalesce(1).orderBy(col("source_a"), col("source_b"))),
+      }.transform(Ledger.sorted(20 * 19 / 2)(col("source_a"), col("source_b")))),
 
     // Vocabulary coverage / OOV rate: fix the tokenizer vocab as the
     // top-1000 corpus words, then per-source share of token occurrences
@@ -458,8 +456,7 @@ object TextQueries {
           sum(when($"vw".isNull, $"c").otherwise(0L)).as("n_oov"))
         .select($"source", $"n_tokens", $"n_oov",
           round($"n_oov" * lit(1.0) / $"n_tokens", 6).as("oov_rate"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"source")
+        .transform(Ledger.sorted(20)($"source"))
     }),
 
     // Lexical-richness ledger per source, entirely off the session-cached
@@ -484,8 +481,7 @@ object TextQueries {
         .select($"source", $"n_types", $"n_tokens", $"n_hapax",
           round($"n_hapax" * lit(1.0) / $"n_types", 6).as("hapax_ratio"),
           round($"top10_mass" * lit(1.0) / $"n_tokens", 6).as("top10_share"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"source")
+        .transform(Ledger.sorted(20)($"source"))
     }),
 
     // Token-budget epoch allocation — the temperature-sampled mixture
@@ -510,8 +506,7 @@ object TextQueries {
           round(alloc, 4).as("alloc_tokens"),
           round(least(alloc / $"n_tokens", lit(4.0)), 6).as("epochs"),
           (alloc / $"n_tokens" > 4.0).as("capped"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"source")
+        .transform(Ledger.sorted(20)($"source"))
     }),
 
     // Test-gram NOVELTY — the memorization-risk profile, the inverse of
@@ -548,7 +543,7 @@ object TextQueries {
             round(avg($"nf"), 6).as("avg_novelty"),
             round(min($"nf"), 6).as("min_novelty"),
             round(max($"nf"), 6).as("max_novelty"))
-      }.coalesce(1).orderBy($"source")
+      }.transform(Ledger.sorted(20)($"source"))
     }),
 
     // Token counting, two tokenizers: whitespace split and a BPE-ish
@@ -566,8 +561,7 @@ object TextQueries {
           sum($"bpe_toks").as("sum_bpe_toks"),
           round(sum($"ws_toks") * lit(1.0) / count(lit(1)), 6).as("avg_ws_toks"),
           max($"ws_toks").as("max_ws_toks"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"lang")
+        .transform(Ledger.sorted(5)($"lang"))
     }),
 
     // Language ID: stopword-hit scores per candidate language + a CJK
@@ -594,8 +588,7 @@ object TextQueries {
       scored.withColumn("pred_lang", pred)
         .groupBy($"lang", $"pred_lang")
         .agg(count(lit(1)).as("n_docs"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"lang", $"pred_lang")
+        .transform(Ledger.sorted(5 * 5)($"lang", $"pred_lang"))
     }),
 
     // Quality scoring: doc length, average token length, stopword ratio →
@@ -672,8 +665,7 @@ object TextQueries {
         .agg(count(lit(1)).as("n_docs"),
           sum($"n_tok").as("total_tokens"),
           round(avg($"quality"), 6).as("avg_quality"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"lang")
+        .transform(Ledger.sorted(5)($"lang"))
     }),
 
     // Deterministic sampling + train/val/test split: hash the stable key
@@ -688,8 +680,7 @@ object TextQueries {
         .select($"doc_id", $"lang", split.as("split"))
         .groupBy($"split", $"lang")
         .agg(count(lit(1)).as("n_docs"), min($"doc_id").as("min_doc"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"split", $"lang")
+        .transform(Ledger.sorted(3 * 5)($"split", $"lang"))
     }),
 
     // Bigram LM statistics: P(w2|w1) over the corpus — the n-gram language
@@ -710,8 +701,7 @@ object TextQueries {
         .agg(count(lit(1)).as("n_docs"),
           round(sum($"ws_toks") * lit(1.0) / count(lit(1)), 6).as("avg_ws_toks"),
           countDistinct($"lang").as("n_langs"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"len_bucket")
+        .transform(Ledger.sorted(10)($"len_bucket"))
     }),
 
     // Memoized (r9 report treatment): bounded per-batch ledger,
@@ -801,8 +791,7 @@ object TextQueries {
         .agg(count(lit(1)).as("n_docs"),
           sum($"toks").cast("long").as("bin_toks"),
           min($"doc_id").as("first_doc"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"shard", $"bin")
+        .orderBy($"shard", $"bin") // bins grow with the token mass: no Ledger.sorted
     }),
 
     // Packing EFFICIENCY report — the number a training run checks after
@@ -825,8 +814,7 @@ object TextQueries {
           max($"bin_toks").as("max_bin_toks"),
           round(sum($"bin_toks") * lit(1.0) / (count(lit(1)) * lit(PackBudget)), 6)
             .as("fill_ratio"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"shard")
+        .transform(Ledger.sorted(16)($"shard"))
     }),
 
     // SHARD EXPORT GATE — operators.ShardExport graduated from spec-only
@@ -893,8 +881,7 @@ object TextQueries {
             / count(lit(1)), 6).as("frac_split"),
           (ceil(sum($"toks") * lit(1.0) / PackBudget).cast("long") * PackBudget
             - sum($"toks")).cast("long").as("tail_pad"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"shard")
+        .transform(Ledger.sorted(16)($"shard"))
     }),
 
     // Heavy-tail DIAGNOSIS of the document-length distribution — the
@@ -924,8 +911,7 @@ object TextQueries {
           max(when($"rk" === $"k" + 1, $"x")).as("x_threshold"))
         .select($"k", $"x_threshold",
           round($"k" / ($"sum_ln" - $"k" * log($"x_threshold")), 6).as("alpha"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"k")
+        .transform(Ledger.sorted(3)($"k"))
     }),
 
     // Fold-based UNCERTAINTY on corpus statistics — the missing error
@@ -964,8 +950,7 @@ object TextQueries {
         .select($"source", $"n_folds", $"n_docs", $"mean_quality", $"stderr",
           round($"mean_quality" - lit(1.96) * $"stderr", 6).as("ci_lo"),
           round($"mean_quality" + lit(1.96) * $"stderr", 6).as("ci_hi"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"source")
+        .transform(Ledger.sorted(20)($"source"))
     }),
 
     // Vocabulary-size coverage curve — the "how big must the vocab be"
@@ -992,8 +977,7 @@ object TextQueries {
           least($"vocab_n".cast("long"), $"vocab_size").as("n_words"),
           $"covered", $"tot".as("total_occurrences"),
           round($"covered" * lit(1.0) / $"tot", 6).as("coverage"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"vocab_n")
+        .transform(Ledger.sorted(3)($"vocab_n"))
     }),
 
     // Iterative BPE training through the driver gate — q142 gates merge
@@ -1076,8 +1060,7 @@ object TextQueries {
             .as("chars_per_bpe_tok"),
           round($"total_bpe_tokens" * lit(1.0) / $"n_docs", 6)
             .as("bpe_per_doc"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"lang", $"source")
+        .transform(Ledger.sorted(5 * 20)($"lang", $"source"))
     }),
 
     // Quality-score CALIBRATION — the reliability table for q52's linear
@@ -1111,8 +1094,7 @@ object TextQueries {
         .agg(count(lit(1)).as("n_docs"),
           sum($"p").as("n_gopher_pass"),
           round(sum($"p") * lit(1.0) / count(lit(1)), 6).as("pass_rate"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"decile")
+        .transform(Ledger.sorted(10)($"decile"))
     }),
 
     // Eval decontamination — flag train-split documents that share any
@@ -1176,8 +1158,7 @@ object TextQueries {
           sum($"n_emails").as("total_emails"),
           sum($"n_phones").as("total_phones"),
           sum($"chars_redacted").as("total_chars_redacted"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"lang")
+        .transform(Ledger.sorted(5)($"lang"))
     }),
 
     // Stratified sampling — a fixed-size deterministic sample per
@@ -1199,8 +1180,7 @@ object TextQueries {
           min($"doc_id").as("min_doc"),
           max($"doc_id").as("max_doc"),
           min($"hkey").as("first_key"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"lang", $"source")
+        .transform(Ledger.sorted(5 * 20)($"lang", $"source"))
     }),
 
     // Corpus profile unpivot — melt the per-language rollup into tall
@@ -1216,8 +1196,7 @@ object TextQueries {
           countDistinct($"source").as("n_sources"))
         .unpivot(Array($"lang"), Array($"n_docs", $"total_chars", $"n_sources"),
           "metric", "value")
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"lang", $"metric")
+        .transform(Ledger.sorted(5 * 3)($"lang", $"metric"))
     }),
 
     // The composite Gopher-style document filter — the verdict table a
@@ -1256,8 +1235,7 @@ object TextQueries {
           sum(when(repetitive, 1).otherwise(0)).as("n_repetitive"),
           sum(when(!tooShort && !badLen && !lowStop && !repetitive, 1)
             .otherwise(0)).as("n_kept"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"lang")
+        .transform(Ledger.sorted(5)($"lang"))
     }),
 
     // Per-source drift monitor — the first dashboard a multi-source crawl
@@ -1290,8 +1268,7 @@ object TextQueries {
           $"n_langs",
           when(abs(avgChars - $"gavg") > lit(0.05) * $"gavg", 1).otherwise(0)
             .cast("int").as("drift"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"source")
+        .transform(Ledger.sorted(20)($"source"))
     }),
 
     // Deterministic mixture sampling — rebalance an English-heavy corpus
@@ -1313,8 +1290,7 @@ object TextQueries {
         .select($"lang", $"n_total", $"n_sampled",
           round($"n_sampled" * lit(1.0) / $"n_total", 6).as("achieved_rate"),
           $"min_doc", $"max_doc")
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"lang")
+        .transform(Ledger.sorted(5)($"lang"))
     }),
 
     // Deterministic WEIGHTED sampling: per source, the 3 docs with the
@@ -1339,8 +1315,7 @@ object TextQueries {
         .withColumn("rk", row_number().over(w))
         .where($"rk" <= 3)
         .select($"source", $"rk", $"doc_id", $"n_chars", $"prio")
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"source", $"rk")
+        .transform(Ledger.sorted(20 * 3)($"source", $"rk"))
     }),
 
     // Zipf profile of the corpus vocabulary: top-50 terms with their
@@ -1360,8 +1335,7 @@ object TextQueries {
         .crossJoin(broadcast(total))
         .select($"rnk", $"word", $"cnt",
           round(($"cnt" * $"rnk").cast("double") / $"n_total", 6).as("zipf_c"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"rnk")
+        .transform(Ledger.sorted(50)($"rnk"))
     }),
 
     // LM-perplexity quality filter (the CCNet move): train an add-one-
@@ -1404,8 +1378,7 @@ object TextQueries {
         .orderBy($"nll".desc, $"doc_id".asc).limit(15)
         .withColumn("rnk", row_number().over(w))
         .select($"rnk", $"doc_id", $"lang", $"n_bigrams", $"nll")
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"rnk")
+        .transform(Ledger.sorted(15)($"rnk"))
     }),
 
     // Mixture-budget solver — the data-mixing arithmetic a training run
@@ -1431,8 +1404,7 @@ object TextQueries {
         .select($"lang", $"toks", $"share",
           round(least(lit(1.0), $"budget" * $"share" / $"toks"), 6).as("keep_rate"),
           round($"budget" * $"share", 2).as("target_tokens"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"lang")
+        .transform(Ledger.sorted(5)($"lang"))
     }),
 
     // The END-TO-END curation funnel — every gate a training-data build
@@ -1538,8 +1510,7 @@ object TextQueries {
           round(min($"ent"), 6).as("min_entropy"),
           round(max($"ent"), 6).as("max_entropy"),
           sum(when($"ent" < 3.0, 1L).otherwise(0L)).as("n_low_entropy"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"lang")
+        .transform(Ledger.sorted(5)($"lang"))
     }),
 
     // Tokenizer-fertility report — the tokenizer-efficiency ledger a
@@ -1557,8 +1528,7 @@ object TextQueries {
           sum($"n_chars").as("total_chars"),
           round(sum($"n_chars") * lit(1.0) / sum($"n_tok"), 6).as("chars_per_tok"),
           round(sum($"n_tok") * lit(1.0) / count(lit(1)), 6).as("toks_per_doc"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"lang", $"source")
+        .transform(Ledger.sorted(5 * 20)($"lang", $"source"))
     }),
 
     // DSIR — Data Selection with Importance Resampling (Xie et al. 2023,
@@ -1658,8 +1628,7 @@ object TextQueries {
           sum(when($"pct" < 0.8, 1L).otherwise(0L)).as("n_train"),
           sum(when($"pct" >= 0.8 && $"pct" < 0.9, 1L).otherwise(0L)).as("n_val"),
           sum(when($"pct" >= 0.9, 1L).otherwise(0L)).as("n_test"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"lang")
+        .transform(Ledger.sorted(5)($"lang"))
     }),
 
     // MERGE-LADDER fertility curve — the tokenizer-sizing tradeoff table:
@@ -1706,8 +1675,7 @@ object TextQueries {
         val t = sums.getLong(k)
         (k, t, r6(t * 1.0 / tws), r6(nc * 1.0 / t))
       }.toDF("n_merges", "total_bpe_tokens", "bpe_per_ws_tok", "chars_per_bpe_tok")
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"n_merges")
+        .transform(Ledger.sorted(4)($"n_merges"))
     }),
 
     // TOKEN-BUDGET curation — "keep the best documents until the token
@@ -1742,8 +1710,7 @@ object TextQueries {
         .agg(count(lit(1)).as("n_kept"), sum($"n_tok").as("tokens_kept"))
         .withColumn("threshold_bin", lit(marginal))
         .withColumn("budget_tokens", lit(budget))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"lang")
+        .transform(Ledger.sorted(5)($"lang"))
     }),
 
     // Memoized per batch (the q110/q170 report treatment): a retrieval
@@ -1923,8 +1890,7 @@ object TextQueries {
         .join(broadcast(tot), Seq("source"))
         .select($"source", $"rk", $"prefix", $"n_docs",
           round($"n_docs" * lit(1.0) / $"n_src", 6).as("share"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"source", $"rk")
+        .transform(Ledger.sorted(20 * 3)($"source", $"rk"))
     }),
 
     // Distilled quality classifier — the CCNet/fastText move: an
@@ -2028,8 +1994,7 @@ object TextQueries {
             .as("frac_uncertain"),
           coalesce($"n_selected", lit(0L)).as("n_selected"),
           $"mean_abs_selected")
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"source")
+        .transform(Ledger.sorted(20)($"source"))
       rows
     }),
 
@@ -2057,8 +2022,7 @@ object TextQueries {
           round($"np" * lit(1.0) / $"n", 6).as("pos_rate"),
           round($"cum_pos" * lit(1.0) / $"cum_n", 6).as("cum_precision"),
           round($"cum_pos" * lit(1.0) / $"pp", 6).as("cum_recall"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"bin".desc)
+        .transform(Ledger.sorted(401)($"bin".desc))
       rows
     }),
 
@@ -2166,8 +2130,7 @@ object TextQueries {
           count(lit(1)).as("n_bigrams"),
           round(-sum($"lp") / count(lit(1)), 6).as("nll"),
           round(exp(-sum($"lp") / count(lit(1))), 6).as("ppl"))
-        .coalesce(1) // r16 ledger-sort treatment (CoreQueries q03 note): bounded ledger
-        .orderBy($"lang")
+        .transform(Ledger.sorted(5)($"lang"))
       rows
     })
   )

@@ -464,7 +464,7 @@ class ArtifactStoreSpec extends SparkSpec {
       assert(tmp.exists())
       assert(ArtifactStore.buildCount(name) == 1)
       ArtifactStore.table(spark, name, Seq(in)) {
-        fail("census must not have invalidated the artifact"); null
+        fail("census must not have invalidated the artifact")
       }.collect()
       assert(ArtifactStore.buildCount(name) == 1)
     }

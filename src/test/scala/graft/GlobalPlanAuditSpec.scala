@@ -1,8 +1,14 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Repartition
+import org.apache.spark.sql.graft.DatasetShim
+
+import graft.operators.{Ledger, PlanAudit}
+
 /** Structural scale rules enforced over the ENTIRE query surface — not a
   * sampled pin but an audit of every SparkEntry query's plan, so a new
-  * query cannot ship with one of the two classic scale-killers:
+  * query cannot ship with one of the three classic scale-killers:
   *
   *   1. a physical CartesianProduct (unbounded pair work). Bounded
   *      1-row/broadcast cross joins plan as BroadcastNestedLoopJoin with
@@ -14,16 +20,23 @@ package graft
   *      group-count or an explicit k, not the event/document count.
   *      (q107's two-pass rank, q93/q96's limit-then-rank, and the
   *      bounded-domain rollups all satisfy this by construction.)
+  *   3. a single-task sort over an unchecked row count. Every
+  *      one-partition ledger sort goes through [[Ledger.sorted]], whose
+  *      tag states the ledger's scale-independent row bound: a global sort
+  *      over an untagged `coalesce(1)` fails the sweep, and each tagged
+  *      input is COUNTED and must stay within its bound.
   *
-  * Plans are built at sf0.001 — shape, not size, is under audit. The
-  * rules themselves live in [[graft.operators.PlanAudit]] (the user-facing
-  * plan linter); this spec sweeps them over the whole pack.
+  * Plans are built at sf0.001 — shape, not size, is under audit, except
+  * for rule 3's counts, which execute each tagged ledger's input. The
+  * plan rules live in [[graft.operators.PlanAudit]] (the user-facing plan
+  * linter); this spec sweeps them over the whole pack.
   */
 class GlobalPlanAuditSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
-  /** Sweep every query's plan through `check` with the report-memo in
+  /** Every query's plan report and [[ledgerRows]], swept once for all the
+    * pack-wide tests, with the report-memo in
     * PASSTHROUGH mode (spark.graft.report.passthrough): the
     * `ResultMemo.report` ledgers (~60 queries; the r10 migration moved
     * the last 14 batch-analytic hand-collectors — q194, q228, q230-q233,
@@ -41,16 +54,26 @@ class GlobalPlanAuditSpec extends SparkSpec {
     * MEMO cold but not the cluster idle — report bodies riding eager hub
     * builds (cache()+count() at construction) still run that work.
     */
-  private def offenders(check: graft.operators.PlanAudit.Report => Boolean): Seq[String] = {
+  private lazy val sweep: Seq[(String, PlanAudit.Report, Seq[(Long, Long)])] = {
     spark.conf.set("spark.graft.report.passthrough", "true")
-    try SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      if (check(graft.operators.PlanAudit.audit(fn(spark, dir)))) Some(name)
-      else None
+    try SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val df = fn(spark, dir)
+      (name, PlanAudit.audit(df), ledgerRows(df))
     } finally {
       spark.conf.unset("spark.graft.report.passthrough")
       graft.operators.ResultMemo.release(spark)
     }
   }
+
+  private def offenders(check: PlanAudit.Report => Boolean): Seq[String] =
+    sweep.collect { case (name, rep, _) if check(rep) => name }
+
+  /** (bound, counted input rows) of every [[Ledger.sorted]] site in `df`. */
+  private def ledgerRows(df: DataFrame): Seq[(Long, Long)] =
+    df.queryExecution.analyzed.collect {
+      case r: Repartition if r.getTagValue(Ledger.MaxRows).isDefined =>
+        (r.getTagValue(Ledger.MaxRows).get, DatasetShim.ofRows(spark, r.child).count())
+    }
 
   test("no query plans a physical cartesian product") {
     val bad = offenders(_.cartesian)
@@ -60,6 +83,35 @@ class GlobalPlanAuditSpec extends SparkSpec {
   test("every unpartitioned window sits above a limit or a bounded-grain aggregate") {
     val bad = offenders(_.globalWindow)
     assert(bad.isEmpty, s"data-sized unpartitioned windows in: $bad")
+  }
+
+  test("no global sort sits on a coalesce(1) that Ledger.sorted did not tag") {
+    val bad = offenders(_.untaggedLedgerSort)
+    assert(bad.isEmpty, s"hand-spelled coalesce(1).orderBy in: $bad")
+  }
+
+  test("every Ledger.sorted input stays within its row bound") {
+    val sites = sweep.flatMap { case (name, _, rows) => rows.map(name -> _) }
+    assert(sites.nonEmpty, "the sweep reached no Ledger.sorted site")
+    val over = sites.filter { case (_, (bound, n)) => n > bound }
+    assert(over.isEmpty, s"ledger inputs over their bound (query, (bound, rows)): $over")
+  }
+
+  test("negative controls: an over-bound or hand-spelled ledger sort IS flagged") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val byType = graft.sources.Tables.events(spark, dir)
+      .groupBy($"event_type").agg(count(lit(1)).as("n"))
+    // a bound below the 5-type domain is reported with its real count
+    assert(ledgerRows(byType.transform(Ledger.sorted(2)($"event_type"))) == Seq((2L, 5L)))
+    assert(PlanAudit.audit(byType.coalesce(1).orderBy($"event_type")).untaggedLedgerSort,
+      "a hand-spelled coalesce(1).orderBy must be reported as untagged")
+    // the honest bound passes, and its tag survives later operators
+    val ok = byType.transform(Ledger.sorted(5)($"event_type"))
+      .where($"n" > 0).select($"event_type")
+    assert(ledgerRows(ok) == Seq((5L, 5L)))
+    assert(PlanAudit.audit(ok).ok, s"plan audit: ${PlanAudit.audit(ok)}")
+    graft.operators.ResultMemo.release(spark)
   }
 
   test("negative control: ntile over an entity-grain aggregate IS flagged") {

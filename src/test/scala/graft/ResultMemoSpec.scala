@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 /** The batch-lifetime store (operators.ResultMemo): the report-treatment

@@ -2,7 +2,6 @@ package graft
 
 import scala.util.Random
 
-import org.apache.spark.sql.functions._
 
 import graft.operators.BloomPrefilter
 

@@ -623,7 +623,7 @@ class Round8LawsSpec extends SparkSpec {
       assert(sizes.sum == total)
     }
     // higher m_score = higher average monetary, strictly
-    val marginal = rows.groupBy(_._3).toSeq.sortBy(_._1).map { case (m, g) =>
+    val marginal = rows.groupBy(_._3).toSeq.sortBy(_._1).map { case (_, g) =>
       g.map(x => x._5 * x._4).sum / g.map(_._4).sum
     }
     marginal.sliding(2).foreach { case Seq(a, b) =>

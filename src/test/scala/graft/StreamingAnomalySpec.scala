@@ -1,7 +1,5 @@
 package graft
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.streaming.StreamingAnomaly

@@ -3,7 +3,6 @@ package graft
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.functions._
 
 import graft.model.EventRow
 import graft.sources.EventLog
