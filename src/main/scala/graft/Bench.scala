@@ -291,9 +291,13 @@ object Bench {
       System.err.println(s"[bench] warmup events failed: ${e.getMessage}") }
     spark.range(1000000).selectExpr("sum(id * 2)").collect()
 
-    if (explain) names.foreach { name =>
-      println(s"===== $name =====")
-      construct(name).explain("formatted")
+    // passthrough: a ResultMemo.report query prints its derivation plan,
+    // not the memo's driver-local relation, so plan diffs can see it
+    if (explain) EngineSession.withConf(spark, "spark.graft.report.passthrough" -> "true") {
+      names.foreach { name =>
+        println(s"===== $name =====")
+        construct(name).explain("formatted")
+      }
     }
 
     // Prepare/execute split (the TPC pattern): each query's DataFrame is

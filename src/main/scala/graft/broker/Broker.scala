@@ -168,7 +168,7 @@ final class Topic(
   /** Publish a batch: validate, persist, then fan out in the caller's
     * thread. The batch is one entry of the log's group commit
     * ([[EventLog.appendRows]]): concurrent publishers on the same log share
-    * one write job, and this call returns only after the batch's own rows
+    * one commit, and this call returns only after the batch's own rows
     * have committed, so a single event is just a batch of one. Returns
     * receiverCount of the LAST event for parity with the reference's
     * per-event result (reference: src/topic.ts:101-144).
@@ -251,6 +251,8 @@ final class EventBroker(
     metrics.gauge("broker.delivery_errors")(() => counters.deliveryErrors.get())
     metrics.gauge("log.flushes")(() => log.totalFlushes)
     metrics.gauge("log.flushed_rows")(() => log.totalFlushedRows)
+    metrics.gauge("log.flush_ms")(() => log.totalFlushMillis)
+    metrics.gauge("log.files_written")(() => log.totalFilesWritten)
     this
   }
 

@@ -1487,10 +1487,13 @@ object StreamingGateQueries {
               |  graft_top_token_share(array('a','b','a','b')) AS share,
               |  graft_token_entropy(array('a','a','a','a')) AS ent""".stripMargin)
             .collect()(0)
+          // the probed value is a column, not a literal: a folded
+          // xxhash64(42L) is a negative long literal, which the bloom
+          // probe's generated code spells `(Long)-…L` and Janino rejects
           val bloomOk = s.sql(
             """SELECT graft_bloom_contains(
               |  (SELECT graft_bloom_agg(xxhash64(id)) FROM range(100)),
-              |  xxhash64(42L)) AS ok""".stripMargin)
+              |  xxhash64(id)) AS ok FROM range(42, 43)""".stripMargin)
             .collect()(0).getBoolean(0)
           def ts(ms: Long) = new java.sql.Timestamp(ms)
           val latest = Seq(

@@ -187,23 +187,9 @@ class BrokerSpec extends SparkSpec {
     assert(b.log.getEventsTyped("bat").collect().map(_.id).last == "b9")
   }
 
-  /** Run `n` publishers on their own threads while the test holds the
-    * log's monitor, so no flush can start; release it once all `n` are
-    * queued. Returns each thread's result, in thread order.
-    */
   private def publishAsOneGroup(b: EventBroker, n: Int)(
-      publish: Int => PublishResult): Seq[PublishResult] = {
-    val results = new Array[PublishResult](n)
-    val threads = (0 until n).map(i => new Thread(() => results(i) = publish(i)))
-    b.log.synchronized {
-      threads.foreach(_.start())
-      val deadline = System.nanoTime() + 60L * 1000000000L
-      while (b.log.queuedAppends < n && System.nanoTime() < deadline) Thread.sleep(5)
-      assert(b.log.queuedAppends == n, "every publisher queued behind the held monitor")
-    }
-    threads.foreach(_.join())
-    results.toSeq
-  }
+      publish: Int => PublishResult): Seq[PublishResult] =
+    GroupCommit.asOneGroup(b.log, n)(publish).map(_.get)
 
   test("concurrent publishes from multiple threads all persist (append is serialized)") {
     val b = newBroker()
@@ -228,11 +214,12 @@ class BrokerSpec extends SparkSpec {
     assert(found.asScala.toMap == acked.asScala.map(_ -> java.lang.Boolean.TRUE).toMap)
   }
 
-  test("group commit: publishers queued behind one flush commit as ONE write job") {
+  test("group commit: publishers queued behind one flush commit as ONE file") {
     val b = newBroker()
     val results = publishAsOneGroup(b, 8)(i => b.publish("grp", "x", s"""{"i":$i}"""))
     assert(results.forall(_.success))
     assert(b.log.totalFlushes == 1 && b.log.totalFlushedRows == 8)
+    assert(b.log.totalFilesWritten == 1)
     val ids = b.log.getEventsTyped("grp").collect().map(_.id).toSeq
     assert(ids.sorted == results.map(_.eventId).sorted) // each event exactly once
   }
@@ -257,7 +244,7 @@ class BrokerSpec extends SparkSpec {
       "1.0")
     b.createTopic("users", TopicOptions(schemaRegistry = Some(reg)))
     assert(!b.publish("users", "user.created", "{}").success) // rejected before enqueue
-    // a regular file where the log directory should be: the write job fails
+    // a regular file where the log directory should be: the commit fails
     val logFile = new java.io.File(b.log.path)
     assert(logFile.delete() && logFile.createNewFile())
     val failed = publishAsOneGroup(b, 4)(i => b.publish("fail", "x", s"""{"i":$i}"""))
@@ -271,10 +258,13 @@ class BrokerSpec extends SparkSpec {
     // none of the failed group's events reached the log
     assert(b.log.getEventsTyped("fail").collect().map(_.id).toSeq == Seq(ok.eventId))
     import spark.implicits._
-    assert(metrics.gauges(spark).as[(String, Long)].collect().toMap == Map(
+    val gauges = metrics.gauges(spark).as[(String, Long)].collect().toMap
+    // flush time is wall clock: present and non-negative, its value free
+    assert(gauges.get("log.flush_ms").exists(_ >= 0L))
+    assert(gauges - "log.flush_ms" == Map(
       "broker.published" -> 1L, "broker.schema_rejected" -> 1L,
       "broker.persist_failed" -> 4L, "broker.delivery_errors" -> 1L,
-      "log.flushes" -> 1L, "log.flushed_rows" -> 1L))
+      "log.flushes" -> 1L, "log.flushed_rows" -> 1L, "log.files_written" -> 1L))
   }
 
   test("DLQ retry re-dispatches through the original subscription (broker.ts:166-183)") {

@@ -77,6 +77,31 @@ class BucketedEventLogSpec extends SparkSpec {
     assert(seen.toSeq == Seq("e1", "e3"))
   }
 
+  test("a group that fails in one bucket dir leaves no visible file in any, fails every caller") {
+    val log = EventLog.bucketed(spark, tmpDir("blog"), buckets = 4)
+    def topicIn(b: Int) = Iterator.from(0).map(i => s"t$i").find(log.bucketOf(_) == b).get
+    // bucket 1 has a dir; bucket 2's dir is blocked by a regular file. Dirs
+    // are written in name order, so bucket 1's file is written before
+    // bucket 2's fails
+    log.appendRows(Seq(row("s", "x", topicIn(1), 1000L)))
+    assert(new java.io.File(log.path, "topic_bucket=2").createNewFile())
+    def dirFiles: Map[String, Seq[String]] = // every name, hidden and checksum files included
+      new java.io.File(log.path).listFiles().filter(_.getName.startsWith("topic_bucket="))
+        .map(d => d.getName -> Option(d.listFiles()).toSeq.flatten.map(_.getName).sorted).toMap
+    val before = dirFiles
+    val outcomes = GroupCommit.asOneGroup(log, 4) { i =>
+      log.appendRows(Seq(row(s"f$i", "x", topicIn(1 + i % 2), 2000L + i)))
+    }
+    assert(outcomes.forall(_.isFailure), outcomes)
+    assert(dirFiles == before) // no visible file, and no hidden one left behind
+    assert(log.totalFlushes == 1 && log.totalFilesWritten == 1) // the seed's only
+    assert(log.getEventsTyped(topicIn(1)).collect().map(_.id).toSeq == Seq("s"))
+    // once the dir is free again, the same rows commit
+    assert(new java.io.File(log.path, "topic_bucket=2").delete())
+    log.appendRows((0 until 4).map(i => row(s"f$i", "x", topicIn(1 + i % 2), 2000L + i)))
+    assert(log.getEventsTyped(topicIn(2)).collect().map(_.id).toSeq == Seq("f1", "f3"))
+  }
+
   test("deleteEvents rewrites only the bucket, counts only the topic") {
     val log = seeded()
     val deleted = log.deleteEvents("web", olderThanMillis = 3000)

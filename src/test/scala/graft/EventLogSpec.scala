@@ -1,6 +1,11 @@
 package graft
 
+import java.io.File
 import java.sql.Timestamp
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 
 import graft.model.EventRow
 import graft.sources.{EventLog, ScanOptions}
@@ -167,10 +172,93 @@ class EventLogSpec extends SparkSpec {
     val orphan = new java.io.File(log.path, ".staging_topic=web")
     assert(orphan.mkdirs())
     new java.io.File(orphan, "part-00000.parquet").createNewFile()
-    assert(log.vacuum() == 1)
-    assert(!orphan.exists())
+    // and a flush that died between its write and its rename
+    val hidden = new java.io.File(log.path, "topic=web/.part-00000-x.c000.snappy.parquet")
+    assert(hidden.createNewFile())
+    assert(log.vacuum() == 2)
+    assert(!orphan.exists() && !hidden.exists())
     assert(log.vacuum() == 0) // idempotent
     assert(log.getEventsTyped("web").collect().length == 4) // data intact
+    assert(visibleFiles(log).size == 2) // one committed file per topic dir
+  }
+
+  /** Committed data files under a log, as `<partition dir>/<name>`. */
+  private def visibleFiles(log: EventLog): Seq[String] =
+    new File(log.path).listFiles().filter(_.isDirectory).toSeq.flatMap { d =>
+      d.listFiles().map(_.getName).filter(_.startsWith("part-")).map(n => s"${d.getName}/$n")
+    }.sorted
+
+  private def footer(file: File) = {
+    val in = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new Path(file.getAbsolutePath), spark.sparkContext.hadoopConfiguration))
+    try in.getFooter.getFileMetaData finally in.close()
+  }
+
+  private val RowMetadata = "org.apache.spark.sql.parquet.row.metadata"
+
+  test("direct commit: a flushed file matches a Spark-written one (footer, extension)") {
+    val rows = Seq(
+      row("e1", "click", "web", 1000).copy(metadata = Map("k" -> "v")),
+      row("e2", "view", "web", 2000))
+    def onlyFile(log: EventLog): File = {
+      val files = visibleFiles(log)
+      assert(files.size == 1, files)
+      new File(log.path, files.head)
+    }
+    import spark.implicits._
+    for {
+      layout <- Seq[String => EventLog](p => new EventLog(spark, p), EventLog.bucketed(spark, _, 4))
+      tsType <- Seq("INT96", "TIMESTAMP_MICROS")
+    } EngineSession.withConf(spark, "spark.sql.parquet.outputTimestampType" -> tsType) {
+      val bySpark = layout(tmpDir("sparklog"))
+      bySpark.append(spark.createDataset(rows).coalesce(1))
+      val direct = layout(tmpDir("directlog"))
+      direct.appendRows(rows)
+      val (s, d) = (onlyFile(bySpark), onlyFile(direct))
+      val (sm, dm) = (footer(s), footer(d))
+      assert(dm.getSchema == sm.getSchema, s"$tsType: ${dm.getSchema} vs ${sm.getSchema}")
+      assert(dm.getSchema.toString.contains(if (tsType == "INT96") "int96" else "TIMESTAMP(MICROS"))
+      assert(dm.getKeyValueMetaData.get(RowMetadata) == sm.getKeyValueMetaData.get(RowMetadata))
+      assert(dm.getKeyValueMetaData.get(RowMetadata) != null)
+      def ext(f: File) = f.getName.substring(f.getName.indexOf(".c000"))
+      assert(ext(d) == ext(s))
+      assert(direct.getEventsTyped("web").collect().toSeq == rows)
+    }
+  }
+
+  test("direct commit round trip: maps, sub-millisecond timestamps, escaped topics") {
+    val topic = "aggregate.user:group=7%x"
+    val subMs = new Timestamp(5000L)
+    subMs.setNanos(123456000) // 5.123456 s: microseconds survive, as in a Spark write
+    val rows = Seq(
+      row("n", "t", topic, 1000).copy(metadata = null),
+      row("e", "t", topic, 2000),
+      row("m", "t", topic, 3000).copy(metadata = Map("a" -> "1", "b" -> "")),
+      EventRow("s", "t", topic, subMs, "2.0", """{"x":1}""", Map("c" -> "3")))
+    val perTopic = new EventLog(spark, tmpDir("log"))
+    for (log <- Seq(perTopic, EventLog.bucketed(spark, tmpDir("blog"), 4))) {
+      log.appendRows(rows)
+      assert(log.getEventsTyped(topic).collect().toSeq == rows)
+      assert(log.all.count() == 4L)
+    }
+    assert(visibleFiles(perTopic).map(_.takeWhile(_ != '/')) ==
+      Seq("topic=aggregate.user%3Agroup%3D7%25x"))
+  }
+
+  test("direct commit: one 8-row group over 2 topics leaves exactly 2 visible files") {
+    val log = new EventLog(spark, tmpDir("log"))
+    val outcomes = GroupCommit.asOneGroup(log, 8) { i =>
+      log.appendRows(Seq(row(s"e$i", "click", if (i % 2 == 0) "web" else "app", 1000L + i)))
+    }
+    assert(outcomes.forall(_.isSuccess))
+    assert(log.totalFlushes == 1 && log.totalFlushedRows == 8 && log.totalFilesWritten == 2)
+    assert(visibleFiles(log).map(_.takeWhile(_ != '/')) == Seq("topic=app", "topic=web"))
+    assert(log.getEventsTyped("web").collect().map(_.id).toSeq == Seq("e0", "e2", "e4", "e6"))
+    assert(log.getEventsTyped("app").collect().map(_.id).toSeq == Seq("e1", "e3", "e5", "e7"))
+    // no hidden data file is left behind (`.part-….crc` are the local
+    // filesystem's checksums of the visible files)
+    assert(new File(log.path).listFiles().filter(_.isDirectory).forall(_.listFiles()
+      .forall(f => !f.getName.startsWith(".part-") || f.getName.endsWith(".crc"))))
   }
 
   test("append after delete keeps the log usable") {
