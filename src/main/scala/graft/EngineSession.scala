@@ -55,7 +55,8 @@ object EngineSession {
   /** Run `body` with the session confs `kvs` set, then put each key back:
     * its prior value, or unset when it had none. The session conf is
     * shared, so a section that races another thread's must run under a
-    * lock the two share (the gate sections use `GateFixtures.confLocked`).
+    * lock the two share (the gate sections run under `GateFixtures.narrow`,
+    * which holds one).
     */
   def withConf[T](s: SparkSession, kvs: (String, String)*)(body: => T): T = {
     val prior = kvs.map { case (k, _) => k -> s.conf.getOption(k) }

@@ -19,11 +19,14 @@ import java.util.concurrent.atomic.AtomicLong
   * scheduler; this class is the in-process convenience the reference
   * defaults to.
   *
-  * Sweeps run serially on one thread: overlapping delete jobs on one log
-  * would contend on the same partitions (EventLog.append's serialization
-  * note applies to rewrites too). A sweep that throws is logged-and-dropped
-  * — the next tick retries; a retention failure must not kill the timer,
-  * matching the reference's fire-and-forget `setInterval` callback.
+  * Sweeps run serially on one thread. Each topic's delete is an
+  * `EventLog` rewrite that holds the log's monitor, as the reference's
+  * sweep holds its single event loop (src/persistence.ts:74-93): no
+  * publish commits while a topic's partition is rewritten (publishes to
+  * that log wait), and no two rewrites overlap. A sweep that throws is
+  * logged-and-dropped — the next tick retries; a retention failure must
+  * not kill the timer, matching the reference's fire-and-forget
+  * `setInterval` callback.
   */
 final class RetentionScheduler(
     broker: EventBroker,

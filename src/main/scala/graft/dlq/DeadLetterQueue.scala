@@ -3,9 +3,11 @@ package graft.dlq
 import java.sql.Timestamp
 import scala.collection.concurrent.TrieMap
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 
 import graft.model.{DeadLetterRow, Event, EventRow}
+import graft.sources.DirSwap
 
 /** Dead-letter queue contract (reference: src/types.ts:224-251): failed
   * events with error/subscription/attempts bookkeeping, filtered reads
@@ -95,14 +97,23 @@ final class InMemoryDeadLetterQueue extends DeadLetterQueue {
   * partition rewrites — fine for a queue whose contents should be rare;
   * a high-churn deployment would layer a merge-on-read log (SURVEY.md §2.1
   * S7: last-write-wins by (event_id, max attempts)).
+  *
+  * Mutations are synchronized on the instance, so an add never lands
+  * between a rewrite's read and its swap. A rewrite swaps the table in
+  * through [[DirSwap]], and a queue constructed after a crashed swap
+  * settles it first: it reads the old entries or the new ones, never
+  * neither.
   */
 final class ParquetDeadLetterQueue(spark: SparkSession, path: String) extends DeadLetterQueue {
   import spark.implicits._
 
-  private def fs = org.apache.hadoop.fs.FileSystem.get(
-    java.net.URI.create(path), spark.sparkContext.hadoopConfiguration)
+  private def fs = FileSystem.get(java.net.URI.create(path), spark.sparkContext.hadoopConfiguration)
 
-  private def exists = fs.exists(new org.apache.hadoop.fs.Path(path))
+  private val live = new Path(path)
+
+  DirSwap.recover(fs, live)
+
+  private def exists = fs.exists(live)
 
   private def now() = new Timestamp(System.currentTimeMillis())
 
@@ -111,19 +122,21 @@ final class ParquetDeadLetterQueue(spark: SparkSession, path: String) extends De
     else spark.read.schema(Event.dlqSchema).parquet(path).as[DeadLetterRow]
 
   override def addEvent(event: EventRow, error: String, subscriptionId: String): Unit =
-    Seq(DeadLetterRow(event, error, subscriptionId, now(), 1))
-      .toDS().write.mode(SaveMode.Append).parquet(path)
+    this.synchronized {
+      Seq(DeadLetterRow(event, error, subscriptionId, now(), 1))
+        .toDS().write.mode(SaveMode.Append).parquet(path)
+    }
 
   /** Bulk ingest — the scale path: a failed-delivery BATCH (e.g. a whole
     * micro-batch's failures) lands as one distributed append, not N
     * driver-side writes.
     */
-  def addEvents(rows: Dataset[DeadLetterRow]): Unit =
+  def addEvents(rows: Dataset[DeadLetterRow]): Unit = this.synchronized {
     rows.write.mode(SaveMode.Append).parquet(path)
+  }
 
   /** Drop the queue's storage (test/fixture hygiene). */
-  def reset(): Unit =
-    if (exists) fs.delete(new org.apache.hadoop.fs.Path(path), true)
+  def reset(): Unit = this.synchronized { if (exists) fs.delete(live, true) }
 
   override def getEvents(topic: Option[String], eventType: Option[String],
       limit: Option[Int]): Seq[DeadLetterRow] =
@@ -143,7 +156,7 @@ final class ParquetDeadLetterQueue(spark: SparkSession, path: String) extends De
   }
 
   override def retryEvent(eventId: String,
-      retryCallback: (EventRow, String) => Boolean): Boolean = {
+      retryCallback: (EventRow, String) => Boolean): Boolean = this.synchronized {
     val entry = all.where($"event.id" === eventId).collect().headOption
     entry match {
       case None => false
@@ -161,26 +174,25 @@ final class ParquetDeadLetterQueue(spark: SparkSession, path: String) extends De
     }
   }
 
-  override def removeEvent(eventId: String): Boolean = {
+  override def removeEvent(eventId: String): Boolean = this.synchronized {
     val present = !all.where($"event.id" === eventId).isEmpty
     if (present) rewriteWithout(eventId, None)
     present
   }
 
   /** Rewrite the table minus `eventId`, optionally re-appending a replacement
-    * row (attempts bookkeeping). Same staging-dir pattern as
-    * EventLog.deleteEvents: parquet can't overwrite a path it reads, so the
-    * FILTERED DATASET (the SURVEY §2.7 anti-join spelling) writes to a
-    * staging dir and renames in — fully executor-side. The r13 advisor
-    * flagged the previous driver-side collect: fine at fixture scale, a
-    * driver bottleneck when a poisoned ingest dead-letters millions of rows.
+    * row (attempts bookkeeping). The same swap as EventLog's maintenance
+    * rewrites: parquet can't overwrite a path it reads, so the FILTERED
+    * DATASET (the SURVEY §2.7 anti-join spelling) writes to a staging dir,
+    * fully executor-side, and [[DirSwap.swap]] puts it in place. The r13
+    * advisor flagged the previous driver-side collect: fine at fixture
+    * scale, a driver bottleneck when a poisoned ingest dead-letters
+    * millions of rows. Called under the instance's monitor.
     */
   private def rewriteWithout(eventId: String, replacement: Option[DeadLetterRow]): Unit = {
     val kept = all.where($"event.id" =!= eventId)
     val rewritten = replacement.fold(kept)(r => kept.unionAll(Seq(r).toDS()))
-    val staging = path.stripSuffix("/") + ".staging"
-    rewritten.write.mode(SaveMode.Overwrite).parquet(staging)
-    fs.delete(new org.apache.hadoop.fs.Path(path), true)
-    fs.rename(new org.apache.hadoop.fs.Path(staging), new org.apache.hadoop.fs.Path(path))
+    rewritten.write.mode(SaveMode.Overwrite).parquet(DirSwap.staging(live).toString)
+    DirSwap.swap(fs, live, keep = true)
   }
 }

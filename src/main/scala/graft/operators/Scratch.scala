@@ -2,9 +2,9 @@ package graft.operators
 
 /** Observable counter of PER-CALL procedural protocol work — scratch
   * fixture staging, checkpointed stream drains, embedded-store sinks —
-  * the work the `SparkEntry.proceduralGates` tag declares. The primitives
-  * that constitute such work ([[Scratch.withDir]], the streaming-gate
-  * drain helper, the Derby sink gates) bump this counter, so the tag set
+  * the work the `SparkEntry.proceduralGates` tag declares. Such work
+  * runs inside [[Scratch.withDir]] (the streaming-gate drains and the
+  * Derby sink gates included), which bumps this counter, so the tag set
   * is no longer hand-trusted: ProceduralGateSpec constructs every query
   * against a cold memo and asserts tag ⟺ marker — a gate author who
   * forgets the tag (or tags a pure derivation) fails CI instead of

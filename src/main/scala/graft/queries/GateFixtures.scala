@@ -96,19 +96,18 @@ object GateFixtures {
       p
     })
 
-  /** Serializes every session-conf save/mutate/restore window in the gate
-    * machinery ([[narrow]] here, the drain helper's width override in
-    * StreamingGateQueries). The conf is session-global and the test
-    * session is shared across concurrently-running ScalaTest suites, so
-    * two UNSERIALIZED save/restore sections can interleave — the second
+  /** Serializes every session-conf save/mutate/restore window of
+    * [[narrow]]. The conf is session-global and the test session is
+    * shared across concurrently-running ScalaTest suites, so two
+    * UNSERIALIZED save/restore sections can interleave — the second
     * captures the first's narrowed value as its "prior" and the session
     * ends up permanently at width 4 / codegen off, silently degrading
-    * every later derivation query (r14 advisor). Reentrant: a drain
-    * inside a narrowed gate body re-enters without deadlock.
+    * every later derivation query (r14 advisor). Reentrant: a narrowed
+    * section nested in another re-enters without deadlock.
     */
   private val confLock = new java.util.concurrent.locks.ReentrantLock()
 
-  private[graft] def confLocked[T](f: => T): T = {
+  private def confLocked[T](f: => T): T = {
     confLock.lock()
     try f finally confLock.unlock()
   }

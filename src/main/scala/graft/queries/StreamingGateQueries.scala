@@ -45,9 +45,10 @@ object StreamingGateQueries {
   /** Gate scratch + narrow width in one wrapper: every gate body here
     * operates on KB-MB fixtures, so its batch jobs (fixture laws, settle
     * joins, result rollups) and any stream started inside it (which
-    * clones the conf at start()) run at [[GateShuffleWidth]] instead of
-    * the session's full width — fixed-cost hygiene, not semantics (all
-    * gate laws are partition-count-invariant).
+    * clones the conf at start()) run at [[GateFixtures.narrow]]'s width 4
+    * instead of the session's full width — fixed-cost hygiene, not
+    * semantics (all gate laws are partition-count-invariant). Marks
+    * [[graft.operators.ProceduralWork]] through [[withScratch]].
     */
   private def withGateScratch[T](prefix: String, s: SparkSession)(f: String => T): T =
     withScratch(prefix)(base => GateFixtures.narrow(s)(f(base)))
@@ -78,49 +79,27 @@ object StreamingGateQueries {
   /** Run one checkpointed AvailableNow drain of `frame` (a streaming
     * Dataset), collecting each micro-batch through `sink`. `mode` must
     * match the stateful operator's declared OutputMode ("append" for
-    * bandHits, "update" for quantiles). Marks [[graft.operators
-    * .ProceduralWork]]: a checkpointed drain is per-call gate protocol.
+    * bandHits, "update" for quantiles).
     *
-    * Drains run at a NARROW shuffle width (r14): gate fixtures are
-    * kilobyte-to-megabyte staged files, and a stateful drain at the
-    * session's full width just multiplies fixed cost — 32 state-store
-    * deltas + commit files and 32 tasks per stateful stage per
-    * micro-batch at bench width. Every gate law is content-based
-    * (partition-count-invariant: keyed state, exact integer folds,
-    * operator-defined fold orders), so width is pure protocol overhead.
-    * The stream CLONES the session conf at start(), so the narrowed
-    * width binds to exactly this query; the session value is restored
-    * immediately after start() returns. A production drain over real
-    * volume would size this the ordinary way — this is fixture-sized
-    * protocol, not the delivery path (StreamingSubscription is
-    * untouched).
+    * Every drain runs inside [[withGateScratch]], so the stream clones the
+    * narrowed width at start(): gate fixtures are kilobyte-to-megabyte
+    * staged files, and a stateful drain at the session's full width just
+    * multiplies fixed cost — 32 state-store deltas + commit files and 32
+    * tasks per stateful stage per micro-batch at bench width. Every gate
+    * law is content-based (partition-count-invariant: keyed state, exact
+    * integer folds, operator-defined fold orders), so width is pure
+    * protocol overhead. A production drain over real volume would size
+    * this the ordinary way — this is fixture-sized protocol, not the
+    * delivery path (StreamingSubscription is untouched).
     */
-  private val GateShuffleWidth = 4
-
   private def drain[R](frame: Dataset[R], ckpt: String, mode: String)(
-      sink: (Dataset[R], Long) => Unit): Unit = {
-    graft.operators.ProceduralWork.mark()
-    val conf = frame.sparkSession.conf
-    val key = "spark.sql.shuffle.partitions"
-    // the save/set/start/restore window runs under GateFixtures' conf lock
-    // (reentrant — drains usually sit inside a narrowed gate body): an
-    // unserialized window racing another gate's could capture its narrowed
-    // width as `prior` and restore the session to 4 permanently. The
-    // awaitTermination stays OUTSIDE the lock — the stream cloned its conf
-    // at start(), so the session value is already restored.
-    val q = GateFixtures.confLocked {
-      val width = math.min(conf.get(key).toIntOption.getOrElse(GateShuffleWidth),
-        GateShuffleWidth).toString
-      withConf(frame.sparkSession, key -> width) {
-        frame.writeStream.outputMode(mode)
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (b: Dataset[R], id: Long) => sink(b, id); () }
-          .start()
-      }
-    }
-    q.awaitTermination()
-  }
+      sink: (Dataset[R], Long) => Unit): Unit =
+    frame.writeStream.outputMode(mode)
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (b: Dataset[R], id: Long) => sink(b, id); () }
+      .start()
+      .awaitTermination()
 
   def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -8,9 +8,11 @@ import java.util.concurrent.atomic.AtomicLong
 
 import scala.util.control.NonFatal
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
@@ -56,10 +58,15 @@ final case class ScanOptions(
   *     scan prunes to 1/n of the data by partition, then row-group stats on
   *     the sorted-ish topic column prune within the bucket.
   *
-  * Appends are new files; no compaction logic here (a real deployment would
-  * layer Delta/Iceberg for that — out of scope, semantics equal). Bulk
-  * [[append]]s run a Spark write job; the pub/sub path ([[appendRows]])
-  * commits driver-side, one Parquet file per partition dir per group.
+  * Appends are new files. Bulk [[append]]s run a Spark write job; the
+  * pub/sub path ([[appendRows]]) commits driver-side, one Parquet file per
+  * partition dir per group. Maintenance — retention ([[deleteEvents]],
+  * [[enforceMaxEvents]]) and compaction ([[compact]], [[compactClustered]])
+  * — rewrites one partition dir at a time through one primitive,
+  * [[rewrite]]; there are no transactions across dirs (a real deployment
+  * would layer Delta/Iceberg for that — out of scope, semantics equal).
+  * Every write to the log holds the instance's monitor, so none overlaps
+  * another.
   */
 final class EventLog(
     spark: SparkSession,
@@ -175,7 +182,8 @@ final class EventLog(
     *     group gets its exception and none of the group's rows become
     *     visible (see [[commitDirect]] for a failure between two renames);
     *   - flushes hold the log's monitor, so they never overlap an
-    *     `append(Dataset)` call, a [[vacuum]] or another flush.
+    *     `append(Dataset)` call, a maintenance [[rewrite]], a [[vacuum]] or
+    *     another flush. A flush that arrives during a rewrite waits for it.
     */
   def appendRows(events: Seq[EventRow]): Unit = {
     val mine = new EventLog.PendingAppend(events)
@@ -260,7 +268,7 @@ final class EventLog(
     * event-sourcing topics are user-controlled (`aggregate.<type>.<id>`,
     * reference: src/sourcing.ts:272-274) — a raw `"topic=$topic"` would let
     * [[appendRows]] and [[append]] write different dirs, and point
-    * retention/compaction at a dir neither wrote.
+    * [[rewrite]] at a dir neither wrote.
     */
   private def partitionDir(topic: String): String = topicBuckets match {
     case None => ExternalCatalogUtils.getPartitionPathString("topic", topic)
@@ -389,12 +397,10 @@ final class EventLog(
 
   /** Retention delete (reference: src/persistence.ts:74-93): drop events with
     * `timestamp < cutoff` in one topic, return the deleted count
-    * (initialCount − remaining, reference: src/persistence.ts:83-91).
-    *
-    * Implemented as a partition rewrite: only the affected partition
-    * directory (the topic's own dir, or its hash bucket) is rewritten —
-    * at scale this is a per-partition maintenance job, not a full-table
-    * rewrite.
+    * (initialCount − remaining, reference: src/persistence.ts:83-91). A
+    * [[rewrite]] of the topic's partition dir (its own dir, or its hash
+    * bucket), skipped when nothing is old — at scale a per-partition
+    * maintenance job, not a full-table rewrite.
     */
   def deleteEvents(topic: String, olderThanMillis: Long): Long = {
     // Cutoffs beyond the max representable timestamp (callers pass
@@ -404,17 +410,13 @@ final class EventLog(
     val isOld: Column =
       if (olderThanMillis > MaxSafeEpochMillis) lit(true)
       else $"timestamp" < timestampMillis(olderThanMillis)
-    val (partDirName, partData) = partitionFor(topic)
-    val part = partData.cache()
-    try {
-      val isTopic: Column = topicBuckets.fold(lit(true))(_ => $"topic" === topic)
+    rewrite(topic) { part =>
+      val isTopic = topicIn(topic)
       val before = part.where(isTopic).count()
       val kept = part.where(!(isTopic && isOld))
-      val keptTopicCount = kept.where(isTopic).count()
-      val keptCount = kept.count()
-      rewritePartition(partDirName, kept, keepAny = keptCount > 0)
-      before - keptTopicCount
-    } finally part.unpersist()
+      val deleted = before - kept.where(isTopic).count()
+      (Option.when(deleted > 0)(kept), deleted)
+    }.getOrElse(0L)
   }
 
   /** Count-based retention: keep only the newest `maxEvents` events of a
@@ -422,31 +424,27 @@ final class EventLog(
     * The reference DECLARES this option but never enforces it
     * (`maxEvents` default 10000, reference: src/topic.ts:33; SURVEY.md §2.9
     * T9 "dead option") — this is the honest implementation, flagged as an
-    * extension. Same partition-rewrite job as time-based retention.
+    * extension. Same [[rewrite]] as time-based retention.
     */
-  def enforceMaxEvents(topic: String, maxEvents: Int): Long = {
-    val (partDirName, partData) = partitionFor(topic)
-    val part = partData.cache()
-    try {
-      val isTopic: Column = topicBuckets.fold(lit(true))(_ => $"topic" === topic)
+  def enforceMaxEvents(topic: String, maxEvents: Int): Long =
+    rewrite(topic) { part =>
+      val isTopic = topicIn(topic)
       val before = part.where(isTopic).count()
-      if (before <= maxEvents) return 0L
-      // rank newest-first WITHIN each topic of the partition; non-target
-      // topics (bucketed layout only) are never dropped (rn filter guarded).
-      // Per-topic data carries no topic column, so its rank group is global.
-      val grp: Column = topicBuckets.fold(lit("t"): Column)(_ => $"topic")
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(grp).orderBy($"timestamp".desc, $"id".desc)
-      val kept = part.withColumn("rn", row_number().over(w))
-        .where(!isTopic || $"rn" <= maxEvents).drop("rn")
-      // deleted = before − kept, both counted off the SAME cached snapshot:
-      // `before - maxEvents` would assume the rank filter kept exactly
-      // maxEvents rows, which drifts if anything lands between the counts.
-      val keptTopic = kept.where(isTopic).count()
-      rewritePartition(partDirName, kept, keepAny = true)
-      before - keptTopic
-    } finally part.unpersist()
-  }
+      if (before <= maxEvents) (None, 0L)
+      else {
+        // rank newest-first WITHIN each topic of the partition; non-target
+        // topics (bucketed layout only) are never dropped (rn filter guarded).
+        // Per-topic data carries no topic column, so its rank group is global.
+        val grp: Column = topicBuckets.fold(lit("t"): Column)(_ => $"topic")
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(grp).orderBy($"timestamp".desc, $"id".desc)
+        val kept = part.withColumn("rn", row_number().over(w))
+          .where(!isTopic || $"rn" <= maxEvents).drop("rn")
+        // row_number numbers the topic's rows 1..before, so the filter
+        // keeps exactly maxEvents of them
+        (Some(kept), before - maxEvents)
+      }
+    }.getOrElse(0L)
 
   /** Small-file maintenance: rewrite one topic's partition (its own dir, or
     * its hash bucket) into `targetFiles` files. The pub/sub hot path
@@ -455,20 +453,8 @@ final class EventLog(
     * periodic job that keeps scan/listing cost flat. Returns the file-count
     * delta (before − after).
     */
-  def compact(topic: String, targetFiles: Int = 1): Long = {
-    val (partDirName, partData) = partitionFor(topic)
-    val partDir = new Path(path, partDirName)
-    if (!fs.exists(partDir)) return 0L
-    def fileCount = fs.listStatus(partDir).count(_.getPath.getName.startsWith("part-"))
-    val before = fileCount
-    val part = partData.cache()
-    try {
-      val nonEmpty = part.limit(1).count() > 0
-      rewritePartition(partDirName, part.coalesce(math.max(targetFiles, 1)),
-        keepAny = nonEmpty)
-      before - fileCount
-    } finally part.unpersist()
-  }
+  def compact(topic: String, targetFiles: Int = 1): Long =
+    relayout(topic)(_.coalesce(math.max(targetFiles, 1)))
 
   /** Z-ORDERED small-file maintenance: like [[compact]], but clusters the
     * rewritten files on the Morton interleave of up to three columns, so
@@ -486,17 +472,7 @@ final class EventLog(
     */
   def compactClustered(topic: String, targetFiles: Int, clusterBy: Seq[String]): Long = {
     require(clusterBy.nonEmpty && clusterBy.size <= 3, "cluster by 1-3 columns")
-    val (partDirName, partData) = partitionFor(topic)
-    val partDir = new Path(path, partDirName)
-    if (!fs.exists(partDir)) return 0L
-    def fileCount = fs.listStatus(partDir).count(_.getPath.getName.startsWith("part-"))
-    val before = fileCount
-    val part = partData.cache()
-    try {
-      if (part.limit(1).count() == 0) {
-        rewritePartition(partDirName, part, keepAny = false)
-        return before - fileCount
-      }
+    relayout(topic) { part =>
       val numeric = clusterBy.map { c =>
         part.schema(c).dataType match {
           case org.apache.spark.sql.types.StringType =>
@@ -510,8 +486,9 @@ final class EventLog(
       }
       val stats = part.agg(aggs.head, aggs.tail: _*).head()
       val bins = numeric.zipWithIndex.map { case (e, i) =>
-        // an all-null cluster column has no range: bin it constant-0 (the
-        // rewrite degrades to plain compaction on that dimension)
+        // an all-null cluster column (or an empty partition) has no range:
+        // bin it constant-0 (the rewrite degrades to plain compaction on
+        // that dimension)
         if (stats.isNullAt(2 * i)) lit(0L)
         else {
           val (mn, mx) = (stats.getDouble(2 * i), stats.getDouble(2 * i + 1))
@@ -525,34 +502,41 @@ final class EventLog(
           shiftleft(shiftright(b, bit).bitwiseAND(lit(1L)), bit * stride + i)
         }
       }.reduce(_ bitwiseOR _)
-      val clustered = part.withColumn("__z", z)
+      part.withColumn("__z", z)
         .repartitionByRange(math.max(targetFiles, 1), col("__z"))
         .sortWithinPartitions("__z")
         .drop("__z") // post-sort projection is narrow: intra-partition order survives
-      rewritePartition(partDirName, clustered, keepAny = true)
-      before - fileCount
-    } finally part.unpersist()
+    }
   }
 
-  /** Remove what a crash leaves between a write and its commit rename:
-    * orphaned `.staging_*` directories of a [[rewritePartition]], and hidden
-    * `.part-*` data files of an [[appendRows]] flush inside partition dirs.
-    * The rename is the commit point, so anything still under a hidden name
-    * is uncommitted garbage that would otherwise accrete forever. Returns
-    * the directories and files removed. Holds the log's monitor, so it never
-    * deletes an in-flight flush's file; safe concurrently with reads (hidden
-    * names are invisible to parquet listings); do not run concurrently with
-    * a retention/compaction job on the same log.
+  /** Remove what a crash leaves between a write and its commit rename, and
+    * settle a crashed [[rewrite]] swap:
+    *   - a partition dir's `.aside_*` copy is renamed back when the live
+    *     dir is missing, and deleted when both exist ([[DirSwap.recover]]);
+    *   - orphaned `.staging_*` directories of a [[rewrite]] are deleted;
+    *   - hidden `.part-*` data files of an [[appendRows]] flush inside
+    *     partition dirs are deleted.
+    * The rename is the commit point, so anything still under a hidden
+    * staging name is uncommitted garbage that would otherwise accrete
+    * forever. Returns the directories and files removed or renamed back.
+    * Holds the log's monitor, so it never meets an in-flight flush or
+    * rewrite; safe concurrently with reads (hidden names are invisible to
+    * parquet listings). After a crash, run it before the log takes new
+    * appends: an append into a partition whose live dir a crashed swap
+    * left missing recreates the dir, and the aside copy would then be
+    * taken for a finished swap's leftover.
     */
   def vacuum(): Int = this.synchronized {
     val root = new Path(path)
     if (!fs.exists(root)) return 0
+    val settled = fs.listStatus(root).flatMap(d => DirSwap.liveOf(d.getPath))
+      .count(DirSwap.recover(fs, _))
     val (staging, partitions) = fs.listStatus(root).filter(_.isDirectory)
-      .partition(_.getPath.getName.startsWith(".staging_"))
+      .partition(d => DirSwap.isStaging(d.getPath))
     val orphans = partitions.filter(_.getPath.getName.contains("="))
       .flatMap(d => fs.listStatus(d.getPath))
       .filter(f => f.isFile && f.getPath.getName.startsWith(".part-"))
-    staging.count(d => fs.delete(d.getPath, true)) +
+    settled + staging.count(d => fs.delete(d.getPath, true)) +
       orphans.count(f => fs.delete(f.getPath, false))
   }
 
@@ -569,9 +553,8 @@ final class EventLog(
       else fs.listStatus(root).filter(_.isDirectory)
         .filter(d => d.getPath.getName.contains("="))
         .map { d =>
-          val files = fs.listStatus(d.getPath).filter(_.getPath.getName.startsWith("part-"))
-          val sizes = files.map(_.getLen)
-          (d.getPath.getName, files.length.toLong,
+          val sizes = dataFiles(d.getPath).map(_.getLen)
+          (d.getPath.getName, sizes.length.toLong,
             sizes.sum, if (sizes.isEmpty) 0L else sizes.min,
             if (sizes.isEmpty) 0L else sizes.max)
         }.toSeq
@@ -580,33 +563,74 @@ final class EventLog(
       .orderBy(col("partition"))
   }
 
-  /** (partition dir name, partition data as written on disk — minus the
-    * partition column itself).
-    */
-  private def partitionFor(topic: String): (String, DataFrame) = (partitionDir(topic),
-    topicBuckets match {
-      case None => topicDF(topic).drop("topic")
-      case Some(_) => allRaw.where(col(BucketCol) === bucketOf(topic)).drop(BucketCol)
-    })
+  /** The committed data files directly in `dir`; none if it is missing. */
+  private def dataFiles(dir: Path): Seq[FileStatus] =
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toSeq.filter(_.getPath.getName.startsWith("part-"))
 
-  /** Replace one partition directory's contents with `df`, via a staging
-    * dir (parquet can't overwrite a path it is reading).
+  /** Whether any data file in `dir` holds a row, read from the Parquet
+    * footers on the driver: no Spark job.
     */
-  private def rewritePartition(partDirName: String, df: DataFrame, keepAny: Boolean): Unit = {
-    val staging = path.stripSuffix("/") +
-      s"/.staging_${partDirName.replaceAll("[^A-Za-z0-9._=-]", "_")}"
-    df.write.mode(SaveMode.Overwrite).parquet(staging)
-    val partDir = new Path(path, partDirName)
-    fs.delete(partDir, true)
-    if (keepAny) {
-      fs.mkdirs(partDir)
-      fs.listStatus(new Path(staging)).foreach { st =>
-        if (st.getPath.getName.startsWith("part-"))
-          fs.rename(st.getPath, new Path(partDir, st.getPath.getName))
+  private def holdsRows(dir: Path): Boolean = dataFiles(dir).exists { f =>
+    val in = ParquetFileReader.open(
+      HadoopInputFile.fromStatus(f, spark.sparkContext.hadoopConfiguration))
+    try in.getRecordCount > 0 finally in.close()
+  }
+
+  /** The rows of `topic` within a partition's rows: all of them in the
+    * per-topic layout, the `topic` column's match in a bucket.
+    */
+  private def topicIn(topic: String): Column =
+    topicBuckets.fold(lit(true))(_ => $"topic" === topic)
+
+  /** The one maintenance rewrite: replace the partition dir that holds
+    * `topic` (its own dir, or its hash bucket) with the rows `f` keeps, and
+    * return `f`'s result; None, without calling `f`, when the dir does not
+    * exist.
+    *
+    * `f` gets the partition's rows as written on disk (minus the partition
+    * column), cached once for the whole call, and returns the rows to keep
+    * — or None to leave the dir as it is — with its result. The kept rows
+    * are written to a staging dir and swapped in by [[DirSwap.swap]], so
+    * the old rows stay under a name [[vacuum]] restores until the new ones
+    * are in place. A dir left with no rows is removed.
+    *
+    * Holds the log's monitor from the snapshot to the swap, as [[append]],
+    * every [[appendRows]] flush and [[vacuum]] do: a commit that landed in
+    * between would be lost with the old dir. Publishes to this log wait
+    * while a rewrite runs, as they wait for a bulk append.
+    */
+  private def rewrite[T](topic: String)(f: DataFrame => (Option[DataFrame], T)): Option[T] =
+    this.synchronized {
+      val dir = new Path(path, partitionDir(topic))
+      DirSwap.recover(fs, dir)
+      if (!fs.exists(dir)) None
+      else {
+        val part = (topicBuckets match {
+          case None => topicDF(topic).drop("topic")
+          case Some(_) => allRaw.where(col(BucketCol) === bucketOf(topic)).drop(BucketCol)
+        }).cache()
+        try {
+          val (kept, result) = f(part)
+          kept.foreach { df =>
+            val staging = DirSwap.staging(dir)
+            df.write.mode(SaveMode.Overwrite).parquet(staging.toString)
+            DirSwap.swap(fs, dir, keep = holdsRows(staging))
+          }
+          Some(result)
+        } finally part.unpersist()
       }
     }
-    fs.delete(new Path(staging), true)
-  }
+
+  /** A [[rewrite]] that keeps every row, laid out by `layout`; returns the
+    * data files the partition dir lost.
+    */
+  private def relayout(topic: String)(layout: DataFrame => DataFrame): Long =
+    this.synchronized {
+      val dir = new Path(path, partitionDir(topic))
+      rewrite(topic)(part => (Some(layout(part)), dataFiles(dir).size))
+        .fold(0L)(before => before - dataFiles(dir).size)
+    }
 
   private def timestampMillis(ms: Long) =
     (lit(ms) / 1000.0).cast("timestamp")

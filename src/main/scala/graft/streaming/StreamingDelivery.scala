@@ -35,14 +35,12 @@ import graft.model.{Event, EventRow}
   * Delivery is at-least-once across restarts (checkpointed foreachBatch) —
   * handlers must be idempotent on `event.id`, which the envelope provides.
   *
-  * Backpressure: `maxFilesPerTrigger` caps how much log backlog one
-  * micro-batch ingests. The ordered (default) delivery mode collects each
+  * Backpressure: the ordered (default) delivery mode collects each
   * micro-batch to the driver to honor the reference's sequential-handler
   * law, so its micro-batches MUST be bounded — through r14 a caller who
-  * left `maxFilesPerTrigger=None` got an unbounded AvailableNow drain that
-  * materialized the whole backlog on the driver (fine on a test fixture,
-  * fatal on a deep 100 TB log). Ordered mode therefore applies a DEFAULT
-  * byte cap when no explicit cap is given:
+  * set no cap got an unbounded AvailableNow drain that materialized the
+  * whole backlog on the driver (fine on a test fixture, fatal on a deep
+  * 100 TB log). Ordered mode therefore caps every micro-batch at
   * [[StreamingSubscription.DefaultOrderedMaxBytesPerTrigger]] per
   * micro-batch (overridable via
   * [[StreamingSubscription.OrderedMaxBytesKey]]), a bytes cap rather than
@@ -65,7 +63,6 @@ final class StreamingSubscription(
     dlq: DeadLetterQueue,
     topicName: Option[String] = None,
     options: SubscriptionOptions = SubscriptionOptions(),
-    maxFilesPerTrigger: Option[Int] = None,
     ordered: Boolean = true) {
 
   private val subscriptionId = options.name.getOrElse(Event.generateId())
@@ -78,16 +75,13 @@ final class StreamingSubscription(
     */
   private def source: DataFrame = {
     val reader = spark.readStream.schema(Event.schema)
-    maxFilesPerTrigger match {
-      case Some(n) => reader.option("maxFilesPerTrigger", n)
-      case None if ordered =>
-        // default-bound the driver-collected path (see class doc): bytes,
-        // not files, because bytes are what the per-batch collect costs
-        reader.option("maxBytesPerTrigger",
-          spark.conf.get(StreamingSubscription.OrderedMaxBytesKey,
-            StreamingSubscription.DefaultOrderedMaxBytesPerTrigger.toString))
-      case None => () // distributed mode collects only failures
-    }
+    // bound the driver-collected path (see class doc): bytes, not files,
+    // because bytes are what the per-batch collect costs; distributed mode
+    // collects only failures
+    if (ordered)
+      reader.option("maxBytesPerTrigger",
+        spark.conf.get(StreamingSubscription.OrderedMaxBytesKey,
+          StreamingSubscription.DefaultOrderedMaxBytesPerTrigger.toString))
     var df = reader.parquet(logPath)
     topicName.foreach(t => df = df.where(col("topic") === t))
     if (options.eventTypes.nonEmpty)
@@ -189,8 +183,8 @@ final class StreamingSubscription(
         import batch.sparkSession.implicits._
         if (orderedMode) {
           // Per-batch ordered delivery on the driver mirrors the reference's
-          // sequential handler loop; bounded by maxFilesPerTrigger. Sorted
-          // in the log's event order (Event.order).
+          // sequential handler loop; bounded by the ordered byte cap.
+          // Sorted in the log's event order (Event.order).
           batch.as[EventRow].collect()
             .sorted(graft.model.Event.order)
             .foreach(event => deliverOne(event).foreach(err => d.addEvent(event, err, subId)))
@@ -234,7 +228,6 @@ object StreamingSubscription {
 
   /** Session conf key overriding the ordered-mode default micro-batch
     * byte cap (value parsed by the file source's `maxBytesPerTrigger`).
-    * An explicit `maxFilesPerTrigger` constructor arg wins over both.
     */
   val OrderedMaxBytesKey: String = "spark.graft.delivery.ordered.maxBytesPerTrigger"
 

@@ -102,6 +102,18 @@ class BucketedEventLogSpec extends SparkSpec {
     assert(log.getEventsTyped(topicIn(2)).collect().map(_.id).toSeq == Seq("f1", "f3"))
   }
 
+  test("delete-all of a topic keeps its bucket dir and every co-bucketed topic's rows") {
+    val log = seeded()
+    val bucket = new java.io.File(log.path, s"topic_bucket=${log.bucketOf("web")}")
+    val coBucketed = ("app" +: (1 to 20).map(i => s"aggregate.user.u$i"))
+      .filter(log.bucketOf(_) == log.bucketOf("web"))
+    assert(coBucketed.nonEmpty)
+    assert(log.deleteEvents("web", Long.MaxValue) == 4L)
+    assert(!log.hasEvents("web"))
+    assert(bucket.isDirectory)
+    coBucketed.foreach(t => assert(log.getEventsTyped(t).collect().length == 1, t))
+  }
+
   test("deleteEvents rewrites only the bucket, counts only the topic") {
     val log = seeded()
     val deleted = log.deleteEvents("web", olderThanMillis = 3000)

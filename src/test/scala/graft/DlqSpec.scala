@@ -114,6 +114,27 @@ class DlqSpec extends SparkSpec {
     assert(bumped.attempts == 2)
   }
 
+  test("parquet DLQ opened after a crashed rewrite swap reads the old entries or the new") {
+    import java.io.File
+    val base = tmpDir("dlq")
+    val path = s"$base/dlq"
+    val q = new ParquetDeadLetterQueue(spark, path)
+    Seq("e1", "e2").foreach(id => q.addEvent(ev(id), "err", "sub"))
+    val (live, aside) = (new File(path), new File(base, ".aside_dlq"))
+    def reopened = new ParquetDeadLetterQueue(spark, path).getEvents().map(_.event.id).sorted
+    // died between its renames: the entries sit only under the aside name
+    assert(live.renameTo(aside))
+    assert(reopened == Seq("e1", "e2"))
+    assert(live.isDirectory && !aside.exists())
+    // died before its last delete: the new table is live, the old one aside
+    val old = new File(tmpDir("old"), "dlq")
+    org.apache.commons.io.FileUtils.copyDirectory(live, old)
+    assert(q.removeEvent("e1"))
+    assert(old.renameTo(aside))
+    assert(reopened == Seq("e2"))
+    assert(!aside.exists())
+  }
+
   test("parquet DLQ is queryable as a DataFrame (S6 — the queue is a table)") {
     import spark.implicits._
     val q = new ParquetDeadLetterQueue(spark, tmpDir("dlq") + "/dlq")

@@ -3,6 +3,7 @@ package graft
 import java.io.File
 import java.sql.Timestamp
 
+import org.apache.commons.io.FileUtils
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -180,6 +181,77 @@ class EventLogSpec extends SparkSpec {
     assert(log.vacuum() == 0) // idempotent
     assert(log.getEventsTyped("web").collect().length == 4) // data intact
     assert(visibleFiles(log).size == 2) // one committed file per topic dir
+    // a rewrite swap that died between its renames: the live dir is gone
+    // and its rows sit only under the aside name, so they are renamed back
+    val live = new File(log.path, "topic=web")
+    val aside = new File(log.path, ".aside_topic=web")
+    assert(live.renameTo(aside))
+    assert(!log.hasEvents("web"))
+    assert(log.vacuum() == 1)
+    assert(live.isDirectory && !aside.exists())
+    assert(log.getEventsTyped("web").collect().map(_.id).toSeq == Seq("e1", "e2", "e3", "e5"))
+    // a swap that died before its last delete: the new rows are live and
+    // the old ones aside, so the aside dir is deleted
+    val old = new File(tmpDir("old"), "topic=web")
+    FileUtils.copyDirectory(live, old)
+    assert(log.deleteEvents("web", olderThanMillis = 3000) == 2L)
+    assert(old.renameTo(aside))
+    assert(log.vacuum() == 1)
+    assert(live.isDirectory && !aside.exists())
+    assert(log.getEventsTyped("web").collect().map(_.id).toSeq == Seq("e3", "e5"))
+  }
+
+  /** One publisher thread appends `n` single rows to `web` (timestamps from
+    * 10 s on) while this thread runs `sweep` over and over; returns the ids
+    * the publisher was told committed and the number of appends that
+    * failed.
+    */
+  private def publishDuring(log: EventLog, n: Int)(sweep: => Unit): (Seq[String], Int) = {
+    val acked = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val failed = new java.util.concurrent.atomic.AtomicInteger()
+    val publisher = new Thread(() => (0 until n).foreach { i =>
+      try {
+        log.appendRows(Seq(row(s"p$i", "click", "web", 10000L + i)))
+        acked.add(s"p$i")
+      } catch { case _: Exception => failed.incrementAndGet() }
+    })
+    publisher.start()
+    var sweeps = 0
+    while (publisher.isAlive || sweeps < 2) {
+      sweep
+      sweeps += 1
+      Thread.sleep(20) // let the publisher in between sweeps
+    }
+    publisher.join()
+    (acked.toArray(Array.empty[String]).toSeq, failed.get())
+  }
+
+  test("deleteEvents racing a publisher keeps every acknowledged row") {
+    val log = new EventLog(spark, tmpDir("log"))
+    log.appendRows((0 until 20).map(i => row(s"old$i", "view", "web", 1000L + i)))
+    var next = 0
+    val (acked, failed) = publishDuring(log, 40) {
+      // one old row per sweep, so every sweep rewrites the partition
+      log.appendRows(Seq(row(s"older$next", "view", "web", 2000L + next)))
+      next += 1
+      log.deleteEvents("web", olderThanMillis = 5000)
+    }
+    val ids = log.getEventsTyped("web").collect().map(_.id).toSet
+    val lost = acked.filterNot(ids)
+    assert(failed == 0 && lost.isEmpty, s"$failed of 40 appends failed; " +
+      s"${lost.size} of ${acked.size} acknowledged rows lost to a retention rewrite")
+    assert(ids == acked.toSet) // and every old row is gone
+  }
+
+  test("compact racing a publisher keeps every acknowledged row") {
+    val log = new EventLog(spark, tmpDir("log"))
+    log.appendRows((0 until 20).map(i => row(s"old$i", "view", "web", 1000L + i)))
+    val (acked, failed) = publishDuring(log, 40)(log.compact("web"))
+    val ids = log.getEventsTyped("web").collect().map(_.id).toSet
+    val lost = acked.filterNot(ids)
+    assert(failed == 0 && lost.isEmpty, s"$failed of 40 appends failed; " +
+      s"${lost.size} of ${acked.size} acknowledged rows lost to a compaction rewrite")
+    assert(ids.size == 60)
   }
 
   /** Committed data files under a log, as `<partition dir>/<name>`. */
@@ -289,6 +361,7 @@ class EventLogSpec extends SparkSpec {
     val log = seeded()
     assert(log.deleteEvents("web", Long.MaxValue) == 4L)
     assert(!log.hasEvents("web"))
+    assert(!new File(log.path, "topic=web").exists()) // a dir left with no rows goes
     assert(log.hasEvents("app")) // other topics untouched
   }
 }

@@ -159,31 +159,13 @@ class StreamingSpec extends SparkSpec {
     assert(seen.toSeq == Seq("mine-new")) // a global-max boundary would drop this
   }
 
-  test("maxFilesPerTrigger bounds each micro-batch; backlog drains fully") {
-    val logDir = tmpDir("slog")
-    val log = new EventLog(spark, logDir)
-    // 4 separate appends → at least 4 files
-    (1 to 4).foreach(i => log.appendRows(Seq(row(s"e$i", "a", "t", i * 1000L))))
-    val seen = mutable.Buffer.empty[String]
-    val sub = new StreamingSubscription(spark, logDir, tmpDir("ckpt"),
-      e => seen += e.id, new InMemoryDeadLetterQueue, topicName = Some("t"),
-      options = SubscriptionOptions(receiveHistoricalEvents = true),
-      maxFilesPerTrigger = Some(1))
-    val q = sub.start(availableNow = true)
-    q.awaitTermination()
-    assert(seen.toSeq == Seq("e1", "e2", "e3", "e4"))
-    // the cap actually split the backlog: multiple micro-batches ran
-    assert(q.recentProgress.count(_.numInputRows > 0) >= 2)
-  }
-
   test("ordered mode default-bounds the drain: many-file backlog splits into capped micro-batches") {
     val logDir = tmpDir("slog")
     val log = new EventLog(spark, logDir)
     (1 to 4).foreach(i => log.appendRows(Seq(row(s"e$i", "a", "t", i * 1000L))))
     // shrink the default byte cap to 1 byte so every file overflows it and
-    // forms its own micro-batch — proving the DEFAULT cap (no explicit
-    // maxFilesPerTrigger) actually reaches the source and bounds what the
-    // ordered driver-collect sees per batch
+    // forms its own micro-batch — proving the default cap actually reaches
+    // the source and bounds what the ordered driver-collect sees per batch
     spark.conf.set(StreamingSubscription.OrderedMaxBytesKey, "1")
     try {
       val seen = mutable.Buffer.empty[String]
