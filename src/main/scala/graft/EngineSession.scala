@@ -12,6 +12,15 @@ import org.apache.spark.sql.SparkSession
   * Every conf here is scale-adaptive (the same value a 100 TB cluster
   * would run), never a local[32] twiddle; core count and shuffle width
   * stay caller-supplied.
+  *
+  * Two confs make local file I/O fork-free: `fs.file.impl` installs
+  * [[graft.sources.NioLocalFileSystem]] and the checkpoint manager is
+  * Spark's FileSystem-based one (reasons at the entries). The FileSystem
+  * is chosen through Hadoop's per-JVM `FileSystem` cache, keyed by scheme
+  * and user but not by conf, so the first `file:` FileSystem decides the
+  * class: one created before the first session built here (from a bare
+  * `Configuration`) keeps the stock class, and then only speed is lost.
+  * LocalFsSpec pins the install for the test JVM.
   */
 object EngineSession {
 
@@ -39,6 +48,21 @@ object EngineSession {
     // conf to false for their own build via withPinnedCacheLayout, which
     // this session default does not override.
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
+    // Fork-free local file I/O. Without libhadoop, Hadoop's
+    // RawLocalFileSystem runs `chmod` in a child process for every file,
+    // `.crc` and dir it creates, and Spark's default FileContext-based
+    // checkpoint manager runs `readlink` children on every rename, so each
+    // publish flush and each micro-batch's 3 checkpoint writes forked.
+    // NioLocalFileSystem sets the same modes through java.nio; the
+    // FileSystem-based manager renames through FileSystem.rename, which
+    // reads no link. Both managers check that the destination is absent
+    // and then rename on the local FS, so HDFSMetadataLog's no-overwrite
+    // law is unchanged; on HDFS, FileSystem.rename is itself atomic and
+    // fails on an existing destination. See the class doc for the
+    // FileSystem cache.
+    "spark.hadoop.fs.file.impl" -> classOf[graft.sources.NioLocalFileSystem].getName,
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager",
   )
 
   /** A builder carrying the engine confs; callers add surface-specific

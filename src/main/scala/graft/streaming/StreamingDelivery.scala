@@ -54,6 +54,10 @@ import graft.model.{Event, EventRow}
   * reference's global ordering law is traded for throughput) and only
   * failures travel back to the driver for DLQ bookkeeping; it needs no
   * default cap (nothing but failures is collected).
+  *
+  * Checkpoint cost: every micro-batch, however small, writes 3 checkpoint
+  * files (offsets, the file source's `sources` log, commits); see
+  * [[graft.EngineSession]] for why those writes are fork-free.
   */
 final class StreamingSubscription(
     spark: SparkSession,

@@ -45,7 +45,7 @@ class BloomPrefilterSpec extends SparkSpec {
   test("probe side carries might_contain in the physical plan") {
     // a local relation gets constant-folded through the filter
     // (ConvertToLocalRelation), so pin the production shape: a file scan
-    val base = java.nio.file.Files.createTempDirectory("graft-bloom").toString
+    val base = tmpDir("graft-bloom")
     try {
       probe.write.mode("overwrite").parquet(s"$base/probe")
       val fileProbe = spark.read.parquet(s"$base/probe")

@@ -32,7 +32,7 @@ class IngestPipelineSpec extends SparkSpec {
     "the quick brown fox jumps over the lazy dog and runs to the river " * 4
 
   test("jsonl → quarantine → bloom anti-dedup → quality gate → delta") {
-    val base = Files.createTempDirectory("graft-ingest").toString
+    val base = tmpDir("graft-ingest")
     try {
       // existing corpus: docs 1 and 2
       val corpus = Seq((1L, goodText + "one"), (2L, goodText + "two"))

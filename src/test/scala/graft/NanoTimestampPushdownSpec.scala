@@ -48,7 +48,7 @@ class NanoTimestampPushdownSpec extends SparkSpec {
 
   test("legacy nanos-long fixture: derived bounds are pushed and lossless") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-nanos").toString
+    val base = tmpDir("graft-nanos")
     try {
       // ts written as raw int64 nanoseconds — the shape nanosAsLong yields
       // for a TIMESTAMP(NANOS) column — through the same loader door

@@ -14,13 +14,13 @@ import graft.operators.Scratch
 class ScratchSpec extends AnyFunSuite {
 
   test("adoptBase refuses a base without headroom (Docker's 64MB shm shape)") {
-    val base = Files.createTempDirectory("scratch-base")
+    val base = Paths.get(SparkSpec.tmpDir("scratch-base"))
     // a minFree no filesystem satisfies stands in for the small-shm host
     assert(Scratch.adoptBase(base, minFree = Long.MaxValue).isEmpty)
   }
 
   test("adoptBase adopts a writable base with headroom and forces 0700") {
-    val base = Files.createTempDirectory("scratch-base")
+    val base = Paths.get(SparkSpec.tmpDir("scratch-base"))
     val adopted = Scratch.adoptBase(base, minFree = 1L)
     assert(adopted.isDefined)
     val d = adopted.get
@@ -30,7 +30,7 @@ class ScratchSpec extends AnyFunSuite {
   }
 
   test("adoptBase normalizes a pre-existing group-writable graft dir it owns") {
-    val base = Files.createTempDirectory("scratch-base")
+    val base = Paths.get(SparkSpec.tmpDir("scratch-base"))
     val pre = Files.createDirectories(
       base.resolve(s"graft-${System.getProperty("user.name")}"))
     Files.setPosixFilePermissions(pre, PosixFilePermissions.fromString("rwxrwxrwx"))
@@ -45,7 +45,7 @@ class ScratchSpec extends AnyFunSuite {
     // root bypasses POSIX write bits, so the read-only case is only
     // observable as a non-root user (CI containers often run as root)
     if (System.getProperty("user.name") != "root") {
-      val ro = Files.createTempDirectory("scratch-ro")
+      val ro = Paths.get(SparkSpec.tmpDir("scratch-ro"))
       Files.setPosixFilePermissions(ro, PosixFilePermissions.fromString("r-x------"))
       try assert(Scratch.adoptBase(ro, 1L).isEmpty)
       finally Files.setPosixFilePermissions(ro, PosixFilePermissions.fromString("rwx------"))

@@ -64,7 +64,7 @@ class SnapshotDiffSpec extends SparkSpec {
 
   test("the diff join carries hashes, not bodies") {
     // file-backed inputs so the projection reaches a real scan
-    val base = java.nio.file.Files.createTempDirectory("graft-snap").toString
+    val base = tmpDir("graft-snap")
     try {
       v1.write.parquet(s"$base/v1"); v2.write.parquet(s"$base/v2")
       val plan = SnapshotDiff.diff(

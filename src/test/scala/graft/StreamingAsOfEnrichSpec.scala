@@ -109,7 +109,7 @@ class StreamingAsOfEnrichSpec extends SparkSpec {
     val rz = Seq(("zz", 30000L, "zz"))
     for (strict <- Seq(true, false)) {
       val ckpt = tmpDir(s"ase2-ck-$strict")
-      val (ld, rd) = (ldir + strict, rdir + strict)
+      val (ld, rd) = (s"$ldir/$strict", s"$rdir/$strict")
       writeBatch(ld, l1); writeBatch(rd, r1)
       drain(ld, rd, ckpt, strict)
       writeBatch(ld, lz); writeBatch(rd, rz)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
@@ -28,7 +26,7 @@ class StreamingCurationSpec extends SparkSpec {
       .write.mode("append").parquet(dir)
 
   test("gates on quality and dedups content across micro-batches") {
-    val dir = Files.createTempDirectory("cur").toString
+    val dir = tmpDir("cur")
     writeBatch(dir, Seq((1L, good), (2L, bad)))
     writeBatch(dir, Seq((3L, good), (4L, good + "extra tail"))) // 3 = dup of 1
 

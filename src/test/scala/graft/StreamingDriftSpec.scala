@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
@@ -35,7 +33,7 @@ class StreamingDriftSpec extends SparkSpec {
   }
 
   test("stable source scores ~0, shifted source alerts, TVD is exact") {
-    val dir = Files.createTempDirectory("drift").toString
+    val dir = tmpDir("drift")
     // batch 1: reference for both sources — 4 low + 4 high values each
     val ref = Seq.fill(4)(50.0) ++ Seq.fill(4)(350.0)
     writeBatch(dir, ref.map("stable" -> _) ++ ref.map("shifty" -> _))
@@ -56,14 +54,14 @@ class StreamingDriftSpec extends SparkSpec {
   }
 
   test("no report until the reference is frozen") {
-    val dir = Files.createTempDirectory("drift2").toString
+    val dir = tmpDir("drift2")
     writeBatch(dir, Seq.fill(4)("s" -> 50.0)) // refN=8 → still building
     val reports = run(dir, refN = 8, threshold = 0.2)
     assert(reports.isEmpty, "reference still building — nothing to score")
   }
 
   test("a batch that both completes the reference and overflows scores only the overflow") {
-    val dir = Files.createTempDirectory("drift3").toString
+    val dir = tmpDir("drift3")
     // one batch of 12: first 8 (sorted fold order) build the reference,
     // the remaining 4 are scored against it
     writeBatch(dir, Seq.fill(12)("s" -> 50.0))
