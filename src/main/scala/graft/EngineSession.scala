@@ -52,7 +52,7 @@ object EngineSession {
     // RawLocalFileSystem runs `chmod` in a child process for every file,
     // `.crc` and dir it creates, and Spark's default FileContext-based
     // checkpoint manager runs `readlink` children on every rename, so each
-    // publish flush and each micro-batch's 3 checkpoint writes forked.
+    // publish flush and each micro-batch's checkpoint writes forked.
     // NioLocalFileSystem sets the same modes through java.nio; the
     // FileSystem-based manager renames through FileSystem.rename, which
     // reads no link. Both managers check that the destination is absent

@@ -239,7 +239,8 @@ final class EventBroker(
     topics.getOrElseUpdate(name, new Topic(name, log, dlq, options, counters))
 
   /** Publish this broker's delivery counters and its log's group-commit
-    * counters as gauges on a [[graft.operators.BatchMetrics]] ledger (the
+    * and manifest counters (records written, of which maintenance
+    * replaces) as gauges on a [[graft.operators.BatchMetrics]] ledger (the
     * [[RetentionScheduler.registerGauges]] pattern). Delivery errors are
     * failures a subscription's `deliver` let escape; handler failures it
     * retried or dead-lettered are the DLQ's to report.
@@ -253,6 +254,8 @@ final class EventBroker(
     metrics.gauge("log.flushed_rows")(() => log.totalFlushedRows)
     metrics.gauge("log.flush_ms")(() => log.totalFlushMillis)
     metrics.gauge("log.files_written")(() => log.totalFilesWritten)
+    metrics.gauge("log.manifest_records")(() => log.totalManifestRecords)
+    metrics.gauge("log.replace_records")(() => log.totalReplaceRecords)
     this
   }
 
@@ -342,11 +345,12 @@ final class EventBroker(
   * new EventBroker()`). A Spark broker cannot be constructed eagerly at
   * module load — it needs a session and a log location — so the mirror
   * is a lazily-minted PER-SESSION default: first call creates a broker
-  * over `spark.graft.defaultLogPath` (a scratch directory when unset),
-  * later calls return the same instance, exactly the sharing the
-  * reference's singleton exists to provide. Sessions don't share a
-  * default (two sessions sharing one log path would be two catalogs over
-  * one store — set the conf explicitly for that deployment).
+  * over `spark.graft.defaultLogPath` (a scratch directory when unset,
+  * deleted at JVM exit), later calls return the same instance, exactly
+  * the sharing the reference's singleton exists to provide. Sessions
+  * don't share a default (two sessions sharing one log path would be two
+  * catalogs over one store — set the conf explicitly for that
+  * deployment).
   */
 object EventBroker {
 
@@ -355,9 +359,28 @@ object EventBroker {
   /** The session's shared default broker (reference: src/broker.ts:187). */
   def defaultBroker(spark: SparkSession): EventBroker =
     defaults.getOrElseUpdate(spark, {
-      val path = spark.conf.getOption("spark.graft.defaultLogPath")
-        .getOrElse(java.nio.file.Files
-          .createTempDirectory("graft-default-broker").toString)
+      val path = spark.conf.getOption("spark.graft.defaultLogPath").getOrElse(scratchLog())
       new EventBroker(spark, path)
     })
+
+  private val scratchLogs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+
+  /** Deletes the default brokers' scratch logs. Hadoop runs shutdown
+    * hooks by priority, highest first: Spark's (which stop the session and
+    * its streaming queries) run at FileSystem's + 30, so at FileSystem's
+    * + 10 nothing writes into the logs any more, and the FileSystem cache
+    * is still open.
+    */
+  private[graft] val deleteScratchLogs: Runnable =
+    () => scratchLogs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d))
+
+  private lazy val deleteOnExit: Unit = org.apache.hadoop.util.ShutdownHookManager.get()
+    .addShutdownHook(deleteScratchLogs, org.apache.hadoop.fs.FileSystem.SHUTDOWN_HOOK_PRIORITY + 10)
+
+  private def scratchLog(): String = {
+    deleteOnExit
+    val d = java.nio.file.Files.createTempDirectory("graft-default-broker").toFile
+    scratchLogs.add(d)
+    d.toString
+  }
 }

@@ -11,8 +11,6 @@ import scala.util.control.NonFatal
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
@@ -67,6 +65,14 @@ final case class ScanOptions(
   * would layer Delta/Iceberg for that — out of scope, semantics equal).
   * Every write to the log holds the instance's monitor, so none overlaps
   * another.
+  *
+  * Every commit also appends one record to the log's [[LogManifest]]
+  * (`_graft_log/`): an *add* record for an append's files, a *replace*
+  * record for a rewrite's. Batch reads list the partition dirs as before;
+  * tailing subscriptions read only the manifest
+  * ([[graft.streaming.LogTailSource]]), so a micro-batch costs O(new
+  * commits), not O(log), and a rewrite re-delivers nothing. A log first
+  * written by Spark jobs alone gets its manifest seeded from one listing.
   */
 final class EventLog(
     spark: SparkSession,
@@ -88,6 +94,20 @@ final class EventLog(
   private def fs: FileSystem =
     FileSystem.get(URI.create(path), spark.sparkContext.hadoopConfiguration)
 
+  /** The log's commit manifest: every commit below appends one record
+    * under the log's monitor, after its files are in place.
+    */
+  private val manifest = new LogManifest(new Path(path), spark.sparkContext.hadoopConfiguration)
+  private var seeded = false // guarded by this
+
+  /** Seed the manifest of a log that Spark jobs alone wrote, once per
+    * instance, before this instance's first commit.
+    */
+  private def seedManifest(): Unit = if (!seeded) {
+    manifest.seedIfAbsent()
+    seeded = true
+  }
+
   def exists: Boolean = fs.exists(new Path(path))
 
   /** Stable topic→bucket hash: first 8 hex chars of md5, mod n. Computed
@@ -108,7 +128,9 @@ final class EventLog(
     * subscription sees has already been persisted.
     *
     * This is the bulk path (FileStoreImporter, JdbcEventStore): one Spark
-    * write job through the file committer. Synchronized per log instance:
+    * write job through the file committer, then one manifest add record
+    * of the files the job added (found by listing the log before and
+    * after it). Synchronized per log instance:
     * concurrent write jobs into one parquet path share the committer's
     * `_temporary` directory, so two overlapping appends from one driver can
     * clobber each other's staging files. The reference has the same
@@ -117,6 +139,8 @@ final class EventLog(
     * overlaps one.
     */
   def append(events: Dataset[EventRow]): Unit = this.synchronized {
+    seedManifest()
+    val before = manifest.dataFiles().map(_.getPath).toSet
     topicBuckets match {
       case None =>
         events.write.mode(SaveMode.Append).partitionBy("topic").parquet(path)
@@ -126,6 +150,8 @@ final class EventLog(
           .write.mode(SaveMode.Append).partitionBy(BucketCol).parquet(path)
         writeMetaIfAbsent()
     }
+    val added = manifest.dataFiles().filterNot(f => before(f.getPath))
+    if (added.nonEmpty) manifest.append(added.map(manifest.fileOf), Nil)
   }
 
   /** Sidecar metadata so the bucket count travels WITH the table: readers
@@ -174,7 +200,8 @@ final class EventLog(
     * the gap since the last flush started, so the callers arriving
     * meanwhile join its group. Each flush writes one file per partition
     * dir, so files scale with flushes, not events; every file costs a
-    * tailing stream a listing entry and a read. A lone caller never waits.
+    * tailing stream a manifest entry and a file open. A lone caller never
+    * waits.
     *
     * Contract:
     *   - returns only after the caller's own rows are visible;
@@ -183,7 +210,9 @@ final class EventLog(
     *     visible (see [[commitDirect]] for a failure between two renames);
     *   - flushes hold the log's monitor, so they never overlap an
     *     `append(Dataset)` call, a maintenance [[rewrite]], a [[vacuum]] or
-    *     another flush. A flush that arrives during a rewrite waits for it.
+    *     another flush. A flush that arrives during a rewrite waits for it;
+    *   - each group's files get one manifest add record, written after
+    *     they are in place, so tailers see the group whole or not at all.
     */
   def appendRows(events: Seq[EventRow]): Unit = {
     val mine = new EventLog.PendingAppend(events)
@@ -280,25 +309,29 @@ final class EventLog(
     * written by Spark's own Parquet writer (`ParquetFileFormat.prepareWrite`
     * applies the session's Parquet confs — codec, `outputTimestampType`,
     * rebase modes, the row-metadata footer — as a write job would). Files
-    * are written under a hidden name (`.part-…`, skipped by batch listings
-    * and the file-stream source) and renamed into place only after every
-    * file of the group has closed. Returns the files committed.
+    * are written under a hidden name (`.part-…`, skipped by batch listings)
+    * and renamed into place only after every file of the group has closed;
+    * then one manifest add record names them, and tailing subscriptions
+    * see them. Returns the files committed.
     *
     * Failure:
     *   - while writing: the group's hidden files are deleted and the error
     *     rethrown; no dir gains a visible file;
-    *   - a rename fails: the files already renamed are deleted again with
-    *     the rest, and the error rethrown. A reader that listed the log
-    *     between two renames may have seen the earlier dirs' rows;
-    *   - the process dies between two renames: the dirs renamed so far
-    *     hold their rows and the rest keep hidden `.part-*` orphans, which
-    *     [[vacuum]] removes. No caller returned, so none was told its rows
+    *   - a rename or the manifest record fails: the files already renamed
+    *     are deleted again with the rest, and the error rethrown. A batch
+    *     reader that listed the log between two renames may have seen the
+    *     earlier dirs' rows; a tailing subscription sees none;
+    *   - the process dies between two renames, or before the record: the
+    *     dirs renamed so far hold their rows and the rest keep hidden
+    *     `.part-*` orphans; [[vacuum]] removes the orphans and records the
+    *     renamed files. No caller returned, so none was told its rows
     *     committed. A group spans several dirs whenever it holds several
     *     topics (per-topic layout) or buckets (bucketed layout).
     */
   private def commitDirect(rows: Seq[EventRow]): Int = {
     val root = new Path(path)
     if (rows.isEmpty) { fs.mkdirs(root); return 0 }
+    seedManifest()
     val format = new ParquetFileFormat()
     val job = Job.getInstance(format.getHadoopConf(spark))
     val writers = format.prepareWrite(spark, job, Map.empty, fileSchema)
@@ -323,9 +356,13 @@ final class EventLog(
       throw t
     }
     var renamed = 0
-    try files.foreach { case (_, hidden, visible) =>
-      if (!fs.rename(hidden, visible)) throw new IOException(s"could not rename $hidden to $visible")
-      renamed += 1
+    try {
+      val added = files.map { case (dirRows, hidden, visible) =>
+        if (!fs.rename(hidden, visible)) throw new IOException(s"could not rename $hidden to $visible")
+        renamed += 1
+        LogFile(manifest.relative(visible), fs.getFileStatus(visible).getLen, dirRows.size.toLong)
+      }
+      manifest.append(added, Nil)
     } catch { case t: Throwable =>
       deleteQuietly(files.take(renamed).map(_._3) ++ files.drop(renamed).map(_._2))
       throw t
@@ -342,6 +379,12 @@ final class EventLog(
   def totalFlushedRows: Long = flushedRows.get()
   def totalFlushMillis: Long = flushNanos.get() / 1000000L
   def totalFilesWritten: Long = filesWritten.get()
+
+  /** Lifetime manifest records this instance wrote, and how many of them
+    * were [[rewrite]] replaces.
+    */
+  def totalManifestRecords: Long = manifest.recordsWritten
+  def totalReplaceRecords: Long = manifest.replacesWritten
 
   /** Batches waiting for a flush right now. */
   private[graft] def queuedAppends: Int = pending.synchronized(pending.size)
@@ -509,16 +552,22 @@ final class EventLog(
     }
   }
 
-  /** Remove what a crash leaves between a write and its commit rename, and
-    * settle a crashed [[rewrite]] swap:
+  /** Remove what a crash leaves between a write and its commit rename,
+    * settle a crashed [[rewrite]] swap, and reconcile the manifest:
     *   - a partition dir's `.aside_*` copy is renamed back when the live
     *     dir is missing, and deleted when both exist ([[DirSwap.recover]]);
     *   - orphaned `.staging_*` directories of a [[rewrite]] are deleted;
     *   - hidden `.part-*` data files of an [[appendRows]] flush inside
-    *     partition dirs are deleted.
+    *     partition dirs are deleted;
+    *   - committed data files the manifest lacks (a crash between a
+    *     commit's renames and its record) get one record, which also
+    *     removes recorded files that are gone; a torn record is rewritten
+    *     empty and hidden debris in `_graft_log/` is deleted
+    *     ([[LogManifest.reconcile]]).
     * The rename is the commit point, so anything still under a hidden
     * staging name is uncommitted garbage that would otherwise accrete
-    * forever. Returns the directories and files removed or renamed back.
+    * forever. Returns the directories and files removed or renamed back,
+    * the records repaired and the data files recorded.
     * Holds the log's monitor, so it never meets an in-flight flush or
     * rewrite; safe concurrently with reads (hidden names are invisible to
     * parquet listings). After a crash, run it before the log takes new
@@ -537,7 +586,7 @@ final class EventLog(
       .flatMap(d => fs.listStatus(d.getPath))
       .filter(f => f.isFile && f.getPath.getName.startsWith(".part-"))
     settled + staging.count(d => fs.delete(d.getPath, true)) +
-      orphans.count(f => fs.delete(f.getPath, false))
+      orphans.count(f => fs.delete(f.getPath, false)) + manifest.reconcile()
   }
 
   /** Storage layout report: one row per partition directory with file
@@ -568,15 +617,6 @@ final class EventLog(
     if (!fs.exists(dir)) Nil
     else fs.listStatus(dir).toSeq.filter(_.getPath.getName.startsWith("part-"))
 
-  /** Whether any data file in `dir` holds a row, read from the Parquet
-    * footers on the driver: no Spark job.
-    */
-  private def holdsRows(dir: Path): Boolean = dataFiles(dir).exists { f =>
-    val in = ParquetFileReader.open(
-      HadoopInputFile.fromStatus(f, spark.sparkContext.hadoopConfiguration))
-    try in.getRecordCount > 0 finally in.close()
-  }
-
   /** The rows of `topic` within a partition's rows: all of them in the
     * per-topic layout, the `topic` column's match in a bucket.
     */
@@ -593,7 +633,10 @@ final class EventLog(
     * — or None to leave the dir as it is — with its result. The kept rows
     * are written to a staging dir and swapped in by [[DirSwap.swap]], so
     * the old rows stay under a name [[vacuum]] restores until the new ones
-    * are in place. A dir left with no rows is removed.
+    * are in place. A dir left with no rows is removed. After the swap, one
+    * manifest replace record names the files the dir lost and the files
+    * that replaced them, so a tailing subscription re-delivers nothing it
+    * already read (see [[graft.streaming.LogTailSource]]).
     *
     * Holds the log's monitor from the snapshot to the swap, as [[append]],
     * every [[appendRows]] flush and [[vacuum]] do: a commit that landed in
@@ -602,6 +645,7 @@ final class EventLog(
     */
   private def rewrite[T](topic: String)(f: DataFrame => (Option[DataFrame], T)): Option[T] =
     this.synchronized {
+      seedManifest()
       val dir = new Path(path, partitionDir(topic))
       DirSwap.recover(fs, dir)
       if (!fs.exists(dir)) None
@@ -615,7 +659,14 @@ final class EventLog(
           kept.foreach { df =>
             val staging = DirSwap.staging(dir)
             df.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-            DirSwap.swap(fs, dir, keep = holdsRows(staging))
+            // the staged files under their live names, rows from the
+            // footers on the driver: no Spark job
+            val added = dataFiles(staging).map(f => manifest.fileOf(f)
+              .copy(path = manifest.relative(new Path(dir, f.getPath.getName))))
+            val removed = dataFiles(dir).map(f => manifest.relative(f.getPath))
+            val keep = added.exists(_.rows > 0)
+            DirSwap.swap(fs, dir, keep)
+            manifest.append(if (keep) added else Nil, removed)
           }
           Some(result)
         } finally part.unpersist()
@@ -650,11 +701,16 @@ object EventLog {
     * 40 flushes a second per log, so at most 40 new files a second per
     * partition dir. A direct commit takes ~5–10 ms; this is a few of them.
     * Measured with the perfbench `pubsub` workload (4 publishers over 4
-    * topics, one tailing stream, local[4] on a 4-core host): with no gap
-    * the log gained ~0.8 files per event at ~245 events/s, and the stream,
-    * whose micro-batches list the whole log and open every new file, fell
-    * behind (publish→deliver p50 ~380 ms); with this gap, ~116 events/s
-    * at ~217 ms.
+    * topics, one tailing stream, local[4] on a 4-core host):
+    *   - with the listing file-stream source, no gap gave ~0.8 files per
+    *     event at ~245 events/s and a stream that fell behind
+    *     (publish→deliver p50 ~380 ms); with the gap, ~116 events/s at
+    *     ~217 ms;
+    *   - with the manifest source (5 alternating pairs, seeds 3211–3215),
+    *     no gap gave 426 events/s and publish p50 7.9 ms, against 126
+    *     events/s and 34.5 ms with the gap, but deliver p50 243 ms and p90
+    *     367 ms, against 165 ms and 226 ms: worse in 5 of 5 pairs. The
+    *     gap stays; it trades publish latency for delivery latency.
     */
   private val FlushGapNanos: Long = 25L * 1000000L
 

@@ -135,7 +135,10 @@ final class EventSourcedRepository[A <: AggregateRoot[_] : scala.reflect.ClassTa
     * `f(aggregate)` for every aggregate that changed. Within a batch,
     * events fold in (timestamp, id) order; across batches, in arrival
     * order — the same law the reference's sequential appends give it.
-    * Checkpointed: restarts resume the fold where it stopped.
+    * Checkpointed: restarts resume the fold where it stopped. The stream
+    * tails the log's commit manifest ([[graft.streaming.LogTailSource]]),
+    * so a compaction or retention rewrite of events it already folded
+    * does not fold them again.
     */
   def foldAllStreaming[R](spark: SparkSession)(f: A => R)(
       implicit enc: org.apache.spark.sql.Encoder[R]): Dataset[R] = {
@@ -145,7 +148,7 @@ final class EventSourcedRepository[A <: AggregateRoot[_] : scala.reflect.ClassTa
       org.apache.spark.sql.Encoders.javaSerialization[A]
     val prefix = s"aggregate.$aggregateType."
     val fac = factory
-    spark.readStream.schema(graft.model.Event.schema).parquet(log.path)
+    graft.streaming.LogTailSource.reader(spark, log.path).load()
       .where($"topic".startsWith(prefix))
       .as[EventRow]
       .groupByKey(_.topic.stripPrefix(prefix))

@@ -1,8 +1,5 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets
-
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -18,12 +15,19 @@ import graft.model.{Event, EventRow}
   *   - store-then-forward is STRUCTURAL: the log is the only source, so a
   *     subscriber can only see persisted events (reference guarantees this
   *     by ordering two awaits, src/topic.ts:112-115)
+  *   - the query reads the log's commit manifest through a
+  *     [[LogTailSource]]: each micro-batch holds the commits made since the
+  *     last one, found without listing the log
   *   - `receiveHistoricalEvents=true` = start from the log's beginning —
   *     history and live unify in one ordered source, strictly better than
   *     the reference's racy async replay (src/topic.ts:70-86); with the
-  *     reference default `false` (src/subscription.ts:27), a fresh
-  *     subscription seeds its boundary at the log's current max timestamp
-  *     and delivers only what is published after subscribe
+  *     reference default `false` (src/subscription.ts:27), delivery starts
+  *     at the manifest head at first start: everything committed after
+  *     subscribe is delivered, in ARRIVAL order, whatever its event
+  *     timestamp — what the reference's live fan-out delivers. A
+  *     same-instant publish racing the subscribe lands on either side of
+  *     the boundary, as in the reference. The first micro-batch is an
+  *     empty one that ends at the boundary, so restarts keep it
   *   - pause/resume = stop + restart from the checkpoint: the gap replays,
   *     upgrading the reference's lossy pause (src/subscription.ts:62-73)
   *   - bounded retry inside foreachBatch honors `retryDelay` between
@@ -34,6 +38,10 @@ import graft.model.{Event, EventRow}
   *
   * Delivery is at-least-once across restarts (checkpointed foreachBatch) —
   * handlers must be idempotent on `event.id`, which the envelope provides.
+  * Maintenance (retention, compaction) delivers nothing again: a rewrite's
+  * manifest replace record stands for rows already read. Only a file that
+  * a rewrite replaced before this subscription read it delivers the
+  * rewritten dir's surviving rows, some of them again.
   *
   * Backpressure: the ordered (default) delivery mode collects each
   * micro-batch to the driver to honor the reference's sequential-handler
@@ -46,18 +54,20 @@ import graft.model.{Event, EventRow}
   * [[StreamingSubscription.OrderedMaxBytesKey]]), a bytes cap rather than
   * a file cap because driver memory is what the collect consumes and log
   * file sizes vary 1000× between a test append and a compacted segment.
-  * The file source still admits at least one file per batch, so a single
-  * over-cap file forms its own batch — the cap bounds batches at
-  * max(cap, largest file), which is the file-granularity floor.
-  * `ordered=false` switches to distributed delivery: handlers run inside
+  * The source admits whole commits and at least one per batch, so a
+  * single over-cap commit forms its own batch — the cap bounds batches at
+  * max(cap, largest commit). `ordered=false` switches to distributed
+  * delivery: handlers run inside
   * `mapPartitions` on executors (unordered across partitions, so the
   * reference's global ordering law is traded for throughput) and only
   * failures travel back to the driver for DLQ bookkeeping; it needs no
   * default cap (nothing but failures is collected).
   *
-  * Checkpoint cost: every micro-batch, however small, writes 3 checkpoint
-  * files (offsets, the file source's `sources` log, commits); see
-  * [[graft.EngineSession]] for why those writes are fork-free.
+  * Checkpoint cost: every micro-batch, however small, writes 2 checkpoint
+  * files (offsets, commits); the source keeps nothing under `sources/`.
+  * See [[graft.EngineSession]] for why those writes are fork-free. A
+  * checkpoint written by Spark's file-stream source (before the manifest)
+  * does not resume: start such a subscription from a new checkpoint.
   */
 final class StreamingSubscription(
     spark: SparkSession,
@@ -73,12 +83,14 @@ final class StreamingSubscription(
   def id: String = subscriptionId
   @volatile private var query: Option[StreamingQuery] = None
 
-  /** The filtered source stream: type/topic predicates are pushed into the
-    * parquet file-stream scan by Catalyst, so a subscription reading one
-    * topic never deserializes the rest of the log.
+  /** The filtered source stream: type/topic predicates are pushed into
+    * each micro-batch's Parquet scan by Catalyst (the topic prunes
+    * per-topic dirs), so a subscription reading one topic never
+    * deserializes the rest of the log.
     */
   private def source: DataFrame = {
-    val reader = spark.readStream.schema(Event.schema)
+    val reader = LogTailSource.reader(spark, logPath)
+      .option("startAtHead", !options.receiveHistoricalEvents)
     // bound the driver-collected path (see class doc): bytes, not files,
     // because bytes are what the per-batch collect costs; distributed mode
     // collects only failures
@@ -86,81 +98,11 @@ final class StreamingSubscription(
       reader.option("maxBytesPerTrigger",
         spark.conf.get(StreamingSubscription.OrderedMaxBytesKey,
           StreamingSubscription.DefaultOrderedMaxBytesPerTrigger.toString))
-    var df = reader.parquet(logPath)
+    var df = reader.load()
     topicName.foreach(t => df = df.where(col("topic") === t))
     if (options.eventTypes.nonEmpty)
       df = df.where(col("type").isin(options.eventTypes: _*))
-    startingBoundaryMicros().foreach(us =>
-      df = df.where(col("timestamp") > timestamp_micros(lit(us))))
     df
-  }
-
-  /** Where delivery starts. `receiveHistoricalEvents=true` → None (beginning
-    * of log). Otherwise the boundary is the SUBSCRIBED TOPIC's max event
-    * timestamp at FIRST start (the global log max would let one topic's
-    * clock-skewed future event silently swallow another topic's
-    * post-subscribe publishes), persisted as a marker next to the
-    * checkpoint so restarts keep the same boundary (the checkpoint itself
-    * tracks progress past it). Kept in MICROSECONDS — timestamps carry µs
-    * precision, and a millisecond boundary would re-deliver every
-    * historical event inside the max event's millisecond. Same-instant
-    * publishes racing the subscribe land on either side of the boundary —
-    * the reference has the identical race on its wall-clock subscribe
-    * instant.
-    *
-    * The boundary is EVENT-time, not arrival-time (the file source has no
-    * streaming modifiedAfter): "historical" means "event-timestamped at or
-    * before the topic's max at subscribe". Consequence to know about: a
-    * post-subscribe append carrying a LAGGING event timestamp — a
-    * clock-skewed second producer, or a backfill import — is classified
-    * historical and not delivered. That is the right call for backfills
-    * (imported history is exactly what `receiveHistoricalEvents=false`
-    * opts out of); skewed producers that must be delivered need
-    * `receiveHistoricalEvents=true` or broker-stamped timestamps (the
-    * default publish path stamps at the broker, which cannot lag its own
-    * subscribe).
-    */
-  private def startingBoundaryMicros(): Option[Long] = {
-    if (options.receiveHistoricalEvents) return None
-    val marker = new Path(checkpointDir, "GRAFT_START_BOUNDARY")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val persisted: Option[Long] =
-      if (!fs.exists(marker)) None
-      else {
-        val in = fs.open(marker)
-        val txt =
-          try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-            StandardCharsets.UTF_8).trim
-          finally in.close()
-        // an empty/garbled marker (crash between create and write before the
-        // writes went through .tmp+rename) recomputes rather than bricking
-        // every future start()
-        txt.toLongOption
-      }
-    if (persisted.isDefined) persisted
-    else {
-      val logFs = new Path(logPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val maxUs: Long =
-        if (!logFs.exists(new Path(logPath))) 0L
-        else {
-          var scoped = spark.read.schema(Event.schema).parquet(logPath)
-          topicName.foreach(t => scoped = scoped.where(col("topic") === t))
-          val row = scoped.agg(max(col("timestamp"))).head()
-          if (row.isNullAt(0)) 0L
-          else {
-            val ts = row.getTimestamp(0)
-            ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
-          }
-        }
-      // write-then-rename: a crash mid-write must not leave a truncated
-      // marker behind (fs.create truncates eagerly)
-      val tmp = new Path(checkpointDir, "GRAFT_START_BOUNDARY.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(maxUs.toString.getBytes(StandardCharsets.UTF_8))
-      finally out.close()
-      fs.rename(tmp, marker)
-      Some(maxUs)
-    }
   }
 
   /** Start (or restart — the checkpoint resumes where delivery stopped).
@@ -231,7 +173,7 @@ object StreamingSubscription {
   val MaxRetrySleepMillis: Long = 30000L
 
   /** Session conf key overriding the ordered-mode default micro-batch
-    * byte cap (value parsed by the file source's `maxBytesPerTrigger`).
+    * byte cap (a positive number of bytes).
     */
   val OrderedMaxBytesKey: String = "spark.graft.delivery.ordered.maxBytesPerTrigger"
 

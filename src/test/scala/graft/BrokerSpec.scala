@@ -257,6 +257,7 @@ class BrokerSpec extends SparkSpec {
     assert(ok.success && ok.receiverCount == 1)
     // none of the failed group's events reached the log
     assert(b.log.getEventsTyped("fail").collect().map(_.id).toSeq == Seq(ok.eventId))
+    b.log.compact("fail") // a maintenance rewrite: one replace record
     import spark.implicits._
     val gauges = metrics.gauges(spark).as[(String, Long)].collect().toMap
     // flush time is wall clock: present and non-negative, its value free
@@ -264,7 +265,8 @@ class BrokerSpec extends SparkSpec {
     assert(gauges - "log.flush_ms" == Map(
       "broker.published" -> 1L, "broker.schema_rejected" -> 1L,
       "broker.persist_failed" -> 4L, "broker.delivery_errors" -> 1L,
-      "log.flushes" -> 1L, "log.flushed_rows" -> 1L, "log.files_written" -> 1L))
+      "log.flushes" -> 1L, "log.flushed_rows" -> 1L, "log.files_written" -> 1L,
+      "log.manifest_records" -> 2L, "log.replace_records" -> 1L))
   }
 
   test("DLQ retry re-dispatches through the original subscription (broker.ts:166-183)") {
@@ -293,5 +295,11 @@ class BrokerSpec extends SparkSpec {
     // visible through the other — the sharing the singleton exists for
     d1.createTopic("default-shared")
     assert(d2.getTopic("default-shared").isDefined)
+    // with no spark.graft.defaultLogPath its log is a scratch dir, deleted
+    // by a shutdown hook at JVM exit
+    assert(spark.conf.getOption("spark.graft.defaultLogPath").isEmpty)
+    assert(new java.io.File(d1.log.path).getName.startsWith("graft-default-broker"))
+    assert(org.apache.hadoop.util.ShutdownHookManager.get()
+      .hasShutdownHook(EventBroker.deleteScratchLogs))
   }
 }

@@ -201,6 +201,32 @@ class EventLogSpec extends SparkSpec {
     assert(log.getEventsTyped("web").collect().map(_.id).toSeq == Seq("e3", "e5"))
   }
 
+  test("vacuum records a committed file the manifest lacks and clears manifest debris") {
+    import graft.broker.SubscriptionOptions
+    import graft.dlq.InMemoryDeadLetterQueue
+    import graft.streaming.StreamingSubscription
+    val log = seeded() // manifest record 0: the seed's two files
+    // a flush that died between its rename and its record: a committed
+    // data file no record names
+    val donor = new EventLog(spark, tmpDir("donor"))
+    donor.appendRows(Seq(row("p1", "click", "web", 7000), row("p2", "click", "web", 8000)))
+    val planted = new File(log.path, "topic=web/part-00000-planted.c000.snappy.parquet")
+    FileUtils.copyFile(new File(donor.path, visibleFiles(donor).head), planted)
+    // a record torn by a crash mid-write, and hidden debris in the manifest dir
+    val manifest = new File(log.path, "_graft_log")
+    FileUtils.writeStringToFile(new File(manifest, f"${1}%020d"), "graft-log 1\n+\t", "UTF-8")
+    val debris = new File(manifest, ".7.0c5e2b4a.tmp")
+    assert(debris.createNewFile())
+    assert(log.vacuum() == 3) // the torn record, the planted file, the debris
+    assert(!debris.exists())
+    assert(log.vacuum() == 0) // idempotent
+    val seen = scala.collection.mutable.Buffer.empty[String]
+    new StreamingSubscription(spark, log.path, tmpDir("ckpt"), e => seen += e.id,
+      new InMemoryDeadLetterQueue, Some("web"),
+      SubscriptionOptions(receiveHistoricalEvents = true)).runAvailable()
+    assert(seen.toSeq == Seq("e1", "e2", "e3", "e5", "p1", "p2"))
+  }
+
   /** One publisher thread appends `n` single rows to `web` (timestamps from
     * 10 s on) while this thread runs `sweep` over and over; returns the ids
     * the publisher was told committed and the number of appends that

@@ -100,4 +100,28 @@ class LocalFsSpec extends SparkSpec {
     intercept[FileAlreadyExistsException](write(2))
     assert(Files.readAllBytes(Paths.get(s"$d/0")).toSeq == Seq[Byte](1))
   }
+
+  test("racing no-overwrite creates of one file: exactly one wins, its bytes stay") {
+    val fs = init(new NioLocalFileSystem(), new Configuration())
+    for (round <- 0 until 20) {
+      val p = new Path(s"${tmpDir("excl")}/sub/$round")
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val outcomes = (0 until 4).map { i =>
+        val f = new java.util.concurrent.FutureTask[Boolean](() => {
+          start.await()
+          try {
+            val out = fs.create(p, false)
+            try out.write(Array(i.toByte)) finally out.close()
+            true
+          } catch { case _: FileAlreadyExistsException => false }
+        })
+        new Thread(f).start()
+        i -> f
+      }
+      start.countDown()
+      val winners = outcomes.collect { case (i, f) if f.get() => i }
+      assert(winners.size == 1, s"round $round: ${winners.size} creators won")
+      assert(Files.readAllBytes(Paths.get(p.toString)).toSeq == Seq(winners.head.toByte))
+    }
+  }
 }

@@ -112,6 +112,12 @@ class SourcingSpec extends SparkSpec {
     run()
     assert(emitted.sortBy(_._1).toSeq ==
       Seq(("u1", 2, "a@new.com"), ("u2", 1, "b@x.com")))
+
+    // compacting a folded aggregate's topic folds nothing again
+    emitted.clear()
+    log.compact("aggregate.user.u1")
+    run()
+    assert(emitted.isEmpty)
   }
 
   test("LatestPayloadAggregator (typed UDAF) agrees with max_by under any partitioning") {

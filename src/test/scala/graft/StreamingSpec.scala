@@ -117,8 +117,8 @@ class StreamingSpec extends SparkSpec {
       e => seen += e.id, new InMemoryDeadLetterQueue, topicName = Some("t"))
     sub.runAvailable()
     assert(seen.isEmpty) // history skipped
-    // events "published after subscribe" (later timestamps) ARE delivered,
-    // and the boundary is sticky across restarts
+    // events committed after subscribe ARE delivered, and the boundary is
+    // sticky across restarts
     log.appendRows(Seq(row("new1", "a", "t", 5000)))
     sub.runAvailable()
     assert(seen.toSeq == Seq("new1"))
@@ -135,7 +135,7 @@ class StreamingSpec extends SparkSpec {
     val sub = new StreamingSubscription(spark, logDir, tmpDir("ckpt"),
       e => seen += e.id, new InMemoryDeadLetterQueue, topicName = Some("t"))
     sub.runAvailable()
-    assert(seen.isEmpty) // a ms-granular boundary would re-deliver "hist"
+    assert(seen.isEmpty) // the boundary is arrival order, not the event's millisecond
     val fresh = row("fresh", "a", "t", t0)
     fresh.timestamp.setNanos(700000) // same millisecond, 200 µs after the boundary
     log.appendRows(Seq(fresh))
@@ -156,7 +156,7 @@ class StreamingSpec extends SparkSpec {
     assert(seen.isEmpty)
     log.appendRows(Seq(row("mine-new", "a", "mine", 5000))) // far below other's future ts
     sub.runAvailable()
-    assert(seen.toSeq == Seq("mine-new")) // a global-max boundary would drop this
+    assert(seen.toSeq == Seq("mine-new")) // an event-time boundary at the global max would drop this
   }
 
   test("ordered mode default-bounds the drain: many-file backlog splits into capped micro-batches") {
