@@ -128,30 +128,51 @@ final class EventLog(
     * subscription sees has already been persisted.
     *
     * This is the bulk path (FileStoreImporter, JdbcEventStore): one Spark
-    * write job through the file committer, then one manifest add record
-    * of the files the job added (found by listing the log before and
-    * after it). Synchronized per log instance:
-    * concurrent write jobs into one parquet path share the committer's
-    * `_temporary` directory, so two overlapping appends from one driver can
-    * clobber each other's staging files. The reference has the same
-    * serialization implicitly (single JS event loop). The same monitor
-    * covers every [[appendRows]] group flush, so a bulk append never
-    * overlaps one.
+    * write job into a hidden staging dir of the log (`.staging_append-…`,
+    * skipped by listings), then each staged file renamed into its
+    * partition dir, then one manifest add record of those files. Only the
+    * staged files are listed, and their footers read for row counts, so an
+    * append costs O(its files), not O(log). Failure is as in
+    * [[commitDirect]]: a failed rename or record deletes the files already
+    * renamed, and a crash leaves renamed files for [[vacuum]] to record
+    * and the staging dir for it to delete. Synchronized per log instance,
+    * as the reference's single JS event loop serializes appends; the same
+    * monitor covers every [[appendRows]] group flush, so a bulk append
+    * never overlaps one.
     */
   def append(events: Dataset[EventRow]): Unit = this.synchronized {
     seedManifest()
-    val before = manifest.dataFiles().map(_.getPath).toSet
-    topicBuckets match {
-      case None =>
-        events.write.mode(SaveMode.Append).partitionBy("topic").parquet(path)
-      case Some(_) =>
-        events.toDF()
-          .withColumn(BucketCol, bucketColumn(col("topic")))
-          .write.mode(SaveMode.Append).partitionBy(BucketCol).parquet(path)
-        writeMetaIfAbsent()
-    }
-    val added = manifest.dataFiles().filterNot(f => before(f.getPath))
-    if (added.nonEmpty) manifest.append(added.map(manifest.fileOf), Nil)
+    val root = new Path(path)
+    val staging = DirSwap.staging(new Path(root, s"append-${UUID.randomUUID()}"))
+    try {
+      topicBuckets match {
+        case None =>
+          events.write.partitionBy("topic").parquet(staging.toString)
+        case Some(_) =>
+          events.toDF()
+            .withColumn(BucketCol, bucketColumn(col("topic")))
+            .write.partitionBy(BucketCol).parquet(staging.toString)
+      }
+      // (staged, visible, manifest entry) per file the job wrote
+      val files = manifest.dataFiles(staging).map { s =>
+        val name = manifest.relative(s.getPath).stripPrefix(staging.getName + "/")
+        (s.getPath, manifest.resolve(name), manifest.fileOf(s).copy(path = name))
+      }
+      var renamed = 0
+      try {
+        files.foreach { case (staged, visible, _) =>
+          fs.mkdirs(visible.getParent)
+          if (!fs.rename(staged, visible)) throw new IOException(s"could not rename $staged to $visible")
+          renamed += 1
+        }
+        if (files.nonEmpty) manifest.append(files.map(_._3), Nil)
+      } catch { case t: Throwable =>
+        files.take(renamed).foreach(f => try fs.delete(f._2, false) catch { case NonFatal(_) => () })
+        throw t
+      }
+    } finally try fs.delete(staging, true) catch { case NonFatal(_) => () }
+    fs.mkdirs(root)
+    writeMetaIfAbsent()
   }
 
   /** Sidecar metadata so the bucket count travels WITH the table: readers
@@ -560,10 +581,12 @@ final class EventLog(
     *   - hidden `.part-*` data files of an [[appendRows]] flush inside
     *     partition dirs are deleted;
     *   - committed data files the manifest lacks (a crash between a
-    *     commit's renames and its record) get one record, which also
-    *     removes recorded files that are gone; a torn record is rewritten
-    *     empty and hidden debris in `_graft_log/` is deleted
-    *     ([[LogManifest.reconcile]]).
+    *     commit's renames and its record) are recorded, and recorded files
+    *     that are gone are recorded as removed, one replace record per dir
+    *     that lost files; a torn record is rewritten empty and hidden
+    *     debris in `_graft_log/` is deleted ([[LogManifest.reconcile]]);
+    *   - a bulk [[append]]'s `.staging_append-*` dir is deleted with the
+    *     rewrites' staging dirs.
     * The rename is the commit point, so anything still under a hidden
     * staging name is uncommitted garbage that would otherwise accrete
     * forever. Returns the directories and files removed or renamed back,

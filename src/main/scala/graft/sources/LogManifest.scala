@@ -4,6 +4,8 @@ import java.io.{EOFException, FileNotFoundException}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.util.control.NonFatal
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumException, FileAlreadyExistsException, FileStatus, FileSystem, Path}
 import org.apache.hadoop.io.IOUtils
@@ -33,7 +35,9 @@ final case class LogRecord(added: Seq[LogFile], removed: Seq[String]) {
   *
   * A record's last line is `end`. A reader takes a record without it as
   * not yet written: the create makes the file visible before its bytes.
-  * A writer that dies mid-record leaves it so until [[EventLog.vacuum]]
+  * A writer whose record write fails (a full disk) rewrites it empty
+  * before it rethrows, so readers pass the id; one that dies mid-record
+  * leaves it torn, and readers stop there, until [[EventLog.vacuum]]
   * rewrites it empty.
   *
   * Readers find new records by probing ids upward from the last one they
@@ -87,13 +91,29 @@ final class LogManifest(root: Path, conf: Configuration) {
     id
   }
 
-  /** Write record `id` unless its id is taken; false if it was. */
-  private def create(id: Long, bytes: Array[Byte]): Boolean =
+  /** Write record `id` unless its id is taken; false if it was. A write
+    * that fails once the id is claimed leaves it an empty record, on a
+    * best-effort basis, and rethrows: ids stay dense and readable, and
+    * the next append takes the id after it.
+    */
+  private def create(id: Long, bytes: Array[Byte]): Boolean = {
+    val out =
+      try fs.create(recordPath(id), false)
+      catch { case _: FileAlreadyExistsException => return false }
     try {
-      val out = fs.create(recordPath(id), false)
       try out.write(bytes) finally out.close()
-      true
-    } catch { case _: FileAlreadyExistsException => false }
+    } catch { case NonFatal(t) =>
+      try writeEmpty(id) catch { case NonFatal(e) => t.addSuppressed(e) }
+      throw t
+    }
+    true
+  }
+
+  /** Overwrite record `id` with an empty record. */
+  private def writeEmpty(id: Long): Unit = {
+    val out = fs.create(recordPath(id), true)
+    try out.write(format(Nil, Nil).getBytes(UTF_8)) finally out.close()
+  }
 
   /** A log that holds data files but no manifest (written by Spark jobs
     * alone) gets record 0: an add of every data file, from one listing.
@@ -107,11 +127,15 @@ final class LogManifest(root: Path, conf: Configuration) {
     }
 
   /** Settle the manifest after a crash (see [[EventLog.vacuum]]): rewrite
-    * a torn record as an empty one, record every committed data file the
-    * manifest lacks (and, as removed, every recorded file that is gone) in
-    * one record, and delete hidden debris in the manifest dir. Returns the
-    * records repaired, the data files recorded and the files deleted.
-    * The caller holds the log's monitor, and no other writer is running.
+    * a torn record as an empty one, record the committed data files the
+    * manifest lacks and the recorded files that are gone, and delete
+    * hidden debris in the manifest dir. A dir that lost files gets one
+    * replace record, as a rewrite of it writes: its gone files replaced by
+    * its unrecorded ones. Unrecorded files of the other dirs get one add
+    * record, so a tailer that read every gone file still delivers them.
+    * Returns the records repaired, the data files recorded and the files
+    * deleted. The caller holds the log's monitor, and no other writer is
+    * running.
     */
   def reconcile(): Int = synchronized {
     if (!isDir(base)) return 0
@@ -120,8 +144,7 @@ final class LogManifest(root: Path, conf: Configuration) {
     val live = scala.collection.mutable.LinkedHashMap.empty[String, Unit]
     (0L until n).foreach { id =>
       val r = read(id).getOrElse {
-        val out = fs.create(recordPath(id), true)
-        try out.write(format(Nil, Nil).getBytes(UTF_8)) finally out.close()
+        writeEmpty(id)
         repaired += 1
         LogRecord(Nil, Nil)
       }
@@ -129,9 +152,13 @@ final class LogManifest(root: Path, conf: Configuration) {
       r.added.foreach(f => live(f.path) = ())
     }
     val onDisk = dataFiles()
-    val unrecorded = onDisk.filterNot(s => live.contains(relative(s.getPath)))
-    val gone = live.keySet.toSet -- onDisk.map(s => relative(s.getPath))
-    if (unrecorded.nonEmpty || gone.nonEmpty) append(unrecorded.map(fileOf), gone.toSeq.sorted)
+    val unrecorded = onDisk.filterNot(s => live.contains(relative(s.getPath))).map(fileOf)
+    val goneByDir = (live.keySet.toSet -- onDisk.map(s => relative(s.getPath))).toSeq.sorted.groupBy(dirOf)
+    val (replacing, adding) = unrecorded.partition(f => goneByDir.contains(dirOf(f.path)))
+    if (adding.nonEmpty) append(adding, Nil)
+    goneByDir.toSeq.sortBy(_._1).foreach { case (d, gone) =>
+      append(replacing.filter(f => dirOf(f.path) == d), gone)
+    }
     val records = (0L until head()).map(id => recordPath(id).getName).toSet
     val debris =
       if (!fs.exists(dir)) Nil
@@ -145,14 +172,15 @@ final class LogManifest(root: Path, conf: Configuration) {
   def recordsWritten: Long = written.get()
   def replacesWritten: Long = replaces.get()
 
-  /** Every committed data file under the log: visible files of visible
-    * dirs, as Spark's Parquet listing takes them.
+  /** Every committed data file under the log (or under `dir`, a hidden
+    * staging dir in it): visible files of visible dirs, as Spark's Parquet
+    * listing takes them.
     */
-  def dataFiles(): Seq[FileStatus] = {
+  def dataFiles(dir: Path = base): Seq[FileStatus] = {
     def walk(d: Path): Seq[FileStatus] = fs.listStatus(d).toSeq
       .filterNot(s => isHidden(s.getPath.getName))
       .flatMap(s => if (s.isDirectory) walk(s.getPath) else Seq(s))
-    if (isDir(base)) walk(base) else Nil
+    if (isDir(dir)) walk(dir) else Nil
   }
 
   /** `status` as a manifest entry; its row count comes from the footer. */
@@ -180,6 +208,9 @@ object LogManifest {
   private val End = "end"
 
   private def isHidden(name: String): Boolean = name.startsWith("_") || name.startsWith(".")
+
+  /** The partition dir part of a manifest entry, with its trailing `/`. */
+  private def dirOf(path: String): String = path.take(path.lastIndexOf('/') + 1)
 
   /** A record's text: a header, one `+ size rows path` line per added
     * file, one `- path` line per removed file, and `end`. The path is the

@@ -38,12 +38,18 @@ import graft.sources.{LogFile, LogManifest, LogRecord}
   *     file it removed was read before `start`. A batch file that a replace
   *     removed — in the batch, or, when the file is gone by the time the
   *     batch is planned, in a later record — resolves to that replace's
-  *     added files, which hold its surviving rows. Rows of other files in
-  *     the same dir come along, so that race delivers duplicates; no row
-  *     is lost.
+  *     added files, which hold its surviving rows; a replaced file that is
+  *     gone too resolves on through the next replace, until every file
+  *     left exists. Rows of other files in the same dir come along, so a
+  *     rewrite that lands after a batch is sized and before it is planned
+  *     delivers duplicates; no row is lost.
   *   - `maxBytesPerTrigger` admits whole records up to that many added
-  *     bytes, at least one per batch (`SupportsAdmissionControl`), and an
-  *     AvailableNow trigger stops at the manifest head it started at.
+  *     bytes, at least one per batch (`SupportsAdmissionControl`). A batch
+  *     the cap cut whose files are gone ends after the records that
+  *     resolve them instead, whatever their size: a rewrite's added files
+  *     are then delivered once, in the batch that crosses it, not once per
+  *     capped batch before it. An AvailableNow trigger stops at the
+  *     manifest head it started at.
   *   - `startAtHead=true` starts at the manifest head when the source is
   *     created: its first micro-batch is an empty one that ends there, so
   *     the offset log keeps the boundary across restarts.
@@ -84,14 +90,19 @@ final class LogTailSource(spark: SparkSession, logPath: String, maxBytes: Option
     }
     var end = from
     var bytes = 0L
+    var capped = false
     var more = true
     while (more && end < availableNowEnd) {
       more = read(end).exists { r =>
         val size = r.added.map(_.size).sum
         val admit = end == from || bytes + size <= cap
-        if (admit) { bytes += size; end += 1 }
+        if (admit) { bytes += size; end += 1 } else capped = true
         admit
       }
+    }
+    if (capped) {
+      val (_, resolvedAt, resolved) = plan(from, end)
+      if (resolved) end = resolvedAt
     }
     if (end > from) LongOffset(end) else startOffset
   }
@@ -100,27 +111,42 @@ final class LogTailSource(spark: SparkSession, logPath: String, maxBytes: Option
     val to = idOf(end)
     // the boundary batch of a startAtHead source delivers nothing
     val from = start.map(idOf).getOrElse(if (startAtHead) to else 0L)
+    LogTailSource.batch(spark, root, plan(from, to)._1)
+  }
+
+  /** The files records `[from, to)` leave to scan, each replace that
+    * removes one of them swapping in its added files; then, while some of
+    * them are gone, the records from `to` on that resolve them. Returns
+    * the files, the id after the last record read, and whether every file
+    * exists.
+    */
+  private def plan(from: Long, to: Long): (Seq[LogFile], Long, Boolean) = {
     val pending = mutable.LinkedHashMap.empty[String, LogFile]
-    def resolve(r: LogRecord): Unit =
-      if (r.isReplace && r.removed.exists(pending.contains)) {
+    def resolve(r: LogRecord): Boolean = {
+      val hit = r.isReplace && r.removed.exists(pending.contains)
+      if (hit) {
         r.removed.foreach(pending.remove)
         r.added.foreach(f => pending(f.path) = f)
       }
+      hit
+    }
     (from until to).foreach { id =>
       val r = record(id)
       if (r.isReplace) resolve(r) else r.added.foreach(f => pending(f.path) = f)
     }
-    // a batch file already gone was removed by a rewrite: find its record
+    // a file already gone was removed by a rewrite, and a file that
+    // rewrite added may be gone through a later one: find their records
     val fs = root.getFileSystem(conf)
-    var missing = pending.keySet.filterNot(p => fs.exists(manifest.resolve(p))).toSet
+    def gone(paths: Iterable[String]): Set[String] =
+      paths.filterNot(p => fs.exists(manifest.resolve(p))).toSet
+    var missing = gone(pending.keys)
     var next = to
     while (missing.nonEmpty && read(next).isDefined) {
       val r = record(next)
-      resolve(r)
-      missing --= r.removed
+      if (resolve(r)) missing = missing -- r.removed ++ gone(r.added.map(_.path))
       next += 1
     }
-    LogTailSource.batch(spark, root, pending.values.toSeq)
+    (pending.values.toSeq, next, missing.isEmpty)
   }
 
   override def commit(end: Offset): Unit = {

@@ -41,7 +41,8 @@ import graft.model.{Event, EventRow}
   * Maintenance (retention, compaction) delivers nothing again: a rewrite's
   * manifest replace record stands for rows already read. Only a file that
   * a rewrite replaced before this subscription read it delivers the
-  * rewritten dir's surviving rows, some of them again.
+  * rewritten dir's surviving rows, once, in the micro-batch that crosses
+  * the rewrite; rows of that dir read before come again with them.
   *
   * Backpressure: the ordered (default) delivery mode collects each
   * micro-batch to the driver to honor the reference's sequential-handler
@@ -56,7 +57,10 @@ import graft.model.{Event, EventRow}
   * file sizes vary 1000× between a test append and a compacted segment.
   * The source admits whole commits and at least one per batch, so a
   * single over-cap commit forms its own batch — the cap bounds batches at
-  * max(cap, largest commit). `ordered=false` switches to distributed
+  * max(cap, largest commit). The one exception is a backlog a rewrite
+  * replaced before it was read: its batch runs through the rewrite's
+  * record, so the rewritten dir is delivered once, whatever its size.
+  * `ordered=false` switches to distributed
   * delivery: handlers run inside
   * `mapPartitions` on executors (unordered across partitions, so the
   * reference's global ordering law is traded for throughput) and only

@@ -1,9 +1,16 @@
 package graft
 
+import java.io.{File, IOException, OutputStream}
 import java.sql.Timestamp
+import java.util.concurrent.atomic.AtomicBoolean
 
 import scala.collection.mutable
 
+import org.apache.commons.io.FileUtils
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FSDataOutputStream, Path}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 import org.apache.spark.ListenerBusShim
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -12,7 +19,7 @@ import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import graft.broker.SubscriptionOptions
 import graft.dlq.InMemoryDeadLetterQueue
 import graft.model.EventRow
-import graft.sources.EventLog
+import graft.sources.{EventLog, LogManifest, LogRecord, NioLocalFileSystem}
 import graft.streaming.{LogTailSource, StreamingSubscription}
 
 /** Tailing the event log from its commit manifest: maintenance rewrites
@@ -90,20 +97,48 @@ class LogTailSpec extends SparkSpec {
       assert(tail.drain() == Seq("e6"))
     }
 
-  test("a batch whose files a later rewrite removed scans that rewrite's files") {
-    val log = new EventLog(spark, tmpDir("log"))
-    log.appendRows(Seq(row("e1", "web", 1000L)))
-    log.appendRows(Seq(row("e2", "web", 2000L)))
-    log.compact("web") // record 2 replaces the files of records 0 and 1
-    val source = new LogTailSource(spark, log.path, None, startAtHead = false)
-    // the batch (0, 2] is planned as if before the rewrite: its files are gone
-    val scanned = source.getBatch(None, LongOffset(2)).queryExecution.analyzed.collect {
-      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r.location.inputFiles.toSeq
-    }.flatten
-    val live = new java.io.File(log.path, "topic=web").listFiles()
+  /** The rewrites run on `web` after a backlog: one, or a second that
+    * replaces the first one's files in turn.
+    */
+  private val rewriteChains: Seq[(String, EventLog => Unit)] = Seq(
+    "one rewrite" -> (log => log.compact("web")),
+    "two rewrites" -> { log =>
+      log.compact("web")
+      assert(log.deleteEvents("web", olderThanMillis = 1500L) == 1L)
+    })
+
+  /** The paths of `web`'s live data files. */
+  private def liveFiles(log: EventLog): Seq[String] =
+    new File(log.path, "topic=web").listFiles()
       .filter(_.getName.startsWith("part-")).map(_.toURI.getPath).toSeq
-    assert(live.size == 1 && scanned.map(new java.net.URI(_).getPath) == live, scanned)
-  }
+
+  for ((chain, rewrite) <- rewriteChains)
+    test(s"a batch whose files $chain removed scans the last rewrite's files") {
+      val log = new EventLog(spark, tmpDir("log"))
+      log.appendRows(Seq(row("e1", "web", 1000L)))
+      log.appendRows(Seq(row("e2", "web", 2000L)))
+      rewrite(log) // records 2 on replace the files of records 0 and 1
+      val source = new LogTailSource(spark, log.path, None, startAtHead = false)
+      // the batch (0, 2] is planned as if before the rewrites: its files are gone
+      val scanned = source.getBatch(None, LongOffset(2)).queryExecution.analyzed.collect {
+        case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r.location.inputFiles.toSeq
+      }.flatten
+      val live = liveFiles(log)
+      assert(live.size == 1 && scanned.map(new java.net.URI(_).getPath) == live, scanned)
+    }
+
+  for ((chain, rewrite) <- rewriteChains)
+    test(s"a capped historical drain delivers a backlog that $chain replaced once") {
+      val log = new EventLog(spark, tmpDir("log"))
+      (1 to 5).foreach(i => log.appendRows(Seq(row(s"e$i", "web", i * 1000L))))
+      rewrite(log)
+      val kept = (1 to 5).map(i => s"e$i").filterNot(id => chain == "two rewrites" && id == "e1")
+      // one record per batch: every add record's file is gone, and only the
+      // batch that crosses the rewrites delivers their files
+      spark.conf.set(StreamingSubscription.OrderedMaxBytesKey, "1")
+      try assert(new Tail(log, "web").drain() == kept)
+      finally spark.conf.unset(StreamingSubscription.OrderedMaxBytesKey)
+    }
 
   test("receiveHistoricalEvents=false delivers a post-subscribe append with a lagging timestamp") {
     val log = new EventLog(spark, tmpDir("log"))
@@ -116,6 +151,58 @@ class LogTailSpec extends SparkSpec {
     assert(tail.drain() == Seq("late"))
     assert(new java.io.File(log.path).list().contains("_graft_log"))
   }
+
+  test("a record write that fails leaves its id readable, and a later publish is delivered") {
+    val log = new EventLog(spark, tmpDir("log"))
+    val tail = new Tail(log, "web")
+    log.appendRows(Seq(row("e1", "web", 1000L))) // record 0
+    assert(tail.drain() == Seq("e1"))
+    // a second writer over the log whose next record write fails (a full disk)
+    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
+    conf.set("fs.file.impl", classOf[LogTailSpec.FailingRecordFs].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    val writer = new LogManifest(new Path(log.path), conf)
+    LogTailSpec.failNextRecord.set(true)
+    intercept[IOException](writer.append(Nil, Nil))
+    assert(!LogTailSpec.failNextRecord.get)
+    assert(writer.read(1).contains(LogRecord(Nil, Nil)))
+    log.appendRows(Seq(row("e2", "web", 2000L))) // record 2: id 1 is taken
+    assert(writer.read(2).exists(_.added.size == 1))
+    assert(tail.drain() == Seq("e2"))
+  }
+
+  test("vacuum records a crashed flush's file apart from a lost file of another dir") {
+    val log = new EventLog(spark, tmpDir("log"))
+    log.appendRows(Seq(row("w1", "web", 1000L), row("m1", "mobile", 1000L)))
+    val tail = new Tail(log, "mobile")
+    assert(tail.drain() == Seq("m1"))
+    // web's file is lost, and a flush that died before its record left a
+    // committed mobile file: the replace for web must not swallow it
+    new File(log.path, "topic=web").listFiles().foreach(f => assert(f.delete()))
+    val donor = new EventLog(spark, tmpDir("donor"))
+    donor.appendRows(Seq(row("m2", "mobile", 2000L)))
+    val donorFile = new File(donor.path, "topic=mobile").listFiles().find(_.getName.startsWith("part-")).get
+    FileUtils.copyFile(donorFile, new File(log.path, "topic=mobile/part-00000-planted.c000.snappy.parquet"))
+    assert(log.vacuum() == 1)
+    assert(tail.drain() == Seq("m2"))
+  }
+
+  for ((layout, mk) <- layouts)
+    test(s"$layout layout: a bulk append records exactly its own files and leaves no staging dir") {
+      import spark.implicits._
+      val log = mk(tmpDir("log"))
+      val tail = new Tail(log, "web")
+      log.appendRows(Seq(row("e1", "web", 1000L)))
+      log.append(Seq(row("e2", "web", 2000L), row("m1", "mobile", 2000L)).toDS())
+      log.append(Seq(row("e3", "web", 3000L)).toDS())
+      val manifest = new LogManifest(new Path(log.path), spark.sparkContext.hadoopConfiguration)
+      val recorded = (0L until manifest.head()).flatMap(id => manifest.read(id).get.added)
+      val onDisk = manifest.dataFiles().map(s => manifest.relative(s.getPath))
+      assert(manifest.head() == 3L && recorded.map(_.path).sorted == onDisk.sorted, recorded)
+      assert(recorded.map(_.rows).sum == 4L)
+      assert(new File(log.path).list().forall(n => !n.startsWith(".staging")))
+      assert(tail.drain() == Seq("e1", "e2", "e3"))
+    }
 
   test("a micro-batch of more than 32 files runs only its delivery job, and the source keeps no checkpoint state") {
     val log = new EventLog(spark, tmpDir("log"))
@@ -144,5 +231,28 @@ class LogTailSpec extends SparkSpec {
     // offsets and commits only: the source writes nothing under sources/
     assert(new java.io.File(ckpt).list().sorted.toSeq.filterNot(_.startsWith(".")) ==
       Seq("commits", "metadata", "offsets"))
+  }
+}
+
+object LogTailSpec {
+
+  /** Arms [[FailingRecordFs]]: its next manifest record write fails. */
+  val failNextRecord = new AtomicBoolean(false)
+
+  /** The engine's local file system, except that when armed, the next
+    * no-overwrite create in a `_graft_log` dir claims its file and then
+    * fails its write, as a full disk would.
+    */
+  final class FailingRecordFs extends NioLocalFileSystem {
+    override def create(f: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
+        replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream = {
+      val out = super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+      if (overwrite || f.getParent.getName != LogManifest.DirName || !failNextRecord.getAndSet(false)) out
+      else new FSDataOutputStream(new OutputStream {
+        override def write(b: Int): Unit = throw new IOException("No space left on device")
+        override def write(b: Array[Byte], off: Int, len: Int): Unit = write(0)
+        override def close(): Unit = out.close()
+      }, null)
+    }
   }
 }
