@@ -15,11 +15,13 @@ import org.apache.spark.sql.SparkSession
   *
   * Two confs make local file I/O fork-free: `fs.file.impl` installs
   * [[graft.sources.NioLocalFileSystem]] and the checkpoint manager is
-  * Spark's FileSystem-based one (reasons at the entries). The FileSystem
-  * is chosen through Hadoop's per-JVM `FileSystem` cache, keyed by scheme
-  * and user but not by conf, so the first `file:` FileSystem decides the
-  * class: one created before the first session built here (from a bare
-  * `Configuration`) keeps the stock class, and then only speed is lost.
+  * Spark's FileSystem-based one, as
+  * [[graft.streaming.TempCleaningCheckpointFileManager]] (reasons at the
+  * entries). The FileSystem is chosen through Hadoop's per-JVM
+  * `FileSystem` cache, keyed by scheme and user but not by conf, so the
+  * first `file:` FileSystem decides the class: one created before the
+  * first session built here (from a bare `Configuration`) keeps the stock
+  * class, and then only speed is lost.
   * LocalFsSpec pins the install for the test JVM.
   */
 object EngineSession {
@@ -61,8 +63,10 @@ object EngineSession {
     // fails on an existing destination. See the class doc for the
     // FileSystem cache.
     "spark.hadoop.fs.file.impl" -> classOf[graft.sources.NioLocalFileSystem].getName,
+    // The manager is Spark's FileSystem-based one, subclassed so a failed
+    // no-overwrite rename leaves no temp file behind.
     "spark.sql.streaming.checkpointFileManagerClass" ->
-      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager",
+      classOf[graft.streaming.TempCleaningCheckpointFileManager].getName,
   )
 
   /** A builder carrying the engine confs; callers add surface-specific

@@ -151,7 +151,7 @@ final class Topic(
     // registering would miss concurrent publishes, after may double-deliver
     // — we read after registration, matching the reference's at-least-once
     // leaning for replay subscribers.
-    if (opts.receiveHistoricalEvents && log.exists) {
+    if (opts.receiveHistoricalEvents) {
       log.getEventsTyped(name, ScanOptions(eventTypes = opts.eventTypes))
         .collect().foreach(sub.deliver)
     }
@@ -298,7 +298,6 @@ final class EventBroker(
     */
   def replayEvents(topicName: String, handler: EventRow => Unit,
       options: ScanOptions = ScanOptions()): Long = {
-    if (!log.exists) return 0L
     val events = log.getEventsTyped(topicName, options).collect()
     events.foreach(handler)
     events.length.toLong

@@ -181,8 +181,8 @@ final class ParquetDeadLetterQueue(spark: SparkSession, path: String) extends De
   }
 
   /** Rewrite the table minus `eventId`, optionally re-appending a replacement
-    * row (attempts bookkeeping). The same swap as EventLog's maintenance
-    * rewrites: parquet can't overwrite a path it reads, so the FILTERED
+    * row (attempts bookkeeping). Parquet can't overwrite a path it
+    * reads, so the FILTERED
     * DATASET (the SURVEY §2.7 anti-join spelling) writes to a staging dir,
     * fully executor-side, and [[DirSwap.swap]] puts it in place. The r13
     * advisor flagged the previous driver-side collect: fine at fixture

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Turns [[graft.sources.EventLog.layoutReport]]'s raw listing into the
+/** Turns [[graft.sources.EventLog.layoutReport]]'s file counts into the
   * decision table a maintenance scheduler executes — closing the loop
   * from metadata to action: layoutReport → advise → compact /
   * compactClustered.
@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * Policy (the standard small-file economics at 100 TB):
   *   - `compact` when a partition holds more than `maxFiles` files OR its
   *     mean file size is below `minFileBytes` — both directly inflate
-  *     scan task counts and listing cost;
+  *     scan task counts and per-file open cost;
   *   - the advised `target_files` re-bins the partition's bytes into
   *     `targetFileBytes` files (min 1), so one advice row IS the
   *     `compact(topic, targetFiles)` call;
@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   *     diffing runs needs to see a partition BECOME healthy, not have it
   *     vanish.
   *
-  * Pure column math over the metadata listing — no data files are read.
+  * Pure column math over the layout report — no data files are read.
   */
 object CompactionAdvisor {
 

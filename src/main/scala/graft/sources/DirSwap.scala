@@ -5,7 +5,8 @@ import java.io.IOException
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Replace a directory's contents by renames, never by deleting the live
-  * dir first — the swap [[graft.operators.ArtifactStore]] publishes with.
+  * dir first — how [[graft.dlq.ParquetDeadLetterQueue]] rewrites its table.
+  * (The event log needs no swap: its manifest record is its commit point.)
   *
   * A rewrite writes the new contents to [[staging]]; [[swap]] then renames
   * the live dir to [[aside]], renames staging into its place and deletes
@@ -28,14 +29,6 @@ private[graft] object DirSwap {
 
   def staging(live: Path): Path = new Path(live.getParent, StagingPrefix + live.getName)
   def aside(live: Path): Path = new Path(live.getParent, AsidePrefix + live.getName)
-
-  def isStaging(dir: Path): Boolean = dir.getName.startsWith(StagingPrefix)
-
-  /** The live dir `dir` is the aside copy of, if it is one. */
-  def liveOf(dir: Path): Option[Path] =
-    if (dir.getName.startsWith(AsidePrefix))
-      Some(new Path(dir.getParent, dir.getName.stripPrefix(AsidePrefix)))
-    else None
 
   /** Put the staged contents in place of `live`, or, when `keep` is false,
     * remove `live` and discard the staged contents. A failed rename puts

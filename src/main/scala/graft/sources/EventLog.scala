@@ -8,10 +8,10 @@ import java.util.concurrent.atomic.AtomicLong
 
 import scala.util.control.NonFatal
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
@@ -61,18 +61,26 @@ final case class ScanOptions(
   * partition dir per group. Maintenance — retention ([[deleteEvents]],
   * [[enforceMaxEvents]]) and compaction ([[compact]], [[compactClustered]])
   * — rewrites one partition dir at a time through one primitive,
-  * [[rewrite]]; there are no transactions across dirs (a real deployment
-  * would layer Delta/Iceberg for that — out of scope, semantics equal).
-  * Every write to the log holds the instance's monitor, so none overlaps
-  * another.
+  * [[rewrite]]. Every write to the log holds the instance's monitor, so
+  * none overlaps another.
   *
-  * Every commit also appends one record to the log's [[LogManifest]]
-  * (`_graft_log/`): an *add* record for an append's files, a *replace*
-  * record for a rewrite's. Batch reads list the partition dirs as before;
-  * tailing subscriptions read only the manifest
-  * ([[graft.streaming.LogTailSource]]), so a micro-batch costs O(new
-  * commits), not O(log), and a rewrite re-delivers nothing. A log first
-  * written by Spark jobs alone gets its manifest seeded from one listing.
+  * The log's commit manifest ([[LogManifest]], `_graft_log/`) is the one
+  * source of its file set, as a Delta table's log is. Every write commits
+  * through [[commit]]: its files are renamed into place from hidden names,
+  * then one manifest record names them (an *add* record for an append, a
+  * *replace* record for a rewrite, which then deletes the files it
+  * removed). The record is the commit point. Batch reads ([[all]],
+  * [[getEvents]], [[hasEvents]]) and rewrites scan the manifest's live set
+  * through [[LogFileIndex]], and tailing subscriptions read its records
+  * ([[graft.streaming.LogTailSource]]), so every reader sees a commit —
+  * a group flush over several dirs, a rewrite — whole or not at all, and
+  * no read lists the log. A data file that no record names is not in the
+  * log; [[vacuum]] deletes it. A log first written by Spark jobs alone is
+  * read through the record 0 its manifest seeds on first use.
+  *
+  * A scan that started before a rewrite's record and opens a file the
+  * rewrite removed after its delete fails with a missing file, as a
+  * tailing micro-batch does; the next read sees the rewrite.
   */
 final class EventLog(
     spark: SparkSession,
@@ -94,21 +102,12 @@ final class EventLog(
   private def fs: FileSystem =
     FileSystem.get(URI.create(path), spark.sparkContext.hadoopConfiguration)
 
-  /** The log's commit manifest: every commit below appends one record
-    * under the log's monitor, after its files are in place.
-    */
-  private val manifest = new LogManifest(new Path(path), spark.sparkContext.hadoopConfiguration)
-  private var seeded = false // guarded by this
+  private val root = new Path(path)
 
-  /** Seed the manifest of a log that Spark jobs alone wrote, once per
-    * instance, before this instance's first commit.
+  /** The log's commit manifest: every [[commit]] appends one record under
+    * the log's monitor, after its files are in place.
     */
-  private def seedManifest(): Unit = if (!seeded) {
-    manifest.seedIfAbsent()
-    seeded = true
-  }
-
-  def exists: Boolean = fs.exists(new Path(path))
+  private val manifest = new LogManifest(root, spark.sparkContext.hadoopConfiguration)
 
   /** Stable topic→bucket hash: first 8 hex chars of md5, mod n. Computed
     * identically driver-side (for scan pruning) and as a Column (for
@@ -128,51 +127,22 @@ final class EventLog(
     * subscription sees has already been persisted.
     *
     * This is the bulk path (FileStoreImporter, JdbcEventStore): one Spark
-    * write job into a hidden staging dir of the log (`.staging_append-…`,
-    * skipped by listings), then each staged file renamed into its
-    * partition dir, then one manifest add record of those files. Only the
-    * staged files are listed, and their footers read for row counts, so an
-    * append costs O(its files), not O(log). Failure is as in
-    * [[commitDirect]]: a failed rename or record deletes the files already
-    * renamed, and a crash leaves renamed files for [[vacuum]] to record
-    * and the staging dir for it to delete. Synchronized per log instance,
-    * as the reference's single JS event loop serializes appends; the same
-    * monitor covers every [[appendRows]] group flush, so a bulk append
-    * never overlaps one.
+    * write job, committed as one add record through [[commitStaged]].
+    * Synchronized per log instance, as the reference's single JS event
+    * loop serializes appends; the same monitor covers every [[appendRows]]
+    * group flush, so a bulk append never overlaps one.
     */
   def append(events: Dataset[EventRow]): Unit = this.synchronized {
-    seedManifest()
-    val root = new Path(path)
-    val staging = DirSwap.staging(new Path(root, s"append-${UUID.randomUUID()}"))
-    try {
+    commitStaged("", Nil) { staging =>
       topicBuckets match {
         case None =>
-          events.write.partitionBy("topic").parquet(staging.toString)
+          events.write.partitionBy("topic").parquet(staging)
         case Some(_) =>
           events.toDF()
             .withColumn(BucketCol, bucketColumn(col("topic")))
-            .write.partitionBy(BucketCol).parquet(staging.toString)
+            .write.partitionBy(BucketCol).parquet(staging)
       }
-      // (staged, visible, manifest entry) per file the job wrote
-      val files = manifest.dataFiles(staging).map { s =>
-        val name = manifest.relative(s.getPath).stripPrefix(staging.getName + "/")
-        (s.getPath, manifest.resolve(name), manifest.fileOf(s).copy(path = name))
-      }
-      var renamed = 0
-      try {
-        files.foreach { case (staged, visible, _) =>
-          fs.mkdirs(visible.getParent)
-          if (!fs.rename(staged, visible)) throw new IOException(s"could not rename $staged to $visible")
-          renamed += 1
-        }
-        if (files.nonEmpty) manifest.append(files.map(_._3), Nil)
-      } catch { case t: Throwable =>
-        files.take(renamed).foreach(f => try fs.delete(f._2, false) catch { case NonFatal(_) => () })
-        throw t
-      }
-    } finally try fs.delete(staging, true) catch { case NonFatal(_) => () }
-    fs.mkdirs(root)
-    writeMetaIfAbsent()
+    }
   }
 
   /** Sidecar metadata so the bucket count travels WITH the table: readers
@@ -189,9 +159,6 @@ final class EventLog(
       finally out.close()
     }
   }
-
-  def appendDF(events: DataFrame): Unit =
-    append(events.as[EventRow])
 
   /** Callers waiting in [[appendRows]], in arrival order. Guarded by its own
     * monitor (never the log's), so callers can enqueue while a flush runs.
@@ -228,12 +195,12 @@ final class EventLog(
     *   - returns only after the caller's own rows are visible;
     *   - all-or-nothing per group: if a write fails, every caller in the
     *     group gets its exception and none of the group's rows become
-    *     visible (see [[commitDirect]] for a failure between two renames);
+    *     visible, to batch readers and tailers alike ([[commit]]);
     *   - flushes hold the log's monitor, so they never overlap an
     *     `append(Dataset)` call, a maintenance [[rewrite]], a [[vacuum]] or
     *     another flush. A flush that arrives during a rewrite waits for it;
     *   - each group's files get one manifest add record, written after
-    *     they are in place, so tailers see the group whole or not at all.
+    *     they are in place: the group's commit point.
     */
   def appendRows(events: Seq[EventRow]): Unit = {
     val mine = new EventLog.PendingAppend(events)
@@ -330,29 +297,18 @@ final class EventLog(
     * written by Spark's own Parquet writer (`ParquetFileFormat.prepareWrite`
     * applies the session's Parquet confs — codec, `outputTimestampType`,
     * rebase modes, the row-metadata footer — as a write job would). Files
-    * are written under a hidden name (`.part-…`, skipped by batch listings)
-    * and renamed into place only after every file of the group has closed;
-    * then one manifest add record names them, and tailing subscriptions
-    * see them. Returns the files committed.
+    * are written under a hidden name (`.part-…`) in their dirs, and only
+    * after every file of the group has closed are they committed as one
+    * add record ([[commit]]). Returns the files committed.
     *
-    * Failure:
-    *   - while writing: the group's hidden files are deleted and the error
-    *     rethrown; no dir gains a visible file;
-    *   - a rename or the manifest record fails: the files already renamed
-    *     are deleted again with the rest, and the error rethrown. A batch
-    *     reader that listed the log between two renames may have seen the
-    *     earlier dirs' rows; a tailing subscription sees none;
-    *   - the process dies between two renames, or before the record: the
-    *     dirs renamed so far hold their rows and the rest keep hidden
-    *     `.part-*` orphans; [[vacuum]] removes the orphans and records the
-    *     renamed files. No caller returned, so none was told its rows
-    *     committed. A group spans several dirs whenever it holds several
-    *     topics (per-topic layout) or buckets (bucketed layout).
+    * A write that fails deletes the group's hidden files and rethrows; a
+    * failed commit is as in [[commit]]. Either way, and after a crash, no
+    * reader sees any of the group's rows, and no caller was told they
+    * committed. A group spans several dirs whenever it holds several
+    * topics (per-topic layout) or buckets (bucketed layout).
     */
   private def commitDirect(rows: Seq[EventRow]): Int = {
-    val root = new Path(path)
-    if (rows.isEmpty) { fs.mkdirs(root); return 0 }
-    seedManifest()
+    if (rows.isEmpty) return 0
     val format = new ParquetFileFormat()
     val job = Job.getInstance(format.getHadoopConf(spark))
     val writers = format.prepareWrite(spark, job, Map.empty, fileSchema)
@@ -364,33 +320,70 @@ final class EventLog(
         val d = new Path(root, dir)
         (dirRows, new Path(d, "." + name), new Path(d, name))
     }
-    def deleteQuietly(ps: Seq[Path]): Unit =
-      ps.foreach(p => try fs.delete(p, false) catch { case NonFatal(_) => () })
     var opened = 0
-    try files.foreach { case (dirRows, hidden, _) =>
+    val written = try files.map { case (dirRows, hidden, visible) =>
       opened += 1
       val out = writers.newInstance(hidden.toString, fileSchema, context)
       try dirRows.foreach(e => out.write(fileRow(e)))
       finally out.close()
+      hidden -> LogFile(manifest.relative(visible), fs.getFileStatus(hidden).getLen, dirRows.size.toLong)
     } catch { case t: Throwable =>
       deleteQuietly(files.take(opened).map(_._2))
       throw t
     }
-    var renamed = 0
-    try {
-      val added = files.map { case (dirRows, hidden, visible) =>
-        if (!fs.rename(hidden, visible)) throw new IOException(s"could not rename $hidden to $visible")
-        renamed += 1
-        LogFile(manifest.relative(visible), fs.getFileStatus(visible).getLen, dirRows.size.toLong)
-      }
-      manifest.append(added, Nil)
-    } catch { case t: Throwable =>
-      deleteQuietly(files.take(renamed).map(_._3) ++ files.drop(renamed).map(_._2))
-      throw t
-    }
-    writeMetaIfAbsent()
+    commit(written, Nil)
     files.size
   }
+
+  /** The one commit point of every write: rename each `(source, file)` to
+    * `file`'s place in the log, append one manifest record that adds those
+    * files and removes `removed`, then delete the removed files (and, in
+    * the bucketed layout, write the sidecar the first time). If a
+    * rename or the record fails, the files renamed so far and the sources
+    * left are deleted and the error rethrown. A crash before the record
+    * leaves renamed files that no record names, and one after it leaves
+    * the removed files: neither is in the log, and [[vacuum]] deletes both.
+    */
+  private def commit(files: Seq[(Path, LogFile)], removed: Seq[String]): Unit = {
+    var renamed = 0
+    try {
+      files.foreach { case (source, f) =>
+        val target = manifest.resolve(f.path)
+        if (!fs.rename(source, target)) throw new IOException(s"could not rename $source to $target")
+        renamed += 1
+      }
+      if (files.nonEmpty || removed.nonEmpty) manifest.append(files.map(_._2), removed)
+    } catch { case t: Throwable =>
+      deleteQuietly(files.take(renamed).map(f => manifest.resolve(f._2.path)) ++ files.drop(renamed).map(_._1))
+      throw t
+    }
+    deleteQuietly(removed.map(manifest.resolve))
+    writeMetaIfAbsent()
+  }
+
+  /** Commit what one Spark write job writes: `write` fills a hidden staging
+    * dir of the log (`.staging_…`, skipped by listings), and each staged
+    * file with rows is [[commit]]ted under `into` plus its path below the
+    * staging dir, the record removing `removed`. Only the staged files are
+    * listed, and their footers read for row counts, so a commit costs
+    * O(its files), not O(log). The staging dir is deleted either way; a
+    * crash leaves it for [[vacuum]]. Returns the files added.
+    */
+  private def commitStaged(into: String, removed: Seq[String])(write: String => Unit): Seq[LogFile] = {
+    val staging = new Path(root, s"${EventLog.StagingPrefix}${UUID.randomUUID()}")
+    try {
+      write(staging.toString)
+      val below = manifest.relative(staging) + "/"
+      val files = manifest.dataFiles(staging).map(s => s.getPath -> manifest.fileOf(s))
+        .collect { case (p, f) if f.rows > 0 => p -> f.copy(path = into + f.path.stripPrefix(below)) }
+      files.map(f => manifest.resolve(f._2.path).getParent).distinct.foreach(fs.mkdirs)
+      commit(files, removed)
+      files.map(_._2)
+    } finally try fs.delete(staging, true) catch { case NonFatal(_) => () }
+  }
+
+  private def deleteQuietly(ps: Seq[Path]): Unit =
+    ps.foreach(p => try fs.delete(p, false) catch { case NonFatal(_) => () })
 
   /** Lifetime committed [[appendRows]] flushes, the rows they wrote, the
     * wall time they took (the commit itself, not the wait for the monitor)
@@ -415,7 +408,22 @@ final class EventLog(
     case Some(_) => Event.schema.add(BucketCol, IntegerType, nullable = true)
   }
 
-  private def allRaw: DataFrame = spark.read.schema(readSchema).parquet(path)
+  /** The partition column of the layout. */
+  private val partitionCol = topicBuckets.fold("topic")(_ => BucketCol)
+
+  /** A scan of `files`, recorded files of this log, as a Parquet listing
+    * of just them reads: the layout's partition column from their dirs,
+    * unless none is in one (an empty log, or one that Spark jobs wrote
+    * without partitioning).
+    */
+  private def scan(files: Seq[LogFile]): DataFrame = {
+    val partitioned = files.exists(_.path.startsWith(partitionCol + "="))
+    val (partitions, data) = readSchema.map(_.copy(nullable = true))
+      .partition(f => partitioned && f.name == partitionCol)
+    LogFileIndex.scan(spark, root, files, StructType(partitions), StructType(data))
+  }
+
+  private def allRaw: DataFrame = scan(manifest.live())
 
   /** Whole-log view (bucket column, if any, hidden — the public shape is
     * always the §1.2 envelope). Explicit schema: pinning it keeps partition
@@ -480,7 +488,7 @@ final class EventLog(
       val kept = part.where(!(isTopic && isOld))
       val deleted = before - kept.where(isTopic).count()
       (Option.when(deleted > 0)(kept), deleted)
-    }.getOrElse(0L)
+    }.fold(0L)(_._1)
   }
 
   /** Count-based retention: keep only the newest `maxEvents` events of a
@@ -508,14 +516,14 @@ final class EventLog(
         // keeps exactly maxEvents of them
         (Some(kept), before - maxEvents)
       }
-    }.getOrElse(0L)
+    }.fold(0L)(_._1)
 
   /** Small-file maintenance: rewrite one topic's partition (its own dir, or
     * its hash bucket) into `targetFiles` files. The pub/sub hot path
     * appends a file per publish batch (reference analog: one JSON file per
     * EVENT, reference: src/persistence.ts:143-144) — compaction is the
-    * periodic job that keeps scan/listing cost flat. Returns the file-count
-    * delta (before − after).
+    * periodic job that keeps scan cost flat. Returns the file-count delta
+    * of its replace record (files removed − files added).
     */
   def compact(topic: String, targetFiles: Int = 1): Long =
     relayout(topic)(_.coalesce(math.max(targetFiles, 1)))
@@ -573,72 +581,46 @@ final class EventLog(
     }
   }
 
-  /** Remove what a crash leaves between a write and its commit rename,
-    * settle a crashed [[rewrite]] swap, and reconcile the manifest:
-    *   - a partition dir's `.aside_*` copy is renamed back when the live
-    *     dir is missing, and deleted when both exist ([[DirSwap.recover]]);
-    *   - orphaned `.staging_*` directories of a [[rewrite]] are deleted;
-    *   - hidden `.part-*` data files of an [[appendRows]] flush inside
-    *     partition dirs are deleted;
-    *   - committed data files the manifest lacks (a crash between a
-    *     commit's renames and its record) are recorded, and recorded files
-    *     that are gone are recorded as removed, one replace record per dir
-    *     that lost files; a torn record is rewritten empty and hidden
-    *     debris in `_graft_log/` is deleted ([[LogManifest.reconcile]]);
-    *   - a bulk [[append]]'s `.staging_append-*` dir is deleted with the
-    *     rewrites' staging dirs.
-    * The rename is the commit point, so anything still under a hidden
-    * staging name is uncommitted garbage that would otherwise accrete
-    * forever. Returns the directories and files removed or renamed back,
-    * the records repaired and the data files recorded.
-    * Holds the log's monitor, so it never meets an in-flight flush or
-    * rewrite; safe concurrently with reads (hidden names are invisible to
-    * parquet listings). After a crash, run it before the log takes new
-    * appends: an append into a partition whose live dir a crashed swap
-    * left missing recreates the dir, and the aside copy would then be
-    * taken for a finished swap's leftover.
+  /** Settle what a crash left, by one rule: a data file that the live set
+    * does not name is not in the log.
+    *   - [[LogManifest.reconcile]] rewrites a torn record empty, records
+    *     recorded files that are gone as removed, and deletes hidden
+    *     debris in `_graft_log/`;
+    *   - data files in the log's dirs that no record names are deleted: a
+    *     flush's hidden `.part-*` files, the renamed files of a commit
+    *     that died before its record (no caller was told they committed),
+    *     and the files a rewrite that died after its record had removed;
+    *   - orphaned `.staging_*` dirs of a Spark write job are deleted.
+    * Returns the records repaired and the files and dirs deleted. Holds
+    * the log's monitor, so it never meets an in-flight commit; safe
+    * concurrently with reads, which read only the live set.
     */
   def vacuum(): Int = this.synchronized {
-    val root = new Path(path)
     if (!fs.exists(root)) return 0
-    val settled = fs.listStatus(root).flatMap(d => DirSwap.liveOf(d.getPath))
-      .count(DirSwap.recover(fs, _))
-    val (staging, partitions) = fs.listStatus(root).filter(_.isDirectory)
-      .partition(d => DirSwap.isStaging(d.getPath))
-    val orphans = partitions.filter(_.getPath.getName.contains("="))
-      .flatMap(d => fs.listStatus(d.getPath))
-      .filter(f => f.isFile && f.getPath.getName.startsWith(".part-"))
-    settled + staging.count(d => fs.delete(d.getPath, true)) +
-      orphans.count(f => fs.delete(f.getPath, false)) + manifest.reconcile()
+    val repaired = manifest.reconcile()
+    val live = manifest.live().map(_.path).toSet
+    val (staging, other) = fs.listStatus(root).toSeq.partition(_.getPath.getName.startsWith(EventLog.StagingPrefix))
+    val strays = other.filterNot(s => s.getPath.getName.startsWith("_") || s.getPath.getName.startsWith("."))
+      .flatMap(s => if (s.isDirectory) fs.listStatus(s.getPath).toSeq.filter(_.isFile) else Seq(s))
+      .filterNot(s => live(manifest.relative(s.getPath)))
+    repaired + staging.count(d => fs.delete(d.getPath, true)) + strays.count(f => fs.delete(f.getPath, false))
   }
 
   /** Storage layout report: one row per partition directory with file
     * count and byte sizes — the table a compaction scheduler (or a human)
-    * reads to decide where [[compact]]/[[compactClustered]] is due. A
-    * pure filesystem-metadata listing (no data read); at object-store
-    * scale the same listing comes from the store's inventory.
+    * reads to decide where [[compact]]/[[compactClustered]] is due. Read
+    * from the manifest's live set: no listing, no data read.
     */
   def layoutReport(): DataFrame = {
-    val root = new Path(path)
-    val rows: Seq[(String, Long, Long, Long, Long)] =
-      if (!fs.exists(root)) Seq.empty
-      else fs.listStatus(root).filter(_.isDirectory)
-        .filter(d => d.getPath.getName.contains("="))
-        .map { d =>
-          val sizes = dataFiles(d.getPath).map(_.getLen)
-          (d.getPath.getName, sizes.length.toLong,
-            sizes.sum, if (sizes.isEmpty) 0L else sizes.min,
-            if (sizes.isEmpty) 0L else sizes.max)
-        }.toSeq
+    val rows = manifest.live().groupBy(f => f.path.take(math.max(f.path.lastIndexOf('/'), 0))).toSeq
+      .collect { case (dir, files) if dir.contains("=") =>
+        val sizes = files.map(_.size)
+        (dir, sizes.size.toLong, sizes.sum, sizes.min, sizes.max)
+      }
     spark.createDataFrame(rows)
       .toDF("partition", "n_files", "total_bytes", "min_file_bytes", "max_file_bytes")
       .orderBy(col("partition"))
   }
-
-  /** The committed data files directly in `dir`; none if it is missing. */
-  private def dataFiles(dir: Path): Seq[FileStatus] =
-    if (!fs.exists(dir)) Nil
-    else fs.listStatus(dir).toSeq.filter(_.getPath.getName.startsWith("part-"))
 
   /** The rows of `topic` within a partition's rows: all of them in the
     * per-topic layout, the `topic` column's match in a bucket.
@@ -646,65 +628,51 @@ final class EventLog(
   private def topicIn(topic: String): Column =
     topicBuckets.fold(lit(true))(_ => $"topic" === topic)
 
-  /** The one maintenance rewrite: replace the partition dir that holds
-    * `topic` (its own dir, or its hash bucket) with the rows `f` keeps, and
-    * return `f`'s result; None, without calling `f`, when the dir does not
-    * exist.
+  /** The one maintenance rewrite: replace the files of the partition dir
+    * that holds `topic` (its own dir, or its hash bucket) with the rows `f`
+    * keeps. Returns `f`'s result and the file-count delta of the rewrite
+    * (files removed − files added, 0 when `f` keeps None); None, without
+    * calling `f`, when the dir holds no file.
     *
-    * `f` gets the partition's rows as written on disk (minus the partition
-    * column), cached once for the whole call, and returns the rows to keep
-    * — or None to leave the dir as it is — with its result. The kept rows
-    * are written to a staging dir and swapped in by [[DirSwap.swap]], so
-    * the old rows stay under a name [[vacuum]] restores until the new ones
-    * are in place. A dir left with no rows is removed. After the swap, one
-    * manifest replace record names the files the dir lost and the files
-    * that replaced them, so a tailing subscription re-delivers nothing it
-    * already read (see [[graft.streaming.LogTailSource]]).
+    * `f` gets the dir's live files' rows (minus the partition column),
+    * cached once for the whole call, and returns the rows to keep — or
+    * None to leave the dir as it is — with its result. The kept rows are
+    * one Spark write job, committed through [[commitStaged]] as one
+    * replace record of the dir's files; the replaced files are then
+    * deleted, and a dir left with no rows is removed. A tailing
+    * subscription re-delivers nothing it already read (see
+    * [[graft.streaming.LogTailSource]]).
     *
-    * Holds the log's monitor from the snapshot to the swap, as [[append]],
-    * every [[appendRows]] flush and [[vacuum]] do: a commit that landed in
-    * between would be lost with the old dir. Publishes to this log wait
-    * while a rewrite runs, as they wait for a bulk append.
+    * Holds the log's monitor from the snapshot to the record, as
+    * [[append]], every [[appendRows]] flush and [[vacuum]] do: a commit
+    * that landed in between would be lost with the replaced files.
+    * Publishes to this log wait while a rewrite runs, as they wait for a
+    * bulk append.
     */
-  private def rewrite[T](topic: String)(f: DataFrame => (Option[DataFrame], T)): Option[T] =
+  private def rewrite[T](topic: String)(f: DataFrame => (Option[DataFrame], T)): Option[(T, Int)] =
     this.synchronized {
-      seedManifest()
-      val dir = new Path(path, partitionDir(topic))
-      DirSwap.recover(fs, dir)
-      if (!fs.exists(dir)) None
+      val dir = partitionDir(topic) + "/"
+      val old = manifest.live().filter(_.path.startsWith(dir))
+      if (old.isEmpty) None
       else {
-        val part = (topicBuckets match {
-          case None => topicDF(topic).drop("topic")
-          case Some(_) => allRaw.where(col(BucketCol) === bucketOf(topic)).drop(BucketCol)
-        }).cache()
+        val part = scan(old).drop(partitionCol).cache()
         try {
           val (kept, result) = f(part)
-          kept.foreach { df =>
-            val staging = DirSwap.staging(dir)
-            df.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-            // the staged files under their live names, rows from the
-            // footers on the driver: no Spark job
-            val added = dataFiles(staging).map(f => manifest.fileOf(f)
-              .copy(path = manifest.relative(new Path(dir, f.getPath.getName))))
-            val removed = dataFiles(dir).map(f => manifest.relative(f.getPath))
-            val keep = added.exists(_.rows > 0)
-            DirSwap.swap(fs, dir, keep)
-            manifest.append(if (keep) added else Nil, removed)
+          val delta = kept.fold(0) { df =>
+            val added = commitStaged(dir, old.map(_.path))(df.write.parquet(_))
+            if (added.isEmpty) fs.delete(new Path(root, dir), true)
+            old.size - added.size
           }
-          Some(result)
+          Some((result, delta))
         } finally part.unpersist()
       }
     }
 
-  /** A [[rewrite]] that keeps every row, laid out by `layout`; returns the
-    * data files the partition dir lost.
+  /** A [[rewrite]] that keeps every row, laid out by `layout`; returns its
+    * file-count delta.
     */
   private def relayout(topic: String)(layout: DataFrame => DataFrame): Long =
-    this.synchronized {
-      val dir = new Path(path, partitionDir(topic))
-      rewrite(topic)(part => (Some(layout(part)), dataFiles(dir).size))
-        .fold(0L)(before => before - dataFiles(dir).size)
-    }
+    rewrite(topic)(part => (Some(layout(part)), ())).fold(0L)(_._2.toLong)
 
   private def timestampMillis(ms: Long) =
     (lit(ms) / 1000.0).cast("timestamp")
@@ -736,6 +704,9 @@ object EventLog {
     *     gap stays; it trades publish latency for delivery latency.
     */
   private val FlushGapNanos: Long = 25L * 1000000L
+
+  /** Name prefix of a Spark write job's staging dir under the log root. */
+  private val StagingPrefix = ".staging_"
 
   /** One [[EventLog.appendRows]] call waiting for its group's flush. */
   private final class PendingAppend(val rows: Seq[EventRow]) {

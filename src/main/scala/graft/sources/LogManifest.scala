@@ -4,6 +4,7 @@ import java.io.{EOFException, FileNotFoundException}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.collection.mutable
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
@@ -26,12 +27,15 @@ final case class LogRecord(added: Seq[LogFile], removed: Seq[String]) {
   def isReplace: Boolean = removed.nonEmpty
 }
 
-/** The commit manifest of an event log: an append-only sequence of
-  * [[LogRecord]]s, one small file each, under `<log>/_graft_log/` (the
-  * underscore keeps it out of Parquet listings). Record ids are dense from
-  * 0; an id is taken by a no-overwrite create of its file, so two writers
-  * over one log never share an id (exclusive on HDFS, and on the local file
-  * system through [[NioLocalFileSystem]]).
+/** The commit manifest of an event log, and the one source of its file
+  * set: an append-only sequence of [[LogRecord]]s, one small file each,
+  * under `<log>/_graft_log/` (the underscore keeps it out of Parquet
+  * listings). A data file is in the log exactly when a record added it and
+  * no later record removed it ([[live]]); a file on disk that no record
+  * names is not. Record ids are dense from 0; an id is taken by a
+  * no-overwrite create of its file, so two writers over one log never share
+  * an id (exclusive on HDFS, and on the local file system through
+  * [[NioLocalFileSystem]]).
   *
   * A record's last line is `end`. A reader takes a record without it as
   * not yet written: the create makes the file visible before its bytes.
@@ -41,8 +45,10 @@ final case class LogRecord(added: Seq[LogFile], removed: Seq[String]) {
   * rewrites it empty.
   *
   * Readers find new records by probing ids upward from the last one they
-  * read; nothing here lists the log except [[dataFiles]], which seeding
-  * and reconciliation use.
+  * read. Nothing here lists the log except on first use: a log that Spark
+  * jobs alone wrote (data files, no record 0) gets record 0, an add of
+  * every data file, from one listing. Safe to race: the losing seeder's
+  * create fails, and readers read the winner's record.
   */
 final class LogManifest(root: Path, conf: Configuration) {
   import LogManifest._
@@ -51,23 +57,29 @@ final class LogManifest(root: Path, conf: Configuration) {
   private val base: Path = fs.makeQualified(root)
   private val dir = new Path(base, DirName)
   private var nextId = -1L // writers' hint: no free id below it; -1 until found (guarded by this)
+  @volatile private var seeded = false
+  private var cursor = 0L // records below it are folded into `liveFiles` (guarded by this)
+  private val liveFiles = mutable.LinkedHashMap.empty[String, LogFile] // guarded by this
   private val written = new AtomicLong(0L)
   private val replaces = new AtomicLong(0L)
 
   private def recordPath(id: Long): Path = new Path(dir, f"$id%020d")
 
   /** Record `id`, or None while it is absent or not completely written. */
-  def read(id: Long): Option[LogRecord] =
+  def read(id: Long): Option[LogRecord] = {
+    seed(Set.empty)
     try {
       val in = fs.open(recordPath(id))
       val text = try new String(IOUtils.readFullyToByteArray(in), UTF_8) finally in.close()
       parse(id, text)
     } catch { case _: FileNotFoundException | _: ChecksumException | _: EOFException => None }
+  }
 
   /** The first id with no record file: a doubling probe, then a binary
     * search over the dense ids, so O(log records) stats and no listing.
     */
   def head(): Long = {
+    seed(Set.empty)
     def taken(id: Long) = fs.exists(recordPath(id))
     if (!taken(0)) return 0L
     var hi = 1L
@@ -80,8 +92,25 @@ final class LogManifest(root: Path, conf: Configuration) {
     hi
   }
 
+  /** The log's live set: every file a record added and no later record
+    * removed, in commit order, through the last completely written record.
+    * Kept incrementally from this instance's last call, so a call reads
+    * only the records written since.
+    */
+  def live(): Seq[LogFile] = synchronized {
+    var r = read(cursor)
+    while (r.isDefined) {
+      r.get.removed.foreach(liveFiles.remove)
+      r.get.added.foreach(f => liveFiles(f.path) = f)
+      cursor += 1
+      r = read(cursor)
+    }
+    liveFiles.values.toSeq
+  }
+
   /** Append a record; returns its id. */
   def append(added: Seq[LogFile], removed: Seq[String]): Long = synchronized {
+    seed(added.map(_.path).toSet)
     val bytes = format(added, removed).getBytes(UTF_8)
     var id = if (nextId < 0) head() else nextId
     while (!create(id, bytes)) id += 1
@@ -115,66 +144,51 @@ final class LogManifest(root: Path, conf: Configuration) {
     try out.write(format(Nil, Nil).getBytes(UTF_8)) finally out.close()
   }
 
-  /** A log that holds data files but no manifest (written by Spark jobs
-    * alone) gets record 0: an add of every data file, from one listing.
-    * Safe to race: the losing seeder's create fails and it reads the
-    * winner's record.
+  /** Seed record 0 once per instance, before its first read or write (see
+    * the class doc). A first append's own files, already in place, are
+    * `exclude`d: its record adds them.
     */
-  def seedIfAbsent(): Unit =
-    if (!fs.exists(recordPath(0))) {
-      val files = dataFiles().map(fileOf)
+  private def seed(exclude: Set[String]): Unit = if (!seeded) synchronized {
+    if (!seeded && !fs.exists(recordPath(0))) {
+      val files = dataFiles().filterNot(s => exclude(relative(s.getPath))).map(fileOf)
       if (files.nonEmpty) create(0, format(files, Nil).getBytes(UTF_8))
     }
+    seeded = true
+  }
 
   /** Settle the manifest after a crash (see [[EventLog.vacuum]]): rewrite
-    * a torn record as an empty one, record the committed data files the
-    * manifest lacks and the recorded files that are gone, and delete
-    * hidden debris in the manifest dir. A dir that lost files gets one
-    * replace record, as a rewrite of it writes: its gone files replaced by
-    * its unrecorded ones. Unrecorded files of the other dirs get one add
-    * record, so a tailer that read every gone file still delivers them.
-    * Returns the records repaired, the data files recorded and the files
-    * deleted. The caller holds the log's monitor, and no other writer is
-    * running.
+    * a torn record as an empty one, write one replace record that removes
+    * the recorded files that are gone, and delete hidden debris in the
+    * manifest dir. Returns the records repaired and the files deleted. The
+    * caller holds the log's monitor, and no other writer is running.
     */
   def reconcile(): Int = synchronized {
     if (!isDir(base)) return 0
-    val n = head()
     var repaired = 0
-    val live = scala.collection.mutable.LinkedHashMap.empty[String, Unit]
-    (0L until n).foreach { id =>
-      val r = read(id).getOrElse {
-        writeEmpty(id)
-        repaired += 1
-        LogRecord(Nil, Nil)
-      }
-      r.removed.foreach(live.remove)
-      r.added.foreach(f => live(f.path) = ())
+    var current = live()
+    val n = head()
+    while (cursor < n) {
+      writeEmpty(cursor)
+      repaired += 1
+      current = live()
     }
-    val onDisk = dataFiles()
-    val unrecorded = onDisk.filterNot(s => live.contains(relative(s.getPath))).map(fileOf)
-    val goneByDir = (live.keySet.toSet -- onDisk.map(s => relative(s.getPath))).toSeq.sorted.groupBy(dirOf)
-    val (replacing, adding) = unrecorded.partition(f => goneByDir.contains(dirOf(f.path)))
-    if (adding.nonEmpty) append(adding, Nil)
-    goneByDir.toSeq.sortBy(_._1).foreach { case (d, gone) =>
-      append(replacing.filter(f => dirOf(f.path) == d), gone)
-    }
+    val gone = current.map(_.path).filterNot(p => fs.exists(resolve(p)))
+    if (gone.nonEmpty) append(Nil, gone)
     val records = (0L until head()).map(id => recordPath(id).getName).toSet
     val debris =
       if (!fs.exists(dir)) Nil
       else fs.listStatus(dir).toSeq.map(_.getPath).filter { p =>
         p.getName.startsWith(".") && !records.contains(p.getName.stripPrefix(".").stripSuffix(".crc"))
       }
-    repaired + unrecorded.size + debris.count(fs.delete(_, false))
+    repaired + debris.count(fs.delete(_, false))
   }
 
   /** Records this instance wrote, and how many of them were replaces. */
   def recordsWritten: Long = written.get()
   def replacesWritten: Long = replaces.get()
 
-  /** Every committed data file under the log (or under `dir`, a hidden
-    * staging dir in it): visible files of visible dirs, as Spark's Parquet
-    * listing takes them.
+  /** Every visible data file under the log (or under `dir`, a hidden
+    * staging dir in it), as Spark's Parquet listing takes them.
     */
   def dataFiles(dir: Path = base): Seq[FileStatus] = {
     def walk(d: Path): Seq[FileStatus] = fs.listStatus(d).toSeq
@@ -208,9 +222,6 @@ object LogManifest {
   private val End = "end"
 
   private def isHidden(name: String): Boolean = name.startsWith("_") || name.startsWith(".")
-
-  /** The partition dir part of a manifest entry, with its trailing `/`. */
-  private def dirOf(path: String): String = path.take(path.lastIndexOf('/') + 1)
 
   /** A record's text: a header, one `+ size rows path` line per added
     * file, one `- path` line per removed file, and `end`. The path is the

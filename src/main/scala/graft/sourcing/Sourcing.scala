@@ -110,7 +110,6 @@ final class EventSourcedRepository[A <: AggregateRoot[_] : scala.reflect.ClassTa
   }
 
   def getById(id: String): Option[A] = {
-    if (!log.exists) return None
     val events = log.getEventsTyped(topicName(id)).collect()
     if (events.isEmpty) None
     else {
@@ -120,13 +119,11 @@ final class EventSourcedRepository[A <: AggregateRoot[_] : scala.reflect.ClassTa
     }
   }
 
-  def exists(id: String): Boolean = log.exists && log.hasEvents(topicName(id))
+  def exists(id: String): Boolean = log.hasEvents(topicName(id))
 
-  def getEvents(id: String): Seq[EventRow] =
-    if (!log.exists) Nil else log.getEventsTyped(topicName(id)).collect().toSeq
+  def getEvents(id: String): Seq[EventRow] = log.getEventsTyped(topicName(id)).collect().toSeq
 
-  def deleteEvents(id: String): Long =
-    if (!log.exists) 0L else log.deleteEvents(topicName(id), Long.MaxValue)
+  def deleteEvents(id: String): Long = log.deleteEvents(topicName(id), Long.MaxValue)
 
   /** Streaming form of [[foldAll]]: a continuously-maintained aggregate
     * projection. Each micro-batch folds its new events INTO the aggregate

@@ -2,26 +2,18 @@ package graft.streaming
 
 import scala.collection.mutable
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate}
 import org.apache.spark.sql.connector.read.streaming.{Offset => OffsetV2, ReadLimit, ReadMaxBytes,
   SupportsTriggerAvailableNow}
-import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, HadoopFsRelation,
-  LogicalRelation, PartitionDirectory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.streaming.{Offset, Source}
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
-import org.apache.spark.sql.graft.DatasetShim
 import org.apache.spark.sql.sources.StreamSourceProvider
 import org.apache.spark.sql.streaming.DataStreamReader
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.model.Event
-import graft.sources.{LogFile, LogManifest, LogRecord}
+import graft.sources.{LogFile, LogFileIndex, LogManifest, LogRecord}
 
 /** A streaming source that tails an [[graft.sources.EventLog]] through its
   * commit manifest ([[LogManifest]]), not through directory listings: the
@@ -32,8 +24,8 @@ import graft.sources.{LogFile, LogManifest, LogRecord}
   *     upward from `start` and never lists, so a trigger costs O(new
   *     records), whatever the log's size.
   *   - [[getBatch]] scans exactly the files the batch's add records added,
-  *     from their recorded paths and sizes: no listing, and no listing job
-  *     however many files a batch holds.
+  *     through the log's recorded-file index ([[LogFileIndex]]): no
+  *     listing, and no listing job however many files a batch holds.
   *   - A replace record (a maintenance rewrite) delivers nothing when every
   *     file it removed was read before `start`. A batch file that a replace
   *     removed — in the batch, or, when the file is gone by the time the
@@ -54,9 +46,11 @@ import graft.sources.{LogFile, LogManifest, LogRecord}
   *     created: its first micro-batch is an empty one that ends there, so
   *     the offset log keeps the boundary across restarts.
   *
-  * A micro-batch whose scan races a rewrite's dir swap fails with a
-  * missing file, and its query stops; restarted from its checkpoint, it
-  * re-plans the batch from the replace record.
+  * A micro-batch whose scan races a rewrite's delete of the files it
+  * replaced fails with a missing file, and its query stops; restarted from
+  * its checkpoint, it re-plans the batch from the replace record. A log
+  * that Spark jobs alone wrote is read through the record 0 its manifest
+  * seeds on first use.
   */
 final class LogTailSource(spark: SparkSession, logPath: String, maxBytes: Option[Long],
     startAtHead: Boolean) extends Source with SupportsTriggerAvailableNow {
@@ -64,7 +58,6 @@ final class LogTailSource(spark: SparkSession, logPath: String, maxBytes: Option
   private val conf = spark.sparkContext.hadoopConfiguration
   private val root = new Path(logPath)
   private val manifest = new LogManifest(root, conf)
-  manifest.seedIfAbsent()
   private val boundary: Long = if (startAtHead) manifest.head() else 0L
   private var availableNowEnd = Long.MaxValue
   /** Complete records read and not yet behind a committed batch. */
@@ -188,64 +181,16 @@ object LogTailSource {
   /** The envelope, every field nullable as a file scan reads it. */
   val schema: StructType = StructType(Event.schema.map(_.copy(nullable = true)))
 
-  private val TopicDir = "topic="
-
-  /** A streaming DataFrame over exactly `files`: a Parquet relation whose
-    * file index is the recorded statuses, so planning lists nothing. Files
-    * in `topic=` dirs take the topic from their dir, as a Parquet listing
-    * of the per-topic layout does; elsewhere (the bucketed layout, a log
-    * written without partitioning) the topic is a data column.
+  /** A streaming DataFrame over exactly `files`. Files in `topic=` dirs
+    * take the topic from their dir, as a Parquet listing of the per-topic
+    * layout does; elsewhere (the bucketed layout, a log written without
+    * partitioning) the topic is a data column.
     */
   private def batch(spark: SparkSession, root: Path, files: Seq[LogFile]): DataFrame = {
     val partitionSchema =
-      if (files.exists(_.path.startsWith(TopicDir))) StructType(Seq(schema("topic")))
+      if (files.exists(_.path.startsWith("topic="))) StructType(Seq(schema("topic")))
       else new StructType()
-    val relation = HadoopFsRelation(new LogFileIndex(root, files, partitionSchema), partitionSchema,
-      schema, None, new ParquetFileFormat, Map.empty)(spark)
-    DatasetShim.ofRows(spark, LogicalRelation(relation, isStreaming = true))
-  }
-
-  /** The recorded files of one micro-batch, grouped by partition dir; it
-    * prunes dirs by partition filters, as a listing index does, because a
-    * scan does not re-apply them.
-    */
-  private final class LogFileIndex(root: Path, files: Seq[LogFile],
-      override val partitionSchema: StructType) extends FileIndex {
-
-    // a recorded file's block size is not kept; the local file system's default
-    private val BlockSize = 32L * 1024 * 1024
-
-    private val partitions: Seq[(InternalRow, Seq[FileStatus])] =
-      files.groupBy(f => f.path.take(f.path.lastIndexOf('/') + 1)).toSeq.sortBy(_._1).map {
-        case (dir, fs) =>
-          val values =
-            if (partitionSchema.isEmpty) InternalRow.empty
-            else InternalRow(UTF8String.fromString(
-              ExternalCatalogUtils.unescapePathName(dir.stripPrefix(TopicDir).stripSuffix("/"))))
-          values -> fs.map(f => new FileStatus(f.size, false, 0, BlockSize, 0L, new Path(root, f.path)))
-      }
-
-    override def rootPaths: Seq[Path] = Seq(root)
-
-    override def listFiles(partitionFilters: Seq[Expression],
-        dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-      val keep: InternalRow => Boolean =
-        if (partitionFilters.isEmpty) _ => true
-        else Predicate.createInterpreted(partitionFilters.reduce(And).transform {
-          case a: AttributeReference =>
-            val i = partitionSchema.fieldNames.indexWhere(_.equalsIgnoreCase(a.name))
-            BoundReference(i, partitionSchema(i).dataType, nullable = true)
-        }).eval
-      partitions.collect { case (values, statuses) if keep(values) =>
-        PartitionDirectory(values, statuses.map(FileStatusWithMetadata(_)))
-      }
-    }
-
-    override def inputFiles: Array[String] = partitions.flatMap(_._2).map(_.getPath.toString).toArray
-
-    override def refresh(): Unit = ()
-
-    override def sizeInBytes: Long = files.map(_.size).sum
+    LogFileIndex.scan(spark, root, files, partitionSchema, schema, isStreaming = true)
   }
 }
 

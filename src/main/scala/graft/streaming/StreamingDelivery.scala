@@ -17,7 +17,10 @@ import graft.model.{Event, EventRow}
   *     by ordering two awaits, src/topic.ts:112-115)
   *   - the query reads the log's commit manifest through a
   *     [[LogTailSource]]: each micro-batch holds the commits made since the
-  *     last one, found without listing the log
+  *     last one, found without listing the log. The manifest is the log's
+  *     one file list, so a subscription delivers exactly the commits a
+  *     batch read (`EventLog.getEvents`) sees: a group flush whole or not
+  *     at all, and never the files of a write that died before its record
   *   - `receiveHistoricalEvents=true` = start from the log's beginning —
   *     history and live unify in one ordered source, strictly better than
   *     the reference's racy async replay (src/topic.ts:70-86); with the

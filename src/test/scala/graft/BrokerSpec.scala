@@ -182,8 +182,8 @@ class BrokerSpec extends SparkSpec {
     assert(seen.toSeq == Seq("1", "2", "3"))
     assert(b.log.getEventsTyped("bat").collect().map(_.id).toSeq == Seq("b1", "b2", "b3"))
     import spark.implicits._
-    b.log.appendDF(spark.createDataset(Seq(
-      EventRow("b9", "x", "bat", new Timestamp(now + 9), "1.0", "9", Map.empty))).toDF())
+    b.log.append(spark.createDataset(Seq(
+      EventRow("b9", "x", "bat", new Timestamp(now + 9), "1.0", "9", Map.empty))).toDF().as[EventRow])
     assert(b.log.getEventsTyped("bat").collect().map(_.id).last == "b9")
   }
 

@@ -169,7 +169,7 @@ class EventLogSpec extends SparkSpec {
 
   test("vacuum removes crashed staging dirs, keeps committed data") {
     val log = seeded()
-    // simulate a rewrite that died before its commit rename
+    // simulate a Spark write job that died before its commit
     val orphan = new java.io.File(log.path, ".staging_topic=web")
     assert(orphan.mkdirs())
     new java.io.File(orphan, "part-00000.parquet").createNewFile()
@@ -181,50 +181,119 @@ class EventLogSpec extends SparkSpec {
     assert(log.vacuum() == 0) // idempotent
     assert(log.getEventsTyped("web").collect().length == 4) // data intact
     assert(visibleFiles(log).size == 2) // one committed file per topic dir
-    // a rewrite swap that died between its renames: the live dir is gone
-    // and its rows sit only under the aside name, so they are renamed back
-    val live = new File(log.path, "topic=web")
-    val aside = new File(log.path, ".aside_topic=web")
-    assert(live.renameTo(aside))
-    assert(!log.hasEvents("web"))
-    assert(log.vacuum() == 1)
-    assert(live.isDirectory && !aside.exists())
-    assert(log.getEventsTyped("web").collect().map(_.id).toSeq == Seq("e1", "e2", "e3", "e5"))
-    // a swap that died before its last delete: the new rows are live and
-    // the old ones aside, so the aside dir is deleted
-    val old = new File(tmpDir("old"), "topic=web")
-    FileUtils.copyDirectory(live, old)
-    assert(log.deleteEvents("web", olderThanMillis = 3000) == 2L)
-    assert(old.renameTo(aside))
-    assert(log.vacuum() == 1)
-    assert(live.isDirectory && !aside.exists())
-    assert(log.getEventsTyped("web").collect().map(_.id).toSeq == Seq("e3", "e5"))
   }
 
-  test("vacuum records a committed file the manifest lacks and clears manifest debris") {
+  /** A data file holding `rows`, written by a donor log, planted under
+    * `log`'s `dir` as a flush that died between its rename and its record
+    * leaves it: visible, named by no manifest record.
+    */
+  private def plantUnrecorded(log: EventLog, dir: String, rows: Seq[EventRow]): File = {
+    val donor = new EventLog(spark, tmpDir("donor"), log.topicBuckets)
+    donor.appendRows(rows)
+    val planted = new File(log.path, s"$dir/part-00000-planted.c000.snappy.parquet")
+    FileUtils.copyFile(new File(donor.path, visibleFiles(donor).head), planted)
+    planted
+  }
+
+  test("vacuum deletes a committed file the manifest lacks and clears manifest debris") {
     import graft.broker.SubscriptionOptions
     import graft.dlq.InMemoryDeadLetterQueue
     import graft.streaming.StreamingSubscription
     val log = seeded() // manifest record 0: the seed's two files
-    // a flush that died between its rename and its record: a committed
-    // data file no record names
-    val donor = new EventLog(spark, tmpDir("donor"))
-    donor.appendRows(Seq(row("p1", "click", "web", 7000), row("p2", "click", "web", 8000)))
-    val planted = new File(log.path, "topic=web/part-00000-planted.c000.snappy.parquet")
-    FileUtils.copyFile(new File(donor.path, visibleFiles(donor).head), planted)
+    val planted = plantUnrecorded(log, "topic=web",
+      Seq(row("p1", "click", "web", 7000), row("p2", "click", "web", 8000)))
     // a record torn by a crash mid-write, and hidden debris in the manifest dir
     val manifest = new File(log.path, "_graft_log")
     FileUtils.writeStringToFile(new File(manifest, f"${1}%020d"), "graft-log 1\n+\t", "UTF-8")
     val debris = new File(manifest, ".7.0c5e2b4a.tmp")
     assert(debris.createNewFile())
     assert(log.vacuum() == 3) // the torn record, the planted file, the debris
-    assert(!debris.exists())
+    assert(!debris.exists() && !planted.exists())
     assert(log.vacuum() == 0) // idempotent
     val seen = scala.collection.mutable.Buffer.empty[String]
     new StreamingSubscription(spark, log.path, tmpDir("ckpt"), e => seen += e.id,
       new InMemoryDeadLetterQueue, Some("web"),
       SubscriptionOptions(receiveHistoricalEvents = true)).runAvailable()
-    assert(seen.toSeq == Seq("e1", "e2", "e3", "e5", "p1", "p2"))
+    assert(seen.toSeq == Seq("e1", "e2", "e3", "e5"))
+  }
+
+  for ((layout, mk) <- Seq[(String, String => EventLog)](
+      "per-topic" -> (p => new EventLog(spark, p)), "bucketed" -> (EventLog.bucketed(spark, _, 4))))
+    test(s"$layout layout: a data file no record names is in no read, and vacuum deletes it") {
+      import org.apache.spark.sql.types.IntegerType
+      import graft.broker.SubscriptionOptions
+      import graft.dlq.InMemoryDeadLetterQueue
+      import graft.model.Event
+      import graft.streaming.StreamingSubscription
+      val log = mk(tmpDir("log"))
+      log.appendRows(Seq(row("e1", "click", "web", 1000), row("a1", "view", "app", 1000)))
+      val dir = visibleFiles(log).map(_.takeWhile(_ != '/')).find(d => d == "topic=web" ||
+        d == s"topic_bucket=${log.bucketOf("web")}").get
+      val planted = plantUnrecorded(log, dir, Seq(row("p1", "click", "web", 2000)))
+      assert(log.getEventsTyped("web").collect().map(_.id).toSeq == Seq("e1"))
+      assert(log.all.count() == 2L && log.hasEvents("web"))
+      // the shape of the listing read the log had before the manifest
+      val listed = log.topicBuckets.fold(spark.read.schema(Event.schema).parquet(log.path))(_ =>
+        spark.read.schema(Event.schema.add("topic_bucket", IntegerType)).parquet(log.path)
+          .drop("topic_bucket"))
+      assert(log.all.schema == listed.schema)
+      assert(listed.count() == 3L) // a listing takes the planted file
+      val seen = scala.collection.mutable.Buffer.empty[String]
+      new StreamingSubscription(spark, log.path, tmpDir("ckpt"), e => seen += e.id,
+        new InMemoryDeadLetterQueue, Some("web"),
+        SubscriptionOptions(receiveHistoricalEvents = true)).runAvailable()
+      assert(seen.toSeq == Seq("e1"))
+      assert(log.vacuum() == 1 && !planted.exists())
+      assert(log.getEventsTyped("web").collect().map(_.id).toSeq == Seq("e1"))
+    }
+
+  test("a rewrite that died after its record leaves the removed files, and vacuum deletes them") {
+    val log = new EventLog(spark, tmpDir("log"))
+    (1 to 3).foreach(i => log.appendRows(Seq(row(s"e$i", "click", "web", i * 1000L))))
+    val before = new File(log.path, "topic=web").listFiles().filter(_.getName.startsWith("part-"))
+    val saved = before.map { f =>
+      val copy = new File(tmpDir("saved"), f.getName)
+      FileUtils.copyFile(f, copy)
+      f -> copy
+    }
+    assert(log.compact("web") == 2L) // its replace record removes 3 files and adds 1
+    // the crash: the record is written, the removed files are not deleted
+    saved.foreach { case (f, copy) => FileUtils.copyFile(copy, f) }
+    assert(visibleFiles(log).size == 4)
+    assert(log.getEventsTyped("web").collect().map(_.id).toSeq == Seq("e1", "e2", "e3"))
+    assert(log.vacuum() == 3)
+    assert(visibleFiles(log).size == 1)
+    assert(log.getEventsTyped("web").collect().map(_.id).toSeq == Seq("e1", "e2", "e3"))
+  }
+
+  test("a reader during compact and deleteEvents always reads the committed count") {
+    // bucketed, so a retention rewrite of a co-bucketed topic rewrites
+    // the files that hold `web` too, and its count must not move
+    val log = EventLog.bucketed(spark, tmpDir("log"), 2)
+    val other = Iterator.from(0).map(i => s"other$i").find(log.bucketOf(_) == log.bucketOf("web")).get
+    (0 until 8).foreach(i => log.appendRows(Seq(row(s"w$i", "click", "web", 1000L + i))))
+    val rounds = 6
+    log.appendRows((0 until rounds).map(i => row(s"o$i", "click", other, 1000L * (i + 1))))
+    val counts = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+    val reads = new java.util.concurrent.atomic.AtomicInteger()
+    val raced = new java.util.concurrent.atomic.AtomicInteger()
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val reader = new Thread(() => while (!done.get) {
+      try { counts.add(log.getEvents("web").count()); reads.incrementAndGet() }
+      catch {
+        // the documented scan-vs-delete race: a scan planned before a
+        // rewrite's record opening a file the rewrite has deleted
+        case e: Exception if Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+            .exists(_.isInstanceOf[java.io.FileNotFoundException]) => raced.incrementAndGet()
+      }
+    })
+    reader.start()
+    try (1 to rounds).foreach { i =>
+      assert(log.compact("web") >= 0L)
+      assert(log.deleteEvents(other, olderThanMillis = 1000L * i + 1) == 1L)
+    } finally { done.set(true); reader.join() }
+    info(s"${reads.get} reads completed, ${raced.get} raced a rewrite's delete")
+    assert(counts.size == 1 && counts.contains(8L), s"counts read: $counts ($raced scans raced a delete)")
   }
 
   /** One publisher thread appends `n` single rows to `web` (timestamps from

@@ -99,6 +99,8 @@ class LocalFsSpec extends SparkSpec {
     write(1)
     intercept[FileAlreadyExistsException](write(2))
     assert(Files.readAllBytes(Paths.get(s"$d/0")).toSeq == Seq[Byte](1))
+    // the failed write's hidden temp file and its .crc are gone
+    assert(new java.io.File(d).list().sorted.toSeq == Seq(".0.crc", "0"))
   }
 
   test("racing no-overwrite creates of one file: exactly one wins, its bytes stay") {

@@ -171,20 +171,28 @@ class LogTailSpec extends SparkSpec {
     assert(tail.drain() == Seq("e2"))
   }
 
-  test("vacuum records a crashed flush's file apart from a lost file of another dir") {
+  test("vacuum deletes a crashed flush's file and records a lost file as removed") {
     val log = new EventLog(spark, tmpDir("log"))
     log.appendRows(Seq(row("w1", "web", 1000L), row("m1", "mobile", 1000L)))
     val tail = new Tail(log, "mobile")
     assert(tail.drain() == Seq("m1"))
     // web's file is lost, and a flush that died before its record left a
-    // committed mobile file: the replace for web must not swallow it
-    new File(log.path, "topic=web").listFiles().foreach(f => assert(f.delete()))
+    // visible mobile file: the flush never committed, so its rows are not
+    // in the log, and the lost file is recorded as removed
+    val webFiles = new File(log.path, "topic=web").listFiles()
+    webFiles.foreach(f => assert(f.delete()))
     val donor = new EventLog(spark, tmpDir("donor"))
     donor.appendRows(Seq(row("m2", "mobile", 2000L)))
     val donorFile = new File(donor.path, "topic=mobile").listFiles().find(_.getName.startsWith("part-")).get
-    FileUtils.copyFile(donorFile, new File(log.path, "topic=mobile/part-00000-planted.c000.snappy.parquet"))
-    assert(log.vacuum() == 1)
-    assert(tail.drain() == Seq("m2"))
+    val planted = new File(log.path, "topic=mobile/part-00000-planted.c000.snappy.parquet")
+    FileUtils.copyFile(donorFile, planted)
+    assert(log.vacuum() == 1 && !planted.exists())
+    val manifest = new LogManifest(new Path(log.path), spark.sparkContext.hadoopConfiguration)
+    val lost = webFiles.map(_.getName).filter(_.startsWith("part-")).map(n => s"topic=web/$n").toSeq
+    assert(manifest.read(manifest.head() - 1).contains(LogRecord(Nil, lost)))
+    assert(tail.drain().isEmpty)
+    log.appendRows(Seq(row("m3", "mobile", 3000L)))
+    assert(tail.drain() == Seq("m3"))
   }
 
   for ((layout, mk) <- layouts)
